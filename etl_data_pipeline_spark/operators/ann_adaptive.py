@@ -42,29 +42,20 @@ order-independent integer math, which is what makes a mid-iteration
 executor kill recoverable with an identical hash (the persist points
 keep lineage; recompute re-derives the same integers).
 
-At 100 TB (round 13 — the previously documented escape hatch now
-EXISTS): nlist ~ n/125 means the centroid table grows with the corpus
-(at 1e9 vectors, 8M cells x 64 dims x 8B = 4 GB).  Above
-``PIN_MAX_CELLS`` (1e5) the build switches to CHUNKED-BROADCAST
-assignment (``chunked_cell_ranks``): the centroid table stays a
-DataFrame, each ~65536-cell chunk is pulled and torrent-broadcast one
-at a time (33 MB bounded driver/executor increments, never the 4 GB
-closure pin), every chunk ranks all vectors with the same exact-integer
-kernel, and a partitioned window merges per-chunk candidates under the
-global (d, cell) order — bit-identical to the pinned path at any chunk
-size (asserted by tests), one extra shuffle per pass as the price.
-The REJECTED alternative was a replicate-shuffle-join (explode each
-vector once per chunk and equi-join on chunk id): exact too, but it
-shuffles n * nchunks full vector rows — at 1e9 vectors x 122 chunks
-x 512 B that is ~62 TB of shuffle vs the chunked broadcast's zero.
-The per-iteration invariants (integer grid, floor-division update,
-(d, cell) tie order) are identical in both modes; ``assign_mode``
-selects pin/chunked explicitly for A/B and tests, "auto" by nlist.
+Centroid assignment has ONE path: the centroid table is collected on
+the driver (``_collect_cents``) and pinned into the ranking kernel's
+closure (``_rank_kern``).  The contract is ``nlist <= PIN_MAX_CELLS``
+(100,000 cells, i.e. n <= 12.5M vectors by the nlist rule — 62x the
+sf10 fixture's 1,600 cells); the builders raise ``ValueError`` above it
+before any k-means job runs.  At the bound the driver and each Python
+worker hold nlist x 64 x 8 B = 51 MB of centroids.  The table does not
+travel inside every task: PySpark ships any pickled closure over 1 MB
+as a torrent broadcast (``pyspark.core.rdd._prepare_for_python_RDD``).
+The kernel's transient distance matrix is bounded separately by
+``_CELL_BLOCK``, however many cells the table holds.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -74,37 +65,20 @@ from etl_data_pipeline_spark.operators.similarity import (
     PQ_SUBDIM,
     PQ_SUBSPACES,
     TARGET_BLOCK_ROWS,
+    TARGET_CELL,
     _cell_topk_kern,
     exact_cosine_rerank_topk,
     knn,
     quantize_embeddings,
 )
 
-#: Target vectors per IVF cell / LSH bucket — the executor-task-sized
-#: cell population the scaling rules hold constant (round-11 prep
-#: calibration: sf1's 20000 vectors / 125 = 160 cells reads recall@3
-#: 0.714 at a 20% scan vs 0.465 for the fixed 10-cell quantizer).
-TARGET_CELL = 125
-
 #: Scan fraction ~ 1/SCAN_DIV of the corpus: nprobe = nlist // 5.
 SCAN_DIV = 5
 
-#: Above this many cells the centroid table is no longer collected into
-#: one kernel closure; assignment runs chunk-by-chunk (the >1e5-nlist
-#: escape hatch the round-12 docstrings promised — VERDICT r12 item 1).
+#: Largest centroid table the builders accept (see the module
+#: docstring): 100,000 cells x 64 x 8 B = 51 MB pinned on the driver and
+#: in each Python worker.
 PIN_MAX_CELLS = 100_000
-
-#: Ceiling for auto-mode PIPELINED assignment (round 14): every worker
-#: process eventually caches all chunk broadcasts, ~nlist x 64 float64
-#: = ~135 MB per worker at this bound — comfortable on any executor
-#: profile; above it the chunked-union path keeps per-task memory at
-#: one ~32 MB chunk.
-PIPE_MAX_CELLS = 262_144
-
-#: Cells per chunk in chunked mode: 65536 x 64 longs = 32 MB per
-#: broadcast — executor-comfortable, and at 1e9 vectors (nlist = 8M)
-#: only ~122 chunks / union branches.
-CENT_CHUNK = 65536
 
 #: Knuth multiplicative seed hash: round(2^31 * (phi - 1)) =
 #: 1327217885 (odd; the floor, 1327217884, is even — ADVICE r13).
@@ -175,17 +149,6 @@ def adaptive_nprobe(nlist: int) -> int:
     return max(2, nlist // SCAN_DIV)
 
 
-def adaptive_planes(n: int) -> int:
-    """LSH hyperplane count for a ~TARGET_CELL bucket population:
-    2^planes buckets ~ n / 125, i.e. planes = floor(log2(n // 125)),
-    floored at the legacy 4 (so every sf <= 0.1 keeps its measured
-    bucket geometry and hashes).  Integer-only — ``bit_length`` avoids
-    the float-log2 boundary ambiguity at exact powers of two; the SQL
-    mirror is ``max j in [2, 30] with (1 << j) <= n // 125``."""
-    m = max(n // TARGET_CELL, 1)
-    return max(4, m.bit_length() - 1)
-
-
 def adaptive_codes(n: int) -> int:
     """PQ codebook size: max(16, n // 125) seed codes — the same
     population rule one compression level down (a fixed 16-code book
@@ -208,60 +171,20 @@ def grid_vectors(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def _rank_kern(cells, carrs, top: int | None):
-    """Arrow-batched exact integer distance/ranking kernel.
-
-    Emits, per input vector, its ``top`` nearest cells (all cells when
-    None) as (vec_id, d, cell, crn) with the (d, cell-ascending) tie
-    order.  EXACTNESS: distances use the expansion d = |g|^2 + |c|^2 -
-    2 g.c with every term computed in float64 — |g|,|c| <= 1e6 so each
-    dot/norm is an integer <= 6.6e13 and d <= 2.7e14, all far inside
-    float64's 2^53 exact-integer range, so the BLAS matmul result is
-    the EXACT integer the direct int64 (g-c)^2 sum yields (the
-    differential mirror test pins this).  ``cells`` is cell-ascending,
-    so a stable ascending argsort on d realizes the (d, cell) tie-break.
-
-    This kernel replaced the per-row HOF (zip_with/aggregate over an
-    nlist-element transform) in round 12's sf10 measurement: the HOF
-    form is interpreted per element — fine at sf1 (3.2M cell-distances)
-    but a single-task straggler at sf10's 320M (O(n * nlist) = n^2/125
-    work with an interpreter constant).  The numpy form does the same
-    integers at BLAS speed, and emitting only top-``nprobe`` ranks
-    in-kernel also deletes the n x nlist explode + window shuffle the
-    old final pass needed.
-    """
-    import numpy as np
-
-    C = np.asarray(carrs, dtype="float64")
-    cell_ids = np.asarray(cells, dtype="int64")
-    c2 = (C * C).sum(axis=1)
-    kk = len(cell_ids) if top is None else min(top, len(cell_ids))
-
-    def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield _rank_batch(pdf, C, c2, cell_ids, kk)
-
-    return kern
-
-
 #: Cells per in-kernel distance block: the kernel's transient distance
 #: matrix is batch x _CELL_BLOCK doubles (~160 MB at Arrow's default
-#: 10k-row batch), HOWEVER many cells the task ranks against.  Before
-#: round 14 the matrix was batch x n_cells in one allocation — ~8 GB
-#: per task at the PIN_MAX_CELLS boundary, a latent single-task OOM the
-#: pipelined-mode work surfaced.  Blocking changes no result: blocks
-#: are ascending slices of the cell-ascending table, so a stable
-#: argsort over the block-ordered candidate concat realizes the exact
-#: (d, cell) total order (same argument as the chunked-mode merge).
+#: 10k-row batch), HOWEVER many cells the table holds — one batch x
+#: nlist allocation would be ~8 GB per task at PIN_MAX_CELLS.  Blocking
+#: changes no result: blocks are ascending slices of the cell-ascending
+#: table, so a stable argsort over the block-ordered candidate concat
+#: realizes the exact (d, cell) total order.
 _CELL_BLOCK = 2048
 
 
 def _topk_cells(G, g2, C, c2, cell_ids, kk):
     """Running top-``kk`` (d, cell)-ascending cells per row of ``G``,
     computed one _CELL_BLOCK-wide distance block at a time.  ``C`` must
-    be cell-ascending (both callers collect it that way).  Returns
+    be cell-ascending (_collect_cents collects it that way).  Returns
     (D, CE): row-aligned matrices of the kk smallest distances and
     their cell ids in exact (d, cell) order."""
     import numpy as np
@@ -305,46 +228,54 @@ def _topk_cells(G, g2, C, c2, cell_ids, kk):
     return np.take_along_axis(D, order, axis=1), np.take_along_axis(CE, order, axis=1)
 
 
-def _rank_batch(pdf, C, c2, cell_ids, kk):
-    """One Arrow batch of _rank_kern's exact integer ranking (shared by
-    the closure-pinned, broadcast-chunked and pipelined kernels so the
-    modes cannot drift): top-kk (d, cell)-ascending cells per vector."""
+def _rank_kern(cells, carrs, top: int | None):
+    """Arrow-batched exact integer distance/ranking kernel over the
+    closure-pinned centroid table.
+
+    Emits, per input vector, its ``top`` nearest cells (all cells when
+    None) as (vec_id, d, cell, crn) with the (d, cell-ascending) tie
+    order.  EXACTNESS: distances use the expansion d = |g|^2 + |c|^2 -
+    2 g.c with every term computed in float64 — |g|,|c| <= 1e6 so each
+    dot/norm is an integer <= 6.6e13 and d <= 2.7e14, all far inside
+    float64's 2^53 exact-integer range, so the BLAS matmul result is
+    the EXACT integer the direct int64 (g-c)^2 sum yields (the
+    differential mirror test pins this).  ``cells`` is cell-ascending,
+    so a stable ascending argsort on d realizes the (d, cell) tie-break.
+
+    This kernel replaced the per-row HOF (zip_with/aggregate over an
+    nlist-element transform) in round 12's sf10 measurement: the HOF
+    form is interpreted per element — fine at sf1 (3.2M cell-distances)
+    but a single-task straggler at sf10's 320M (O(n * nlist) = n^2/125
+    work with an interpreter constant).  The numpy form does the same
+    integers at BLAS speed, and emitting only top-``nprobe`` ranks
+    in-kernel also deletes the n x nlist explode + window shuffle the
+    old final pass needed.
+    """
     import numpy as np
     import pandas as pd
 
-    G = np.stack(pdf["g"].to_numpy()).astype("float64")
-    g2 = (G * G).sum(axis=1)[:, None]
-    D, CE = _topk_cells(G, g2, C, c2, cell_ids, kk)
-    kk = D.shape[1]
-    vids = pdf["vec_id"].to_numpy()
-    return pd.DataFrame(
-        {
-            "vec_id": np.repeat(vids, kk),
-            "d": D.reshape(-1).astype("int64"),
-            "cell": CE.reshape(-1),
-            "crn": np.tile(np.arange(1, kk + 1, dtype="int64"), len(vids)),
-        }
-    )
-
-
-def _rank_kern_bc(bc, top: int | None):
-    """_rank_kern over a TorrentBroadcast chunk instead of a closure
-    pin: ``bc.value`` resolves (cells, carrs) lazily on the executor
-    (cached per worker process, shipped once per executor per chunk —
-    never serialized into every task binary), so the driver's plan
-    holds only a broadcast handle however large the chunk."""
-    import numpy as np
+    C = np.asarray(carrs, dtype="float64")
+    cell_ids = np.asarray(cells, dtype="int64")
+    c2 = (C * C).sum(axis=1)
+    kk = len(cell_ids) if top is None else min(top, len(cell_ids))
+    crn = np.arange(1, kk + 1, dtype="int64")
 
     def kern(batches):
-        cells_l, carrs_l = bc.value
-        C = np.asarray(carrs_l, dtype="float64")
-        cell_ids = np.asarray(cells_l, dtype="int64")
-        c2 = (C * C).sum(axis=1)
-        kk = len(cell_ids) if top is None else min(top, len(cell_ids))
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            yield _rank_batch(pdf, C, c2, cell_ids, kk)
+            G = np.stack(pdf["g"].to_numpy()).astype("float64")
+            g2 = (G * G).sum(axis=1)[:, None]
+            D, CE = _topk_cells(G, g2, C, c2, cell_ids, kk)
+            vids = pdf["vec_id"].to_numpy()
+            yield pd.DataFrame(
+                {
+                    "vec_id": np.repeat(vids, kk),
+                    "d": D.reshape(-1).astype("int64"),
+                    "cell": CE.reshape(-1),
+                    "crn": np.tile(crn, len(vids)),
+                }
+            )
 
     return kern
 
@@ -352,217 +283,9 @@ def _rank_kern_bc(bc, top: int | None):
 _RANK_SCHEMA = "vec_id long, d long, cell long, crn long"
 
 
-def _rank_kern_multi(bcs, top: int | None):
-    """Pipelined-mode kernel: rank against EVERY chunk broadcast in one
-    pass over the corpus, merging per-chunk top-kk candidates in-task.
-
-    Per chunk: the shared cell-blocked _topk_cells selection (chunks are
-    cell-ascending, so per-chunk order is exact).  Across chunks: the
-    cross-chunk merge lexsorts the narrow candidate concat by (d, cell)
-    — at most nchunks x kk wide — realizing the same global total order
-    the chunked mode's merge window/groupBy-min produces, whatever the
-    chunk partition (since round 15 chunks are ascending cell RANGES,
-    so block-ordered concat would suffice, but the lexsort's cost on
-    the kk-wide candidate set is negligible and it stays correct for
-    ANY partition of the cells).  Memory: each Broadcast caches its
-    deserialized value in the worker process, so a long-lived worker
-    converges to FULL centroid residency (~nlist x 64 doubles) — the
-    documented trade vs chunked mode's nchunks corpus passes + merge
-    shuffle; auto mode therefore caps this path at PIPE_MAX_CELLS.
-
-    ADVICE r14 (hoisting): the Python-list broadcast payloads are
-    converted to (C, c2, cell_ids) numpy arrays ONCE PER TASK, on the
-    first non-empty Arrow batch — not per batch per chunk, which was
-    an O(nlist x 64) list walk re-run every ~10k rows.  Lazy (not at
-    closure build) so empty partitions never deserialize a broadcast."""
-    import numpy as np
-    import pandas as pd
-
-    def kern(batches):
-        conv = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if conv is None:
-                conv = []
-                for bc in bcs:
-                    cells_l, carrs_l = bc.value
-                    C = np.asarray(carrs_l, dtype="float64")
-                    cell_ids = np.asarray(cells_l, dtype="int64")
-                    conv.append((C, (C * C).sum(axis=1), cell_ids))
-            G = np.stack(pdf["g"].to_numpy()).astype("float64")
-            g2 = (G * G).sum(axis=1)[:, None]
-            parts_d, parts_c = [], []
-            for C, c2, cell_ids in conv:
-                kk_c = len(cell_ids) if top is None else min(top, len(cell_ids))
-                D, CE = _topk_cells(G, g2, C, c2, cell_ids, kk_c)
-                parts_d.append(D)
-                parts_c.append(CE)
-            D = np.concatenate(parts_d, axis=1)
-            CE = np.concatenate(parts_c, axis=1)
-            kk = D.shape[1] if top is None else min(top, D.shape[1])
-            # lexsort: primary d, ties by cell ascending (exact global order)
-            order = np.lexsort((CE, D), axis=1)[:, :kk]
-            Dk = np.take_along_axis(D, order, axis=1)
-            CEk = np.take_along_axis(CE, order, axis=1)
-            vids = pdf["vec_id"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(vids, kk),
-                    "d": Dk.reshape(-1).astype("int64"),
-                    "cell": CEk.reshape(-1),
-                    "crn": np.tile(np.arange(1, kk + 1, dtype="int64"), len(vids)),
-                }
-            )
-
-    return kern
-
-
-def _cell_range_chunks(cent: DataFrame, chunk_cells: int):
-    """Yield (cells, carrs) centroid chunks as ASCENDING CELL RANGES of
-    EXACTLY ``chunk_cells`` cells each (the last possibly smaller).
-
-    ADVICE r14: the former pmod(cell, nchunks) partition balanced the
-    chunks only in expectation — cell ids are hash-selected vec_ids, so
-    a skewed residue class could push one chunk past the ~32 MB
-    driver-pin/broadcast bound the callers promise.  Range chunking
-    over the SORTED id list makes the bound hold by construction: one
-    skinny collect of the cell-id column (8 bytes/cell — ~2 MB at
-    PIPE_MAX_CELLS, ~64 MB even at an nlist of 8M, vs the 520-byte
-    full rows), then per-chunk BETWEEN filters keep each full-row pin
-    at <= chunk_cells rows.  Cell ids are unique by construction (they
-    are seed vec_ids), so the ranges partition the table exactly.
-
-    Raises on an empty centroid table (both callers' former behavior)."""
-    ids = sorted(r["cell"] for r in cent.select("cell").collect())
-    if not ids:
-        raise ValueError("cell ranking: empty centroid table")
-    for s in range(0, len(ids), chunk_cells):
-        sub = cent.filter(
-            F.col("cell").between(ids[s], ids[min(s + chunk_cells, len(ids)) - 1])
-        )
-        yield _collect_cents(sub)
-
-
-def pipelined_cell_ranks(
-    grid: DataFrame,
-    cent: DataFrame,
-    top: int | None,
-    chunk_cells: int = CENT_CHUNK,
-) -> DataFrame:
-    """Cell ranking against an unpinned centroid table, PIPELINED
-    (round 14, VERDICT r13 item 4): all chunks are collected and
-    torrent-broadcast up front (the same bounded ~32 MB driver pins as
-    chunked mode, just not interleaved with compute), then ONE
-    mapInPandas pass ranks every vector against every chunk and merges
-    in-task.  vs chunked mode this deletes (a) the nchunks scans of the
-    (cached) corpus — the union plan runs one mapInPandas branch per
-    chunk — and (b) the merge shuffle entirely (no groupBy-min, no
-    per-vec_id window: the kernel emits final global ranks).  The cost
-    is executor-side residency: every worker process eventually caches
-    all chunk values (~nlist x 64 doubles total), so auto mode uses
-    this path only up to PIPE_MAX_CELLS and falls back to chunked-union
-    above it.  Bit-identical to pinned/chunked by the same argument as
-    the chunked merge (asserted by the mode-equivalence tests).
-    Chunks are balanced ascending cell ranges — exactly chunk_cells
-    cells each by construction (_cell_range_chunks, ADVICE r14), so
-    every driver pin and broadcast honors the ~32 MB bound, not just
-    in expectation."""
-    spark = grid.sparkSession
-    bcs = [
-        spark.sparkContext.broadcast(chunk)
-        for chunk in _cell_range_chunks(cent, chunk_cells)
-    ]
-    return grid.mapInPandas(_rank_kern_multi(bcs, top), schema=_RANK_SCHEMA)
-
-
-def chunked_cell_ranks(
-    grid: DataFrame,
-    cent: DataFrame,
-    top: int | None,
-    chunk_cells: int = CENT_CHUNK,
-) -> DataFrame:
-    """Cell ranking against an UNPINNED centroid DataFrame — the
-    >1e5-nlist build path (VERDICT r12 item 1).
-
-    Chunks are balanced ascending cell ranges of exactly chunk_cells
-    cells (_cell_range_chunks — ADVICE r14 replaced the former
-    expectation-balanced pmod partition); each chunk is
-    collected (bounded: chunk_cells x 64 longs, ~32 MB), torrent-
-    broadcast, and ranked by the shared exact-integer kernel; a window
-    PARTITIONED BY vec_id merges per-chunk top-kk candidates under the
-    global (d, cell) order.  Bit-identical to the pinned path: each
-    chunk's stable (d, cell-ascending) top-kk is exactly the global
-    rule restricted to the chunk, so the union contains the global
-    top-kk and the final window realizes the same total order.  Cost
-    vs pinned, measured and modeled: the two ASSIGNMENT iterations
-    (top=1) merge by partial-aggregated groupBy-min — no candidate
-    volume at all; the final RANKING pass emits nchunks * min(top,
-    chunk_cells) candidate rows per vector through one shuffle vs the
-    pinned kernel's in-task top — a factor of nchunks when top >=
-    chunk_cells (measured the hard way: a 7-chunk sf10 run with
-    top=nprobe=320 > chunk=256 pushed n * nlist = 320M rows into the
-    merge window and exhausted the 8g rig's execution memory).  Auto
-    mode keeps that factor small where it engages: at the PIN_MAX
-    boundary (nlist ~1.3e5) nchunks = 2; deep in the chunked regime
-    the FLAT path is the documented non-scale path anyway — ivf2
-    (plans/ann_hier.py) is the production build there, and its
-    chunked pieces partition by supercluster with no merge window.
-
-    Broadcast lifetime (ADVICE r13): the per-chunk broadcasts feed a
-    LAZY plan — no action runs inside this function or the build loop
-    (materialize/persist is itself lazy), and lineage-kept recompute
-    after executor loss may re-read any chunk — so there is no safe
-    point here to ``unpersist()`` them.  Reclamation is deliberately
-    left to Spark's ContextCleaner: once the returned plan is
-    unreferenced, the Python Broadcast handles (held only by the
-    kernel closures) are GC'd and the executor copies are dropped.
-    Peak accumulation is bounded: nchunks x ~32 MB per pass (~4 GB at
-    nlist = 8M) on executors that in the same regime hold the corpus
-    itself."""
-    from pyspark.sql.window import Window
-
-    spark = grid.sparkSession
-    parts = []
-    for chunk in _cell_range_chunks(cent, chunk_cells):
-        bc = spark.sparkContext.broadcast(chunk)
-        parts.append(
-            grid.mapInPandas(_rank_kern_bc(bc, top), schema=_RANK_SCHEMA)
-            .select("vec_id", "d", "cell")
-        )
-    un = parts[0]
-    for nxt in parts[1:]:
-        un = un.unionByName(nxt)
-    if top == 1:
-        # Argmin merge via PARTIAL AGGREGATION instead of a window:
-        # min(struct(d, cell)) is the lexicographic (d, cell) rule
-        # verbatim, combines map-side, and shuffles n pre-aggregated
-        # rows instead of n * nchunks candidates — this is the merge
-        # the two assignment iterations take, so the iteration loop
-        # adds no candidate-volume term at all.
-        return (
-            un.groupBy("vec_id")
-            .agg(F.min(F.struct("d", "cell")).alias("m"))
-            .select(
-                "vec_id",
-                F.col("m.d").alias("d"),
-                F.col("m.cell").alias("cell"),
-                F.lit(1).cast("long").alias("crn"),
-            )
-        )
-    w = Window.partitionBy("vec_id").orderBy("d", "cell")
-    ranked = un.withColumn("crn", F.row_number().over(w).cast("long"))
-    if top is not None:
-        ranked = ranked.filter(F.col("crn") <= top)
-    return ranked.select("vec_id", "d", "cell", "crn")
-
-
 def _collect_cents(cent: DataFrame):
-    """Driver-pin a (cell, carr) centroid frame, cell-ascending.
-    Bounded by the caller's contract: full nlist x 64 longs in pinned
-    mode (nlist <= PIN_MAX_CELLS by _resolve_assign_mode), one
-    CENT_CHUNK slice at a time in chunked mode — so the driver never
-    holds more than ~32 MB of centroids however large nlist grows."""
+    """Driver-pin a (cell, carr) centroid frame, cell-ascending —
+    nlist x 64 longs, at most 51 MB under the PIN_MAX_CELLS contract."""
     rows = sorted(cent.collect(), key=lambda r: r["cell"])
     return (
         [r["cell"] for r in rows],
@@ -570,50 +293,17 @@ def _collect_cents(cent: DataFrame):
     )
 
 
-def _resolve_assign_mode(assign_mode: str, nlist: int) -> str:
-    """Returns "pin" | "pipelined" | "chunked".  "auto" pins below
-    PIN_MAX_CELLS (today's test scales: zero behavior change), runs
-    PIPELINED between PIN_MAX_CELLS and PIPE_MAX_CELLS (one corpus
-    pass, no merge shuffle, full-centroid worker residency — round 14),
-    and falls back to chunked-union above (bounded per-task memory);
-    explicit modes force a path for A/B and the mode-equivalence tests.
-
-    ``SPARK_GRAFT_ASSIGN_MODE`` / ``SPARK_GRAFT_CHUNK_CELLS`` (round
-    14, VERDICT r13 item 6) are process-level forcing hooks for
-    harnesses that can only address a REGISTERED query by name — the
-    executor-loss chaos battery runs ``ivf2_ann`` in a subprocess and
-    needs the chunked broadcast path engaged at sf0.1's tiny nlist.
-    Results are mode-invariant (the equivalence tests' contract), so
-    the override can never change a hash, only the physical plan.
-    ADVICE r14: the env hook applies ONLY when the caller asked for
-    "auto" — an explicit pin/chunked/pipelined argument is an A/B or
-    equivalence-test contract that a leaked env var must not silently
-    collapse into a same-mode comparison (registered queries all go
-    through auto, so the chaos battery's forcing still engages)."""
-    env = os.environ.get("SPARK_GRAFT_ASSIGN_MODE")
-    if env and assign_mode == "auto":
-        assign_mode = env
-    if assign_mode in ("pin", "chunked", "pipelined"):
-        return assign_mode
-    if assign_mode != "auto":
+def require_pinnable(nlist: int, n: int | None = None) -> None:
+    """Raise ``ValueError`` when an IVF build of ``nlist`` cells (over
+    ``n`` vectors, when the caller has counted them) exceeds the
+    PIN_MAX_CELLS contract.  Called before any k-means job runs."""
+    if nlist > PIN_MAX_CELLS:
+        over = f"n={n} vectors give " if n is not None else ""
         raise ValueError(
-            "assign_mode must be auto|pin|pipelined|chunked, "
-            f"got {assign_mode!r}"
+            f"IVF build: {over}nlist={nlist} cells, above PIN_MAX_CELLS="
+            f"{PIN_MAX_CELLS}; the centroid table is pinned into the "
+            "assignment kernel, so the build accepts n <= 12.5M vectors"
         )
-    if nlist <= PIN_MAX_CELLS:
-        return "pin"
-    if nlist <= PIPE_MAX_CELLS:
-        return "pipelined"
-    return "chunked"
-
-
-def resolve_chunk_cells(requested: int) -> int:
-    """Chunk-size forcing twin of the assign-mode env hook: a tiny
-    ``SPARK_GRAFT_CHUNK_CELLS`` makes even sf0.1's nlist split into
-    multiple broadcast chunks, which is what the chaos gate needs to
-    kill an executor DURING a multi-chunk pass."""
-    env = os.environ.get("SPARK_GRAFT_CHUNK_CELLS")
-    return int(env) if env else requested
 
 
 def kmeans_cell_ranks(
@@ -621,8 +311,6 @@ def kmeans_cell_ranks(
     nlist: int,
     iters: int = 3,
     top: int | None = None,
-    assign_mode: str = "auto",
-    chunk_cells: int = CENT_CHUNK,
 ) -> DataFrame:
     """Seeded integer-grid Lloyd k-means; returns the FINAL iteration's
     per-vector cell ranking ``(vec_id, cell, d, crn)``, truncated to
@@ -640,32 +328,26 @@ def kmeans_cell_ranks(
 
     Every distance pass runs the Arrow/numpy kernel (_rank_kern — exact
     float64-integer arithmetic, see its docstring for the sf10 A/B
-    against the rejected per-row HOF form); centroid updates stay
-    DataFrame aggregations (exact integer sums in any order + the pmod
-    floor division).  Assignment cost is O(n * nlist) = n^2/125 by the
-    nlist rule — measured fine through sf10 (200k x 1600 cells) at
-    kernel speed; the TWO-LEVEL quantizer (plans/ann_hier.py) is the
-    registered O(n * sqrt(nlist)) scale path for the work term, and
-    chunked mode (assign_mode, round 13) removes the memory term — the
-    centroid closure pin — above PIN_MAX_CELLS.  Seeds come from the
-    deterministic Knuth-hash sample (hash_seeds), so no global-rank
-    window ever sorts the corpus in one task.
+    against the rejected per-row HOF form) against the pinned centroid
+    table (nlist <= PIN_MAX_CELLS, checked before any job); centroid
+    updates stay DataFrame aggregations (exact integer sums in any
+    order + the pmod floor division).  Assignment cost is O(n * nlist)
+    = n^2/125 by the nlist rule — measured fine through sf10 (200k x
+    1600 cells) at kernel speed; the TWO-LEVEL quantizer
+    (plans/ann_hier.py) is the registered O(n * sqrt(nlist)) scale path
+    for the work term.  Seeds come from the deterministic Knuth-hash
+    sample (hash_seeds), so no global-rank window ever sorts the corpus
+    in one task.
     """
+    require_pinnable(nlist)
     grid = materialize(grid_vectors(embeddings))
     n = grid.count()
-    mode = _resolve_assign_mode(assign_mode, nlist)
-    chunk_cells = resolve_chunk_cells(chunk_cells)
-    rank = {
-        "pin": lambda c, top: grid.mapInPandas(
+
+    def rank(c: DataFrame, top: int | None) -> DataFrame:
+        return grid.mapInPandas(
             _rank_kern(*_collect_cents(c), top=top), schema=_RANK_SCHEMA
-        ),
-        "pipelined": lambda c, top: pipelined_cell_ranks(
-            grid, c, top=top, chunk_cells=chunk_cells
-        ),
-        "chunked": lambda c, top: chunked_cell_ranks(
-            grid, c, top=top, chunk_cells=chunk_cells
-        ),
-    }[mode]
+        )
+
     cent = materialize(hash_seeds(grid, n, nlist))
 
     for _ in range(iters - 1):
@@ -706,8 +388,6 @@ def ivf_topk_adaptive(
     embeddings: DataFrame,
     k: int = 3,
     iters: int = 3,
-    assign_mode: str = "auto",
-    chunk_cells: int = CENT_CHUNK,
 ) -> DataFrame:
     """IVF top-k with the SCALE-ADAPTIVE quantizer: nlist = n/125 cells
     from the seeded integer k-means (kmeans_cell_ranks), nprobe =
@@ -721,23 +401,24 @@ def ivf_topk_adaptive(
     cells bloated — SLOPE_AUDIT_SF1.json round 11).  Measured adaptive
     recall@3 vs the fixed quantizer's 0.41: 0.733 at sf0.01, 0.479 at
     sf0.1 (18.8% scan), with the sf1 row in BASELINE.md.
+
+    Bound: the centroid table is pinned into the assignment kernel, so
+    the build accepts nlist <= PIN_MAX_CELLS (100,000 cells, n <= 12.5M
+    vectors) and raises ``ValueError`` naming n and nlist above it,
+    right after the row count and before any k-means job.  At the
+    bound the driver and each Python worker hold nlist x 64 x 8 B =
+    51 MB of centroids.
     """
     from pyspark.sql.window import Window
 
     n = embeddings.count()  # bounded driver pin: one scalar
     nlist = adaptive_nlist(n)
+    require_pinnable(nlist, n)
     nprobe = adaptive_nprobe(nlist)
     # top=nprobe: ranks beyond the probe set are never consumed, so the
     # kernel never materializes the n x nlist ranking (320M rows at
     # sf10) — the property test requests the full ranking explicitly
-    ranked = kmeans_cell_ranks(
-        embeddings,
-        nlist=nlist,
-        iters=iters,
-        top=nprobe,
-        assign_mode=assign_mode,
-        chunk_cells=chunk_cells,
-    )
+    ranked = kmeans_cell_ranks(embeddings, nlist=nlist, iters=iters, top=nprobe)
     # r16 (§2.4/§6): both tagged sides come from the SAME ranked frame —
     # crn == 1 is the member assignment and crn <= nprobe the probe set
     # (which includes crn == 1) — so one pass with a conditional explode

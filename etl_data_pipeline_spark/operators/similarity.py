@@ -404,6 +404,36 @@ def centroid_classify(embeddings: DataFrame) -> DataFrame:
     )
 
 
+#: Target vectors per IVF cell / LSH bucket — the executor-task-sized
+#: cell population the scaling rules hold constant (round-11 prep
+#: calibration: sf1's 20000 vectors / 125 = 160 cells reads recall@3
+#: 0.714 at a 20% scan vs 0.465 for the fixed 10-cell quantizer).
+TARGET_CELL = 125
+
+
+def adaptive_planes(n: int) -> int:
+    """LSH hyperplane count for a ~TARGET_CELL bucket population:
+    2^planes buckets ~ n / 125, i.e. planes = floor(log2(n // 125)),
+    floored at the legacy 4 (so every sf <= 0.1 keeps its measured
+    bucket geometry and hashes).  Integer-only — ``bit_length`` avoids
+    the float-log2 boundary ambiguity at exact powers of two; the SQL
+    mirror is ``max j in [2, 30] with (1 << j) <= n // 125``."""
+    m = max(n // TARGET_CELL, 1)
+    return max(4, m.bit_length() - 1)
+
+
+def _raise_bad_embedding(pdf: pd.DataFrame) -> None:
+    """Raise ValueError for the first row of ``pdf`` whose embedding is
+    NULL or not 64 values long (lsh_buckets' input contract)."""
+    for vid, emb in zip(pdf["vec_id"], pdf["embedding"]):
+        if emb is None or len(emb) != 64:
+            got = "NULL" if emb is None else f"{len(emb)} values"
+            raise ValueError(
+                f"lsh_buckets: embedding of vec_id {vid} is {got}; "
+                "expected 64 non-NULL values"
+            )
+
+
 def lsh_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
     """ANN scale path: random-hyperplane LSH bucket per vector.
 
@@ -417,6 +447,10 @@ def lsh_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
     could flip a bit nondeterministically).  Quantization perturbs
     direction < 1%, so bucket geometry (and measured recall) is
     statistically unchanged.  Returns (vec_id, bucket).
+
+    Input contract: every embedding is a non-NULL array of 64 values;
+    the kernel raises ``ValueError`` naming the first offending vec_id
+    otherwise.
     """
     spark = embeddings.sparkSession
     planes = (
@@ -457,7 +491,12 @@ def lsh_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            A = np.stack(pdf["embedding"].to_numpy()).astype(np.int64)
+            try:
+                A = np.stack(pdf["embedding"].to_numpy()).astype(np.int64)
+            except (TypeError, ValueError):
+                A = None
+            if A is None or A.shape[1:] != (64,):
+                _raise_bad_embedding(pdf)
             proj = A @ wmat
             bucket = ((proj > 0) * pow2).sum(axis=1)
             yield pd.DataFrame(
@@ -472,7 +511,7 @@ def lsh_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
     )
 
 
-def ann_lsh_topk(embeddings: DataFrame, k: int, n_planes: int = 8) -> DataFrame:
+def ann_lsh_topk(embeddings: DataFrame, k: int) -> DataFrame:
     """ANN: top-k per query within its LSH bucket (equi-join on bucket —
     never all-pairs; the join key is what shards the problem at scale).
 
@@ -488,13 +527,16 @@ def ann_lsh_topk(embeddings: DataFrame, k: int, n_planes: int = 8) -> DataFrame:
     per-GROUP Arrow tax while capping the expected bucket frame at
     ~TARGET_BLOCK_ROWS rows (the tagged stream is 2n rows).  Result
     invariant to B (see _cell_topk_kern); every sf <= 0.1 resolves to
-    B = 64 >= 2^n_planes cells, i.e. the r15 geometry."""
+    B = 64 >= 2^n_planes cells, i.e. the r15 geometry.
+
+    The plane count is adaptive_planes(n), from the same row count that
+    sizes B (one count per build)."""
     from pyspark.sql.window import Window
 
     n = embeddings.count()  # bounded driver pin: one scalar
     sc = embeddings.sparkSession.sparkContext
     nb = max(64, sc.defaultParallelism * 2, 2 * n // TARGET_BLOCK_ROWS)
-    b = lsh_buckets(embeddings, n_planes)
+    b = lsh_buckets(embeddings, adaptive_planes(n))
     e = embeddings.join(b, "vec_id")
     # r16 (§2.4/§6): every vector is both query (side 0) and member
     # (side 1) of its own bucket, so the tagged stream is built in ONE
@@ -1119,9 +1161,7 @@ def pq_rerank(
     return exact_cosine_rerank_topk(cand, embeddings, k)
 
 
-def ann_lsh_multiprobe_topk(
-    embeddings: DataFrame, k: int, n_planes: int = 4
-) -> DataFrame:
+def ann_lsh_multiprobe_topk(embeddings: DataFrame, k: int) -> DataFrame:
     """Multiprobe LSH ANN (Lv et al., VLDB'07): each query probes its
     own bucket PLUS every Hamming-1 neighbor bucket (one hyperplane bit
     flipped) — the standard fix for single-probe LSH's recall cliff:
@@ -1152,7 +1192,10 @@ def ann_lsh_multiprobe_topk(
     bucketing amortizes it while capping the expected bucket frame at
     ~TARGET_BLOCK_ROWS rows.  Result invariant to B (see
     _cell_topk_kern); every sf <= 0.1 resolves to B = 64 >= 2^n_planes
-    cells, i.e. the r15 geometry."""
+    cells, i.e. the r15 geometry.
+
+    The plane count is adaptive_planes(n), from the same row count that
+    sizes B (one count per build)."""
     from pyspark.sql.window import Window
 
     # b is a materialize point (two longs per row, output-scale, the
@@ -1164,6 +1207,8 @@ def ann_lsh_multiprobe_topk(
     # only this function needs the symbol.
     from etl_data_pipeline_spark.materialize import materialize
 
+    n = embeddings.count()  # bounded driver pin: one scalar
+    n_planes = adaptive_planes(n)
     b = materialize(lsh_buckets(embeddings, n_planes))
     flips = [1 << j for j in range(n_planes)]
     if (n_planes + 1) * 5 < (1 << n_planes):
@@ -1206,7 +1251,6 @@ def ann_lsh_multiprobe_topk(
     tagged = pairs.join(emb, pairs.vid == emb.vec_id).select(
         "cell", "vid", "embedding", "side"
     )
-    n = embeddings.count()  # bounded driver pin: one scalar
     sc = embeddings.sparkSession.sparkContext
     nb = max(
         64,

@@ -59,24 +59,23 @@ probe budget psup = 2*log2(nsup), ncell = 3*nlist/nsup):
   sf1    (n=20k):  nlist 160, nsup 12, psup 6,       ncell 39 -> ~24%
   sf10   (n=200k): nlist 1.6k, nsup 40, psup 10,     ncell 120 -> ~7.5%
   1e9:             nlist 8M,  nsup 2.8k, psup 22,    ncell 8.5k -> ~0.1%
+                   (cost model only: above the PIN_MAX_CELLS bound)
 The scan FRACTION falls with n (the flat path pins it at 20%); what
 stays constant is the ~125-vector cell population and the
 O~(sqrt(n)) per-query work (the calibration multiplied the budget by
 a CONSTANT — the n-dependence is unchanged).
 
-SHUFFLE/PARTITION story at scale: below PIN_MAX_CELLS the only
-driver pins are the child centroid table (~nlist x 64 longs) and the
-two scalar counts; above it (round 13 — the escape hatch now EXISTS)
-assignment and probing run CHUNKED (_chunked_own_sup/_chunked_probe):
-~32 MB torrent-broadcast slices of the child table, never a full pin.
-Chunked assignment needs NO merge at all — vectors partition by
-supercluster, so each is assigned in exactly one branch; only the
-probe pays a merge window (partitioned by query), emitting at most
-psup/nchunks-bounded per-chunk candidates.  Assignment and probing
-stay mapInPandas over the vector partitions (no shuffle in pinned
-mode); the level-2 update is one groupBy(sup, cell, pos); the final
-exact scan shuffles on cell — ~125-member cells by construction, so
-no skew.
+SHUFFLE/PARTITION story at scale: the driver pins the child-centroid
+table (~nlist x 64 longs) into the assignment and probe kernels'
+closures, plus the two scalar counts.  The build accepts nlist <=
+PIN_MAX_CELLS (100,000 cells, n <= 12.5M vectors) and raises
+ValueError above it before any k-means job; at the bound the driver
+and each Python worker hold nlist x 64 x 8 B = 51 MB of children
+(PySpark ships any closure over 1 MB as a torrent broadcast, not
+inside every task).  Assignment and probing stay mapInPandas over the
+vector partitions (no shuffle); the level-2 update is one groupBy(sup,
+cell, pos); the final exact scan shuffles on cell — ~125-member cells
+by construction, so no skew.
 """
 
 from __future__ import annotations
@@ -94,6 +93,7 @@ from etl_data_pipeline_spark.operators.ann_adaptive import (
     adaptive_nlist,
     grid_vectors,
     kmeans_cell_ranks,
+    require_pinnable,
 )
 from etl_data_pipeline_spark.operators.similarity import (
     TARGET_BLOCK_ROWS,
@@ -136,10 +136,8 @@ def hier_ncell(nlist: int, nsup: int) -> int:
 
 def _pin_children(cent: DataFrame) -> dict[int, tuple[list, list]]:
     """Driver-pin a (sup, cell, carr) child-centroid frame as
-    {sup: (cells cell-ascending, centroid rows)} — bounded by the
-    caller's contract: the full ~nlist-child table in pinned mode
-    (nlist <= PIN_MAX_CELLS), one ~CENT_CHUNK slice at a time in
-    chunked mode (_chunked_own_sup/_chunked_probe)."""
+    {sup: (cells cell-ascending, centroid rows)} — ~nlist children,
+    bounded by the PIN_MAX_CELLS contract."""
     by_sup: dict[int, tuple[list, list]] = {}
     for r in sorted(cent.collect(), key=lambda r: (r["sup"], r["cell"])):
         cs, asr = by_sup.setdefault(int(r["sup"]), ([], []))
@@ -158,239 +156,95 @@ def _prep_children(by_sup: dict):
     }
 
 
-def _own_sup_batch(pre: dict, pdf):
-    """One Arrow batch of own-sup assignment (shared by the
-    closure-pinned and broadcast-chunked kernels): each vector vs the
-    children of ITS OWN supercluster only.  Same float64-exact integer
-    expansion as ann_adaptive._rank_kern (every term < 2^53, so the
-    BLAS matmul yields the exact int64 distance); cells are
-    cell-ascending per sup, so a stable argsort realizes the (d, cell)
-    tie order."""
+def _own_sup_kern(by_sup: dict):
+    """Own-sup assignment kernel: each vector vs the children of ITS
+    OWN supercluster only.  Same float64-exact integer expansion as
+    ann_adaptive._rank_kern (every term < 2^53, so the BLAS matmul
+    yields the exact int64 distance); cells are cell-ascending per sup,
+    so a stable argsort realizes the (d, cell) tie order."""
     import numpy as np
     import pandas as pd
 
-    for s, sub in pdf.groupby("sup", sort=False):
-        cells, C = pre[int(s)]
-        c2 = (C * C).sum(axis=1)
-        G = np.stack(sub["g"].to_numpy()).astype("float64")
-        d = (G * G).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (G @ C.T)
-        best = np.argsort(d, axis=1, kind="stable")[:, 0]
-        yield pd.DataFrame(
-            {"vec_id": sub["vec_id"].to_numpy(), "cell": cells[best]}
-        )
-
-
-def _own_sup_kern(by_sup: dict):
-    """Closure-pinned own-sup assignment kernel (see _own_sup_batch)."""
     pre = _prep_children(by_sup)
 
     def kern(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            yield from _own_sup_batch(pre, pdf)
+            for s, sub in pdf.groupby("sup", sort=False):
+                cells, C = pre[int(s)]
+                c2 = (C * C).sum(axis=1)
+                G = np.stack(sub["g"].to_numpy()).astype("float64")
+                d = (G * G).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (G @ C.T)
+                best = np.argsort(d, axis=1, kind="stable")[:, 0]
+                yield pd.DataFrame(
+                    {"vec_id": sub["vec_id"].to_numpy(), "cell": cells[best]}
+                )
 
     return kern
-
-
-def _own_sup_kern_bc(bc):
-    """_own_sup_kern over a TorrentBroadcast chunk of the child table
-    (resolved lazily on the executor, cached per worker) — the
-    >1e5-child build path's kernel; the caller pre-filters rows to the
-    chunk's sups, so every sup a batch carries is present."""
-
-    def kern(batches):
-        pre = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pre is None:
-                pre = _prep_children(bc.value)
-            yield from _own_sup_batch(pre, pdf)
-
-    return kern
-
-
-def _probe_batch(pre: dict, ncell: int, pdf):
-    """One Arrow batch of probe-cell selection (shared by the
-    closure-pinned and broadcast-chunked kernels): a query's candidate
-    cells are the children of its probed superclusters (its ``sups``
-    array), ranked by exact integer distance, top ``ncell`` kept —
-    with the distance emitted so a chunked caller can merge per-chunk
-    candidates under the same global (d, cell) order.  Queries sharing
-    a probe set vectorize together (level-1 neighbors share top-psup
-    sets, so batches collapse to a few distinct keys).  Superclusters
-    absent from ``pre`` are skipped — emptied-by-update sups in pinned
-    mode (the oracle's inner join drops them identically), other
-    chunks' sups in chunked mode."""
-    import numpy as np
-    import pandas as pd
-
-    for ks, sub in pdf.groupby(pdf["sups"].map(tuple), sort=False):
-        have = [s for s in ks if s in pre]
-        if not have:
-            continue
-        cells = np.concatenate([pre[s][0] for s in have])
-        C = np.vstack([pre[s][1] for s in have])
-        order = np.argsort(cells, kind="stable")
-        cells, C = cells[order], C[order]
-        c2 = (C * C).sum(axis=1)
-        kk = min(ncell, len(cells))
-        G = np.stack(sub["g"].to_numpy()).astype("float64")
-        d = (G * G).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (G @ C.T)
-        top = np.argsort(d, axis=1, kind="stable")[:, :kk]
-        vids = sub["vec_id"].to_numpy()
-        yield pd.DataFrame(
-            {
-                "q": np.repeat(vids, kk),
-                "cell": cells[top].reshape(-1),
-                "d": np.take_along_axis(d, top, axis=1)
-                .reshape(-1)
-                .astype("int64"),
-            }
-        )
 
 
 def _probe_kern(by_sup: dict, ncell: int):
-    """Closure-pinned probe-cell selection kernel (see _probe_batch)."""
+    """Probe-cell selection kernel: a query's candidate cells are the
+    children of its probed superclusters (its ``sups`` array), ranked
+    by exact integer distance, top ``ncell`` kept under the (d, cell)
+    order.  Queries sharing a probe set vectorize together (level-1
+    neighbors share top-psup sets, so batches collapse to a few
+    distinct keys).  Superclusters absent from the child table —
+    emptied by the update — are skipped (the oracle's inner join drops
+    them identically)."""
+    import numpy as np
+    import pandas as pd
+
     pre = _prep_children(by_sup)
 
     def kern(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            yield from _probe_batch(pre, ncell, pdf)
+            for ks, sub in pdf.groupby(pdf["sups"].map(tuple), sort=False):
+                have = [s for s in ks if s in pre]
+                if not have:
+                    continue
+                cells = np.concatenate([pre[s][0] for s in have])
+                C = np.vstack([pre[s][1] for s in have])
+                order = np.argsort(cells, kind="stable")
+                cells, C = cells[order], C[order]
+                c2 = (C * C).sum(axis=1)
+                kk = min(ncell, len(cells))
+                G = np.stack(sub["g"].to_numpy()).astype("float64")
+                d = (G * G).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (G @ C.T)
+                top = np.argsort(d, axis=1, kind="stable")[:, :kk]
+                yield pd.DataFrame(
+                    {
+                        "q": np.repeat(sub["vec_id"].to_numpy(), kk),
+                        "cell": cells[top].reshape(-1),
+                    }
+                )
 
     return kern
 
 
-def _probe_kern_bc(bc, ncell: int):
-    """_probe_kern over a TorrentBroadcast chunk of the child table —
-    emits each query's per-chunk top-ncell (a safe superset
-    participant: the global top-ncell under (d, cell) is contained in
-    the union of per-chunk top-ncells); the caller's partitioned
-    window realizes the global order."""
-
-    def kern(batches):
-        pre = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pre is None:
-                pre = _prep_children(bc.value)
-            yield from _probe_batch(pre, ncell, pdf)
-
-    return kern
-
-
-_PROBE_SCHEMA = "q long, cell long, d long"
-
-
-def _chunked_own_sup(gs: DataFrame, cent: DataFrame, chunk_cells: int) -> DataFrame:
-    """Own-sup assignment against an UNPINNED (sup, cell, carr) child
-    table — the >1e5-child escape hatch (VERDICT r12 item 1), chunked
-    by pmod(sup, nchunks).  Because every vector belongs to exactly one
-    supercluster, the chunks PARTITION the corpus: each vector is
-    assigned in exactly one branch and no merge window is needed
-    (unlike the flat chunked path).  Chunk size is approximate —
-    children per sup vary — but bounded in expectation by
-    ~chunk_cells.  Per-chunk broadcasts are reclaimed by
-    ContextCleaner when the returned lazy plan dies — see
-    operators/ann_adaptive.py::chunked_cell_ranks for why no earlier
-    unpersist() point exists (ADVICE r13)."""
-    spark = gs.sparkSession
-    nl = cent.count()
-    if nl == 0:
-        raise ValueError("_chunked_own_sup: empty child-centroid table")
-    nchunks = -(-nl // chunk_cells)
-    parts = []
-    for ci in range(nchunks):
-        sub = cent.filter(F.pmod(F.col("sup"), F.lit(nchunks)) == ci)
-        d = _pin_children(sub)
-        if not d:
-            continue
-        bc = spark.sparkContext.broadcast(d)
-        parts.append(
-            gs.filter(F.pmod(F.col("sup"), F.lit(nchunks)) == ci)
-            .mapInPandas(_own_sup_kern_bc(bc), schema="vec_id long, cell long")
-        )
-    un = parts[0]
-    for nxt in parts[1:]:
-        un = un.unionByName(nxt)
-    return un
-
-
-def _chunked_probe(
-    pq: DataFrame, cent: DataFrame, ncell: int, chunk_cells: int
-) -> DataFrame:
-    """Probe-cell selection against an UNPINNED child table: per-chunk
-    top-ncell candidates (with exact integer d), merged by a window
-    PARTITIONED BY q under the global (d, cell) order — bit-identical
-    to the pinned kernel's selection (each chunk's stable
-    (d, cell-ascending) top-ncell is the global rule restricted to the
-    chunk).  Broadcast lifetime: ContextCleaner-reclaimed with the
-    plan — see chunked_cell_ranks (ADVICE r13)."""
-    spark = pq.sparkSession
-    nl = cent.count()
-    nchunks = max(1, -(-nl // chunk_cells))
-    parts = []
-    for ci in range(nchunks):
-        sub = cent.filter(F.pmod(F.col("sup"), F.lit(nchunks)) == ci)
-        d = _pin_children(sub)
-        if not d:
-            continue
-        bc = spark.sparkContext.broadcast(d)
-        parts.append(
-            pq.mapInPandas(_probe_kern_bc(bc, ncell), schema=_PROBE_SCHEMA)
-        )
-    un = parts[0]
-    for nxt in parts[1:]:
-        un = un.unionByName(nxt)
-    w = Window.partitionBy("q").orderBy("d", "cell")
-    return (
-        un.withColumn("prn", F.row_number().over(w))
-        .filter(F.col("prn") <= ncell)
-        .select("q", "cell")
-    )
-
-
-def ivf2_topk(
-    embeddings: DataFrame,
-    k: int = 3,
-    assign_mode: str = "auto",
-    chunk_cells: int = None,
-) -> DataFrame:
+def ivf2_topk(embeddings: DataFrame, k: int = 3) -> DataFrame:
     """Two-level IVF top-k.  Level 1 reuses the flat path's seeded
     integer k-means (kmeans_cell_ranks) verbatim with nlist=nsup and
     iters=2; level 2 runs the same iteration shape per supercluster
     with per-sup seeds and own-sup-restricted assignment; the final
     exact scan reuses the shared per-cell cosine kernel.
 
-    ``assign_mode`` (round 13, VERDICT r12 item 1): "auto" pins the
-    child-centroid table into kernel closures below PIN_MAX_CELLS
-    (~nlist children — every test scale) and switches to the
-    chunked-broadcast path above (_chunked_own_sup/_chunked_probe:
-    bounded ~32 MB broadcasts, bit-identical selection); level 1's
-    table is nsup ~ sqrt(nlist) rows — inside the pin budget until
-    nlist ~ 1e10, so it stays on kmeans_cell_ranks' own auto rule."""
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        CENT_CHUNK,
-        _resolve_assign_mode,
-        resolve_chunk_cells,
-    )
-
-    if chunk_cells is None:
-        chunk_cells = CENT_CHUNK
-    chunk_cells = resolve_chunk_cells(chunk_cells)
+    Bound: the ~nlist-row child-centroid table is pinned into the
+    assignment and probe kernels, so the build accepts nlist <=
+    PIN_MAX_CELLS (100,000 cells, n <= 12.5M vectors) and raises
+    ``ValueError`` naming n and nlist above it, right after the row
+    count and before any k-means job.  At the bound the driver and each
+    Python worker hold nlist x 64 x 8 B = 51 MB of children; level 1's
+    table is nsup ~ sqrt(nlist) rows."""
     n = embeddings.count()  # bounded driver pin: one scalar
     nlist = adaptive_nlist(n)
+    require_pinnable(nlist, n)
     nsup = hier_nsup(nlist)
     psup = hier_psup(nsup)
     ncell = hier_ncell(nlist, nsup)
-    # the two-level build has no pipelined variant (its chunked pieces
-    # already partition by sup with no merge window), so any non-pin
-    # resolution takes the chunked path here
-    chunked = _resolve_assign_mode(assign_mode, nlist) != "pin"
 
     l1 = kmeans_cell_ranks(embeddings, nlist=nsup, iters=2, top=psup)
     sup = l1.filter(F.col("crn") == 1).select(
@@ -424,13 +278,10 @@ def ivf2_topk(
     )
 
     # iteration 1: assign against seeds, pmod-floor-division update
-    if chunked:
-        assign1 = _chunked_own_sup(gs, materialize(seeds), chunk_cells)
-    else:
-        assign1 = gs.mapInPandas(
-            _own_sup_kern(_pin_children(seeds)),
-            schema="vec_id long, cell long",
-        )
+    assign1 = gs.mapInPandas(
+        _own_sup_kern(_pin_children(seeds)),
+        schema="vec_id long, cell long",
+    )
     upd = (
         assign1.join(gs, "vec_id")
         .select("sup", "cell", F.posexplode("g").alias("pos", "gv"))
@@ -462,21 +313,12 @@ def ivf2_topk(
     )
     pq = gs.select("vec_id", "g").join(probes, "vec_id")
 
-    if chunked:
-        cent2 = materialize(upd)
-        # iteration 2 (final): members assigned against updated children
-        members = _chunked_own_sup(gs, cent2, chunk_cells).select(
-            F.col("vec_id").alias("member"), "cell"
-        )
-        pc = _chunked_probe(pq, cent2, ncell, chunk_cells)
-    else:
-        children = _pin_children(upd)
-        members = gs.mapInPandas(
-            _own_sup_kern(children), schema="vec_id long, cell long"
-        ).select(F.col("vec_id").alias("member"), "cell")
-        pc = pq.mapInPandas(
-            _probe_kern(children, ncell), schema=_PROBE_SCHEMA
-        ).select("q", "cell")
+    # iteration 2 (final): members assigned against updated children
+    children = _pin_children(upd)
+    members = gs.mapInPandas(
+        _own_sup_kern(children), schema="vec_id long, cell long"
+    ).select(F.col("vec_id").alias("member"), "cell")
+    pc = pq.mapInPandas(_probe_kern(children, ncell), schema="q long, cell long")
 
     # r16 (§2.4/§6): union the NARROW (vid, cell, side) pairs first and
     # fetch the embedding payload with ONE join — the previous form

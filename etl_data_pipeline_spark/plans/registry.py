@@ -61,70 +61,58 @@ _PLAN_MODULES = [
 #: registration order after these. Unknown names are ignored
 #: (defensive: a renamed query must not break loading).
 _PRIORITY = [
-    # -- round 15 close (optimization round): set MECHANICALLY from
-    # COVERAGE_AUDIT.json summary.suggested_priority after the final
-    # trace refresh.  Head: incremental_neardup (still never
-    # driver-checked), then the 43-name touched cohort — the two
-    # optimization batches + the continuation session's
-    # connected-components loop restructure dirty every query tracing
-    # similarity.py / text.py / timeseries.py / etl.py / graph.py
-    # executed code, and touched-since-check outranks staleness —
-    # then 6 of the oldest-evidence r8 tier (events_tumbling, h7, h8,
-    # interval_overlap_join, j2, j3).  The 12 r8-evidence names that
-    # no longer fit (j4, k5, k6, k8, skew_salted_join, the sql_*
-    # block) defer to r16's rotation: a 50-slot window cannot hold a
-    # 43-name touch-set and a 22-name staleness drain at once
-    # (disclosed in OPTIMIZATION_r15.md).
-    "incremental_neardup",
+    # set mechanically from COVERAGE_AUDIT.json
+    # summary.suggested_priority (tools/coverage_audit.py).
     "cusum_changepoint",
-    "i6c_quantized_rerank",
-    "hybrid_rrf_search",
-    "i6b_cosine_topk_hof",
-    "pq_ann",
-    "pq_recall",
     "k7_cogroup_asof",
-    "dq_audit",
-    "profile_table",
-    "neardup_clusters",
-    "ivf2_ann",
-    "ivf2_recall",
-    "ivf_ann",
-    "ivf_recall",
-    "i4b_minhash_lsh",
-    "kcore_peel",
-    "minhash_est_quality",
-    "neardup_degree_hist",
-    "neardup_link_predict",
-    "neardup_triangles",
-    "pagerank_neardup",
     "ann_lsh",
     "ann_multiprobe",
     "ann_multiprobe_recall",
     "ann_recall",
-    "rolling_median",
-    "rollup_reuse_daily_monthly",
-    "trend_slope",
-    "ewma_smooth",
-    "anomaly_p95",
-    "daily_active_cumulative",
-    "e5_running_distinct",
-    "funnel_conversion",
-    "gap_fill_locf",
-    "robust_zscore_mad",
-    "resample_ohlc",
-    "cosine_topk",
-    "embedding_neardup",
-    "i7_knn",
-    "i8_centroid_classify",
-    "i8b_centroid_accuracy",
-    "kmeans_lloyd",
-    "mmr_diversified_topk",
-    "events_tumbling",
-    "h7_variant",
-    "h8_xml_extract",
-    "interval_overlap_join",
-    "j2_sliding_window",
-    "j3_session_window",
+    "ivf2_ann",
+    "ivf2_recall",
+    "ivf_ann",
+    "ivf_recall",
+    "j4_sessionization_metrics",
+    "k5_arrow_udf",
+    "k6_map_in_arrow",
+    "k8_grouped_agg_udaf",
+    "skew_salted_join",
+    "sql_correlated_subquery",
+    "sql_exists_subquery",
+    "sql_group_by_all",
+    "sql_lateral_topk",
+    "sql_nested_agg_subquery",
+    "sql_q6_revenue",
+    "sql_recursive_cte",
+    "a4_partitioned_write",
+    "a8_dynamic_partition_overwrite",
+    "bigram_lm_score",
+    "bm25_topk",
+    "c2_left_join",
+    "c2_right_join",
+    "c4_broadcast_join",
+    "chunk_overlap",
+    "containment_df_stats",
+    "d2_global_agg",
+    "d6_filtered_agg",
+    "dedup_survivorship",
+    "doc_fingerprint",
+    "frequent_ngrams",
+    "global_shuffle",
+    "gopher_repetition",
+    "i2_text_stats",
+    "i3_exact_dedup",
+    "i5_tfidf_topterms",
+    "incremental_dedup",
+    "incremental_merge",
+    "merge_upsert",
+    "mixture_report",
+    "mixture_sample",
+    "pack_greedy",
+    "pack_sequences",
+    "pmi_bigrams",
+    "pps_systematic_sample",
 ]
 
 #: Round-7 status: cumulative driver coverage is 271/271 (r06 drained

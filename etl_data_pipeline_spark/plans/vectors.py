@@ -243,12 +243,8 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     still resolves to 4 planes, so the measured geometry and hashes
     there are unchanged; sf1 gets 7 planes / 128 buckets.
     """
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        adaptive_planes,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
-    return ann_lsh_topk(e, k=3, n_planes=adaptive_planes(e.count()))
+    return ann_lsh_topk(e, k=3)
 
 
 @query(
@@ -304,14 +300,10 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered operators themselves — the blocked-kernel exact kNN and
     the bucket-equi-join LSH — so this one row certifies the
     approximate path's quality, not just its shape."""
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        adaptive_planes,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     exact = knn(spark, e, k=3).select("vec_id", "neighbor")
     ann = (
-        ann_lsh_topk(e, k=3, n_planes=adaptive_planes(e.count()))
+        ann_lsh_topk(e, k=3)
         .select("vec_id", "neighbor")
         .withColumn("hit", F.lit(1))
     )
@@ -472,9 +464,11 @@ def ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     nlist smallest (knuth-hash, vec_id) ids — round 13's replacement
     for the global-rank stride sample, so the build has no single-task
     corpus sort; assignment argmin of integer squared distance, ties
-    by cell id; floor-division centroid update).  Above 1e5 cells the
-    build switches to chunked-broadcast assignment (same integers,
-    bounded memory — ann_adaptive.chunked_cell_ranks).
+    by cell id; floor-division centroid update).  The centroid table is
+    pinned into the assignment kernel, so the build accepts nlist <=
+    100,000 cells (n <= 12.5M vectors; the driver and each Python
+    worker then hold nlist x 64 x 8 B = 51 MB) and raises ValueError
+    above it before any k-means job.
 
     Replaced the fixed 10-label-cell quantizer whose per-cell
     population grew with n (the round-11 ``weak`` finding): measured
@@ -1045,17 +1039,12 @@ def ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plane count scale-adaptive since round 12 (see ann_lsh): fan-out
     grows only logarithmically with n while bucket population stays
     ~125."""
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        adaptive_planes,
-    )
     from etl_data_pipeline_spark.operators.similarity import (
         ann_lsh_multiprobe_topk,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    return ann_lsh_multiprobe_topk(
-        e, k=3, n_planes=adaptive_planes(e.count())
-    )
+    return ann_lsh_multiprobe_topk(e, k=3)
 
 
 @query(
@@ -1105,9 +1094,6 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 3.6x lift over single-probe for 5x probe fan-out, hash-checked).
     Gate pinned >= 0.3.  Planes scale-adaptive since round 12 (see
     ann_lsh); every sf <= 0.1 still resolves to 4 planes."""
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        adaptive_planes,
-    )
     from etl_data_pipeline_spark.operators.similarity import (
         ann_lsh_multiprobe_topk,
     )
@@ -1115,9 +1101,7 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     exact = knn(spark, e, k=3).select("vec_id", "neighbor")
     approx = (
-        ann_lsh_multiprobe_topk(
-            e, k=3, n_planes=adaptive_planes(e.count())
-        )
+        ann_lsh_multiprobe_topk(e, k=3)
         .select("vec_id", "neighbor")
         .withColumn("hit", F.lit(1))
     )

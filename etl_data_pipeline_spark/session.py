@@ -14,6 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: The directory holding the ``etl_data_pipeline_spark`` package.
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Runtime-settable confs every engine session needs. Applied both at
 #: build time (get_spark) and defensively at use time (ensure_engine_confs)
 #: because the driver may hand us a session we didn't build.
@@ -47,7 +50,27 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - static conf on odd builds
             pass
     _apply_checkpoint_dir(spark)
+    _apply_worker_pythonpath(spark)
     return spark
+
+
+def _apply_worker_pythonpath(spark: SparkSession) -> None:
+    """Put the repo root first on the Python workers' PYTHONPATH.
+
+    Workers resolve module-level kernels by import, so without this a
+    session launched from any directory but the repo root fails every
+    Arrow/pandas kernel with ``ModuleNotFoundError``.  Every Python
+    function PySpark builds afterwards carries ``sc.environment`` to
+    its workers — in local mode and on separate executor JVMs alike,
+    and for sessions the caller built too.  The caller's PYTHONPATH (an
+    explicit ``spark.executorEnv.PYTHONPATH``, else the driver's own)
+    follows the repo root, so its other imports keep resolving.
+    Idempotent: a second call leaves the value unchanged.
+    """
+    env = spark.sparkContext.environment
+    caller = env.get("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+    parts = [p for p in caller.split(os.pathsep) if p and p != _REPO_ROOT]
+    env["PYTHONPATH"] = os.pathsep.join([_REPO_ROOT, *parts])
 
 
 def _apply_checkpoint_dir(spark: SparkSession) -> None:
@@ -91,18 +114,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    if master.startswith("local-cluster"):
-        # Executor JVMs are separate processes whose Python workers
-        # resolve module-level kernels by IMPORT — the repo root must
-        # be on the executor-side PYTHONPATH (driver-side sys.path
-        # does nothing for them; see tools/stress_small_sf.py).
-        # Append the caller's PYTHONPATH after the repo root rather
-        # than clobbering it, so executor-side imports of non-repo
-        # deps the caller exported keep resolving (ADVICE r10).
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        caller_pp = os.environ.get("PYTHONPATH", "")
-        exec_pp = os.pathsep.join([repo_root, caller_pp]) if caller_pp else repo_root
-        builder = builder.config("spark.executorEnv.PYTHONPATH", exec_pp)
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

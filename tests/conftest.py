@@ -26,20 +26,11 @@ def spark():
     yield s
 
 
-@pytest.fixture(autouse=True)
-def _no_leaked_assign_mode_env(monkeypatch):
-    """ADVICE r14 (ann_adaptive env hooks): a leaked
-    SPARK_GRAFT_ASSIGN_MODE / SPARK_GRAFT_CHUNK_CELLS would silently
-    turn the A/B mode-equivalence tests into same-mode comparisons.
-    Clear the forcing hooks for EVERY test; a test that wants them
-    sets them explicitly via monkeypatch (test_ann_hier.py does)."""
-    monkeypatch.delenv("SPARK_GRAFT_ASSIGN_MODE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_CHUNK_CELLS", raising=False)
-
-
 @pytest.fixture(scope="session")
 def oracle():
-    con = duckdb.connect()
+    # Cap DuckDB so an oracle whose inlined CTEs blow up fails its own
+    # test instead of taking the whole pytest process down with it.
+    con = duckdb.connect(config={"memory_limit": "4GB", "threads": 4})
     for name in TABLES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(SF_DIR, name)}')"

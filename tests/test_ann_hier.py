@@ -217,57 +217,6 @@ def test_hash_seed_sql_parity():
         assert got == want, (nlist, got, want)
 
 
-def test_ivf2_chunked_mode_equivalence(spark, hier_frames):
-    """The chunked-broadcast build (assign_mode='chunked', tiny chunks
-    to force many branches) must be BIT-IDENTICAL to the pinned build —
-    the selection rules are the same integers either way (VERDICT r12
-    item 1 done-criterion)."""
-    from etl_data_pipeline_spark.plans.ann_hier import ivf2_topk
-
-    e, res = hier_frames
-    a = sorted(tuple(r) for r in res.collect())
-    b = sorted(
-        tuple(r)
-        for r in ivf2_topk(e, k=3, assign_mode="chunked", chunk_cells=2)
-        .collect()
-    )
-    assert a == b
-    spark.catalog.clearCache()
-
-
-def test_env_forcing_hooks(monkeypatch):
-    """The chaos battery's process-level forcing hooks (round 14,
-    VERDICT r13 item 6) must override AUTO mode resolution and the
-    chunk size, stay inert when unset, and (ADVICE r14) leave
-    EXPLICIT caller modes alone."""
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        PIN_MAX_CELLS,
-        _resolve_assign_mode,
-        resolve_chunk_cells,
-    )
-
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        PIPE_MAX_CELLS,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_ASSIGN_MODE", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_CHUNK_CELLS", raising=False)
-    assert _resolve_assign_mode("auto", 10) == "pin"
-    assert _resolve_assign_mode("auto", PIN_MAX_CELLS + 1) == "pipelined"
-    assert _resolve_assign_mode("auto", PIPE_MAX_CELLS + 1) == "chunked"
-    assert resolve_chunk_cells(65536) == 65536
-
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_MODE", "chunked")
-    monkeypatch.setenv("SPARK_GRAFT_CHUNK_CELLS", "32")
-    assert _resolve_assign_mode("auto", 10) == "chunked"
-    # ADVICE r14: an EXPLICIT caller mode is an A/B-test contract the
-    # env hook must NOT override (registered queries all pass "auto",
-    # so the chaos battery's forcing still engages through them)
-    assert _resolve_assign_mode("pin", 10) == "pin"
-    assert _resolve_assign_mode("pipelined", 10) == "pipelined"
-    assert resolve_chunk_cells(65536) == 32
-
-
 def test_topk_cells_blocked_matches_bruteforce(monkeypatch):
     """The cell-blocked kernel selection (round 14: bounded transient
     distance matrix) must equal the one-shot brute-force (d, cell)

@@ -730,8 +730,8 @@ def test_adaptive_ann_oracles_parameterized():
         adaptive_codes,
         adaptive_nlist,
         adaptive_nprobe,
-        adaptive_planes,
     )
+    from etl_data_pipeline_spark.operators.similarity import adaptive_planes
     from etl_data_pipeline_spark.plans import ORACLES
 
     lsh = ["ann_lsh", "ann_recall", "ann_multiprobe", "ann_multiprobe_recall"]
@@ -780,19 +780,16 @@ def test_kmeans_build_plan_has_no_global_sort(spark):
     seeding (ann_adaptive.hash_seeds) plans the seed selection as
     TakeOrderedAndProject over the ~2*nlist + 64 threshold candidates
     (per-partition top-nlist + one bounded merge of skinny rows), with
-    no Window/global-Sort node anywhere; the chunked build's only
-    window is PARTITIONED by vec_id."""
+    no Window/global-Sort node anywhere."""
     import contextlib
     import io
 
     from etl_data_pipeline_spark.catalog import load_table
     from etl_data_pipeline_spark.operators.ann_adaptive import (
         adaptive_nlist,
-        chunked_cell_ranks,
         grid_vectors,
         hash_seeds,
     )
-    from etl_data_pipeline_spark.materialize import materialize
 
     e = load_table(spark, SF_DIR, "embeddings")
     n = e.count()
@@ -805,14 +802,3 @@ def test_kmeans_build_plan_has_no_global_sort(spark):
     sp = buf.getvalue()
     assert "TakeOrderedAndProject" in sp, sp
     assert "Window" not in sp, sp
-    # chunked merge window: PARTITIONED (vec_id), never a global window
-    cent = materialize(
-        seeds.select("cell", "carr")
-    )
-    ranked = chunked_cell_ranks(materialize(grid), cent, top=2, chunk_cells=2)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        ranked.explain("formatted")
-    rp = buf.getvalue()
-    assert "windowspecdefinition(vec_id" in rp, rp
-    spark.catalog.clearCache()

@@ -81,7 +81,6 @@ from pathlib import Path
 
 _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
-os.environ.setdefault("PYTHONPATH", str(_REPO))
 
 QUERY = sys.argv[1] if len(sys.argv) > 1 else "neardup_clusters"
 SF = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
@@ -117,7 +116,6 @@ def main() -> None:
         SparkSession.builder.master("local-cluster[2,4,4096]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
-        .config("spark.executorEnv.PYTHONPATH", str(_REPO))
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

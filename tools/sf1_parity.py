@@ -405,9 +405,7 @@ def _mirror_multiprobe(sf_dir: str, k: int = 3):
 
     import numpy as np
 
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        adaptive_planes,
-    )
+    from etl_data_pipeline_spark.operators.similarity import adaptive_planes
 
     con = duckdb.connect()
     df = con.sql(
@@ -537,9 +535,7 @@ def _mirror_lsh_single(sf_dir: str, k: int = 3):
 
     import numpy as np
 
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        adaptive_planes,
-    )
+    from etl_data_pipeline_spark.operators.similarity import adaptive_planes
 
     ids, E = _load_emb(sf_dir)
     n, planes = len(ids), adaptive_planes(len(ids))

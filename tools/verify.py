@@ -32,11 +32,7 @@ coverage-window sync check, and exits non-zero on the first failure:
      (j6_stream_dedup at sf0.1: a real multi-micro-batch job whose
      state store must reload on the relaunched executor; first
      measured green 2026-08-15, kill at 2.66 s, recovery visible at
-     16.6 s vs 5.3 s warm, hash identical), the round-14 eighth mode
-     (chunked broadcast assignment: torrent re-fetch of centroid
-     chunks to the relaunched executor), the round-15 ninth mode
-     (pipelined broadcast assignment — all chunks live at once, the
-     shipped mid-regime default), and — round 11 — a
+     16.6 s vs 5.3 s warm, hash identical), and — round 11 — a
      PHASE-TARGETED kill during a downstream stage's shuffle FETCH
      (status-tracker trigger, not wall-clock; since round 12 the green
      additionally requires the killed-into stage's FINAL
@@ -275,48 +271,6 @@ def main() -> None:
         [py, str(_REPO / "tools" / "chaos_executor_loss.py"),
          "ivf2_ann", "/root/testdata/sf0.1", "auto"],
         env={"SPARK_GRAFT_CHECKPOINT_DIR": ""},
-        timeout=1800,
-    )
-    _run(
-        # Round 14 (VERDICT r13 item 6): eighth mode — the CHUNKED
-        # broadcast-assignment path under executor loss.  Modes 6/7
-        # kill the PINNED builds; above PIN_MAX_CELLS the build ships
-        # centroid state via sc.broadcast, whose re-delivery to a
-        # relaunched executor is a different recovery path (torrent
-        # re-fetch from the driver, then lineage recompute of the
-        # mapInPandas output).  Forced chunked at a tiny chunk size so
-        # sf0.1's nlist splits into multiple broadcasts.  PASS = the
-        # post-kill run's hash equals the tool's own (chunked) baseline
-        # run; chunked == pinned is separately pinned by the
-        # mode-equivalence tests.
-        "executor-loss chaos (chunked broadcast assignment)",
-        [py, str(_REPO / "tools" / "chaos_executor_loss.py"),
-         "ivf2_ann", "/root/testdata/sf0.1", "auto"],
-        env={"SPARK_GRAFT_CHECKPOINT_DIR": "",
-             "SPARK_GRAFT_ASSIGN_MODE": "chunked",
-             "SPARK_GRAFT_CHUNK_CELLS": "32"},
-        timeout=1800,
-    )
-    _run(
-        # Round 15 (VERDICT r14 item 4): ninth mode — the PIPELINED
-        # broadcast-assignment path (the SHIPPED mid-regime default
-        # since round 14) under executor loss.  Its recovery surface
-        # differs from mode 8's chunked-union: ALL chunk broadcasts
-        # are live at once and the cross-chunk merge state lives
-        # inside one mapInPandas kernel, so a relaunched executor must
-        # torrent-re-fetch every chunk and recompute the in-kernel
-        # merge (no per-chunk union branch to retry independently).
-        # Forced pipelined at a tiny chunk size so sf0.1's nlist
-        # splits into multiple simultaneous broadcasts.  PASS = the
-        # post-kill hash equals the tool's own (pipelined) baseline;
-        # pipelined == pinned is separately pinned by the 3-way
-        # mode-equivalence test.
-        "executor-loss chaos (pipelined broadcast assignment)",
-        [py, str(_REPO / "tools" / "chaos_executor_loss.py"),
-         "ivf2_ann", "/root/testdata/sf0.1", "auto"],
-        env={"SPARK_GRAFT_CHECKPOINT_DIR": "",
-             "SPARK_GRAFT_ASSIGN_MODE": "pipelined",
-             "SPARK_GRAFT_CHUNK_CELLS": "32"},
         timeout=1800,
     )
     _run("pytest", [py, "-m", "pytest", "tests/", "-q"])
