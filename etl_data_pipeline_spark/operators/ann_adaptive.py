@@ -64,9 +64,9 @@ from etl_data_pipeline_spark.materialize import materialize
 from etl_data_pipeline_spark.operators.similarity import (
     PQ_SUBDIM,
     PQ_SUBSPACES,
-    TARGET_BLOCK_ROWS,
     TARGET_CELL,
-    _cell_topk_kern,
+    blocks_for,
+    cell_topk,
     exact_cosine_rerank_topk,
     knn,
     quantize_embeddings,
@@ -392,15 +392,10 @@ def ivf_topk_adaptive(
     """IVF top-k with the SCALE-ADAPTIVE quantizer: nlist = n/125 cells
     from the seeded integer k-means (kmeans_cell_ranks), nprobe =
     nlist/5 (~20% scan), exact cosine only inside probed cells via the
-    shared per-cell numpy kernel (_cell_topk_kern — one matmul per
-    cell).
-
-    Replaces the fixed 10-label-cell quantizer (rejected by
-    measurement: its per-cell population grows with n, so the sf1 slope
-    audit read 5.4-7.4 on the ANN family and recall held only because
-    cells bloated — SLOPE_AUDIT_SF1.json round 11).  Measured adaptive
-    recall@3 vs the fixed quantizer's 0.41: 0.733 at sf0.01, 0.479 at
-    sf0.1 (18.8% scan), with the sf1 row in BASELINE.md.
+    shared retrieval core (similarity.cell_topk, fanout nprobe).
+    Measured recall@3 vs the fixed 10-label-cell quantizer's 0.41:
+    0.733 at sf0.01, 0.479 at sf0.1 (18.8% scan); the fixed quantizer's
+    per-cell population grew with n (SLOPE_AUDIT_SF1.json).
 
     Bound: the centroid table is pinned into the assignment kernel, so
     the build accepts nlist <= PIN_MAX_CELLS (100,000 cells, n <= 12.5M
@@ -409,27 +404,16 @@ def ivf_topk_adaptive(
     bound the driver and each Python worker hold nlist x 64 x 8 B =
     51 MB of centroids.
     """
-    from pyspark.sql.window import Window
-
     n = embeddings.count()  # bounded driver pin: one scalar
     nlist = adaptive_nlist(n)
     require_pinnable(nlist, n)
     nprobe = adaptive_nprobe(nlist)
     # top=nprobe: ranks beyond the probe set are never consumed, so the
-    # kernel never materializes the n x nlist ranking (320M rows at
-    # sf10) — the property test requests the full ranking explicitly
+    # kernel never materializes the n x nlist ranking
     ranked = kmeans_cell_ranks(embeddings, nlist=nlist, iters=iters, top=nprobe)
-    # r16 (§2.4/§6): both tagged sides come from the SAME ranked frame —
-    # crn == 1 is the member assignment and crn <= nprobe the probe set
-    # (which includes crn == 1) — so one pass with a conditional explode
-    # replaces the two filter+join branches: each (vec_id, cell, crn)
-    # row yields side 0 (probe) always, plus side 1 (member) when
-    # crn == 1 (nprobe >= 2 by adaptive_nprobe, so the probe filter
-    # never drops members).  The embeddings payload scan and the join
-    # run ONCE instead of once per branch (ranked itself was already a
-    # materialize point — each branch paid a cache read, now one does);
-    # identical row multiset.
-    emb = embeddings.select("vec_id", "embedding")
+    # One pass over the ranking yields both sides: every (vec_id, cell)
+    # row probes (side 0), and crn == 1 is also the member assignment
+    # (side 1; nprobe >= 2, so the probe filter never drops members).
     pairs = ranked.filter(F.col("crn") <= nprobe).select(
         F.col("vec_id").alias("vid"),
         "cell",
@@ -439,39 +423,7 @@ def ivf_topk_adaptive(
             ).otherwise(F.array(F.lit(0)))
         ).alias("side"),
     )
-    tagged = pairs.join(emb, pairs.vid == emb.vec_id).select(
-        "cell", "vid", "embedding", "side"
-    )
-    # r16 (VERDICT r15 item 1b): group the kernel on a cell BUCKET —
-    # the nlist = n/125 doctrine makes per-cell keying O(n) pandas
-    # groups at scale (~8M at 1e9 vectors), each paying the per-GROUP
-    # Arrow tax (guide §4).  B caps the expected bucket frame at
-    # ~TARGET_BLOCK_ROWS rows (the tagged stream is n*(1+nprobe) rows);
-    # result invariant to B (see _cell_topk_kern), and every sf <= 0.1
-    # resolves to B = 64 >= nlist cells, i.e. the r15 geometry.
-    nbkt = max(
-        64,
-        embeddings.sparkSession.sparkContext.defaultParallelism * 2,
-        n * (1 + nprobe) // TARGET_BLOCK_ROWS,
-    )
-    local = (
-        tagged.withColumn("bkt", F.pmod(F.xxhash64("cell"), F.lit(nbkt)))
-        .groupBy("bkt")
-        .applyInPandas(
-            _cell_topk_kern(k), schema="q long, n long, cosine double"
-        )
-    )
-    w = Window.partitionBy("q").orderBy(F.desc("cosine"), F.asc("n"))
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("q").alias("vec_id"),
-            F.col("n").alias("neighbor"),
-            "cosine",
-            F.col("rn").cast("long").alias("rn"),
-        )
-    )
+    return cell_topk(pairs, embeddings, k, n, fanout=nprobe)
 
 
 def pq_rerank_adaptive(
@@ -481,31 +433,25 @@ def pq_rerank_adaptive(
     n_cand: int = 50,
     n_blocks: int | None = None,
 ) -> DataFrame:
-    """PQ two-stage ANN with a SCALE-ADAPTIVE codebook: n_codes =
-    max(16, n / 125) seed codes instead of the fixed 16 — the same
-    constant-population doctrine as adaptive_nlist, one compression
-    level down (a fixed 16-code book quantizes a 10x corpus with the
-    same 16 prototypes, so reconstruction error drifts up with n; a
-    per-code population held at ~125 keeps it flat).  Every sf <= 0.1
-    resolves to 16 codes, so the measured 16x4 geometry and hashes
-    there are unchanged; sf1 gets 160 codes.
+    """PQ two-stage ANN (SDC variant) with a SCALE-ADAPTIVE codebook:
+    n_codes = max(16, n / 125) seed codes — the constant-population
+    rule of adaptive_nlist one compression level down (a fixed 16-code
+    book quantizes a 10x corpus with the same 16 prototypes, so
+    reconstruction error drifts up with n).  Every sf <= 0.1 resolves
+    to 16 codes; sf1 gets 160.
 
-    Mechanics are operators/similarity.py::pq_rerank's, generalized
-    over the codebook size: int8 quantize (shared quantize_embeddings),
-    seed codebook = the n_codes lowest vec_ids (collected — a bounded
-    driver pin that grows only as n/125), one vectorized numpy
-    mapInPandas assign+decode stage, blocked-kernel candidate top-
-    n_cand over the reconstructions, exact float re-rank.  Lives here
-    rather than as a new ``n_codes`` parameter on pq_rerank because a
-    signature change re-dirties the whole similarity.py trace cohort
-    (18 queries) for a one-call-site generalization; the fixed-16
-    original remains the unit-tested reference implementation.  The
-    SDC candidate scan itself stays all-pairs BY CONTRACT (the
-    documented cost model; the scale path for the SCAN is IVF cells —
-    see ivf_topk_adaptive)."""
+    Stage 1: int8 quantize (quantize_embeddings); the seed codebook is
+    the n_codes lowest vec_ids (collected — a bounded driver pin that
+    grows only as n/125); one vectorized numpy mapInPandas stage
+    assigns each subvector its nearest code and decodes, with no join
+    and no shuffle; the blocked knn kernel takes the top-n_cand
+    candidates over the reconstructions.  Stage 2: exact float re-rank
+    (similarity.exact_cosine_rerank_topk).  Every compressed number is
+    an integer, so candidates are exactly cross-engine reproducible.
+    The SDC scan stays all-pairs by contract; the scale path for the
+    scan is IVF cells (ivf_topk_adaptive)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.window import Window
 
     n = embeddings.count()
     n_codes = adaptive_codes(n)
@@ -531,22 +477,12 @@ def pq_rerank_adaptive(
         ]
     )
 
-    # |x-c|^2 = |x|^2 + |c|^2 - 2 x.c with a PER-SUBSPACE argmin loop.
-    # Two rounds of the round-12 scale audits drove this shape: the
-    # original broadcast subtract-square form materializes an
-    # (n, 16, n_codes, 4) float64 temporary — 3.3 GB per 20k-row batch
-    # at the sf1 adaptive codebook (n_codes=160), measured 67 s for
-    # pq_ann at sf1 (re-measured 15.7 s after the expansion rewrite,
-    # same artifact); and even the expansion's full (n, 16, n_codes)
-    # distance tensor is ~2 GB per Arrow batch at sf10's n_codes=1600,
-    # which OOM-killed the Python workers (PythonArrowOutput
-    # EOFException) across 24 concurrent tasks.  Looping the 16
-    # subspaces keeps the peak at one (n, n_codes) block — 16x less —
-    # and computes the SAME integers: inputs are int8-quantized
-    # (|x| <= 127, 4-dim dots <= 6.5e4), every term float64-exact, and
-    # per-(row, subspace) argmin with first-min ties on the ascending
-    # code axis is exactly the 3-D argmin(axis=2) it replaces
-    # (hash-checked against the unchanged oracle after each rewrite).
+    # |x-c|^2 = |x|^2 + |c|^2 - 2 x.c with a per-subspace argmin loop:
+    # the full (n, 16, n_codes) distance tensor is ~2 GB per Arrow batch
+    # at sf10's n_codes=1600 and OOM-killed the Python workers; one
+    # (n, n_codes) block per subspace is 16x less.  Same integers:
+    # inputs are int8-quantized (4-dim dots <= 6.5e4, float64-exact)
+    # and argmin takes the first minimum, i.e. the lowest code id.
     cb2 = (cb_arr**2).sum(-1)  # (subspaces, n_codes)
 
     def decode_kern(batches):
@@ -580,17 +516,9 @@ def pq_rerank_adaptive(
     decoded = qe.select("vec_id", "embedding").mapInPandas(
         decode_kern, schema="vec_id long, embedding array<double>"
     )
-    # Scale-adaptive block count for the SDC candidate scan: since
-    # round 13 the ~2500-rows-per-block rule lives in knn itself
-    # (operators/similarity.py::_resolve_blocks, ADVICE r12 — every
-    # blocked-kernel consumer inherits the sf10 OOM fix, not just this
-    # call site).  Resolved HERE from the already-pinned n rather than
-    # by passing None, because knn's resolver would count() the decoded
-    # frame — an extra pass through the decode mapInPandas stage for a
-    # number this function already holds.
+    # the blocked kernel's block rule, from the n already counted (knn
+    # would otherwise count the decoded frame: one more decode pass)
     if n_blocks is None:
-        n_blocks = max(8, n // TARGET_BLOCK_ROWS)
+        n_blocks = blocks_for(n)
     cand = knn(spark, decoded, k=n_cand, n_blocks=n_blocks)
-    # shared stage-2: exact-cosine top-k with per-vector norm hoisting
-    # (operators/similarity.py::exact_cosine_rerank_topk, r15)
     return exact_cosine_rerank_topk(cand, embeddings, k)

@@ -17,8 +17,11 @@ Two implementations of the cosine kernel:
 
 Scale posture (100 TB): blocked brute force distributes but stays
 O(n^2) total work — beyond brute-force reach, cut candidates first with
-LSH buckets (``ann_lsh_topk``) or an IVF coarse quantizer (``ivf_topk``)
-and run exact cosine only inside buckets/probed cells.
+LSH buckets (``ann_lsh_topk``, ``ann_lsh_multiprobe_topk``) or an IVF
+coarse quantizer (``ann_adaptive.ivf_topk_adaptive``, the two-level
+``plans/ann_hier.ivf2_topk``).  Each of the four only builds narrow
+(vid, cell, side) pairs; ``cell_topk`` is the one retrieval core that
+fetches the vectors and runs exact cosine inside each cell.
 
 Cosine formula pinned for oracle parity: dot / sqrt(na2 * nb2) with
 float32 inputs widened to float64 BEFORE any arithmetic (matches
@@ -27,13 +30,15 @@ float32 inputs widened to float64 BEFORE any arithmetic (matches
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_data_pipeline_spark.operators.text import md5_hash32
+from etl_data_pipeline_spark.session import group_buckets
 
 
 def dot_col(x: Column, y: Column) -> Column:
@@ -128,33 +133,30 @@ def cosine_pairs_hof(embeddings: DataFrame, min_cos: float) -> DataFrame:
     )
 
 
-#: Target rows per block for the blocked all-pairs kernels.  The
-#: per-task cosine matrix is (n/n_blocks)^2 doubles, so a FIXED
-#: n_blocks=8 is ~50 MB/task at sf1's 20k vectors but 5 GB/task at
-#: sf10's 200k — the round-12 third-decade sweep OOM-killed the local
-#: JVM there.  Holding the BLOCK population at ~2500 rows (the same
-#: constant-population doctrine as the IVF nlist / PQ codebook rules)
-#: keeps every task at ~50 MB at any n.  Round 13 (ADVICE r12): the
-#: rule moved from pq_rerank_adaptive's single call site into
-#: _resolve_blocks so EVERY consumer of the blocked kernels (knn, the
-#: recall gates' exact legs, cosine_topk_pairs, embedding_neardup)
-#: inherits it instead of keeping the fixed-8 wall.
+#: Target rows per block for the blocked all-pairs kernels, and per
+#: kernel frame for ``cell_topk``.  The per-task cosine matrix is
+#: (n/n_blocks)^2 doubles, so a FIXED n_blocks=8 is ~50 MB/task at
+#: sf1's 20k vectors but 5 GB/task at sf10's 200k (measured: it
+#: OOM-killed the local JVM there).  Holding the block population at
+#: ~2500 rows keeps every task at ~50 MB at any n.
 TARGET_BLOCK_ROWS = 2500
 
 
+def blocks_for(n: int) -> int:
+    """Block count for ``n`` vectors: max(8, n // TARGET_BLOCK_ROWS).
+    The answer is blocking-invariant by construction — every query
+    meets every other vector in exactly one block pair and the final
+    window/sort takes the global top under the same total order — so
+    only task memory changes (asserted by tests/test_operators.py's
+    blocking-invariance cases)."""
+    return max(8, n // TARGET_BLOCK_ROWS)
+
+
 def _resolve_blocks(embeddings: DataFrame, n_blocks: int | None) -> int:
-    """n_blocks=None -> max(8, n // 2500).  The answer is
-    blocking-invariant by construction — every query meets every other
-    vector in exactly one block pair and the final window/sort takes
-    the global top under the same total order — so hashes are
-    unchanged at any block count (asserted by
-    tests/test_operators.py's blocking-invariance cases); only task
-    memory changes.  Every sf <= 1 resolves to the legacy 8, so the
-    measured geometry there is untouched.  Cost: one bounded count()
-    job (a scalar driver pin, the ivf_topk_adaptive precedent)."""
+    """n_blocks=None -> blocks_for(n), at the cost of one count() job."""
     if n_blocks is not None:
         return n_blocks
-    return max(8, embeddings.count() // TARGET_BLOCK_ROWS)
+    return blocks_for(embeddings.count())
 
 
 def _block_tagged(embeddings: DataFrame, n_blocks: int) -> DataFrame:
@@ -337,6 +339,29 @@ def knn(
     )
 
 
+def recall_vs_exact(
+    spark: SparkSession, embeddings: DataFrame, approx: DataFrame, floor: float
+) -> DataFrame:
+    """Recall@3 gate of an approximate top-3 retrieval ``approx``
+    (vec_id, neighbor, ...) against the exact blocked ``knn``: one row
+    (n_exact, n_hit, recall, recall_ok) with recall_ok = recall >=
+    ``floor``.  Both legs are the registered operators themselves, so
+    the row certifies retrieval quality end to end."""
+    exact = knn(spark, embeddings, k=3).select("vec_id", "neighbor")
+    hits = approx.select("vec_id", "neighbor").withColumn("hit", F.lit(1))
+    recall = F.col("n_hit") / F.col("n_exact")
+    return (
+        exact.join(hits, ["vec_id", "neighbor"], "left")
+        .agg(F.count(F.lit(1)).alias("n_exact"), F.count("hit").alias("n_hit"))
+        .select(
+            "n_exact",
+            "n_hit",
+            recall.alias("recall"),
+            (recall >= floor).alias("recall_ok"),
+        )
+    )
+
+
 def embedding_neardup(
     spark: SparkSession, embeddings: DataFrame, min_cos: float, n_blocks: int | None = None
 ) -> DataFrame:
@@ -434,57 +459,37 @@ def _raise_bad_embedding(pdf: pd.DataFrame) -> None:
             )
 
 
+def _plane_weights(n_planes: int) -> np.ndarray:
+    """(64, n_planes) int64 LSH hyperplane weights, w[pos, j] =
+    md5_32(f"{j}_{pos}") % 2001 - 1000: the driver-side spelling of the
+    ``md5_hash32`` SQL expression the oracles use, computed with no
+    Spark job (tests/test_operators.py pins all 30 x 64 weights to the
+    SQL expression)."""
+    w = np.empty((64, n_planes), dtype=np.int64)
+    for j in range(n_planes):
+        for pos in range(64):
+            h = hashlib.md5(f"{j}_{pos}".encode()).hexdigest()
+            w[pos, j] = int(h[:8], 16) % 2001 - 1000
+    return w
+
+
 def lsh_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
     """ANN scale path: random-hyperplane LSH bucket per vector.
 
-    Hyperplane weights come from the cross-engine md5 hash (deterministic
-    and SQL-reproducible): w(j,pos) = md5_32(j||'_'||pos) % 2001 - 1000
-    — kept as INTEGERS, applied to int8-QUANTIZED dims (the i6c/PQ
-    discipline), so each projection is an exact integer sum (|term| <=
-    127*1000, 64 terms, far under 2^53): the sign test is
-    accumulation-order independent across Spark partitionings and vs
-    the DuckDB oracle (ADVICE r5: a float SUM(v*w) within epsilon of 0
-    could flip a bit nondeterministically).  Quantization perturbs
-    direction < 1%, so bucket geometry (and measured recall) is
-    statistically unchanged.  Returns (vec_id, bucket).
+    Hyperplane weights are the cross-engine md5 hash (``_plane_weights``)
+    kept as INTEGERS and applied to int8-QUANTIZED dims, so each
+    projection is an exact integer sum (|term| <= 127*1000, 64 terms,
+    far under 2^53): the sign test is accumulation-order independent
+    across Spark partitionings and vs the DuckDB oracle.  The
+    projections run as one int64 matmul per Arrow batch.  Quantization
+    perturbs direction < 1%, so bucket geometry (and measured recall)
+    is statistically unchanged.  Returns (vec_id, bucket).
 
     Input contract: every embedding is a non-NULL array of 64 values;
     the kernel raises ``ValueError`` naming the first offending vec_id
     otherwise.
     """
-    spark = embeddings.sparkSession
-    planes = (
-        spark.range(n_planes)
-        .select(F.col("id").cast("int").alias("j"))
-        .crossJoin(spark.range(64).select(F.col("id").cast("int").alias("pos")))
-        .select(
-            "j",
-            "pos",
-            (
-                md5_hash32(
-                    F.concat_ws("_", F.col("j").cast("string"), F.col("pos").cast("string"))
-                )
-                % 2001
-                - 1000
-            ).alias("w"),
-        )
-    )
-    # r16 (guide §4.2): the projections run as ONE integer matmul per
-    # Arrow batch instead of posexplode (n x 64 rows) -> broadcast plane
-    # join (x n_planes) -> two-level aggregation, which was the measured
-    # floor of the LSH ANN paths (7.1 of 7.9 s at sf1).  The hyperplane
-    # table is STILL the md5 SQL expression above — n_planes * 64 <=
-    # 1920 tiny rows collected as a bounded driver pin (the
-    # _pin_children precedent), so the weights are byte-identical to
-    # the former join's.  Exactness is unchanged: quantized values and
-    # weights are integers, every partial sum is < 2^53, so the int64
-    # matmul reproduces the former SUM(v*w) CAST LONG bit-for-bit, and
-    # the sign test / power-of-two bucket encoding are the same
-    # integers in numpy as they were in SQL.
-    wrows = planes.collect()  # bounded driver pin: <= n_planes*64 rows
-    wmat = np.zeros((64, n_planes), dtype=np.int64)
-    for r in wrows:
-        wmat[r["pos"], r["j"]] = r["w"]
+    wmat = _plane_weights(n_planes)
     pow2 = 2 ** np.arange(n_planes, dtype=np.int64)
 
     def kern(it):
@@ -512,103 +517,27 @@ def lsh_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
 
 
 def ann_lsh_topk(embeddings: DataFrame, k: int) -> DataFrame:
-    """ANN: top-k per query within its LSH bucket (equi-join on bucket —
-    never all-pairs; the join key is what shards the problem at scale).
-
-    Candidates run through the shared per-bucket numpy kernel
-    (_cell_topk_kern — one matmul per bucket) rather than per-pair HOF
-    cosine: measured 5.7 s -> ~1 s at sf0.1 with hash-identical results
-    (same rounded cosine, same tie order).
-
-    r16: the kernel groups on a cell BUCKET pmod(xxhash64(bucket), B),
-    B = max(64, 2*parallelism, 2n/TARGET_BLOCK_ROWS) — adaptive_planes
-    holds LSH buckets at ~constant population, so per-bucket keying
-    meant O(n) pandas groups at scale; bucketing amortizes the
-    per-GROUP Arrow tax while capping the expected bucket frame at
-    ~TARGET_BLOCK_ROWS rows (the tagged stream is 2n rows).  Result
-    invariant to B (see _cell_topk_kern); every sf <= 0.1 resolves to
-    B = 64 >= 2^n_planes cells, i.e. the r15 geometry.
-
-    The plane count is adaptive_planes(n), from the same row count that
-    sizes B (one count per build)."""
-    from pyspark.sql.window import Window
-
+    """ANN: top-k per query within its own LSH bucket (``cell_topk``
+    with fanout 1: every vector is the query and a member of its
+    bucket).  The plane count is adaptive_planes(n); the same count
+    sizes the kernel's bucket groups."""
     n = embeddings.count()  # bounded driver pin: one scalar
-    sc = embeddings.sparkSession.sparkContext
-    nb = max(64, sc.defaultParallelism * 2, 2 * n // TARGET_BLOCK_ROWS)
     b = lsh_buckets(embeddings, adaptive_planes(n))
-    e = embeddings.join(b, "vec_id")
-    # r16 (§2.4/§6): every vector is both query (side 0) and member
-    # (side 1) of its own bucket, so the tagged stream is built in ONE
-    # pass with explode over the side tags — the previous two-branch
-    # union re-executed the whole e subtree (embeddings scan + LSH
-    # signature pass) once per branch.  Identical multiset of rows.
-    tagged = e.select(
-        F.col("bucket").alias("cell"),
+    pairs = b.select(
         F.col("vec_id").alias("vid"),
-        "embedding",
+        F.col("bucket").alias("cell"),
         F.explode(F.array(F.lit(0), F.lit(1))).alias("side"),
     )
-    local = (
-        tagged.withColumn("bkt", F.pmod(F.xxhash64("cell"), F.lit(nb)))
-        .groupBy("bkt")
-        .applyInPandas(
-            _cell_topk_kern(k), schema="q long, n long, cosine double"
-        )
-    )
-    w = Window.partitionBy("q").orderBy(F.desc("cosine"), F.asc("n"))
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(F.col("q").alias("vec_id"), F.col("n").alias("neighbor"), "cosine", F.col("rn").cast("long").alias("rn"))
-    )
-
-
-def centroid_scores(embeddings: DataFrame) -> DataFrame:
-    """Cosine of every vector against every label centroid:
-    (vec_id, cand_label, cos). The shared kernel behind nearest-centroid
-    classification (i8) and the IVF coarse quantizer (ivf_ann)."""
-    dims = explode_dims(embeddings)
-    cent = label_centroids(embeddings).select(
-        F.col("label").alias("cand_label"), "pos", "c"
-    )
-    cnorm = cent.groupBy("cand_label").agg(F.sum(F.col("c") * F.col("c")).alias("nc2"))
-    vnorm = dims.groupBy("vec_id").agg(F.sum(F.col("v") * F.col("v")).alias("nv2"))
-    dots = (
-        dims.join(F.broadcast(cent), "pos")
-        .groupBy("vec_id", "cand_label")
-        .agg(F.sum(F.col("v") * F.col("c")).alias("dot"))
-    )
-    return (
-        dots.join(F.broadcast(cnorm), "cand_label")
-        .join(vnorm, "vec_id")
-        .select(
-            "vec_id",
-            "cand_label",
-            (F.col("dot") / F.sqrt(F.col("nv2") * F.col("nc2"))).alias("cos"),
-        )
-    )
+    return cell_topk(pairs, embeddings, k, n, fanout=1)
 
 
 def _cell_topk_kern(k: int):
-    """Shared per-cell numpy kernel: rows tagged side=0 are probing
-    queries, side=1 are cell members; emits each query's local top-k by
-    rounded cosine with (-cosine, id) tie order and self-pairs masked.
-    Used by the IVF/LSH ANN paths (ivf_topk_adaptive, ivf2_topk,
-    ann_lsh_topk, ann_lsh_multiprobe_topk).
-
-    r16 (VERDICT r15 item 1b): each arriving frame is one cell BUCKET
-    (pmod(xxhash64(cell), B) at every call site), not one cell — the
-    constant-population doctrine holds cells at ~125 rows, so at 1e9
-    vectors per-cell keying meant ~8M pandas groups paying the
-    per-GROUP Arrow round-trip tax (guide §4, the k7/cusum pattern).
-    The kernel loops the UNCHANGED per-cell logic over the bucket's
-    cells — no query/member pair ever crosses a cell, the matmul stays
-    per-cell, and the downstream global window re-sorts, so the result
-    is invariant to B (and to the r15 one-cell-per-group keying, which
-    is the B >= n_cells special case).  Per-bucket memory is the sum of
-    its cells' rows: ~n/B expected (call sites bound it via
-    TARGET_BLOCK_ROWS), never one giant frame."""
+    """Per-cell numpy kernel behind ``cell_topk``: rows tagged side=0
+    are probing queries, side=1 are cell members; emits each query's
+    local top-k by rounded cosine with (-cosine, id) tie order and
+    self-pairs masked.  A frame holds every row of one cell BUCKET; the
+    kernel loops the per-cell matmul over its cells, so no query/member
+    pair ever crosses a cell."""
 
     def kern(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out_q, out_n, out_c = [], [], []
@@ -650,51 +579,40 @@ def _cell_topk_kern(k: int):
     return kern
 
 
-def ivf_topk(embeddings: DataFrame, k: int = 3, nprobe: int = 2) -> DataFrame:
-    """IVF-style ANN: label centroids are the coarse quantizer (cells);
-    each vector is ASSIGNED to its nearest cell, each query PROBES its
-    ``nprobe`` nearest cells, and exact cosine runs only inside probed
-    cells.
+def cell_topk(
+    pairs: DataFrame, embeddings: DataFrame, k: int, n: int, fanout: int
+) -> DataFrame:
+    """The ANN retrieval core shared by LSH, multiprobe LSH, IVF and
+    two-level IVF: exact top-k per query inside the cells it probes.
 
-    Scale: the cell equi-join shards all similarity work by cell — the
-    candidate set per query is |cell| * nprobe, never n. On a real corpus
-    the quantizer would be k-means (with enough centroids to keep cells
-    executor-sized); label centroids keep it deterministic and
-    oracle-reproducible here (the plumbing is identical).
+    ``pairs`` holds narrow (vid, cell, side) rows — side 0 = vid probes
+    cell as a query, side 1 = vid is a member of cell; ``n`` vectors
+    each probe ``fanout`` cells, so the stream has ~n*(1+fanout) rows.
+    One join fetches the embedding payload; the kernel
+    (``_cell_topk_kern``) groups on the cell BUCKET pmod(xxhash64(cell),
+    B), B = group_buckets(n*(1+fanout), TARGET_BLOCK_ROWS), so a
+    kernel frame holds ~TARGET_BLOCK_ROWS rows in expectation however
+    many cells there are.  The result is invariant to B
+    (tests/test_operators.py::test_cell_topk_kern_bucket_invariance):
+    no pair crosses a cell and the final (-cosine, neighbor) window
+    takes the global top-k.  A (q, n) pair arises from at most one
+    probe when each vector is a member of one cell, so no dedup runs.
+    Returns (vec_id, neighbor, cosine, rn).
 
-    Kernel: one Arrow-batched numpy matmul PER CELL (probing queries x
-    members), with a per-query local top-k inside the task — the same
-    float64/round-6 kernel as the blocked brute force, so results are
-    bit-identical to the per-pair HOF form it replaced (which spent
-    17.6 s at sf0.1 evaluating ~5M zip_with/aggregate expressions; the
-    cell-matmul form runs the same candidates in ~3 s).  The global
-    top-k per query then merges <= nprobe * k survivors.
-    """
+    One matmul per cell instead of a per-pair HOF cosine: measured
+    5.7 s -> ~1 s for ann_lsh and 24.8 s -> ~1 s for multiprobe's 5x
+    fan-out at sf0.1, with identical rounded cosines and tie order."""
     from pyspark.sql.window import Window
 
-    scores = centroid_scores(embeddings)
-    wv = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("cand_label"))
-    ranked = scores.withColumn("crn", F.row_number().over(wv))
-    assign = ranked.filter(F.col("crn") == 1).select(
-        F.col("vec_id").alias("member"), F.col("cand_label").alias("cell")
-    )
-    probe = ranked.filter(F.col("crn") <= nprobe).select(
-        F.col("vec_id").alias("query"), F.col("cand_label").alias("cell")
-    )
     emb = embeddings.select("vec_id", "embedding")
-    tagged = probe.join(emb, probe.query == emb.vec_id).select(
-        "cell", F.col("query").alias("vid"), "embedding", F.lit(0).alias("side")
-    ).unionByName(
-        assign.join(emb, assign.member == emb.vec_id).select(
-            "cell",
-            F.col("member").alias("vid"),
-            "embedding",
-            F.lit(1).alias("side"),
-        )
+    tagged = pairs.join(emb, pairs.vid == emb.vec_id).select(
+        "cell", "vid", "embedding", "side"
     )
-
-    local = tagged.groupBy("cell").applyInPandas(
-        _cell_topk_kern(k), schema="q long, n long, cosine double"
+    nb = group_buckets(embeddings.sparkSession, n * (1 + fanout), TARGET_BLOCK_ROWS)
+    local = (
+        tagged.withColumn("bkt", F.pmod(F.xxhash64("cell"), F.lit(nb)))
+        .groupBy("bkt")
+        .applyInPandas(_cell_topk_kern(k), schema="q long, n long, cosine double")
     )
     w = Window.partitionBy("q").orderBy(F.desc("cosine"), F.asc("n"))
     return (
@@ -996,169 +914,11 @@ def mmr_diversified(
     )
 
 
-#: Shared PQ geometry (ADVICE r6: pq_rerank's numpy fast path used to
-#: hardcode 16x16x4 independently of pq_codes — one source of truth now,
-#: asserted at the seed collect).  64-d vectors split into PQ_SUBSPACES
-#: subvectors of PQ_SUBDIM dims; PQ_N_CODES codes per subspace.
+#: PQ geometry shared by ``ann_adaptive.pq_rerank_adaptive`` and its
+#: oracle: 64-d vectors split into PQ_SUBSPACES subvectors of PQ_SUBDIM
+#: dims.
 PQ_SUBSPACES = 16
 PQ_SUBDIM = 4
-PQ_N_CODES = 16
-
-
-def pq_codes(qe: DataFrame, n_codes: int = PQ_N_CODES) -> tuple:
-    """Product quantization over int8-quantized vectors: split each
-    64-d vector into 16 subvectors of 4 dims; the per-subspace codebook
-    is the subvectors of the ``n_codes`` SMALLEST OBSERVED vec_ids (a
-    deterministic seed sample standing in for the k-means training a
-    production build runs offline — assignment/decode/scoring are the
-    same machinery either way; rank-based, so the codebook never
-    silently shrinks when ids don't start at 0), with codes renumbered
-    densely 0..n_codes-1, and each subvector maps to its nearest code by exact
-    INTEGER squared distance (tie -> lowest code id, via struct-min).
-
-    Geometry chosen by a measured recall sweep (2026-08-14, sf0.01):
-    16 subspaces x 16 codes (4 bits/code = 8 bytes/vector) at 0.61
-    recall@3 beats 8x8-dim subspaces (0.39) and 32-code variants at the
-    same byte budget. Returns (codebook, codes): codebook = (sub, code,
-    d, c), codes = (vec_id, sub, code). Scale: assignment is one
-    broadcast join of the (16 * n_codes * 4)-row codebook against the
-    exploded dims plus a groupBy argmin; no pairwise anything.
-    """
-    dims = qe.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "v")
-    ).select(
-        "vec_id",
-        F.expr(f"pos div {PQ_SUBDIM}").alias("sub"),
-        (F.col("pos") % PQ_SUBDIM).alias("d"),
-        "v",
-    )
-    from pyspark.sql.window import Window
-
-    # Seed sample = n_codes smallest OBSERVED vec_ids (orderBy+limit is
-    # TakeOrderedAndProject — per-partition top-k + merge, no full
-    # sort), renumbered densely so the codebook is full-size for any id
-    # range.  On dense 0-based ids this is identical to `vec_id <
-    # n_codes` (which the DuckDB oracle states), so parity holds; the
-    # operator no longer silently degrades on other id layouts.
-    seed = (
-        qe.select("vec_id")
-        .orderBy("vec_id")
-        .limit(n_codes)
-        .withColumn(
-            "code", F.row_number().over(Window.orderBy("vec_id")) - 1
-        )
-    )
-    codebook = dims.join(F.broadcast(seed), "vec_id").select(
-        "sub", "code", "d", F.col("v").alias("c")
-    )
-    dist = (
-        dims.join(F.broadcast(codebook), ["sub", "d"])
-        .groupBy("vec_id", "sub", "code")
-        .agg(
-            F.sum((F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))).alias(
-                "dist"
-            )
-        )
-    )
-    codes = (
-        dist.groupBy("vec_id", "sub")
-        .agg(F.min(F.struct("dist", "code")).alias("m"))
-        .select("vec_id", "sub", F.col("m.code").alias("code"))
-    )
-    return codebook, codes
-
-
-def pq_decode(codebook: DataFrame, codes: DataFrame) -> DataFrame:
-    """Reconstruct (vec_id, embedding) from PQ codes: every dimension is
-    replaced by its codebook value — the SDC (symmetric distance
-    computation) representation both sides of the candidate search use.
-    Integer-valued doubles throughout, so downstream dot products stay
-    exactly cross-engine reproducible like the int8 path."""
-    dec = codes.join(F.broadcast(codebook), ["sub", "code"]).select(
-        "vec_id", (F.col("sub") * PQ_SUBDIM + F.col("d")).alias("pos"), "c"
-    )
-    return dec.groupBy("vec_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))),
-            lambda x: x.getField("c"),
-        ).alias("embedding")
-    )
-
-
-def pq_rerank(
-    spark: SparkSession,
-    embeddings: DataFrame,
-    k: int = 3,
-    n_cand: int = 50,
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """PQ ANN, two-stage: candidate generation runs the blocked kernel
-    over PQ-RECONSTRUCTED vectors (8 bytes of codes per vector — the
-    memory-resident representation at 100 TB; FAISS's IVF-PQ pairs this
-    same scan with IVF cells), then survivors re-rank by exact float
-    cosine. Identical shape to ``quantized_rerank`` one compression
-    level down: float32 -> int8 (i6c) -> 8-code PQ (here).
-
-    Assign + decode run as ONE vectorized numpy mapInPandas stage
-    against the collected seed codebook (16 vectors — a bounded pin,
-    the mmr query-vector precedent): a (batch, 16, 16, 4) squared-
-    distance tensor + argmin + gather, no join and no shuffle before
-    the blocked kernel.  numpy argmin takes the FIRST minimum = lowest
-    code id, and every operand is an integer-valued float64, so codes
-    and reconstruction are identical to the pq_codes/pq_decode
-    join+groupBy pipeline (which remains the general path for trained /
-    mergeable codebooks).  Measured 6.5 s -> ~3 s at sf0.1; an
-    expression-tree (HOF argmin) variant was tried and rejected — the
-    ~1800-node tree falls out of codegen and costs 17 s.
-    """
-    from pyspark.sql.window import Window
-
-    qe = quantize_embeddings(embeddings)
-    seed_rows = (
-        qe.select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(PQ_N_CODES)
-        .collect()
-    )
-    if len(seed_rows) != PQ_N_CODES:
-        raise ValueError(
-            f"PQ seed codebook needs {PQ_N_CODES} vectors, got "
-            f"{len(seed_rows)} — corpus smaller than the codebook"
-        )
-    cb_arr = np.array(
-        [
-            [
-                [float(r["embedding"][PQ_SUBDIM * s + d]) for d in range(PQ_SUBDIM)]
-                for r in seed_rows
-            ]
-            for s in range(PQ_SUBSPACES)
-        ]
-    )
-
-    def decode_kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = (
-                np.stack(pdf["embedding"].to_numpy())
-                .astype("float64")
-                .reshape(len(pdf), PQ_SUBSPACES, PQ_SUBDIM)
-            )
-            dist = ((X[:, :, None, :] - cb_arr[None, :, :, :]) ** 2).sum(-1)
-            code = dist.argmin(axis=2)
-            dec = cb_arr[np.arange(PQ_SUBSPACES)[None, :], code]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "embedding": list(dec.reshape(len(pdf), PQ_SUBSPACES * PQ_SUBDIM)),
-                }
-            )
-
-    decoded = qe.select("vec_id", "embedding").mapInPandas(
-        decode_kern, schema="vec_id long, embedding array<double>"
-    )
-    cand = knn(spark, decoded, k=n_cand, n_blocks=n_blocks)
-    return exact_cosine_rerank_topk(cand, embeddings, k)
 
 
 def ann_lsh_multiprobe_topk(embeddings: DataFrame, k: int) -> DataFrame:
@@ -1166,45 +926,26 @@ def ann_lsh_multiprobe_topk(embeddings: DataFrame, k: int) -> DataFrame:
     own bucket PLUS every Hamming-1 neighbor bucket (one hyperplane bit
     flipped) — the standard fix for single-probe LSH's recall cliff:
     near neighbors that landed just across one hyperplane become
-    reachable without adding tables. Probe fan-out is n_planes+1
-    buckets per query; candidates stay bucket-equi-join sharded, and a
-    (q, n) pair can arise from at most one probe (n lives in exactly
-    one bucket), so no dedup pass is needed.
+    reachable without adding tables.  Probes are distinct buckets and
+    each vector is a member of one bucket, so ``cell_topk`` needs no
+    dedup.
 
-    Round 12 (scale-adaptive parameters, VERDICT r11 item 1): the probe
-    RADIUS now follows the same ~20%-scan doctrine as IVF's nprobe —
+    The probe RADIUS follows the same ~20%-scan rule as IVF's nprobe:
     when the Hamming-1 probe set covers under 1/5 of the 2^n_planes
     buckets (integer test: (n_planes + 1) * 5 < 2^n_planes), the
     Hamming-2 shell joins the probe set.  At the 4 planes every
-    sf <= 0.1 resolves to, nothing changes (5 of 16 buckets = 31%
-    already); at sf1's 7 planes H1 alone scans 8/128 = 6.25% and
-    measured recall@3 0.235 (down from 0.50 at 4 planes — the cliff
-    this rule exists for), H<=2 scans 29/128 = 22.7%.  Probes stay
-    distinct buckets, so the no-dedup argument is unchanged.  Beyond
-    ~9 planes even H<=2 falls under the target fraction and recall
-    decays gracefully — the documented hand-over point to IVF
-    (ivf_topk_adaptive), whose nprobe rule has no such radius ceiling.
-
-    r16: the kernel groups on a cell BUCKET pmod(xxhash64(cell), B),
-    B = max(64, 2*parallelism, n*(fanout+1)/TARGET_BLOCK_ROWS) where
-    fanout = probes per query — per-LSH-bucket keying meant O(n)
-    pandas groups at scale (the per-GROUP Arrow tax, guide §4);
-    bucketing amortizes it while capping the expected bucket frame at
-    ~TARGET_BLOCK_ROWS rows.  Result invariant to B (see
-    _cell_topk_kern); every sf <= 0.1 resolves to B = 64 >= 2^n_planes
-    cells, i.e. the r15 geometry.
+    sf <= 0.1 resolves to, H1 already scans 5 of 16 buckets; at sf1's 7
+    planes H1 alone scans 8/128 = 6.25% and measured recall@3 0.235,
+    H<=2 scans 29/128 = 22.7%.  Beyond ~9 planes even H<=2 falls under
+    the target fraction and recall decays gracefully — the hand-over
+    point to IVF (ivf_topk_adaptive).
 
     The plane count is adaptive_planes(n), from the same row count that
-    sizes B (one count per build)."""
-    from pyspark.sql.window import Window
-
-    # b is a materialize point (two longs per row, output-scale, the
-    # lsh_candidate_pairs pattern): both the probe fan-out and the
-    # member side consume it, and without the persist the LSH signature
-    # pass (quantize + posexplode + plane join + two aggs) re-executed
-    # once per consumer (§2.4).  Function-local import: the module
-    # prelude is part of every similarity query's coverage trace, and
-    # only this function needs the symbol.
+    sizes the kernel's bucket groups."""
+    # b is a materialize point (two longs per row): both the probe
+    # fan-out and the member side consume it, and without the persist
+    # the LSH signature pass re-executed once per consumer.
+    # Function-local import: only this function needs the symbol.
     from etl_data_pipeline_spark.materialize import materialize
 
     n = embeddings.count()  # bounded driver pin: one scalar
@@ -1218,60 +959,19 @@ def ann_lsh_multiprobe_topk(embeddings: DataFrame, k: int) -> DataFrame:
             for j2 in range(j1 + 1, n_planes)
         ]
     probes = b.select(
-        "vec_id",
+        F.col("vec_id").alias("vid"),
         F.explode(
             F.array(
                 F.col("bucket"),
                 *[F.expr(f"bucket ^ {m}") for m in flips],
             )
-        ).alias("pbucket"),
-    )
-    # per-bucket numpy matmul kernel (the ivf_topk kernel, reused): the
-    # per-pair HOF cosine form spent 24.8 s at sf0.1 on the 5x probe
-    # fan-out (~7.8M zip_with/aggregate evaluations); the bucket-kernel
-    # form runs the same candidates as <= 16 matmuls. A (q, n) pair
-    # arises from at most one probe (n lives in exactly one bucket), so
-    # local top-k results merge without dedup.
-    # r16 (§2.4/§6): union the NARROW (vid, cell, side) pairs first and
-    # fetch the embedding payload with ONE join — the previous form
-    # joined embeddings in each union branch (two base-table scans) and
-    # re-executed the LSH signature pass (lsh_buckets) once per branch.
-    pairs = probes.select(
-        F.col("vec_id").alias("vid"),
-        F.col("pbucket").alias("cell"),
+        ).alias("cell"),
         F.lit(0).alias("side"),
-    ).unionByName(
-        b.select(
-            F.col("vec_id").alias("vid"),
-            F.col("bucket").alias("cell"),
-            F.lit(1).alias("side"),
-        )
     )
-    emb = embeddings.select("vec_id", "embedding")
-    tagged = pairs.join(emb, pairs.vid == emb.vec_id).select(
-        "cell", "vid", "embedding", "side"
+    members = b.select(
+        F.col("vec_id").alias("vid"),
+        F.col("bucket").alias("cell"),
+        F.lit(1).alias("side"),
     )
-    sc = embeddings.sparkSession.sparkContext
-    nb = max(
-        64,
-        sc.defaultParallelism * 2,
-        n * (len(flips) + 2) // TARGET_BLOCK_ROWS,
-    )
-    local = (
-        tagged.withColumn("bkt", F.pmod(F.xxhash64("cell"), F.lit(nb)))
-        .groupBy("bkt")
-        .applyInPandas(
-            _cell_topk_kern(k), schema="q long, n long, cosine double"
-        )
-    )
-    w = Window.partitionBy("q").orderBy(F.desc("cosine"), F.asc("n"))
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("q").alias("vec_id"),
-            F.col("n").alias("neighbor"),
-            "cosine",
-            F.col("rn").cast("long").alias("rn"),
-        )
-    )
+    pairs = probes.unionByName(members)
+    return cell_topk(pairs, embeddings, k, n, fanout=len(flips) + 1)

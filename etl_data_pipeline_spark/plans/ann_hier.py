@@ -74,8 +74,8 @@ and each Python worker hold nlist x 64 x 8 B = 51 MB of children
 (PySpark ships any closure over 1 MB as a torrent broadcast, not
 inside every task).  Assignment and probing stay mapInPandas over the
 vector partitions (no shuffle); the level-2 update is one groupBy(sup,
-cell, pos); the final exact scan shuffles on cell — ~125-member cells
-by construction, so no skew.
+cell, pos); the final exact scan (similarity.cell_topk) shuffles on
+cell buckets — ~125-member cells by construction, so no skew.
 """
 
 from __future__ import annotations
@@ -96,9 +96,8 @@ from etl_data_pipeline_spark.operators.ann_adaptive import (
     require_pinnable,
 )
 from etl_data_pipeline_spark.operators.similarity import (
-    TARGET_BLOCK_ROWS,
-    _cell_topk_kern,
-    knn,
+    cell_topk,
+    recall_vs_exact,
 )
 from etl_data_pipeline_spark.plans.registry import query
 
@@ -230,7 +229,8 @@ def ivf2_topk(embeddings: DataFrame, k: int = 3) -> DataFrame:
     integer k-means (kmeans_cell_ranks) verbatim with nlist=nsup and
     iters=2; level 2 runs the same iteration shape per supercluster
     with per-sup seeds and own-sup-restricted assignment; the final
-    exact scan reuses the shared per-cell cosine kernel.
+    exact scan is the shared retrieval core (similarity.cell_topk,
+    fanout ncell).
 
     Bound: the ~nlist-row child-centroid table is pinned into the
     assignment and probe kernels, so the build accepts nlist <=
@@ -320,11 +320,6 @@ def ivf2_topk(embeddings: DataFrame, k: int = 3) -> DataFrame:
     ).select(F.col("vec_id").alias("member"), "cell")
     pc = pq.mapInPandas(_probe_kern(children, ncell), schema="q long, cell long")
 
-    # r16 (§2.4/§6): union the NARROW (vid, cell, side) pairs first and
-    # fetch the embedding payload with ONE join — the previous form
-    # joined embeddings in each union branch, i.e. two full base-table
-    # scans where one suffices.  Identical row multiset.
-    emb = embeddings.select("vec_id", "embedding")
     pairs = pc.select(
         F.col("q").alias("vid"), "cell", F.lit(0).alias("side")
     ).unionByName(
@@ -332,39 +327,7 @@ def ivf2_topk(embeddings: DataFrame, k: int = 3) -> DataFrame:
             F.col("member").alias("vid"), "cell", F.lit(1).alias("side")
         )
     )
-    tagged = pairs.join(emb, pairs.vid == emb.vec_id).select(
-        "cell", "vid", "embedding", "side"
-    )
-    # r16 (VERDICT r15 item 1b): kernel grouped on a cell BUCKET — the
-    # two-level quantizer also holds children at ~TARGET_CELL rows, so
-    # per-cell keying meant O(n) pandas groups at scale (the per-GROUP
-    # Arrow tax, guide §4).  B caps the expected bucket frame at
-    # ~TARGET_BLOCK_ROWS rows (tagged is ~n*(1+ncell) rows); result
-    # invariant to B (see _cell_topk_kern), and every sf <= 0.1
-    # resolves to B = 64 >= the child-cell count, the r15 geometry.
-    nbkt = max(
-        64,
-        embeddings.sparkSession.sparkContext.defaultParallelism * 2,
-        n * (1 + ncell) // TARGET_BLOCK_ROWS,
-    )
-    local = (
-        tagged.withColumn("bkt", F.pmod(F.xxhash64("cell"), F.lit(nbkt)))
-        .groupBy("bkt")
-        .applyInPandas(
-            _cell_topk_kern(k), schema="q long, n long, cosine double"
-        )
-    )
-    w = Window.partitionBy("q").orderBy(F.desc("cosine"), F.asc("n"))
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            F.col("q").alias("vec_id"),
-            F.col("n").alias("neighbor"),
-            "cosine",
-            F.col("rn").cast("long").alias("rn"),
-        )
-    )
+    return cell_topk(pairs, embeddings, k, n, fanout=ncell)
 
 
 #: The full deterministic two-level chain as DuckDB CTEs, shared by
@@ -558,32 +521,9 @@ def ivf2_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ivf2_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-level IVF quality gate: recall@3 vs exact kNN, the sibling
-    of ivf_recall/ann_recall so EVERY approximate path carries a
-    driver-checked recall number.  recall_ok pins >= 0.5 — raised from
-    the r12 0.30 floor by the round-13 probe-budget calibration
-    (hier_psup docstring): under the (2,3) knee the measured recall@3
-    is 0.949 at sf0.1 and 0.688 at sf1, clearing the flat path's 0.45
-    bar while keeping the O~(sqrt(n)) per-query cost (the r12 shape
-    read 0.380 at sf1).  Full table in BASELINE.md.
-
-    Both legs are the registered operators themselves (blocked exact
-    kernel; ivf2_topk), so the row certifies retrieval quality
-    end-to-end, not a reimplementation.
-    """
+    """Two-level IVF quality gate: recall@3 vs exact kNN
+    (similarity.recall_vs_exact).  recall_ok pins >= 0.5: under the
+    calibrated probe budget (hier_psup) the measured recall@3 is 0.949
+    at sf0.1 and 0.688 at sf1 (full table in BASELINE.md)."""
     e = load_table(spark, sf_dir, "embeddings")
-    exact = knn(spark, e, k=3).select("vec_id", "neighbor")
-    approx = (
-        ivf2_topk(e, k=3)
-        .select("vec_id", "neighbor")
-        .withColumn("hit", F.lit(1))
-    )
-    joined = exact.join(approx, ["vec_id", "neighbor"], "left")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_exact"), F.count("hit").alias("n_hit")
-    ).select(
-        "n_exact",
-        "n_hit",
-        (F.col("n_hit") / F.col("n_exact")).alias("recall"),
-        ((F.col("n_hit") / F.col("n_exact")) >= 0.5).alias("recall_ok"),
-    )
+    return recall_vs_exact(spark, e, ivf2_topk(e, k=3), 0.5)

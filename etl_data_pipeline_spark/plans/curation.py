@@ -31,7 +31,7 @@ from etl_data_pipeline_spark.materialize import materialize, cut_lineage
     oracle="WITH RECURSIVE "
     + MINHASH_LSH_BODY
     + """,
-    edges AS (
+    edges AS MATERIALIZED (
       SELECT a, b FROM lsh_pairs
       UNION ALL
       SELECT b AS a, a AS b FROM lsh_pairs
@@ -904,18 +904,18 @@ _PAGERANK_ITER = """
     oracle="WITH "
     + MINHASH_LSH_BODY
     + """
-    , edges AS (
+    , edges AS MATERIALIZED (
       SELECT a AS u, b AS v FROM lsh_pairs
       UNION ALL
       SELECT b AS u, a AS v FROM lsh_pairs
-    ), deg AS (
+    ), deg AS MATERIALIZED (
       SELECT u, COUNT(*) AS deg FROM edges GROUP BY u
-    ), nn AS (
+    ), nn AS MATERIALIZED (
       SELECT COUNT(*) AS n FROM deg
     ), g0 AS (
       SELECT u, CAST(FLOOR(1000000000000.0 / nn.n) AS BIGINT) AS g
       FROM deg, nn
-    ), base AS (
+    ), base AS MATERIALIZED (
       SELECT CAST(FLOOR(150000000000.0 / n) AS BIGINT) AS b FROM nn
     )
     """
@@ -1071,7 +1071,7 @@ def neardup_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="WITH "
     + MINHASH_LSH_BODY
     + """
-    , e AS (
+    , e AS MATERIALIZED (
       SELECT a, b FROM lsh_pairs
     ), tri AS (
       SELECT COUNT(*) AS n_triangles
@@ -1145,20 +1145,20 @@ def neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="WITH "
     + MINHASH_LSH_BODY
     + """
-    , e0 AS (
+    , e0 AS MATERIALIZED (
       SELECT a AS u, b AS v FROM lsh_pairs
       UNION ALL
       SELECT b AS u, a AS v FROM lsh_pairs
     ), d1 AS (SELECT u, COUNT(*) AS d FROM e0 GROUP BY u),
-    n1 AS (SELECT u FROM d1 WHERE d >= 3),
-    e1 AS (SELECT e.u, e.v FROM e0 e
+    n1 AS MATERIALIZED (SELECT u FROM d1 WHERE d >= 3),
+    e1 AS MATERIALIZED (SELECT e.u, e.v FROM e0 e
            JOIN n1 a ON a.u = e.u JOIN n1 b ON b.u = e.v),
     d2 AS (SELECT u, COUNT(*) AS d FROM e1 GROUP BY u),
-    n2 AS (SELECT u FROM d2 WHERE d >= 3),
+    n2 AS MATERIALIZED (SELECT u FROM d2 WHERE d >= 3),
     e2 AS (SELECT e.u, e.v FROM e1 e
            JOIN n2 a ON a.u = e.u JOIN n2 b ON b.u = e.v),
-    d3 AS (SELECT u, COUNT(*) AS d FROM e2 GROUP BY u),
-    n3 AS (SELECT u FROM d3 WHERE d >= 3)
+    d3 AS MATERIALIZED (SELECT u, COUNT(*) AS d FROM e2 GROUP BY u),
+    n3 AS MATERIALIZED (SELECT u FROM d3 WHERE d >= 3)
     SELECT n3.u AS doc_id, d3.d AS degree,
            (SELECT COUNT(*) FROM n3) = (SELECT COUNT(*) FROM n2)
              AS converged
@@ -1354,11 +1354,11 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="WITH "
     + MINHASH_LSH_BODY
     + """
-    , e0 AS (
+    , e0 AS MATERIALIZED (
       SELECT a AS u, b AS v FROM lsh_pairs
       UNION ALL
       SELECT b AS u, a AS v FROM lsh_pairs
-    ), deg AS (
+    ), deg AS MATERIALIZED (
       SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM e0 GROUP BY u
     ), cn AS (
       SELECT l.u AS u, r.v AS v, CAST(COUNT(*) AS BIGINT) AS common

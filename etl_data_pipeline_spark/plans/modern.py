@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.plans.registry import query
+from etl_data_pipeline_spark.session import group_buckets
 from etl_data_pipeline_spark.sources.pyds import (
     SEQ_MOD,
     SEQ_MULT,
@@ -496,16 +497,10 @@ def k7_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     for ~3-row groups.  ``merge_asof(..., by=user)`` inside each bucket
     reproduces the exact per-user backward-asof semantics (matches
     never cross users), so the result is invariant to B by
-    construction.  B = max(64, 2*parallelism, ceil(n_events / 1M))
-    scales the group count with the cluster AND the data (r16, VERDICT
-    r15 item 1: the r15 cores-only form let one bucket's two pandas
-    frames grow as n/B without bound at 100 TB); the 1M-row target
-    caps the EXPECTED per-bucket frame at ~1M rows = ~tens of MB
-    (pmod(user_id) spreads users uniformly; n_events upper-bounds both
-    the purchase and click sides), with one bounded count() job as the
-    scalar driver pin (the ivf_topk_adaptive precedent).  Every sf <= 1
-    resolves to the r15 geometry (B = 64 locally), so measured numbers
-    and hashes there are untouched.
+    construction.  B = session.group_buckets(spark, n_events, 1M) caps
+    the expected per-bucket frames at ~1M rows = ~tens of MB (n_events
+    upper-bounds both the purchase and click sides), with one count()
+    job for n.
     Interleaved same-session A/B at sf0.1 (.scratch/r15_k7_bucketed.py):
     10.8-12.0 s per-user -> 1.3-1.7 s bucketed, identical 20,084 rows.
     No (user_id, ts) duplicate clicks exist at any sf (DuckDB-checked),
@@ -514,8 +509,7 @@ def k7_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     n = ev.count()  # bounded driver pin: one scalar
-    nb = max(64, spark.sparkContext.defaultParallelism * 2,
-             -(-n // 1_000_000))
+    nb = group_buckets(spark, n, 1_000_000)
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id",
         "user_id",

@@ -161,20 +161,20 @@ def i4_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: sizes ``bsz(band, band_key, bucket_n)``.  Shared by the LSH pair body
 #: below and the bucket-size divert report.  No ``WITH`` prefix.
 MINHASH_BANDS_BODY = f"""
-    t AS (
+    t AS MATERIALIZED (
       SELECT DISTINCT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token
       FROM documents
     ), th AS (
       SELECT doc_id,
              ('0x' || SUBSTR(MD5(token), 1, 8))::BIGINT % {MINHASH_P} AS h
       FROM t
-    ), sig AS (
+    ), sig AS MATERIALIZED (
       SELECT doc_id, i.range AS i,
              MIN(((i.range * 37 + 11) * h + (i.range * 104729 + 17)) % {MINHASH_P})
                AS minhash
       FROM th, RANGE(16) i
       GROUP BY doc_id, i.range
-    ), bands AS (
+    ), bands AS MATERIALIZED (
       SELECT doc_id, i // 4 AS band,
              STRING_AGG(CAST(minhash AS VARCHAR), '-' ORDER BY i) AS band_key
       FROM sig GROUP BY doc_id, i // 4
@@ -188,24 +188,28 @@ MINHASH_BANDS_BODY = f"""
 #: ``lsh_pairs(a, b, jaccard)`` CTE so downstream oracles (i4b here;
 #: neardup components / pagerank in plans/curation.py) can build on the
 #: verified pair set.  NOTE: no ``WITH`` prefix — callers prepend
-#: ``WITH `` or ``WITH RECURSIVE `` as needed.
-MINHASH_LSH_BODY = MINHASH_BANDS_BODY + f""", bands_ok AS (
+#: ``WITH `` or ``WITH RECURSIVE `` as needed.  Every CTE a consumer
+#: reads more than once is written ``AS MATERIALIZED``, here and in the
+#: consumers: DuckDB 1.0 otherwise inlines each reference, so a chain
+#: like kcore_peel's recomputed the whole pair set per reference and
+#: ran out of 4 GB at sf0.001 (materialized: 0.1 s, same rows).
+MINHASH_LSH_BODY = MINHASH_BANDS_BODY + f""", bands_ok AS MATERIALIZED (
       SELECT b.doc_id, b.band, b.band_key
       FROM bands b JOIN bsz USING (band, band_key)
       WHERE bsz.bucket_n <= {LSH_MAX_BUCKET_SIZE}
-    ), cand AS (
+    ), cand AS MATERIALIZED (
       SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
       FROM bands_ok l JOIN bands_ok r
         ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-    ), counts AS (
+    ), counts AS MATERIALIZED (
       SELECT doc_id, COUNT(*) AS n_tok FROM t GROUP BY doc_id
-    ), inter AS (
+    ), inter AS MATERIALIZED (
       SELECT c.a, c.b, COUNT(*) AS inter
       FROM cand c
       JOIN t ta ON ta.doc_id = c.a
       JOIN t tb ON tb.doc_id = c.b AND tb.token = ta.token
       GROUP BY c.a, c.b
-    ), lsh_pairs AS (
+    ), lsh_pairs AS MATERIALIZED (
       SELECT i.a, i.b,
              i.inter / CAST(ca.n_tok + cb.n_tok - i.inter AS DOUBLE) AS jaccard
       FROM inter i

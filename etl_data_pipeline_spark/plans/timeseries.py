@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.functions.canonical import grid_sum
 from etl_data_pipeline_spark.plans.registry import query
+from etl_data_pipeline_spark.session import group_buckets
 
 
 @query(
@@ -698,18 +699,10 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity check covers the full alarm/reset semantics, not just row
     counts.
 
-    B scales with BOTH the cluster and the DATA (r16, VERDICT r15
-    item 1: the r15 form B = max(64, 2*parallelism) held ~n/B rows per
-    bucket — scaled to cores, not to data, so one bucket's pandas frame
-    grows without bound at 100 TB): B = max(64, 2*parallelism,
-    ceil(n / 1M)) caps the EXPECTED bucket frame at ~1M rows = ~32 MB
-    of int64 columns (4 cols x 8 B; pmod(user_id) spreads users
-    uniformly, per-user rows are small multiples, so concentration is
-    benign).  n comes from one bounded count() job — a scalar driver
-    pin, the _resolve_blocks/ivf_topk_adaptive precedent.  Every
-    sf <= 1 resolves to the r15 geometry (B = 64 locally), so measured
-    numbers and hashes there are untouched; invariance-to-B stays
-    pinned by test_cusum_bucket_invariance.
+    B = session.group_buckets(spark, n, 1M) caps the expected bucket
+    frame at ~1M rows = ~32 MB of int64 columns (4 cols x 8 B;
+    pmod(user_id) spreads users uniformly).  n comes from one count()
+    job.  Invariance to B is pinned by test_cusum_bucket_invariance.
 
     Exactness: values land on the cents grid via FLOOR(v*100 + 0.5) —
     one IEEE multiply-add + floor, bit-identical cross-engine, never
@@ -717,10 +710,9 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     state per key is three integers; keys fan out across executors;
     no driver participation.
     """
-    spark_ctx = spark.sparkContext
     events = load_table(spark, sf_dir, "events")
     n = events.count()  # bounded driver pin: one scalar
-    nb = max(64, spark_ctx.defaultParallelism * 2, -(-n // 1_000_000))
+    nb = group_buckets(spark, n, 1_000_000)
     ev = events.select(
         "user_id",
         "ts",

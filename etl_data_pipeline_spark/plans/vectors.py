@@ -20,6 +20,7 @@ from etl_data_pipeline_spark.operators.similarity import (
     kmeans_iterations,
     knn,
     mmr_diversified,
+    recall_vs_exact,
 )
 from etl_data_pipeline_spark.plans.registry import query
 
@@ -290,32 +291,14 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality gate: recall@3 of the LSH path against exact kNN, as
-    a driver-checkable number (measured ~0.14 at sf0.001/0.01/0.1 with
-    the 4 planes those scales resolve to on this near-random corpus;
-    recall_ok pins >= 0.1).  Plane count is scale-adaptive since round
-    12 (see ann_lsh) — the single-probe recall cliff is the documented
-    reason ann_multiprobe exists; this gate tracks that the cliff stays
-    put while bucket population stays ~constant.  Both legs are the
-    registered operators themselves — the blocked-kernel exact kNN and
-    the bucket-equi-join LSH — so this one row certifies the
-    approximate path's quality, not just its shape."""
+    """ANN quality gate: recall@3 of the LSH path against exact kNN
+    (similarity.recall_vs_exact), measured ~0.14 at sf0.001/0.01/0.1
+    with the 4 planes those scales resolve to on this near-random
+    corpus; recall_ok pins >= 0.1.  The single-probe recall cliff is
+    the documented reason ann_multiprobe exists; this gate tracks that
+    the cliff stays put while bucket population stays ~constant."""
     e = load_table(spark, sf_dir, "embeddings")
-    exact = knn(spark, e, k=3).select("vec_id", "neighbor")
-    ann = (
-        ann_lsh_topk(e, k=3)
-        .select("vec_id", "neighbor")
-        .withColumn("hit", F.lit(1))
-    )
-    joined = exact.join(ann, ["vec_id", "neighbor"], "left")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_exact"), F.count("hit").alias("n_hit")
-    ).select(
-        "n_exact",
-        "n_hit",
-        (F.col("n_hit") / F.col("n_exact")).alias("recall"),
-        ((F.col("n_hit") / F.col("n_exact")) >= 0.1).alias("recall_ok"),
-    )
+    return recall_vs_exact(spark, e, ann_lsh_topk(e, k=3), 0.1)
 
 
 @query(
@@ -745,41 +728,17 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF quality gate: recall@3 of the ADAPTIVE IVF path (nlist =
-    n/125 integer-k-means cells, nprobe = nlist/5) against exact kNN —
-    ann_recall's sibling, so all approximate retrieval paths carry a
-    driver-checked recall number.  recall_ok pins >= 0.45: under the
-    round-13 hash seeds the adaptive quantizer measures 0.713 at
-    sf0.001, 0.721 at sf0.01 and 0.485 at sf0.1 (~19% scan) vs the
-    fixed label-cell quantizer's 0.41 — recall rises with a finer
-    quantization instead of riding bloating cells (the round-11 prep
-    calibration's whole point), and the seed change moved every number
-    within noise of the r12 stride values (0.733/0.479).
-
-    Both legs are the registered operators themselves (blocked exact
-    kernel; operators/ann_adaptive.py::ivf_topk_adaptive), so this row
-    certifies retrieval quality end-to-end, not a reimplementation.
-    """
+    """IVF quality gate: recall@3 of the adaptive IVF path (nlist =
+    n/125 integer-k-means cells, nprobe = nlist/5) against exact kNN
+    (similarity.recall_vs_exact).  recall_ok pins >= 0.45: the adaptive
+    quantizer measures 0.713 at sf0.001, 0.721 at sf0.01 and 0.485 at
+    sf0.1 (~19% scan) vs the fixed label-cell quantizer's 0.41."""
     from etl_data_pipeline_spark.operators.ann_adaptive import (
         ivf_topk_adaptive,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    exact = knn(spark, e, k=3).select("vec_id", "neighbor")
-    approx = (
-        ivf_topk_adaptive(e, k=3, iters=3)
-        .select("vec_id", "neighbor")
-        .withColumn("hit", F.lit(1))
-    )
-    joined = exact.join(approx, ["vec_id", "neighbor"], "left")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_exact"), F.count("hit").alias("n_hit")
-    ).select(
-        "n_exact",
-        "n_hit",
-        (F.col("n_hit") / F.col("n_exact")).alias("recall"),
-        ((F.col("n_hit") / F.col("n_exact")) >= 0.45).alias("recall_ok"),
-    )
+    return recall_vs_exact(spark, e, ivf_topk_adaptive(e, k=3, iters=3), 0.45)
 
 
 #: Shared PQ oracle body: int8 quantize (verbatim i6c expression) ->
@@ -934,35 +893,18 @@ def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ quality gate: recall@3 of the PQ path against exact kNN — the
-    sibling of ann_recall (LSH) and ivf_recall (IVF), so ALL THREE
-    approximate retrieval paths carry driver-checked recall numbers.
-    Both legs are the registered operators themselves. recall_ok pins
-    >= 0.4 (measured 0.61 at sf0.01 — the 16x4/4-bit geometry chosen
-    over 8x8 subvectors by a recall sweep precisely because it clears
-    the IVF-level bar at the same 8-byte budget).  Codebook scale-
-    adaptive since round 12 (see pq_ann); sf <= 0.1 still resolves to
-    16 codes."""
+    """PQ quality gate: recall@3 of the PQ path against exact kNN
+    (similarity.recall_vs_exact).  recall_ok pins >= 0.4 (measured 0.61
+    at sf0.01 — the 16x4/4-bit geometry was chosen over 8x8 subvectors
+    by a recall sweep because it clears this bar at the same 8-byte
+    budget)."""
     from etl_data_pipeline_spark.operators.ann_adaptive import (
         pq_rerank_adaptive,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    exact = knn(spark, e, k=3).select("vec_id", "neighbor")
-    approx = (
-        pq_rerank_adaptive(spark, e, k=3, n_cand=50)
-        .select("vec_id", "neighbor")
-        .withColumn("hit", F.lit(1))
-    )
-    joined = exact.join(approx, ["vec_id", "neighbor"], "left")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_exact"), F.count("hit").alias("n_hit")
-    ).select(
-        "n_exact",
-        "n_hit",
-        (F.col("n_hit") / F.col("n_exact")).alias("recall"),
-        ((F.col("n_hit") / F.col("n_exact")) >= 0.4).alias("recall_ok"),
-    )
+    approx = pq_rerank_adaptive(spark, e, k=3, n_cand=50)
+    return recall_vs_exact(spark, e, approx, 0.4)
 
 
 #: Shared LSH CTE (4 md5-derived hyperplanes -> signed-projection bit
@@ -1088,32 +1030,16 @@ def ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiprobe LSH quality gate: recall@3 vs exact kNN — the fourth
-    driver-checked retrieval-quality number (LSH-1probe ~0.14, IVF
-    ~0.41, PQ ~0.61, multiprobe 0.50-0.52 measured at sf0.001/0.01 —
-    a 3.6x lift over single-probe for 5x probe fan-out, hash-checked).
-    Gate pinned >= 0.3.  Planes scale-adaptive since round 12 (see
-    ann_lsh); every sf <= 0.1 still resolves to 4 planes."""
+    """Multiprobe LSH quality gate: recall@3 vs exact kNN
+    (similarity.recall_vs_exact), measured 0.50-0.52 at sf0.001/0.01 —
+    a 3.6x lift over single-probe LSH (~0.14) for 5x probe fan-out.
+    Gate pinned >= 0.3."""
     from etl_data_pipeline_spark.operators.similarity import (
         ann_lsh_multiprobe_topk,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    exact = knn(spark, e, k=3).select("vec_id", "neighbor")
-    approx = (
-        ann_lsh_multiprobe_topk(e, k=3)
-        .select("vec_id", "neighbor")
-        .withColumn("hit", F.lit(1))
-    )
-    joined = exact.join(approx, ["vec_id", "neighbor"], "left")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_exact"), F.count("hit").alias("n_hit")
-    ).select(
-        "n_exact",
-        "n_hit",
-        (F.col("n_hit") / F.col("n_exact")).alias("recall"),
-        ((F.col("n_hit") / F.col("n_exact")) >= 0.3).alias("recall_ok"),
-    )
+    return recall_vs_exact(spark, e, ann_lsh_multiprobe_topk(e, k=3), 0.3)
 
 
 @query(

@@ -88,6 +88,21 @@ def _apply_checkpoint_dir(spark: SparkSession) -> None:
         spark.sparkContext.setCheckpointDir(ckpt)
 
 
+def group_buckets(spark: SparkSession, rows: int, rows_per_bucket: int) -> int:
+    """Group count B for a bucketed grouped kernel (``groupBy(pmod(key,
+    B)).applyInPandas``): max(64, 2 x the default parallelism, ceil(rows /
+    rows_per_bucket)).
+
+    Grouped-Python cost is paid per GROUP (one Arrow round trip and its
+    pandas frames), so the kernels loop many keys per bucket; B grows
+    with the cluster (every core gets work) and with the data (a
+    bucket's expected frame stays near ``rows_per_bucket`` rows).  The
+    kernels never pair rows across keys, so results do not depend on B.
+    """
+    par = spark.sparkContext.defaultParallelism
+    return max(64, 2 * par, -(-rows // rows_per_bucket))
+
+
 def get_spark(
     app_name: str = "etl-data-pipeline-spark",
     master: str | None = None,

@@ -767,15 +767,19 @@ def test_weighted_median_matches_bruteforce():
 
 
 def test_pq_recall_vs_exact(spark):
-    """Authority test for the PQ path: recall@3 of pq_rerank against the
-    exact blocked kNN must clear the pinned 0.4 gate (measured ~0.61-0.63
-    at sf0.001/0.01 for the 16x4/16-code geometry, n_cand=50)."""
+    """Authority test for the PQ path: recall@3 of pq_rerank_adaptive
+    (16 codes at every sf <= 0.1) against the exact blocked kNN must
+    clear the pinned 0.4 gate (measured ~0.61-0.63 at sf0.001/0.01 for
+    the 16x4/16-code geometry, n_cand=50)."""
     from etl_data_pipeline_spark.catalog import load_table
-    from etl_data_pipeline_spark.operators.similarity import knn, pq_rerank
+    from etl_data_pipeline_spark.operators.ann_adaptive import (
+        pq_rerank_adaptive,
+    )
+    from etl_data_pipeline_spark.operators.similarity import knn
 
     e = load_table(spark, SF_DIR, "embeddings")
     exact = knn(spark, e, k=3).select("vec_id", "neighbor")
-    approx = pq_rerank(spark, e, k=3, n_cand=50).select(
+    approx = pq_rerank_adaptive(spark, e, k=3, n_cand=50).select(
         "vec_id", F.col("neighbor").alias("n2")
     )
     hits = exact.join(
@@ -807,6 +811,31 @@ def test_lsh_buckets_partition_invariant(spark):
         )
         assert (base["vec_id"].values == alt["vec_id"].values).all()
         assert (base["bucket"].values == alt["bucket"].values).all(), n_parts
+
+
+def test_lsh_plane_weights_match_sql_md5(spark):
+    """The driver-side LSH hyperplane weights equal the oracles' SQL
+    spelling md5_hash32(j || '_' || pos) % 2001 - 1000, for all 30 x 64
+    weights the oracles' plane generator (RANGE(30) x RANGE(64)) spans."""
+    from etl_data_pipeline_spark.operators.similarity import _plane_weights
+    from etl_data_pipeline_spark.operators.text import md5_hash32
+
+    j = F.col("j").cast("string")
+    pos = F.col("pos").cast("string")
+    rows = (
+        spark.range(30)
+        .select(F.col("id").alias("j"))
+        .crossJoin(spark.range(64).select(F.col("id").alias("pos")))
+        .select(
+            "j", "pos", (md5_hash32(F.concat_ws("_", j, pos)) % 2001 - 1000).alias("w")
+        )
+        .collect()
+    )
+    assert len(rows) == 30 * 64
+    got = _plane_weights(30)
+    assert got.shape == (64, 30)
+    for r in rows:
+        assert got[r["pos"], r["j"]] == r["w"], (r["j"], r["pos"])
 
 
 @pytest.mark.parametrize(

@@ -67,20 +67,23 @@ def test_cosine_topk_no_bnlj(spark):
 
 
 def test_ann_paths_are_equijoins(spark):
-    # ann_lsh generates its hyperplanes by cross-joining two CONSTANT
-    # ranges (4 x 64 rows) — that cartesian is O(1) and allowed; what must
-    # never appear is a non-equi join touching the embeddings table.
+    # the LSH hyperplanes are computed on the driver, so no ANN plan
+    # holds a cross or non-equi join of any kind
     for name in ("ann_lsh", "ivf_ann"):
-        plan = plan_of(spark, name)
-        tree = plan.split("\n\n")[0]
+        tree = plan_of(spark, name).split("\n\n")[0]
         assert "CartesianProduct" not in tree, name
-        # every BNLJ that appears must be the Cross of the two constant
-        # Range sources (plane generation, 4 x 64 rows; duplicated when
-        # the bucket subplan feeds both sides of the self-join) — never
-        # an equi-join demotion over the embeddings table
-        assert tree.count("BroadcastNestedLoopJoin") == tree.count(
-            "BroadcastNestedLoopJoin Cross"
-        ), name
+        assert "BroadcastNestedLoopJoin" not in tree, name
+
+
+@pytest.mark.parametrize(
+    "name", ["ann_lsh", "ann_multiprobe", "ivf_ann", "ivf2_ann"]
+)
+def test_ann_paths_share_one_cell_kernel(spark, name):
+    """Every ANN builder ends in the one retrieval core
+    (similarity.cell_topk): exactly one grouped Python node, the cell
+    kernel, in the plan."""
+    tree = plan_of(spark, name).split("\n\n")[0]
+    assert tree.count("FlatMapGroupsInPandas") == 1, tree
 
 
 def test_jaccard_is_equijoin(spark):

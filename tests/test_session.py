@@ -1,4 +1,5 @@
-"""Launch-directory independence of the engine's Python workers."""
+"""Session-level helpers: launch-directory independence of the
+engine's Python workers, and the grouped-kernel bucket rule."""
 
 from __future__ import annotations
 
@@ -6,6 +7,7 @@ import os
 import subprocess
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 from tests.conftest import SF_DIR
 
@@ -45,3 +47,25 @@ def test_kernel_query_runs_from_any_directory(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     rows = [ln for ln in out.stdout.splitlines() if ln.startswith("ROWS ")]
     assert rows and int(rows[0].split()[1]) > 0, out.stdout
+
+
+def _session(parallelism: int):
+    """A stand-in exposing only what group_buckets reads."""
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=parallelism)
+    )
+
+
+def test_group_buckets_rule():
+    """B = max(64, 2 x parallelism, ceil(rows / rows_per_bucket)),
+    checked without Spark: the floor of 64, the parallelism term, the
+    data term and the ceiling at its boundary."""
+    from etl_data_pipeline_spark.session import group_buckets
+
+    assert group_buckets(_session(4), 0, 2500) == 64
+    assert group_buckets(_session(4), 64 * 2500, 2500) == 64
+    assert group_buckets(_session(40), 1000, 2500) == 80
+    assert group_buckets(_session(4), 100 * 2500, 2500) == 100
+    assert group_buckets(_session(4), 100 * 2500 + 1, 2500) == 101
+    assert group_buckets(_session(4), 100 * 2500 - 1, 2500) == 100
+    assert group_buckets(_session(80), 100 * 2500, 2500) == 160
