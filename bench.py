@@ -409,8 +409,7 @@ def main() -> None:
         # local[32] column uses the identical method, via
         # tools/measure_baseline.py)
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        # Proof the session honors $SPARK_GRAFT_CPUS (VERDICT r15 item 2:
-        # PERF_r15 flagged suspect_cpus_ignored because ratios ~1 at this
+        # Proof the session honors $SPARK_GRAFT_CPUS (ratios ~1 at this
         # SF look like an ignored knob; the resolved master string and
         # the context's ACTUAL defaultParallelism are stamped so the
         # artifact itself shows cpus/master/parallelism agreeing).

@@ -160,12 +160,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
-    """Register every corpus table as a temp view (for spark.sql paths)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name + suffix)

@@ -60,16 +60,6 @@ def grid_avg(col: Column, micro: int = 1_000_000) -> Column:
     return grid_sum(col, micro) / F.count(F.lit(1))
 
 
-def dec_avg(col: Column, scale: int) -> Column:
-    """Deterministic AVG of a decimal-grid double: exact decimal sum,
-    single double division by the group count.
-
-    Oracle counterpart: ``CAST(SUM(CAST(x AS DECIMAL(38,s))) AS DOUBLE)
-    / COUNT(*)`` — note COUNT(*) must match the aggregate's null scope,
-    so only use on non-null columns.
-    """
-    return dec_sum(col, scale) / F.count(F.lit(1))
-
 # --------------------------------------------------------------------------
 # Fast exact money sums (added round 2): long-arithmetic alternatives to
 # dec_sum for hot aggregation paths. dec_sum's per-row double->Decimal

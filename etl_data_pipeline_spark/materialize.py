@@ -1,16 +1,16 @@
-"""Cluster-safe materialization points (VERDICT r6 item 3).
+"""Cluster-safe materialization points.
 
 Two distinct needs, two helpers:
 
 ``materialize(df)`` — a multi-consumer reuse point: a stream that feeds
 several downstream joins/aggregates would otherwise be recomputed per
 consumer (executed-plan audits measured 12 corpus scans in the Jaccard
-path before these points existed).  Default mechanism is
+path before these points existed).  It always uses
 ``persist(StorageLevel.MEMORY_AND_DISK)``: lazy, spills instead of
 OOMing, and — critically for the 100 TB posture — KEEPS LINEAGE, so on
 a real cluster the loss of an executor (preemption, spot reclaim)
-triggers recompute of the lost blocks instead of failing the job.  The
-prior mechanism, ``localCheckpoint()``, stores blocks non-replicated on
+triggers recompute of the lost blocks instead of failing the job.
+``localCheckpoint()`` instead stores blocks non-replicated on
 executor-local storage with lineage truncated — unrecoverable at scale.
 Measured at sf0.1 on local[32] (2026-08-14): WARM the two mechanisms
 are a wash (20.7 s persist vs 20.4 s localCheckpoint over the five hot
@@ -23,9 +23,7 @@ localCheckpoint hands downstream planning a materialized RDD of known
 size.  Letting AQE re-plan through cached subtrees
 (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``,
 now in session.RUNTIME_CONFS) closes that gap: min-of-3 interleaved
-cold runs 3.79 s persist vs 4.06 s localCheckpoint.  The local fast
-path remains an explicit opt-in:
-``SPARK_GRAFT_MATERIALIZE=local_checkpoint``.
+cold runs 3.79 s persist vs 4.06 s localCheckpoint.
 
 ``cut_lineage(df)`` — an iterative-loop truncation point: the graph
 algorithms (connected components, PageRank, k-core) rebuild their edge
@@ -41,24 +39,12 @@ trade and the only option without a checkpoint dir.
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
-
-#: "persist" (default, cluster-safe) | "local_checkpoint" (local-mode
-#: fast path: eager, lineage-truncating, non-replicated).
-_MODE_ENV = "SPARK_GRAFT_MATERIALIZE"
-
-
-def _mode() -> str:
-    return os.environ.get(_MODE_ENV, "persist")
 
 
 def materialize(df: DataFrame) -> DataFrame:
     """Mark ``df`` as a multi-consumer reuse point (compute-once)."""
-    if _mode() == "local_checkpoint":
-        return df.localCheckpoint()
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
@@ -68,7 +54,7 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     Reliable ``checkpoint()`` when a checkpoint dir is configured (the
     cluster deployment path); ``localCheckpoint`` otherwise.
 
-    Coupling (ADVICE r15): the connected-components loop rides its
+    Coupling: the connected-components loop rides its
     convergence ``Observation`` on THIS function's eager action
     (operators/graph.py observes the frame, then calls cut_lineage, then
     blocks on ``obs.get``).  Both branches here MUST execute the exact
@@ -80,7 +66,7 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     The fallback is NOT executor-loss-safe — localCheckpoint stores
     its blocks non-replicated on the computing executor with lineage
     already truncated, so losing that executor kills the job.  Proven
-    by fault injection (tools/chaos_executor_loss.py, round 9):
+    by fault injection (tools/chaos_executor_loss.py):
     SIGKILLing an executor mid-loop under local-cluster[2,4,4096]
     fails the no-dir run and completes the
     ``SPARK_GRAFT_CHECKPOINT_DIR`` run with an identical result hash.

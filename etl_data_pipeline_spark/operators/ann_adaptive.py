@@ -308,6 +308,7 @@ def require_pinnable(nlist: int, n: int | None = None) -> None:
 
 def kmeans_cell_ranks(
     embeddings: DataFrame,
+    n: int,
     nlist: int,
     iters: int = 3,
     top: int | None = None,
@@ -316,7 +317,9 @@ def kmeans_cell_ranks(
     per-vector cell ranking ``(vec_id, cell, d, crn)``, truncated to
     ``top`` ranks when given — crn = 1 is the cell assignment,
     crn <= nprobe the probe set, so one frame serves both consumers
-    (materialized).
+    (materialized).  ``n`` is the row count of ``embeddings``, which
+    every caller already holds (it sizes nlist), so the build does not
+    count the corpus again.
 
     ``iters`` distance passes, ``iters - 1`` centroid updates (the
     final pass both assigns and ranks probes).  3 iterations measured
@@ -339,9 +342,8 @@ def kmeans_cell_ranks(
     sample (hash_seeds), so no global-rank window ever sorts the corpus
     in one task.
     """
-    require_pinnable(nlist)
+    require_pinnable(nlist, n)
     grid = materialize(grid_vectors(embeddings))
-    n = grid.count()
 
     def rank(c: DataFrame, top: int | None) -> DataFrame:
         return grid.mapInPandas(
@@ -410,7 +412,7 @@ def ivf_topk_adaptive(
     nprobe = adaptive_nprobe(nlist)
     # top=nprobe: ranks beyond the probe set are never consumed, so the
     # kernel never materializes the n x nlist ranking
-    ranked = kmeans_cell_ranks(embeddings, nlist=nlist, iters=iters, top=nprobe)
+    ranked = kmeans_cell_ranks(embeddings, n, nlist, iters=iters, top=nprobe)
     # One pass over the ranking yields both sides: every (vec_id, cell)
     # row probes (side 0), and crn == 1 is also the member assignment
     # (side 1; nprobe >= 2, so the probe filter never drops members).

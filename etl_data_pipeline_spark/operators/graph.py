@@ -55,7 +55,7 @@ def connected_components_star(
     depth stays 1 over the checkpoint).  The former loop paid three
     edge-set passes per round (checkpoint star, signature scan,
     checkpoint of a symmetrize-distinct shuffle); interleaved A/B at
-    sf0.1 through neardup_clusters (.scratch/r15b_cc_ab.py): Spark jobs
+    sf0.1 through neardup_clusters: Spark jobs
     86 -> 68, wall 5.36 -> 4.76 s (min-of-4), outputs identical in all
     12 runs.  The XOR signature is order-independent, so the dropped
     distinct cannot change it (the union has no duplicates to drop).

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_data_pipeline_spark.materialize import materialize
 from etl_data_pipeline_spark.session import group_buckets
 
 
@@ -945,9 +946,6 @@ def ann_lsh_multiprobe_topk(embeddings: DataFrame, k: int) -> DataFrame:
     # b is a materialize point (two longs per row): both the probe
     # fan-out and the member side consume it, and without the persist
     # the LSH signature pass re-executed once per consumer.
-    # Function-local import: only this function needs the symbol.
-    from etl_data_pipeline_spark.materialize import materialize
-
     n = embeddings.count()  # bounded driver pin: one scalar
     n_planes = adaptive_planes(n)
     b = materialize(lsh_buckets(embeddings, n_planes))

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from etl_data_pipeline_spark.materialize import materialize
+from etl_data_pipeline_spark.operators.graph import connected_components_star
 
 #: modulus for affine MinHash permutations; prime, small enough that
 #: a_i * h stays far below int64 overflow.
@@ -445,8 +446,8 @@ def lsh_candidate_pairs(
     token stream, whose recompute is a row-local scan (the r14 sf100
     no-persist rule does NOT apply here).  The cached rows are skinny
     (two longs per candidate, output-scale not corpus-scale), so the
-    persist is bounded at any corpus size.  Interleaved A/B at sf0.1
-    (.scratch/r15_lshcand_materialize.py): identical 58,418 / 13 rows;
+    persist is bounded at any corpus size.  Interleaved A/B at sf0.1:
+    identical 58,418 / 13 rows;
     i4b 4.95/3.77/3.37 -> 3.96/3.36/2.97 s, est_quality
     4.72/4.31/3.86 -> 3.85/3.86/3.81 s."""
     bands = materialize(minhash_bands(docs, num_hashes, band_size))
@@ -508,7 +509,7 @@ def exact_jaccard_on_pairs(docs: DataFrame, cand: DataFrame) -> DataFrame:
     (candidate fan-out x 40 rows, re-shuffled by (token, b)) is gone
     entirely — per pair the intersection is a task-local hash probe.
     Three-decade interleaved A/B with byte-identical pair sets
-    (.scratch/r15b_jaccard_array_ab.py, pair counts 58,418 / 150,003 /
+    (pair counts 58,418 / 150,003 /
     512,708 matching the recorded i4b values): sf0.1 1.90 -> 1.77 s,
     sf1 4.00 -> 3.45 s, sf10 27.7 -> 24.3 s min-of-4 through the full
     i4b, every interleaved pair in B's favor, and the gap widens under
@@ -687,10 +688,6 @@ def neardup_components(
     are their own component) and the canonical doc is the cluster min —
     filtering ``is_canonical`` IS the dedup.
     """
-    from etl_data_pipeline_spark.operators.graph import (
-        connected_components_star,
-    )
-
     pairs = minhash_lsh_pairs(
         docs, threshold, num_hashes, band_size, max_bucket_size
     ).select("a", "b")

@@ -1,6 +1,5 @@
 """Two-level (hierarchical) IVF ANN — the 100 TB assignment path
-(round 12, added under the SURVEY §2.2 growth rules: new capability,
-announced in the round record, fronted in the driver window).
+(added under the SURVEY §2.2 growth rules as a new capability).
 
 WHY A SECOND LEVEL.  The adaptive flat IVF (operators/ann_adaptive.py)
 holds per-cell population constant (nlist = n/125), which fixes recall
@@ -120,8 +119,7 @@ def hier_psup(nsup: int) -> int:
     0.505 (1,2), 0.582 (2,2), 0.688 (2,3), 0.716 (3,3); the (2,3)
     knee buys +0.31 recall for a constant-factor cost increase (the
     per-query budget stays O~(sqrt(n))), while the next step (3,3)
-    adds only +0.028.  Full table in BASELINE.md and
-    .scratch/r13_ivf2_calib_sf{0.1,1}.json."""
+    adds only +0.028.  Full table in BASELINE.md."""
     return min(nsup, max(2, 2 * max(1, nsup.bit_length() - 1)))
 
 
@@ -246,7 +244,7 @@ def ivf2_topk(embeddings: DataFrame, k: int = 3) -> DataFrame:
     psup = hier_psup(nsup)
     ncell = hier_ncell(nlist, nsup)
 
-    l1 = kmeans_cell_ranks(embeddings, nlist=nsup, iters=2, top=psup)
+    l1 = kmeans_cell_ranks(embeddings, n, nsup, iters=2, top=psup)
     sup = l1.filter(F.col("crn") == 1).select(
         "vec_id", F.col("cell").alias("sup")
     )

@@ -20,8 +20,14 @@ from pyspark.sql.window import Window
 
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.operators.similarity import quantized_rerank
-from etl_data_pipeline_spark.operators.text import neardup_components
+from etl_data_pipeline_spark.operators.text import (
+    md5_hash32,
+    minhash_lsh_pairs,
+    neardup_components,
+    simhash_neardup_pairs,
+)
 from etl_data_pipeline_spark.plans.registry import query
+from etl_data_pipeline_spark.plans.scale_patterns import load_documents_shingles
 from etl_data_pipeline_spark.plans.text import MINHASH_LSH_BODY
 from etl_data_pipeline_spark.materialize import materialize, cut_lineage
 
@@ -289,8 +295,6 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^32 * slack — a stateless map that discards ~all of the stratum)
     and rank only the survivors, which bounds the per-stratum sort to
     ~k * slack rows."""
-    from etl_data_pipeline_spark.operators.text import md5_hash32
-
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(
         md5_hash32(F.col("doc_id").cast("string")), "doc_id"
@@ -407,8 +411,6 @@ def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force all-pairs scan, affordable only at test scale — must
     agree pair-for-pair with the banded plan that runs at 100 TB.
     """
-    from etl_data_pipeline_spark.operators.text import simhash_neardup_pairs
-
     d = load_table(spark, sf_dir, "documents")
     return simhash_neardup_pairs(d, bits=32, bands=4, max_hamming=3)
 
@@ -444,15 +446,10 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is per-doc shared-shingle counts for threshold/audit downstream.
 
     The shingle derivation is the ONE shared definition in
-    plans/scale_patterns.py::load_documents_shingles (ADVICE r11 —
-    ``decontaminate_bloom`` must provably check the same semantics, so
-    the expression lives in exactly one place; function-local import
-    keeps this module's prelude stable for the trace audit).
+    plans/scale_patterns.py::load_documents_shingles
+    (``decontaminate_bloom`` must provably check the same semantics, so
+    the expression lives in exactly one place).
     """
-    from etl_data_pipeline_spark.plans.scale_patterns import (
-        load_documents_shingles,
-    )
-
     sh = load_documents_shingles(spark, sf_dir)
     ev = (
         sh.filter(F.col("doc_id") % 97 == 0)
@@ -951,8 +948,6 @@ def pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     before pair expansion, mirrored in the oracle's bands_ok CTE.
     """
     d = load_table(spark, sf_dir, "documents")
-    from etl_data_pipeline_spark.operators.text import minhash_lsh_pairs
-
     pairs = minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
     edges = pairs.select(
         F.col("a").alias("u"), F.col("b").alias("v")
@@ -1056,8 +1051,6 @@ def neardup_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped edge list.
     """
     d = load_table(spark, sf_dir, "documents")
-    from etl_data_pipeline_spark.operators.text import minhash_lsh_pairs
-
     pairs = minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
     nodes = pairs.select(F.col("a").alias("u")).unionAll(
         pairs.select(F.col("b").alias("u"))
@@ -1109,8 +1102,6 @@ def neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single final division.
     """
     d = load_table(spark, sf_dir, "documents")
-    from etl_data_pipeline_spark.operators.text import minhash_lsh_pairs
-
     pairs = (
         minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
         .select("a", "b")
@@ -1182,8 +1173,6 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     a non-fixpoint result is visible, not silent.
     """
     d = load_table(spark, sf_dir, "documents")
-    from etl_data_pipeline_spark.operators.text import minhash_lsh_pairs
-
     pairs = minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
     e = cut_lineage(
         pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
@@ -1320,8 +1309,6 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (WindowGroupLimit prunes to k per partition before the shuffle) —
     no global sort, no transcendental, no RNG state.
     """
-    from etl_data_pipeline_spark.operators.text import md5_hash32
-
     d = load_table(spark, sf_dir, "documents")
     keyed = d.select(
         "doc_id",
@@ -1397,8 +1384,6 @@ def neardup_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge list and a 2-column degree table.
     """
     d = load_table(spark, sf_dir, "documents")
-    from etl_data_pipeline_spark.operators.text import minhash_lsh_pairs
-
     pairs = (
         minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
         .select("a", "b")

@@ -21,6 +21,8 @@ from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.functions.canonical import dec_sum
 from etl_data_pipeline_spark.plans.registry import query
 from etl_data_pipeline_spark.materialize import materialize
+from etl_data_pipeline_spark.operators.sessionize import asof_join
+from etl_data_pipeline_spark.operators.text import jaccard_pairs
 
 
 # --------------------------------------------------------------------------
@@ -532,8 +534,6 @@ def i4c_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle grains.
     """
     d = load_table(spark, sf_dir, "documents")
-    from etl_data_pipeline_spark.operators.text import jaccard_pairs
-
     return jaccard_pairs(
         d, threshold=0.5, block_col="lang", max_df_frac=0.2, shingle_n=2
     ).select("a", "b", "jaccard")
@@ -1764,8 +1764,6 @@ def scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the equivalence. States at the exact purchase timestamp count
     (valid_from <= ts), matching the carry-forward's tie order.
     """
-    from etl_data_pipeline_spark.operators.sessionize import asof_join
-
     ev = load_table(spark, sf_dir, "events")
     dim = ev.filter(F.col("event_type").isin("signup", "error")).select(
         "user_id", "ts", F.col("event_type").alias("state")

@@ -123,7 +123,7 @@ def probe_neardup_index(
     # both union legs), the inverted-index inter join, and the final
     # left join — four consumers, each of which would otherwise re-run
     # the band self-join + distinct (a shuffle) per consumer.  Measured
-    # at sf0.1 (interleaved, .scratch/r15_incneardup_profile.py):
+    # at sf0.1 (interleaved A/B):
     # 4.1-4.9 s -> 3.4-3.7 s warm, identical 11,409 rows.  ``touched``
     # is materialized for the same reason: it is the semi-join build
     # side behind all three token-stream recomputes inside

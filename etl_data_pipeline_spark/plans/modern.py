@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_data_pipeline_spark.catalog import load_table
+from etl_data_pipeline_spark.functions.canonical import dec_sum, grid_sum
 from etl_data_pipeline_spark.plans.registry import query
 from etl_data_pipeline_spark.session import group_buckets
 from etl_data_pipeline_spark.sources.pyds import (
@@ -209,9 +210,7 @@ def a9_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- additional format legs (registered here, NOT in plans/io.py, so the
-# driver's 50-entry correctness window — which io.py sits inside — keeps
-# its round-2 composition; rotate next round) ---
+# --- additional format legs ---
 
 import os
 
@@ -335,8 +334,6 @@ def a13_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_after = len(glob.glob(os.path.join(compact, "part-*")))
     back = spark.read.parquet(compact)
-    from etl_data_pipeline_spark.functions.canonical import dec_sum
-
     return back.agg(
         F.lit(n_before).cast("long").alias("files_before"),
         F.lit(n_after).cast("long").alias("files_after"),
@@ -365,8 +362,6 @@ def a10_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scratch2(sf_dir, "orders_orc")
     o.write.mode("overwrite").option("compression", "zlib").orc(path)
     back = spark.read.orc(path)
-    from etl_data_pipeline_spark.functions.canonical import dec_sum
-
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
         dec_sum(F.col("o_totalprice"), 2).alias("total_price"),
@@ -418,8 +413,6 @@ def a12_zstd_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scratch2(sf_dir, "lineitem_zstd")
     li.write.mode("overwrite").option("compression", "zstd").parquet(path)
     back = spark.read.parquet(path)
-    from etl_data_pipeline_spark.functions.canonical import dec_sum
-
     return back.agg(
         F.count(F.lit(1)).alias("n"),
         dec_sum(F.col("l_extendedprice"), 2).alias("total_price"),
@@ -449,8 +442,6 @@ def a14_clustered_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate must match the oracle over the ORIGINAL table, proving
     the clustered rewrite is lossless; the pushed filter is asserted in
     tests/test_plans.py."""
-    from etl_data_pipeline_spark.functions.canonical import grid_sum
-
     ev = load_table(spark, sf_dir, "events")
     path = _scratch2(sf_dir, "events_clustered")
     (
@@ -501,7 +492,7 @@ def k7_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expected per-bucket frames at ~1M rows = ~tens of MB (n_events
     upper-bounds both the purchase and click sides), with one count()
     job for n.
-    Interleaved same-session A/B at sf0.1 (.scratch/r15_k7_bucketed.py):
+    Interleaved same-session A/B at sf0.1:
     10.8-12.0 s per-user -> 1.3-1.7 s bucketed, identical 20,084 rows.
     No (user_id, ts) duplicate clicks exist at any sf (DuckDB-checked),
     so every asof pick is unambiguous on both engines."""

@@ -9,10 +9,12 @@ from pyspark.sql import functions as F
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.operators.multimodal import (
     attach_binary_payload,
+    audio_energy_features,
     decode_audio_stats,
     decode_image_stats,
     decode_video_stats,
     extract_features,
+    image_histogram_features,
     resize_payloads,
     sample_frames,
 )
@@ -241,10 +243,6 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT SQL — so the parity check certifies the decode AND the signal
     math, not just row shapes."""
     d = load_table(spark, sf_dir, "documents")
-    from etl_data_pipeline_spark.operators.multimodal import (
-        audio_energy_features,
-    )
-
     return audio_energy_features(d, cap=128)
 
 
@@ -276,8 +274,4 @@ def mm_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's utf-8 encoding in SQL (byte i = raw[i mod len]), so the
     decode AND the binning arithmetic are hash-certified."""
     d = load_table(spark, sf_dir, "documents")
-    from etl_data_pipeline_spark.operators.multimodal import (
-        image_histogram_features,
-    )
-
     return image_histogram_features(d, width=16, height=4, n_bins=16)

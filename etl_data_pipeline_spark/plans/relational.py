@@ -21,6 +21,7 @@ from pyspark.sql.window import Window
 
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.functions.canonical import (
+    cents_grid,
     cents_recombine,
     cents_sum,
     cents_sum_wide,
@@ -255,7 +256,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     because ep, d, t are exact 2dp-grid values so the products have
     exactly 4/6 decimal places (value-identity vs the previous
     per-expression FLOOR formulation asserted field-by-field at sf0.1
-    before the switch, .scratch/ab_q1_intgrid.py).  This replaces two
+    before the switch).  This replaces two
     double multiply-chains + two FLOOR recoveries with two long
     multiplies, and drops F.avg(l_quantity)'s redundant sum+count
     buffers (avg_qty = sum_qty/count post-agg: integer-valued doubles
@@ -274,12 +275,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row would otherwise cap a single long sum at ~9e7 rows/group —
     far below the 100 TB design point).
     """
-    # Local import: an import-LIST edit changes this module's prelude
-    # AST hash and would re-dirty every relational query's recorded
-    # trace pair in the staleness audit; scoping the new symbol to the
-    # one rewritten function keeps the round-11 evidence drain intact.
-    from etl_data_pipeline_spark.functions.canonical import cents_grid
-
     li = load_table(spark, sf_dir, "lineitem")
     ep_c = cents_grid(F.col("l_extendedprice"), 2)
     d_c = cents_grid(F.col("l_discount"), 2)

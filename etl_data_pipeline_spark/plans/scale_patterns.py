@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_data_pipeline_spark.catalog import TABLES, table_path
+from etl_data_pipeline_spark.catalog import TABLES, load_table, table_path
 from etl_data_pipeline_spark.plans.registry import query
 
 _STATS_ORACLE = "\nUNION ALL\n".join(
@@ -222,8 +222,6 @@ def load_documents_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachable on any real one).  The DuckDB oracles' GENERATE_SERIES(1,
     LEN(s) - 2) already yields empty for short docs, so the guard makes
     the engines agree instead of changing either's answer."""
-    from etl_data_pipeline_spark.catalog import load_table
-
     d = load_table(spark, sf_dir, "documents").withColumn(
         "s", F.split("text", " ")
     )

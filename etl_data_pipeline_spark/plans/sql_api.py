@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_data_pipeline_spark.catalog import load_table
+from etl_data_pipeline_spark.functions.canonical import dec_sum
 from etl_data_pipeline_spark.plans.registry import query
 
 _SCRATCH = os.path.join(
@@ -192,8 +193,6 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     li_b = spark.table(li_name)
     o_b = spark.table(o_name)
-    from etl_data_pipeline_spark.functions.canonical import dec_sum
-
     joined = li_b.join(o_b, li_b.l_orderkey == o_b.o_orderkey)
     return joined.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -252,8 +251,6 @@ def c4b_shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     joined = li.join(o.hint("shuffle_hash"), li.l_orderkey == o.o_orderkey)
-    from etl_data_pipeline_spark.functions.canonical import dec_sum
-
     return joined.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_items"),
         dec_sum(F.col("l_quantity"), 2).alias("total_qty"),
@@ -286,8 +283,6 @@ def dpp_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the equivalent plain filter+agg over orders (pruning
     must be result-invariant).
     """
-    from etl_data_pipeline_spark.functions.canonical import dec_sum
-
     t = _tag(sf_dir)
     base = os.path.join(_SCRATCH, f"orders_bymonth_{t}")
     marker = os.path.join(base, "_SUCCESS")
@@ -350,8 +345,6 @@ def runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     admit the small local dim; the application-side scan-size floor is
     0 because local test files are far below the 10 GB cluster default.
     """
-    from etl_data_pipeline_spark.functions.canonical import dec_sum
-
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",

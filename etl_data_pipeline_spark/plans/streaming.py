@@ -22,8 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_data_pipeline_spark.plans.registry import query
 from etl_data_pipeline_spark.streaming.jobs import (
     foreach_batch_sink,
+    sliding_counts_with_watermark,
     stateful_running_totals,
     stream_dedup_within_watermark,
+    stream_session_windows,
+    stream_static_enrich,
+    stream_stream_join,
+    stream_update_mode_counts,
     windowed_counts_with_watermark,
 )
 
@@ -144,8 +149,6 @@ def j9_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch join (see streaming/jobs.py::stream_stream_join), so the
     oracle is exact batch SQL — the CAST(ts AS TIMESTAMP) mirrors
     Spark's ns->us truncation on ingest."""
-    from etl_data_pipeline_spark.streaming.jobs import stream_stream_join
-
     return stream_stream_join(spark, sf_dir, _tag(sf_dir))
 
 
@@ -194,8 +197,6 @@ def j10_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition) the watermark passed. See
     streaming/jobs.py::stream_session_windows.
     """
-    from etl_data_pipeline_spark.streaming.jobs import stream_session_windows
-
     return stream_session_windows(spark, sf_dir, _tag(sf_dir))
 
 
@@ -213,8 +214,6 @@ def j11_stream_update_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch aggregate exactly. See
     streaming/jobs.py::stream_update_mode_counts.
     """
-    from etl_data_pipeline_spark.streaming.jobs import stream_update_mode_counts
-
     return stream_update_mode_counts(spark, sf_dir, _tag(sf_dir))
 
 
@@ -240,10 +239,6 @@ def j12_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     trunc(ts)-1h); append emits exactly the windows whose END the final
     watermark passed, each once with its full two-batch count. Same
     version coupling as j5 (documented there)."""
-    from etl_data_pipeline_spark.streaming.jobs import (
-        sliding_counts_with_watermark,
-    )
-
     return sliding_counts_with_watermark(spark, sf_dir, _tag(sf_dir))
 
 
@@ -261,6 +256,4 @@ def j13_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     completes the join surface: stream-stream (j9) + stream-static.
     EXACT batch oracle: the join is stateless and the complete-mode agg
     over all micro-batches equals the batch join's group counts."""
-    from etl_data_pipeline_spark.streaming.jobs import stream_static_enrich
-
     return stream_static_enrich(spark, sf_dir, _tag(sf_dir))

@@ -17,6 +17,7 @@ from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.operators.text import (
     LSH_MAX_BUCKET_SIZE,
     MINHASH_P,
+    containment_pairs_op,
     exact_dedup,
     exact_jaccard_on_pairs,
     jaccard_pairs,
@@ -415,8 +416,6 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     decade.  Prediction = argmax over langs of summed bucket frequency,
     integer scores so parity is exact; ties break on lang asc.
     """
-    from etl_data_pipeline_spark.materialize import materialize
-
     d = load_table(spark, sf_dir, "documents")
     # two consumers (model build + scoring) — materialize so the md5
     # per occurrence is computed once, not twice
@@ -1045,8 +1044,6 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares ``df_capped_shingle_stream`` and is differentially
     property-tested against a Python brute force.
     """
-    from etl_data_pipeline_spark.operators.text import containment_pairs_op
-
     d = load_table(spark, sf_dir, "documents")
     return containment_pairs_op(
         d, threshold_num=8, threshold_den=10, block_col="lang",

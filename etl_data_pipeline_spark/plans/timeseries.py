@@ -694,7 +694,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bucketing changes only how many users share one Arrow round-trip
     (the per-GROUP boundary tax, guide §4); the recursion still never
     crosses users, so the result is invariant to B.  Interleaved A/B at
-    sf0.1: identical 1,500 rows, 2.9-3.2 s -> see OPTIMIZATION_r15.md.
+    sf0.1: identical 1,500 rows, 2.9-3.2 s per-user -> bucketed.
     The oracle is the same recursion as a DuckDB recursive CTE, so the
     parity check covers the full alarm/reset semantics, not just row
     counts.

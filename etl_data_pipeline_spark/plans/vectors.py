@@ -10,12 +10,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_data_pipeline_spark.catalog import load_table
+from etl_data_pipeline_spark.operators.ann_adaptive import (
+    ivf_topk_adaptive,
+    pq_rerank_adaptive,
+)
 from etl_data_pipeline_spark.operators.similarity import (
+    ann_lsh_multiprobe_topk,
     ann_lsh_topk,
     centroid_classify,
     cosine_col,
     cosine_pairs_hof,
     cosine_topk_pairs,
+    dot_col,
     embedding_neardup,
     kmeans_iterations,
     knn,
@@ -23,6 +29,7 @@ from etl_data_pipeline_spark.operators.similarity import (
     recall_vs_exact,
 )
 from etl_data_pipeline_spark.plans.registry import query
+from etl_data_pipeline_spark.plans.text import bm25_scores
 
 _COS_PAIRS_CTE = """
     WITH pairs AS (
@@ -458,10 +465,6 @@ def ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall@3 0.41 -> 0.733 at sf0.01 under the r12 stride seeds
     (hash seeds re-measured in BASELINE.md's round-13 row).
     """
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        ivf_topk_adaptive,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     return ivf_topk_adaptive(e, k=3, iters=3)
 
@@ -733,10 +736,6 @@ def ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity.recall_vs_exact).  recall_ok pins >= 0.45: the adaptive
     quantizer measures 0.713 at sf0.001, 0.721 at sf0.01 and 0.485 at
     sf0.1 (~19% scan) vs the fixed label-cell quantizer's 0.41."""
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        ivf_topk_adaptive,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     return recall_vs_exact(spark, e, ivf_topk_adaptive(e, k=3, iters=3), 0.45)
 
@@ -843,10 +842,6 @@ def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation is exactly cross-engine reproducible like i6c
     one compression level up.
     """
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        pq_rerank_adaptive,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     return pq_rerank_adaptive(spark, e, k=3, n_cand=50)
 
@@ -898,10 +893,6 @@ def pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.01 — the 16x4/4-bit geometry was chosen over 8x8 subvectors
     by a recall sweep because it clears this bar at the same 8-byte
     budget)."""
-    from etl_data_pipeline_spark.operators.ann_adaptive import (
-        pq_rerank_adaptive,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     approx = pq_rerank_adaptive(spark, e, k=3, n_cand=50)
     return recall_vs_exact(spark, e, approx, 0.4)
@@ -981,10 +972,6 @@ def ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plane count scale-adaptive since round 12 (see ann_lsh): fan-out
     grows only logarithmically with n while bucket population stays
     ~125."""
-    from etl_data_pipeline_spark.operators.similarity import (
-        ann_lsh_multiprobe_topk,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     return ann_lsh_multiprobe_topk(e, k=3)
 
@@ -1034,10 +1021,6 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity.recall_vs_exact), measured 0.50-0.52 at sf0.001/0.01 —
     a 3.6x lift over single-probe LSH (~0.14) for 5x probe fan-out.
     Gate pinned >= 0.3."""
-    from etl_data_pipeline_spark.operators.similarity import (
-        ann_lsh_multiprobe_topk,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     return recall_vs_exact(spark, e, ann_lsh_multiprobe_topk(e, k=3), 0.3)
 
@@ -1089,10 +1072,6 @@ def i8b_centroid_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, so the diagonal dominating is itself a data property the
     driver hashes). Reuses the registered operator, adds one agg.
     """
-    from etl_data_pipeline_spark.operators.similarity import (
-        centroid_classify,
-    )
-
     e = load_table(spark, sf_dir, "embeddings")
     pred = centroid_classify(e).select("label", "pred_label")
     return pred.groupBy("label").agg(
@@ -1188,8 +1167,6 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from etl_data_pipeline_spark.plans.text import bm25_scores
-
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
     bm = bm25_scores(d, ["join", "hash", "vector"])
@@ -1199,8 +1176,6 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and carried through the broadcast (r15 optimization round) —
     # cosine_col inlined dot(qe, qe) per scanned row.  Bit-identical:
     # same HOF fold, same sqrt(n2_emb * qn2) multiplication order.
-    from etl_data_pipeline_spark.operators.similarity import dot_col
-
     qv = e.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qe"),
         dot_col(F.col("embedding"), F.col("embedding")).alias("qn2"),

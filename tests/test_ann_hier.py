@@ -154,7 +154,7 @@ def test_hier_member_partition(spark, hier_frames):
     e = load_table(spark, SF_DIR, "embeddings")
     n = e.count()
     nsup = hier_nsup(adaptive_nlist(n))
-    l1 = kmeans_cell_ranks(e, nlist=nsup, iters=2, top=hier_psup(nsup))
+    l1 = kmeans_cell_ranks(e, n, nsup, iters=2, top=hier_psup(nsup))
     sup = l1.filter(F.col("crn") == 1)
     assert sup.count() == n
     assert sup.select("vec_id").distinct().count() == n

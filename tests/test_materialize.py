@@ -1,11 +1,9 @@
 """materialize()/cut_lineage() — the cluster-safe materialization
-points (VERDICT r6 item 3).
+points.
 
 The contract under test:
-  - materialize() defaults to persist(MEMORY_AND_DISK): LINEAGE KEPT
+  - materialize() persists at MEMORY_AND_DISK: LINEAGE KEPT
     (recoverable after executor loss at scale), lazy at call time;
-  - SPARK_GRAFT_MATERIALIZE=local_checkpoint opts into the local-mode
-    fast path (eager, lineage-truncating);
   - cut_lineage() truncates lineage (loop bodies need it, persist does
     not provide it) and upgrades to RELIABLE checkpoint() whenever a
     checkpoint dir is configured — the cluster deployment path.
@@ -19,8 +17,7 @@ from pyspark import StorageLevel
 from etl_data_pipeline_spark.materialize import cut_lineage, materialize
 
 
-def test_materialize_defaults_to_persist_with_lineage(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_MATERIALIZE", raising=False)
+def test_materialize_defaults_to_persist_with_lineage(spark):
     df = spark.range(100).withColumn("x", F.col("id") * 2)
     out = materialize(df)
     assert out.storageLevel == StorageLevel.MEMORY_AND_DISK
@@ -33,18 +30,7 @@ def test_materialize_defaults_to_persist_with_lineage(spark, monkeypatch):
     out.unpersist()
 
 
-def test_materialize_local_checkpoint_optin(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "local_checkpoint")
-    df = spark.range(50).withColumn("x", F.col("id") + 1)
-    out = materialize(df)
-    # lineage truncated: the Range source is gone from the plan
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "Range" not in plan
-    assert out.count() == 50
-
-
-def test_cut_lineage_truncates(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_MATERIALIZE", raising=False)
+def test_cut_lineage_truncates(spark):
     df = spark.range(10).withColumn("y", F.col("id") * 3)
     out = cut_lineage(df)
     plan = out._jdf.queryExecution().analyzed().toString()

@@ -877,17 +877,18 @@ def test_ivf_pin_bound(spark):
         require_pinnable(100_001, n=12_500_125)
 
     e = load_table(spark, SF_DIR, "embeddings")
+    n = e.count()
     sc = spark.sparkContext
     sc.setJobGroup("ivf-pin-bound", "pin bound check")
     try:
         with pytest.raises(ValueError, match="nlist=100001 cells"):
-            kmeans_cell_ranks(e, nlist=100_001)
+            kmeans_cell_ranks(e, n, nlist=100_001)
         assert sc.statusTracker().getJobIdsForGroup("ivf-pin-bound") == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # the bound itself is accepted: the build constructs and runs
-    ranked = kmeans_cell_ranks(e, nlist=PIN_MAX_CELLS, iters=1, top=1)
-    assert ranked.count() == e.count()
+    ranked = kmeans_cell_ranks(e, n, PIN_MAX_CELLS, iters=1, top=1)
+    assert ranked.count() == n
     spark.catalog.clearCache()
 
 

@@ -603,18 +603,6 @@ def test_q20_aggregate_rollup_reuses_exchange(spark):
     assert "ReusedExchange" in executed, executed
 
 
-def test_priority_window_hygiene():
-    """_PRIORITY must stay within the driver's ~50-entry correctness
-    window, free of duplicates and stale names — a misspelled entry
-    silently forfeits a fresh-evidence slot."""
-    from etl_data_pipeline_spark.plans.registry import _PRIORITY, QUERIES
-
-    assert len(_PRIORITY) == len(set(_PRIORITY)), "duplicate names"
-    unknown = [n for n in _PRIORITY if n not in QUERIES]
-    assert not unknown, unknown
-    assert len(_PRIORITY) <= 50, len(_PRIORITY)
-
-
 def test_bloom_membership_probe_is_broadcast(spark):
     """The 66-word bitmap must reach the probe side as a broadcast join
     (production shape: the filter ships to executors; the corpus never
@@ -691,31 +679,6 @@ def test_sales_mart_broadcasts_dims_and_pushes_status_filter(spark):
     assert "CartesianProduct" not in plan
     pushed = [seg.splitlines()[0] for seg in plan.split("PushedFilters")[1:]]
     assert any("o_orderstatus" in line for line in pushed), pushed
-
-
-def test_priority_matches_audit_prescription():
-    """Rotation invariant (VERDICT r6 item 2): _PRIORITY is set
-    MECHANICALLY from the committed COVERAGE_AUDIT.json's
-    summary.suggested_priority (tools/coverage_audit.py), every name is
-    registered with an oracle, and the registry's iteration order puts
-    the window first so the driver's ~50-slot correctness run checks
-    exactly the audit's prescription."""
-    import json
-    from pathlib import Path
-
-    from etl_data_pipeline_spark.plans import ORACLES
-    from etl_data_pipeline_spark.plans.registry import _PRIORITY
-
-    audit = json.load(
-        open(Path(__file__).resolve().parent.parent / "COVERAGE_AUDIT.json")
-    )
-    assert _PRIORITY == audit["summary"]["suggested_priority"]
-    missing = [n for n in _PRIORITY if n not in QUERIES]
-    assert not missing, missing
-    no_oracle = [n for n in _PRIORITY if n not in ORACLES]
-    assert not no_oracle, no_oracle
-    # the driver's ~50-slot window follows registry iteration order
-    assert list(QUERIES)[: len(_PRIORITY)] == _PRIORITY
 
 
 def test_adaptive_ann_oracles_parameterized():

@@ -1116,7 +1116,7 @@ def test_kmeans_cell_ranks_matches_python_mirror(spark, vecs, nlist, iters):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {
         (r["vec_id"], r["crn"]): r["cell"]
-        for r in kmeans_cell_ranks(emb, nlist=nlist, iters=iters).collect()
+        for r in kmeans_cell_ranks(emb, len(rows), nlist, iters=iters).collect()
     }
     spark.catalog.clearCache()
     want = _kmeans_mirror(rows, nlist, iters)

@@ -1,8 +1,6 @@
 #!/usr/bin/env python
-"""Standalone driver emulator — the instrument every correctness claim
-in this repo rests on (promoted from .scratch/ per VERDICT r9 item 3).
-
-Consumes ``__spark_entry__.py`` exactly per its documented contract:
+"""Standalone driver emulator: consumes ``__spark_entry__.py`` exactly
+per its documented contract.
 
 - ``entry(spark)`` smoke (loads sf0.001 internally; must return >0 rows
   with a stable schema);
@@ -16,24 +14,11 @@ driver's session is plain too: any loader that forgets
 ``ensure_engine_confs`` (e.g. the nanos-timestamp parquet read) fails
 here first.
 
-Per-run trace persistence (VERDICT r9 item 4): with ``--traces-out``,
-the emulator records, for every query, the engine (file, func) pairs
-its plan construction executed — the same driver-side profile +
-transitive executor-kernel closure the coverage audit uses — together
-with each pair's normalized-AST hash at run time and the repo HEAD
-SHA.  ``tools/coverage_audit.py`` prefers these recorded traces over
-its bounded two-endpoint reconstruction: a green round-R row then
-certifies exactly the code it actually executed, closing the audit's
-documented residual hole (a call edge added after round R can no
-longer route certification through a row that never executed the
-pair).
-
 Usage::
 
     python tools/driver_emulator.py                      # standing gate
     python tools/driver_emulator.py --sf-dir /root/testdata/sf0.01 \
-        --master local[8] --shuffle-partitions 8 \
-        --traces-out TRACES_r10.json --round 10
+        --master local[8] --shuffle-partitions 8
 """
 
 from __future__ import annotations
@@ -41,8 +26,6 @@ from __future__ import annotations
 import argparse
 import hashlib
 import importlib.util
-import json
-import subprocess
 import sys
 from pathlib import Path
 
@@ -77,86 +60,11 @@ def _parse_args(argv) -> argparse.Namespace:
     ap.add_argument("--shuffle-partitions", default="8")
     ap.add_argument("--entry-module", default=str(_REPO / "__spark_entry__.py"),
                     help="path to the driver-contract module")
-    ap.add_argument("--traces-out", default=None, metavar="PATH",
-                    help="write per-query traced (file, func, ast-hash) "
-                         "sets + HEAD SHA to this JSON (see module doc)")
-    ap.add_argument("--round", type=int, default=None,
-                    help="round number stamped into --traces-out "
-                         "(required with --traces-out)")
     return ap.parse_args(argv)
-
-
-def _record_traces(qs, spark, sf_dir: str, out_path: str, rnd: int) -> None:
-    """Trace every query's plan construction (driver-side profile +
-    transitive executor-kernel closure + module preludes — identical
-    machinery to tools/coverage_audit.py, imported from it so the two
-    can never diverge) and persist {pair: normalized-AST hashes} per
-    query, stamped with HEAD.  Plan construction only, matching the
-    audit's trace semantics: execution adds no engine frames the
-    profiler can see (executor-side kernels are covered by the
-    referenced-kernels closure).
-
-    Regime alignment (ADVICE r10): the correctness loop above runs a
-    deliberately PLAIN session at --sf-dir, but the audit's own trace
-    pass runs under engine confs at ``$SPARK_GRAFT_TRACE_SF`` (default
-    sf0.001) — a conf- or sf-dependent plan-construction branch would
-    make the audit's new-call-edge rule flag every trace-recorded row
-    stale on every audit.  So THIS pass applies the engine confs to the
-    session and traces at the audit's sf before profiling; ``sf_dir``
-    is only the fallback when that dir is absent.  (Master/parallelism
-    cannot be realigned on a live session; plan construction does not
-    branch on them — all engine branch points are SQL confs or data
-    paths.)"""
-    import os
-
-    from etl_data_pipeline_spark.session import ensure_engine_confs
-    from tools.coverage_audit import (
-        normalized_func_hashes,
-        trace_query_pairs,
-    )
-
-    ensure_engine_confs(spark)
-    trace_sf = os.environ.get("SPARK_GRAFT_TRACE_SF", "/root/testdata/sf0.001")
-    if Path(trace_sf).is_dir():
-        sf_dir = trace_sf
-
-    head = subprocess.run(
-        ["git", "-C", str(_REPO), "rev-parse", "HEAD"],
-        capture_output=True, text=True,
-    ).stdout.strip()
-
-    file_hashes: dict[str, dict] = {}
-
-    def _hashes_for(relpath: str) -> dict:
-        if relpath not in file_hashes:
-            file_hashes[relpath] = normalized_func_hashes(
-                (_REPO / relpath).read_text()
-            )
-        return file_hashes[relpath]
-
-    queries_out: dict[str, dict[str, list[str]]] = {}
-    for name in sorted(qs):
-        pairs = trace_query_pairs(qs[name], spark, sf_dir)
-        # Unhashable pairs (profiled class bodies — the AST hasher only
-        # sees defs) are dropped: an empty hash list would compare
-        # vacuously fresh forever; class-body edits are caught by the
-        # file's <module-prelude> pair, which is always recorded.
-        queries_out[name] = {
-            f"{relpath}:{func}": hashes
-            for relpath, func in sorted(pairs)
-            if (hashes := _hashes_for(relpath).get(func, []))
-        }
-    payload = {"round": rnd, "head_sha": head, "queries": queries_out}
-    with open(out_path, "w") as fh:
-        json.dump(payload, fh, indent=1)
-    print(f"traces: wrote {out_path} ({len(queries_out)} queries, "
-          f"HEAD {head[:10]})")
 
 
 def main(argv=None) -> None:
     args = _parse_args(argv)
-    if args.traces_out and args.round is None:
-        sys.exit("--traces-out requires --round")
 
     spark = (
         SparkSession.builder.master(args.master)
@@ -214,9 +122,6 @@ def main(argv=None) -> None:
                 for x, y in diffs:
                     print(f"      spark={x!r}\n      duck ={y!r}")
     print(f"T2: {ok} hash-match, {fail} fail, {len(qs)-len(oracles)} rows-only")
-
-    if args.traces_out and not fail:
-        _record_traces(qs, spark, args.sf_dir, args.traces_out, args.round)
 
     sys.exit(1 if fail else 0)
 

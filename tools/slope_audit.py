@@ -31,8 +31,7 @@ The known-superlinear cost models are exempt with documented reasons
 this near-dup-dense synthetic corpus).
 
 Writes SLOPE_AUDIT.json at the repo root; exits 1 when an unexempted
-flag fires, so it can gate a round the way coverage_audit --check
-does.
+flag fires, so it can gate ``tools/verify.py``.
 """
 from __future__ import annotations
 
@@ -164,14 +163,14 @@ SKIP_UNLESS_ALL = {"i6b_cosine_topk_hof"}
 #: kept as a cost model (quadratic by definition, interpreted per
 #: element): at sf0.1 it alone costs ~2 min of a 35-min sweep to
 #: re-prove a cost model that EXPECTED_SUPERLINEAR already documents
-#: and the sf0.01 driver window still checks for correctness each
-#: rotation.  SPARK_GRAFT_SWEEP_ALL=1 re-includes every skip.
+#: and Tier-1 test_correctness still checks at sf0.001 on every run.
+#: SPARK_GRAFT_SWEEP_ALL=1 re-includes every skip.
 SKIP_REASONS = {
     "i6b_cosine_topk_hof": (
         "deliberately-naive all-pairs HOF comparator kept as a cost "
         "model; quadratic by definition and interpreter-bound, so the "
-        "sweep skips it below SPARK_GRAFT_SWEEP_ALL (driver-checked "
-        "at sf0.01 each rotation; see EXPECTED_SUPERLINEAR)"
+        "sweep skips it below SPARK_GRAFT_SWEEP_ALL (oracle-checked "
+        "on every Tier-1 run; see EXPECTED_SUPERLINEAR)"
     ),
     "i4c_ngram_jaccard": (
         "sf>=1 only: exact all-pairs bigram verifier, n^2 cost model "

@@ -1,71 +1,45 @@
 #!/usr/bin/env python
-"""Single verification entry point (VERDICT r6 item 5).
+"""Single verification entry point.
 
-Runs, in order, the gates that previously ran ad hoc, plus the
-coverage-window sync check, and exits non-zero on the first failure:
+Runs the gates in order and exits non-zero on the first failure:
 
   1. driver emulator  — sf0.01, plain local[8] session without engine
-     confs (catches loaders that forget ensure_engine_confs): 271
-     queries vs their DuckDB oracles, rows + schema + value-hash; on a
-     green pass it also records every query's per-run (file, func,
-     AST-hash) trace into TRACES_r{next}.json so the coverage audit
-     certifies exactly the code each green row executed (VERDICT r9
-     item 4);
+     confs (catches loaders that forget ensure_engine_confs): every
+     registered query vs its DuckDB oracle, rows + schema + value-hash;
   2. emulator + reliable checkpoint — the same full pass with
-     ``SPARK_GRAFT_CHECKPOINT_DIR`` set, so the cluster deployment
-     interplay (reliable checkpoint() at cut_lineage points + AQE +
-     persist) is proven continuously, not in one unit test
-     (VERDICT r7 item 4 / r8 item 4);
+     ``SPARK_GRAFT_CHECKPOINT_DIR`` set, so reliable checkpoint() at
+     cut_lineage points + AQE + persist is proven on every run, not in
+     one unit test;
   3. small-SF stress  — every query at sf0.001 with 32 shuffle
      partitions (empty-partition / partitioning-determinism regime);
   4. local-cluster stress — every query at sf0.001 under
      ``local-cluster[2,4,4096]``: real separate executor JVMs, the
      only local regime exercising closure serialization, broadcast
-     transport, and executor-side module import (VERDICT r8 item 1);
-  4b. executor-loss chaos — tools/chaos_executor_loss.py, six
-     recovery paths: reliable checkpoint (neardup_clusters, the
-     iterative graph loop, checkpoint dir set), lineage recompute
-     (i4b_minhash_lsh at sf0.1, pure persist, no dir), plain
-     shuffle/exchange recovery (j4_sessionization_metrics at sf0.1, no
-     persist points at all — the path most of the registry actually
-     uses; VERDICT r9 item 6), stateful-streaming recovery
-     (j6_stream_dedup at sf0.1: a real multi-micro-batch job whose
-     state store must reload on the relaunched executor; first
-     measured green 2026-08-15, kill at 2.66 s, recovery visible at
-     16.6 s vs 5.3 s warm, hash identical), and — round 11 — a
-     PHASE-TARGETED kill during a downstream stage's shuffle FETCH
-     (status-tracker trigger, not wall-clock; since round 12 the green
-     additionally requires the killed-into stage's FINAL
-     shuffleReadBytes > 0 — ADVICE r11 showed the r11 trigger actually
-     landed in the map stage), plus — round 12 — a kill mid-way
-     through the adaptive IVF path's iterative seeded k-means
-     (ivf_ann at sf0.1: persist-kept lineage + all-integer iteration
-     state must recompute the identical hash); in the non-phase modes,
-     one executor JVM is SIGKILLed mid-query at 50% of the measured
-     WARM baseline wall-time (adaptive, VERDICT r9 item 5), and in
-     every mode the result hash must be byte-identical to the
-     unkilled baseline; round 12's second session adds a seventh
-     mode, the two-level IVF (ivf2_ann: BOTH k-means levels' integer
-     state recomputed through chained materialize points);
+     transport, and executor-side module import;
+  4b. executor-loss chaos — tools/chaos_executor_loss.py, seven
+     recovery paths: reliable checkpoint (neardup_clusters, checkpoint
+     dir set), lineage recompute (i4b_minhash_lsh, pure persist, no
+     dir), plain shuffle/exchange recovery (j4_sessionization_metrics,
+     no persist points), stateful streaming (j6_stream_dedup: the state
+     store must reload on the relaunched executor), a kill during a
+     downstream stage's shuffle FETCH (status-tracker trigger; green
+     requires the killed-into stage's shuffleReadBytes > 0), and the
+     flat and two-level IVF k-means (ivf_ann, ivf2_ann: all-integer
+     iteration state through chained materialize points).  In the
+     non-phase modes one executor JVM is SIGKILLed at 50% of the
+     measured warm wall-time; in every mode the result hash must be
+     byte-identical to the unkilled baseline;
   5. pytest           — the full unit/property/plan suite;
   6. bench smoke      — bench.py at sf0.01 with the load gate enabled
      (proves the artifact path runs end-to-end; NOT a timing claim);
-  7. coverage window  — tools/coverage_audit.py --check: the registry's
-     driver window must match the audit's mechanical prescription;
-  8. slope audit      — tools/slope_audit.py --check: every query's
+  7. slope audit      — tools/slope_audit.py --check: every query's
      sf0.01→sf0.1 wall-clock slope; an unexempted superlinear flag
-     fails the gate so a quadratic can't land between rounds
-     (VERDICT r7 item 5 / r8 item 3).
+     fails the gate so a quadratic cannot land unnoticed.
 
 Usage::
 
     python tools/verify.py               # all gates (~55 min quiet host)
     python tools/verify.py --fast        # gates 1-5 only (~20 min)
-    python tools/verify.py --round-start # gate 1 only, re-stamping the
-                                         # JUST-CLOSED round's traces —
-                                         # run FIRST thing each round,
-                                         # before any engine edit
-    python tools/verify.py --round N     # pin the trace round stamp
 
 Each gate streams its tail on failure.
 """
@@ -116,67 +90,10 @@ def _run(name: str, cmd: list[str], env: dict | None = None,
     print(f"PASS {name} ({dt:.0f}s)", flush=True)
 
 
-def _closed_round() -> int:
-    """Max round with a CORRECTNESS_r*.json artifact — the round the
-    driver has already swept."""
-    import glob
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for f in glob.glob(str(_REPO / "CORRECTNESS_r*.json"))
-        if (m := re.search(r"_r(\d+)\.json$", f))
-    ]
-    return max(rounds, default=0)
-
-
-def _trace_round(argv: list[str]) -> int:
-    """Round stamped into gate 1's TRACES_r{N}.json.
-
-    Default: the round the NEXT correctness artifact will carry
-    (_closed_round() + 1) — correct for every mid-round and round-close
-    run, because the driver's CORRECTNESS_rN.json only lands AFTER the
-    builder's turns end.  Two explicit overrides (ADVICE r10: the
-    default mis-stamps a run executed after the round's artifact has
-    already landed, e.g. a round-START re-record):
-
-    - ``--round N``: stamp exactly N (the round-close workflow can pin
-      the round it is shipping evidence for);
-    - ``--round-start``: stamp _closed_round() — re-records the
-      just-closed round's traces against the current tree.  Run this at
-      round start BEFORE any engine edit: the engine tree is then
-      byte-identical to the tree the driver's round-N sweep executed
-      (the driver commits only artifact files), so the refreshed
-      TRACES_rN is EXACT evidence for round-N rows even when the
-      round's closing verify ran earlier than its final engine edit
-      (the conservative-churn window documented in round 10).
-
-    Each run OVERWRITES the stamped round's TRACES file; the audit
-    keys traces by the stamped round, so the last write is the one
-    that counts."""
-    if "--round" in argv:
-        return int(argv[argv.index("--round") + 1])
-    if "--round-start" in argv:
-        return _closed_round()
-    return _closed_round() + 1
-
-
 def main() -> None:
     fast = "--fast" in sys.argv
     py = sys.executable
-    rnd = _trace_round(sys.argv)
-    _run(
-        "emulator sf0.01",
-        [py, str(_REPO / "tools" / "driver_emulator.py"),
-         "--traces-out", str(_REPO / f"TRACES_r{rnd:02d}.json"),
-         "--round", str(rnd)],
-    )
-    if "--round-start" in sys.argv:
-        # Round-start mode exists only to refresh the just-closed
-        # round's traces (gate 1); the remaining gates belong to the
-        # normal mid-round/round-close runs.
-        print("ROUND-START TRACE REFRESH DONE")
-        return
+    _run("emulator sf0.01", [py, str(_REPO / "tools" / "driver_emulator.py")])
     _run(
         "emulator sf0.01 + reliable ckpt",
         [py, str(_REPO / "tools" / "driver_emulator.py")],
@@ -282,10 +199,6 @@ def main() -> None:
                 "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.01",
                 "SPARK_GRAFT_NO_SCALING": "1",
             },
-        )
-        _run(
-            "coverage window",
-            [py, str(_REPO / "tools" / "coverage_audit.py"), "--check"],
         )
         _run(
             "slope audit",
