@@ -1,7 +1,11 @@
 """Table catalog: declared schemas + loaders for the test corpus.
 
-Schemas are declared (not inferred) so the engine fails fast if the data
-layout drifts (SURVEY.md §1.3). The ``events`` table needs the
+``SCHEMAS`` declares each table's expected layout (SURVEY.md §1.3), but
+nothing validates against it yet: ``load_table`` infers the schema from
+the parquet footer, so a drifted layout is read as it is, not rejected
+(checking the footer against ``SCHEMAS`` is ROADMAP direction 1). Only
+``plans/io.py`` reads ``SCHEMAS``, as the read schema of its CSV and
+JSONL round trips. The ``events`` table needs the
 nanos-timestamp ingest path (SURVEY.md §1.4): parquet stores
 ``ts`` as INT64 TIMESTAMP(NANOS); with
 ``spark.sql.legacy.parquet.nanosAsLong=true`` it arrives as bigint
@@ -32,7 +36,8 @@ TABLES = [
     "embeddings",
 ]
 
-#: Expected Spark schemas (SURVEY.md §1.2), for validation / fail-fast.
+#: Expected Spark schemas (SURVEY.md §1.2). Not checked at load time:
+#: ``load_table`` infers from the footer (see the module docstring).
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [

@@ -632,17 +632,19 @@ def kmeans_iterations(embeddings: DataFrame, k: int = 8, iters: int = 3) -> Data
     """Iterative k-means (Lloyd) as a driver-side loop over DataFrame ops
     — the pattern for iterative algorithms on Spark: per-iteration state
     (centroids) is a small DataFrame, the big table is touched once per
-    iteration, and intermediate assignments are cached to truncate
+    iteration, and intermediate assignments are persisted to truncate
     lineage. Deterministic init: the k lowest vec_ids seed the centroids.
 
-    Returns one row per iteration: (iteration, inertia, n_nonempty).
+    Returns one row per iteration: (iteration, inertia, n_nonempty,
+    n_assigned), built from driver-side rows, so every frame the loop
+    persisted is released before it returns.
     At 100 TB: same loop, with centroids broadcast (they stay k x dims)
     and dims cached in memory/disk; convergence adds a driver-side delta
     check on the tiny centroid frame.
     """
     from pyspark.sql.window import Window
 
-    dims = explode_dims(embeddings).select("vec_id", "pos", "v").cache()
+    dims = materialize(explode_dims(embeddings).select("vec_id", "pos", "v"))
     seeds = (
         embeddings.select("vec_id").orderBy("vec_id").limit(k).collect()
     )
@@ -651,7 +653,7 @@ def kmeans_iterations(embeddings: DataFrame, k: int = 8, iters: int = 3) -> Data
         dims.filter(F.col("vec_id").isin(seed_ids))
         .select(F.col("vec_id").alias("cid"), "pos", F.col("v").alias("c"))
     )
-    results = []
+    held, results = [dims], []
     for it in range(1, iters + 1):
         d2 = (
             dims.join(F.broadcast(cent), "pos")
@@ -659,12 +661,12 @@ def kmeans_iterations(embeddings: DataFrame, k: int = 8, iters: int = 3) -> Data
             .agg(F.sum((F.col("v") - F.col("c")) ** 2).alias("dist2"))
         )
         w = Window.partitionBy("vec_id").orderBy("dist2", "cid")
-        assign = (
+        assign = materialize(
             d2.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("vec_id", "cid", "dist2")
-            .cache()
         )
+        held.append(assign)
         stats = assign.agg(
             F.round(F.sum("dist2"), 6).alias("inertia"),
             F.count_distinct("cid").alias("n_nonempty"),
@@ -683,6 +685,8 @@ def kmeans_iterations(embeddings: DataFrame, k: int = 8, iters: int = 3) -> Data
             .groupBy("cid", "pos")
             .agg(F.avg("v").alias("c"))
         )
+    for df in held:
+        df.unpersist()
     spark = embeddings.sparkSession
     return spark.createDataFrame(
         results,

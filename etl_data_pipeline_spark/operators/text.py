@@ -169,6 +169,28 @@ def df_capped_shingle_stream(
     return materialize(t.join(counts, "doc_id"))  # feeds both join sides
 
 
+def _pair_intersections(t: DataFrame) -> DataFrame:
+    """(a, b, na, nb, inter) for every doc pair a < b sharing a shingle in
+    a block: the inverted-index self-join on (block, token) over
+    ``df_capped_shingle_stream`` output, counted per pair."""
+    a = t.select(
+        "block", "token",
+        F.col("doc_id").alias("a"), F.col("n_tok").alias("na"),
+    )
+    b = t.select(
+        F.col("block").alias("block_b"), F.col("token").alias("token_b"),
+        F.col("doc_id").alias("b"), F.col("n_tok").alias("nb"),
+    )
+    return (
+        a.join(
+            b,
+            (a.block == b.block_b) & (a.token == b.token_b) & (a.a < b.b),
+        )
+        .groupBy("a", "b", "na", "nb")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+
+
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float,
@@ -216,26 +238,7 @@ def jaccard_pairs(
         docs, block_col=block_col, max_df_frac=max_df_frac,
         shingle_n=shingle_n,
     )
-    a = t.select(
-        F.col("block"),
-        F.col("token"),
-        F.col("doc_id").alias("a"),
-        F.col("n_tok").alias("na"),
-    )
-    b = t.select(
-        F.col("block").alias("block_b"),
-        F.col("token").alias("token_b"),
-        F.col("doc_id").alias("b"),
-        F.col("n_tok").alias("nb"),
-    )
-    inter = (
-        a.join(
-            b,
-            (a.block == b.block_b) & (a.token == b.token_b) & (a.a < b.b),
-        )
-        .groupBy("a", "b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    inter = _pair_intersections(t)
     jac = inter.withColumn(
         "jaccard",
         F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")),
@@ -265,22 +268,7 @@ def containment_pairs_op(
         docs, block_col=block_col, max_df_frac=max_df_frac,
         shingle_n=shingle_n,
     )
-    a = t.select(
-        "block", "token",
-        F.col("doc_id").alias("a"), F.col("n_tok").alias("na"),
-    )
-    b = t.select(
-        F.col("block").alias("block_b"), F.col("token").alias("token_b"),
-        F.col("doc_id").alias("b"), F.col("n_tok").alias("nb"),
-    )
-    inter = (
-        a.join(
-            b,
-            (a.block == b.block_b) & (a.token == b.token_b) & (a.a < b.b),
-        )
-        .groupBy("a", "b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    inter = _pair_intersections(t)
     small = F.least(F.col("na"), F.col("nb"))
     return (
         inter.filter(

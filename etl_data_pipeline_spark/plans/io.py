@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from etl_data_pipeline_spark.catalog import SCHEMAS, load_table
 from etl_data_pipeline_spark.functions.canonical import dec_sum
+from etl_data_pipeline_spark.materialize import materialize
 from etl_data_pipeline_spark.plans.registry import query
 from etl_data_pipeline_spark.sources.readers import read_csv, read_jsonl
 from etl_data_pipeline_spark.sources.writers import (
@@ -152,7 +153,7 @@ def a7_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ETL dead-letter pattern; DROPMALFORMED/FAILFAST are config flips).
 
     Two known-bad lines are appended to a valid extract; the query counts
-    clean vs quarantined rows. The frame is cached before filtering on
+    clean vs quarantined rows. The frame is persisted before filtering on
     the corrupt column (Spark disallows filtering an uncached corrupt
     column because the raw record is not otherwise materialized).
     """
@@ -175,13 +176,13 @@ def a7_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("_corrupt_record", StringType()),
         ]
     )
-    raw = (
+    raw = materialize(
         spark.read.schema(schema)
         .option("header", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
-    ).cache()
+    )
     return raw.agg(
         F.count(F.when(F.col("_corrupt_record").isNull(), 1)).alias("n_good"),
         F.count(F.col("_corrupt_record")).alias("n_bad"),

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.functions.canonical import dec_sum
+from etl_data_pipeline_spark.materialize import materialize
 from etl_data_pipeline_spark.plans.registry import query
 
 _SCRATCH = os.path.join(
@@ -367,10 +368,10 @@ def runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum(F.col("l_extendedprice"), 2).alias("total"),
         )
         # Materialize ONCE under these confs (they are read at
-        # analysis/optimization time) and cache the 3-row result, so the
+        # analysis/optimization time) and persist the 3-row result, so the
         # caller's collect is served from cache instead of re-running the
         # whole join — previously every invocation executed twice.
-        out = out.cache()
+        out = materialize(out)
         out.collect()
         return out
     finally:

@@ -242,6 +242,19 @@ def test_kmeans_inertia_monotone(spark):
     assert (q["inertia_decreased"] == 1).all()
 
 
+def test_kmeans_releases_persisted_frames(spark):
+    """kmeans_iterations returns driver-side rows, so a long-lived
+    session holds no more persisted frames after it than before."""
+    from etl_data_pipeline_spark.operators.similarity import kmeans_iterations
+
+    # a filter no other test uses, so no earlier cache entry matches
+    # these plans and hides a frame the loop leaves persisted
+    e = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") % 2 == 0)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    kmeans_iterations(e, 8, 3)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_neardup_clusters_match_union_find(spark):
     """neardup_clusters' min-label propagation must equal a plain Python
     union-find over the same verified LSH pair set — an authority

@@ -65,7 +65,7 @@ Measured round 9 (2026-08-15), three runs on this host:
   (kill at t=2.5 s into a ~5.6 s run, hash identical).
 
 Must run as a DEDICATED process (the local-cluster session-lifecycle
-constraint documented in tools/stress_small_sf.py).
+constraint noted at gate 4 of tools/verify.py).
 """
 
 from __future__ import annotations

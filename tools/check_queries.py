@@ -1,94 +1,11 @@
-"""Targeted driver-emulator: check named queries vs oracles at sf0.01
-(override the data dir with ``$SPARK_GRAFT_CHECK_SF`` — e.g. the
-generated sf1 — for scale-parity spot checks).
+"""Targeted oracle check: ``tools/driver_emulator.py`` under its older name.
 
-Usage: python tools/check_queries.py name1 name2 ...
+Usage: python tools/check_queries.py name1 name2 ... [--sf-dir DIR]
+
+Every argument goes to the emulator.  ``TABLES`` and ``value_hash`` are
+the emulator's, re-exported for code that imports this module.
 """
-import hashlib
-import os
-import sys
-from pathlib import Path
-
-import duckdb
-import pandas as pd
-from pyspark.sql import SparkSession
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-SF01 = os.environ.get("SPARK_GRAFT_CHECK_SF", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
-
-
-def value_hash(pdf: pd.DataFrame) -> str:
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    cells = []
-    for _, row in pdf.iterrows():
-        cells.append("|".join(repr(v) for v in row.tolist()))
-    return hashlib.sha256("\n".join(sorted(cells)).encode()).hexdigest()
-
-
-def main() -> int:
-    names = sys.argv[1:]
-    from etl_data_pipeline_spark.plans.registry import (
-        ORACLES,
-        QUERIES,
-        load_all_plans,
-    )
-
-    load_all_plans()
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF01}/{t}.parquet')"
-        )
-    fail = 0
-    for name in names:
-        spdf = QUERIES[name](spark, SF01).toPandas()
-        if name not in ORACLES:
-            print(f"  ~ {name}: rows-only, {len(spdf)} rows")
-            continue
-        opdf = con.execute(ORACLES[name]).fetchdf()
-        schema_match = sorted(spdf.columns) == sorted(opdf.columns)
-        count_match = len(spdf) == len(opdf)
-        hash_match = value_hash(spdf) == value_hash(opdf)
-        ok = schema_match and count_match and hash_match
-        if not ok:
-            fail += 1
-        print(
-            f"  {'OK  ' if ok else 'FAIL'} {name}: schema={schema_match} "
-            f"count={count_match} ({len(spdf)}/{len(opdf)}) hash={hash_match}"
-        )
-        if schema_match and count_match and not hash_match:
-            a = (
-                spdf.reindex(sorted(spdf.columns), axis=1)
-                .astype(str)
-                .apply("|".join, axis=1)
-                .sort_values()
-                .tolist()
-            )
-            b = (
-                opdf.reindex(sorted(opdf.columns), axis=1)
-                .astype(str)
-                .apply("|".join, axis=1)
-                .sort_values()
-                .tolist()
-            )
-            diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-            for x, y in diffs:
-                print(f"      spark={x!r}\n      duck ={y!r}")
-    return 1 if fail else 0
-
+from driver_emulator import TABLES, main, value_hash  # noqa: F401
 
 if __name__ == "__main__":
-    sys.exit(main())
+    main()

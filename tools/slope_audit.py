@@ -4,7 +4,7 @@ t(sf0.1)/t(sf0.01), and flag superlinear outliers.
 
 This generalizes the two mechanisms that already caught real
 quadratics (bench.py's headline scaling probe; the targeted
-tools/slope_check.py run that caught fuzzy_levenshtein at slope 26)
+two-scale slope run that caught fuzzy_levenshtein at slope 26)
 to the whole registry — the mechanical answer to "would this plan
 survive a 100x scale-up?" for every operator, not just the nine
 headline ones.

@@ -10,9 +10,9 @@ Runs the gates in order and exits non-zero on the first failure:
      ``SPARK_GRAFT_CHECKPOINT_DIR`` set, so reliable checkpoint() at
      cut_lineage points + AQE + persist is proven on every run, not in
      one unit test;
-  3. small-SF stress  — every query at sf0.001 with 32 shuffle
+  3. small-SF stress  — the driver emulator at sf0.001 with 32 shuffle
      partitions (empty-partition / partitioning-determinism regime);
-  4. local-cluster stress — every query at sf0.001 under
+  4. local-cluster stress — the driver emulator at sf0.001 under
      ``local-cluster[2,4,4096]``: real separate executor JVMs, the
      only local regime exercising closure serialization, broadcast
      transport, and executor-side module import;
@@ -38,8 +38,8 @@ Runs the gates in order and exits non-zero on the first failure:
 
 Usage::
 
-    python tools/verify.py               # all gates (~55 min quiet host)
-    python tools/verify.py --fast        # gates 1-5 only (~20 min)
+    python tools/verify.py               # all gates: --fast + gates 6-7
+    python tools/verify.py --fast        # gates 1-5 only (~36 min on 4 cores)
 
 Each gate streams its tail on failure.
 """
@@ -93,17 +93,25 @@ def _run(name: str, cmd: list[str], env: dict | None = None,
 def main() -> None:
     fast = "--fast" in sys.argv
     py = sys.executable
-    _run("emulator sf0.01", [py, str(_REPO / "tools" / "driver_emulator.py")])
+    emu = [py, str(_REPO / "tools" / "driver_emulator.py")]
+    _run("emulator sf0.01", emu)
     _run(
         "emulator sf0.01 + reliable ckpt",
-        [py, str(_REPO / "tools" / "driver_emulator.py")],
+        emu,
         env={"SPARK_GRAFT_CHECKPOINT_DIR": str(_REPO / ".scratch" / "ckpt_verify")},
     )
-    _run("stress sf0.001x32", [py, str(_REPO / "tools" / "stress_small_sf.py")])
     _run(
-        "stress local-cluster[2,4,4096]",
-        [py, str(_REPO / "tools" / "stress_small_sf.py"),
-         "/root/testdata/sf0.001", "8", "local-cluster[2,4,4096]"],
+        "emulator sf0.001x32",
+        [*emu, "--sf-dir", "/root/testdata/sf0.001", "--shuffle-partitions", "32"],
+    )
+    _run(
+        # Its own subprocess, like every gate: a local-cluster session
+        # built during interpreter teardown dies with 'Shutdown hooks
+        # cannot be modified during shutdown' (executor launch racing
+        # JVM exit).
+        "emulator local-cluster[2,4,4096]",
+        [*emu, "--sf-dir", "/root/testdata/sf0.001", "--shuffle-partitions", "8",
+         "--master", "local-cluster[2,4,4096]"],
         timeout=3600,
     )
     _run(
