@@ -43,8 +43,10 @@ executor kill recoverable with an identical hash (the persist points
 keep lineage; recompute re-derives the same integers).
 
 Centroid assignment has ONE path: the centroid table is collected on
-the driver (``_collect_cents``) and pinned into the ranking kernel's
-closure (``_rank_kern``).  The contract is ``nlist <= PIN_MAX_CELLS``
+the driver (``_pin_cells``) and pinned into the ranking kernel's
+closure (``_rank_kern``); the Lloyd loop (``lloyd_cells``) and the
+nearest-cell selection (``_topk_cells``) are shared with the two-level
+quantizer and PQ.  The contract is ``nlist <= PIN_MAX_CELLS``
 (100,000 cells, i.e. n <= 12.5M vectors by the nlist rule — 62x the
 sf10 fixture's 1,600 cells); the builders raise ``ValueError`` above it
 before any k-means job runs.  At the bound the driver and each Python
@@ -172,19 +174,28 @@ def grid_vectors(embeddings: DataFrame) -> DataFrame:
 
 
 #: Cells per in-kernel distance block: the kernel's transient distance
-#: matrix is batch x _CELL_BLOCK doubles (~160 MB at Arrow's default
-#: 10k-row batch), HOWEVER many cells the table holds — one batch x
-#: nlist allocation would be ~8 GB per task at PIN_MAX_CELLS.  Blocking
-#: changes no result: blocks are ascending slices of the cell-ascending
-#: table, so a stable argsort over the block-ordered candidate concat
-#: realizes the exact (d, cell) total order.
+#: matrix is rows x _CELL_BLOCK x 8 B per Arrow batch (~160 MB at the
+#: default 10k-row batch), HOWEVER many cells the table holds — one
+#: batch x nlist allocation would be ~8 GB per task at PIN_MAX_CELLS.
+#: Blocking changes no result: blocks are ascending slices of the
+#: cell-ascending table, so a stable argsort over the block-ordered
+#: candidate concat realizes the exact (d, cell) total order.
 _CELL_BLOCK = 2048
 
 
 def _topk_cells(G, g2, C, c2, cell_ids, kk):
-    """Running top-``kk`` (d, cell)-ascending cells per row of ``G``,
-    computed one _CELL_BLOCK-wide distance block at a time.  ``C`` must
-    be cell-ascending (_collect_cents collects it that way).  Returns
+    """The one exact integer nearest-cell selection: running top-``kk``
+    (d, cell)-ascending cells per row of ``G``, one _CELL_BLOCK-wide
+    distance block at a time.  Every integer-grid vector kernel calls
+    it: IVF assignment and probe ranking (flat and two-level, via
+    ``_rank_kern`` and ``ann_hier._probe_kern``) and PQ's per-subspace
+    code assignment.
+
+    ``C`` must be cell-ascending (``_pin_cells`` pins it that way),
+    ``g2`` = |G|^2 as a column, ``c2`` = |C|^2.  d = |g|^2 + |c|^2 -
+    2 g.c is exact: every term is an integer below 2^53, so the float64
+    BLAS result is the int64 sum((g - c)^2) the oracle computes.
+    Transient memory: rows x _CELL_BLOCK x 8 B per call.  Returns
     (D, CE): row-aligned matrices of the kk smallest distances and
     their cell ids in exact (d, cell) order."""
     import numpy as np
@@ -228,54 +239,39 @@ def _topk_cells(G, g2, C, c2, cell_ids, kk):
     return np.take_along_axis(D, order, axis=1), np.take_along_axis(CE, order, axis=1)
 
 
-def _rank_kern(cells, carrs, top: int | None):
-    """Arrow-batched exact integer distance/ranking kernel over the
-    closure-pinned centroid table.
+def _rank_kern(pins: dict, top: int | None):
+    """Grouped assignment kernel: each (vec_id, g, grp) row is ranked
+    against the pinned centroid table of ITS group ``grp`` only
+    (``pins`` from ``_pin_cells``), by ``_topk_cells``.  Emits the
+    ``top`` nearest cells (all cells of the group when None) as
+    (vec_id, d, cell, crn) in (d, cell) order.  Flat IVF and level 1 of
+    two-level IVF are the one-group case; level 2 groups by
+    supercluster.  Transient memory: rows x _CELL_BLOCK x 8 B per
+    batch, plus the rows x top output.
 
-    Emits, per input vector, its ``top`` nearest cells (all cells when
-    None) as (vec_id, d, cell, crn) with the (d, cell-ascending) tie
-    order.  EXACTNESS: distances use the expansion d = |g|^2 + |c|^2 -
-    2 g.c with every term computed in float64 — |g|,|c| <= 1e6 so each
-    dot/norm is an integer <= 6.6e13 and d <= 2.7e14, all far inside
-    float64's 2^53 exact-integer range, so the BLAS matmul result is
-    the EXACT integer the direct int64 (g-c)^2 sum yields (the
-    differential mirror test pins this).  ``cells`` is cell-ascending,
-    so a stable ascending argsort on d realizes the (d, cell) tie-break.
-
-    This kernel replaced the per-row HOF (zip_with/aggregate over an
-    nlist-element transform) in round 12's sf10 measurement: the HOF
-    form is interpreted per element — fine at sf1 (3.2M cell-distances)
-    but a single-task straggler at sf10's 320M (O(n * nlist) = n^2/125
-    work with an interpreter constant).  The numpy form does the same
-    integers at BLAS speed, and emitting only top-``nprobe`` ranks
-    in-kernel also deletes the n x nlist explode + window shuffle the
-    old final pass needed.
-    """
+    The numpy form replaced a per-row HOF (zip_with/aggregate over an
+    nlist-element transform), which was a single-task straggler at
+    sf10's 320M cell distances; emitting only the top ranks in-kernel
+    also removes an n x nlist explode + window shuffle."""
     import numpy as np
     import pandas as pd
 
-    C = np.asarray(carrs, dtype="float64")
-    cell_ids = np.asarray(cells, dtype="int64")
-    c2 = (C * C).sum(axis=1)
-    kk = len(cell_ids) if top is None else min(top, len(cell_ids))
-    crn = np.arange(1, kk + 1, dtype="int64")
-
     def kern(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            G = np.stack(pdf["g"].to_numpy()).astype("float64")
-            g2 = (G * G).sum(axis=1)[:, None]
-            D, CE = _topk_cells(G, g2, C, c2, cell_ids, kk)
-            vids = pdf["vec_id"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(vids, kk),
-                    "d": D.reshape(-1).astype("int64"),
-                    "cell": CE.reshape(-1),
-                    "crn": np.tile(crn, len(vids)),
-                }
-            )
+            for grp, sub in pdf.groupby("grp", sort=False):
+                cell_ids, C, c2 = pins[int(grp)]
+                kk = len(cell_ids) if top is None else min(top, len(cell_ids))
+                G = np.stack(sub["g"].to_numpy()).astype("float64")
+                D, CE = _topk_cells(G, (G * G).sum(axis=1)[:, None], C, c2, cell_ids, kk)
+                vids = sub["vec_id"].to_numpy()
+                yield pd.DataFrame(
+                    {
+                        "vec_id": np.repeat(vids, kk),
+                        "d": D.reshape(-1).astype("int64"),
+                        "cell": CE.reshape(-1),
+                        "crn": np.tile(np.arange(1, kk + 1, dtype="int64"), len(vids)),
+                    }
+                )
 
     return kern
 
@@ -283,14 +279,22 @@ def _rank_kern(cells, carrs, top: int | None):
 _RANK_SCHEMA = "vec_id long, d long, cell long, crn long"
 
 
-def _collect_cents(cent: DataFrame):
-    """Driver-pin a (cell, carr) centroid frame, cell-ascending —
-    nlist x 64 longs, at most 51 MB under the PIN_MAX_CELLS contract."""
-    rows = sorted(cent.collect(), key=lambda r: r["cell"])
-    return (
-        [r["cell"] for r in rows],
-        [list(r["carr"]) for r in rows],
-    )
+def _pin_cells(cent: DataFrame) -> dict:
+    """Driver-pin a (grp, cell, carr) centroid frame as {grp: (cell ids
+    ascending int64, C float64, |C|^2)} — nlist x 64 values in all, at
+    most 51 MB under the PIN_MAX_CELLS contract."""
+    import numpy as np
+
+    by_grp: dict[int, tuple[list, list]] = {}
+    for r in sorted(cent.collect(), key=lambda r: (r["grp"], r["cell"])):
+        ids, rows = by_grp.setdefault(int(r["grp"]), ([], []))
+        ids.append(r["cell"])
+        rows.append(list(r["carr"]))
+    pins = {}
+    for grp, (ids, rows) in by_grp.items():
+        C = np.asarray(rows, dtype="float64")
+        pins[grp] = (np.asarray(ids, dtype="int64"), C, (C * C).sum(axis=1))
+    return pins
 
 
 def require_pinnable(nlist: int, n: int | None = None) -> None:
@@ -304,6 +308,60 @@ def require_pinnable(nlist: int, n: int | None = None) -> None:
             f"{PIN_MAX_CELLS}; the centroid table is pinned into the "
             "assignment kernel, so the build accepts n <= 12.5M vectors"
         )
+
+
+def lloyd_cells(
+    grid: DataFrame, cent: DataFrame, iters: int, top: int | None
+) -> tuple[DataFrame, dict]:
+    """The one integer-grid Lloyd loop, grouped: ``grid`` holds
+    (vec_id, g, grp), ``cent`` the seed table (grp, cell, carr); each
+    row only ever meets its own group's cells.  ``iters`` assign passes
+    (``_rank_kern`` against ``_pin_cells``) and ``iters - 1`` updates:
+    exact integer sums per (grp, cell, pos) and the pmod floor
+    division.  Returns the final pass's ranking (vec_id, d, cell, crn),
+    ``top`` ranks per row, and the pinned final centroid tables.
+
+    Every centroid frame is materialized.  Within one build each is
+    collected once into the kernel closure, so the persist saves
+    nothing there; it pays across builds: a warm pass that rebuilds
+    the same query reads the previous pass's cached centroids instead
+    of re-running the k-means jobs (traced perfbench curation_sf0.1,
+    seed 7, 4-core host: without the centroid persists a warm pass
+    issued 18 construction jobs instead of 12 and spent 3.3 s instead
+    of 2.4 s building its queries).  Lineage is kept, so an executor
+    loss recomputes the same integers."""
+    cent = materialize(cent)
+    for _ in range(iters - 1):
+        assign = grid.mapInPandas(
+            _rank_kern(_pin_cells(cent), 1), schema=_RANK_SCHEMA
+        ).select("vec_id", "cell")
+        upd = (
+            assign.join(grid, "vec_id")
+            .select("grp", "cell", F.posexplode("g").alias("pos", "gv"))
+            .groupBy("grp", "cell", "pos")
+            .agg(F.sum("gv").alias("s"), F.count(F.lit(1)).alias("cnt"))
+            .select(
+                "grp",
+                "cell",
+                "pos",
+                # exact floor division: pmod makes the numerator
+                # exactly divisible, so the one double division is an
+                # exact integer (< 2^53) — cross-engine deterministic
+                ((F.col("s") - F.pmod("s", "cnt")) / F.col("cnt"))
+                .cast("long")
+                .alias("c"),
+            )
+            .groupBy("grp", "cell")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
+                    lambda s: s["c"],
+                ).alias("carr")
+            )
+        )
+        cent = materialize(upd)
+    pins = _pin_cells(cent)
+    return grid.mapInPandas(_rank_kern(pins, top), schema=_RANK_SCHEMA), pins
 
 
 def kmeans_cell_ranks(
@@ -329,60 +387,23 @@ def kmeans_cell_ranks(
     so 3 is the knee; every extra iteration also grows the oracle's
     unrolled CTE chain by one assign/update block.
 
-    Every distance pass runs the Arrow/numpy kernel (_rank_kern — exact
-    float64-integer arithmetic, see its docstring for the sf10 A/B
-    against the rejected per-row HOF form) against the pinned centroid
-    table (nlist <= PIN_MAX_CELLS, checked before any job); centroid
-    updates stay DataFrame aggregations (exact integer sums in any
-    order + the pmod floor division).  Assignment cost is O(n * nlist)
-    = n^2/125 by the nlist rule — measured fine through sf10 (200k x
-    1600 cells) at kernel speed; the TWO-LEVEL quantizer
-    (plans/ann_hier.py) is the registered O(n * sqrt(nlist)) scale path
-    for the work term.  Seeds come from the deterministic Knuth-hash
-    sample (hash_seeds), so no global-rank window ever sorts the corpus
-    in one task.
+    The loop is ``lloyd_cells`` with one group: every distance pass is
+    ``_rank_kern`` -> ``_topk_cells`` against the pinned table (nlist <=
+    PIN_MAX_CELLS, checked before any job; rows x _CELL_BLOCK x 8 B of
+    transient distances per batch).  Assignment cost is O(n * nlist) =
+    n^2/125 by the nlist rule — measured fine through sf10 (200k x 1600
+    cells) at kernel speed; the TWO-LEVEL quantizer (plans/ann_hier.py)
+    is the registered O(n * sqrt(nlist)) scale path for the work term.
+    Seeds come from the deterministic Knuth-hash sample (hash_seeds), so
+    no global-rank window ever sorts the corpus in one task.
     """
     require_pinnable(nlist, n)
-    grid = materialize(grid_vectors(embeddings))
-
-    def rank(c: DataFrame, top: int | None) -> DataFrame:
-        return grid.mapInPandas(
-            _rank_kern(*_collect_cents(c), top=top), schema=_RANK_SCHEMA
-        )
-
-    cent = materialize(hash_seeds(grid, n, nlist))
-
-    for _ in range(iters - 1):
-        assign = rank(cent, 1).select("vec_id", "cell")
-        upd = (
-            assign.join(grid, "vec_id")
-            .select("cell", F.posexplode("g").alias("pos", "gv"))
-            .groupBy("cell", "pos")
-            .agg(F.sum("gv").alias("s"), F.count(F.lit(1)).alias("cnt"))
-            .select(
-                "cell",
-                "pos",
-                # exact floor division: pmod makes the numerator
-                # exactly divisible, so the one double division is an
-                # exact integer (< 2^53) — cross-engine deterministic
-                ((F.col("s") - F.pmod("s", "cnt")) / F.col("cnt"))
-                .cast("long")
-                .alias("c"),
-            )
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s["c"],
-                ).alias("carr")
-            )
-        )
-        # tiny frame (nlist x 64 longs) — materialize so iteration t+1
-        # does not recompute iterations 1..t (lineage kept: an executor
-        # loss recomputes the same integers)
-        cent = materialize(upd)
-
-    ranked = rank(cent, top)
+    # the constant group column is added after the persist, so the
+    # cached grid stays the plain grid_vectors frame that ann_hier's
+    # level-2 grid join reads back from the cache
+    grid = materialize(grid_vectors(embeddings)).withColumn("grp", F.lit(0))
+    seeds = hash_seeds(grid, n, nlist).withColumn("grp", F.lit(0))
+    ranked, _ = lloyd_cells(grid, seeds, iters, top)
     return materialize(ranked.select("vec_id", "cell", "d", "crn"))
 
 
@@ -479,13 +500,13 @@ def pq_rerank_adaptive(
         ]
     )
 
-    # |x-c|^2 = |x|^2 + |c|^2 - 2 x.c with a per-subspace argmin loop:
-    # the full (n, 16, n_codes) distance tensor is ~2 GB per Arrow batch
-    # at sf10's n_codes=1600 and OOM-killed the Python workers; one
-    # (n, n_codes) block per subspace is 16x less.  Same integers:
-    # inputs are int8-quantized (4-dim dots <= 6.5e4, float64-exact)
-    # and argmin takes the first minimum, i.e. the lowest code id.
+    # one (rows, n_codes) _topk_cells call per subspace: the full (n,
+    # 16, n_codes) distance tensor is ~2 GB per Arrow batch at sf10's
+    # n_codes=1600 and OOM-killed the Python workers.  Inputs are
+    # int8-quantized (4-dim dots <= 6.5e4, float64-exact); code ids
+    # 0..n_codes-1 are ascending, so kk=1 keeps the lowest code on ties.
     cb2 = (cb_arr**2).sum(-1)  # (subspaces, n_codes)
+    code_ids = np.arange(n_codes, dtype="int64")
 
     def decode_kern(batches):
         for pdf in batches:
@@ -499,12 +520,8 @@ def pq_rerank_adaptive(
             code = np.empty((len(pdf), PQ_SUBSPACES), dtype="int64")
             for s in range(PQ_SUBSPACES):
                 Xs = X[:, s, :]
-                ds = (
-                    (Xs * Xs).sum(axis=1)[:, None]
-                    + cb2[s][None, :]
-                    - 2.0 * (Xs @ cb_arr[s].T)
-                )
-                code[:, s] = ds.argmin(axis=1)  # first min = lowest id
+                x2 = (Xs * Xs).sum(axis=1)[:, None]
+                code[:, s] = _topk_cells(Xs, x2, cb_arr[s], cb2[s], code_ids, 1)[1][:, 0]
             dec = cb_arr[np.arange(PQ_SUBSPACES)[None, :], code]
             yield pd.DataFrame(
                 {

@@ -23,6 +23,12 @@ coarse quantizer (``ann_adaptive.ivf_topk_adaptive``, the two-level
 (vid, cell, side) pairs; ``cell_topk`` is the one retrieval core that
 fetches the vectors and runs exact cosine inside each cell.
 
+Per-query selection has one routine: ``_query_topk`` takes the top-k
+of a rounded-cosine matrix under (-cosine, id) with self-pairs dropped,
+for ``knn``'s block pairs and ``cell_topk``'s cells alike.  Its
+transient memory is |queries| x |candidates| x 8 B: bounded by the
+block size in ``knn``, unbounded in a hot ``cell_topk`` cell.
+
 Cosine formula pinned for oracle parity: dot / sqrt(na2 * nb2) with
 float32 inputs widened to float64 BEFORE any arithmetic (matches
 ``list_inner_product(CAST(x AS DOUBLE[]), ...)`` in DuckDB).
@@ -211,6 +217,29 @@ def _cosine_matrix(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     return np.round((A @ B.T) / np.sqrt(na2[:, None] * nb2[None, :]), 6)
 
 
+def _query_topk(
+    q_ids: np.ndarray, c_ids: np.ndarray, M: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one per-query cosine top-k: for each row of the |q| x |c|
+    rounded-cosine matrix ``M``, the ``k`` best candidates under
+    (-cosine, candidate id), self-pairs (equal ids) dropped and NaN
+    never emitted.  The candidate COLUMNS are put in id order once, so
+    a stable row argsort on -cosine breaks ties by id with no per-query
+    loop.  Shared by ``knn`` (both sides of a block pair) and
+    ``_cell_topk_kern``.  Transient memory: |q| x |c| x 8 B for the
+    reordered matrix and again for the argsort.  Returns flat (query,
+    candidate, cosine) arrays."""
+    col_order = np.argsort(c_ids, kind="stable")
+    cid = c_ids[col_order]
+    Ms = M[:, col_order]  # a copy: the caller's M is left unmasked
+    Ms[cid[None, :] == q_ids[:, None]] = -np.inf
+    kk = min(k, Ms.shape[1])
+    idx = np.argsort(-Ms, axis=1, kind="stable")[:, :kk]
+    top = np.take_along_axis(Ms, idx, axis=1).ravel()
+    valid = top > -np.inf
+    return np.repeat(q_ids, kk)[valid], cid[idx].ravel()[valid], top[valid]
+
+
 _PAIR_SCHEMA = "a long, b long, cosine double"
 _EMPTY_PAIRS = pd.DataFrame({"a": pd.Series(dtype="int64"),
                              "b": pd.Series(dtype="int64"),
@@ -295,37 +324,11 @@ def knn(
             return _EMPTY_PAIRS
         l_ids, r_ids, A, B = mats
         C = _cosine_matrix(A, B)
-        same = key[0] == key[1]
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        out_c: list[np.ndarray] = []
-
-        def emit(q_ids: np.ndarray, c_ids: np.ndarray, M: np.ndarray) -> None:
-            # vectorized per-row top-k under (-cosine, id): order the
-            # candidate COLUMNS by id once, then a STABLE row argsort on
-            # -cosine breaks ties by id for free — no per-query loop
-            col_order = np.argsort(c_ids)
-            cid = c_ids[col_order]
-            Ms = M[:, col_order].copy()
-            Ms[cid[None, :] == q_ids[:, None]] = -np.inf  # mask self
-            kk = min(k, Ms.shape[1])
-            idx = np.argsort(-Ms, axis=1, kind="stable")[:, :kk]
-            top = np.take_along_axis(Ms, idx, axis=1)
-            valid = top > -np.inf
-            out_a.append(np.repeat(q_ids, kk)[valid.ravel()])
-            out_b.append(cid[idx].ravel()[valid.ravel()])
-            out_c.append(top.ravel()[valid.ravel()])
-
-        emit(l_ids, r_ids, C)
-        if not same:  # off-diagonal: R rows are queries against L too
-            emit(r_ids, l_ids, C.T)
-        return pd.DataFrame(
-            {
-                "a": np.concatenate(out_a),
-                "b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        parts = [_query_topk(l_ids, r_ids, C, k)]
+        if key[0] != key[1]:  # off-diagonal: R rows are queries against L too
+            parts.append(_query_topk(r_ids, l_ids, C.T, k))
+        a, b, cos = (np.concatenate(p) for p in zip(*parts))
+        return pd.DataFrame({"a": a, "b": b, "cosine": cos})
 
     cands = (
         _block_tagged(embeddings, n_blocks)
@@ -535,47 +538,34 @@ def ann_lsh_topk(embeddings: DataFrame, k: int) -> DataFrame:
 def _cell_topk_kern(k: int):
     """Per-cell numpy kernel behind ``cell_topk``: rows tagged side=0
     are probing queries, side=1 are cell members; emits each query's
-    local top-k by rounded cosine with (-cosine, id) tie order and
-    self-pairs masked.  A frame holds every row of one cell BUCKET; the
-    kernel loops the per-cell matmul over its cells, so no query/member
-    pair ever crosses a cell."""
+    local top-k by rounded cosine through ``_query_topk`` ((-cosine,
+    id) order, self-pairs dropped).  A frame holds every row of one
+    cell BUCKET; the kernel loops the per-cell matmul over its cells,
+    so no query/member pair ever crosses a cell.  Transient memory:
+    |queries| x |members| x 8 B per cell — unbounded in a hot cell
+    (ROADMAP direction 4 chunks the queries there)."""
 
     def kern(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        out_q, out_n, out_c = [], [], []
+        out = []
         for _, g in pdf.groupby("cell", sort=False):
             Q = g[g["side"] == 0]
             M = g[g["side"] == 1]
             if len(Q) == 0 or len(M) == 0:
                 continue
-            q_ids = Q["vid"].to_numpy().astype("int64")
-            m_ids = M["vid"].to_numpy().astype("int64")
             A = np.stack(Q["embedding"].to_numpy()).astype("float64")
             B = np.stack(M["embedding"].to_numpy()).astype("float64")
-            C = _cosine_matrix(A, B)
-            C[q_ids[:, None] == m_ids[None, :]] = -np.inf  # mask self-pairs
-            kk = min(k, C.shape[1])
-            for i in range(len(q_ids)):
-                row = C[i]
-                order = np.lexsort((m_ids, -row))[:kk]
-                keep = row[order] > -np.inf
-                out_q.append(np.full(keep.sum(), q_ids[i]))
-                out_n.append(m_ids[order][keep])
-                out_c.append(row[order][keep])
-        if not out_q:
-            return pd.DataFrame(
-                {
-                    "q": pd.Series(dtype="int64"),
-                    "n": pd.Series(dtype="int64"),
-                    "cosine": pd.Series(dtype="float64"),
-                }
+            out.append(
+                _query_topk(
+                    Q["vid"].to_numpy().astype("int64"),
+                    M["vid"].to_numpy().astype("int64"),
+                    _cosine_matrix(A, B),
+                    k,
+                )
             )
-        return pd.DataFrame(
-            {
-                "q": np.concatenate(out_q),
-                "n": np.concatenate(out_n),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        if not out:
+            return _EMPTY_PAIRS.set_axis(["q", "n", "cosine"], axis=1)
+        q, nb, cos = (np.concatenate(c) for c in zip(*out))
+        return pd.DataFrame({"q": q, "n": nb, "cosine": cos})
 
     return kern
 
@@ -599,6 +589,10 @@ def cell_topk(
     takes the global top-k.  A (q, n) pair arises from at most one
     probe when each vector is a member of one cell, so no dedup runs.
     Returns (vec_id, neighbor, cosine, rn).
+
+    Per cell the kernel selects with ``_query_topk``; its transient
+    memory is |queries| x |members| x 8 B per cell, which no bucket
+    count bounds in a hot cell (ROADMAP direction 4).
 
     One matmul per cell instead of a per-pair HOF cosine: measured
     5.7 s -> ~1 s for ann_lsh and 24.8 s -> ~1 s for multiprobe's 5x
@@ -782,10 +776,7 @@ def mmr_candidates(
     )
     qrows = qe.filter(F.col("vec_id") == query_id).select("embedding").collect()
     if not qrows:
-        raise ValueError(
-            f"mmr query_id {query_id} not found in embeddings (ADVICE r6: "
-            "an absent id used to raise a bare IndexError)"
-        )
+        raise ValueError(f"mmr query_id {query_id} not found in embeddings")
     qv = qrows[0]["embedding"]
     qn2 = float(sum(x * x for x in qv))
     qarr = F.array(*[F.lit(float(x)) for x in qv])

@@ -363,8 +363,7 @@ def minhash_bands(
     if num_hashes % band_size != 0:
         raise ValueError(
             f"band_size {band_size} must divide num_hashes {num_hashes}: "
-            "a trailing partial band would silently change bucket keys "
-            "(ADVICE r6)"
+            "a trailing partial band would silently change bucket keys"
         )
     wide = _minhash_wide(docs, num_hashes)
     n_bands = num_hashes // band_size

@@ -43,7 +43,9 @@ DuckDB oracle unrolls the full chain bit-for-bit:
 - level 2: per supercluster s with cnt_s members, nchild_s =
   max(1, cnt_s // 125) children seeded from every (cnt_s //
   nchild_s)-th member in vec_id rank order WITHIN s, 2 iterations,
-  assignment restricted to the member's own supercluster's children;
+  assignment restricted to the member's own supercluster's children
+  (the flat path's Lloyd loop, ``ann_adaptive.lloyd_cells``, grouped
+  by supercluster);
 - probing (round-13 calibrated budget — see hier_psup): psup =
   min(nsup, max(2, 2 * floor(log2 nsup))) superclusters (the SQL
   mirror is max j with (1 << j) <= nsup), candidate cells = the
@@ -72,9 +74,12 @@ ValueError above it before any k-means job; at the bound the driver
 and each Python worker hold nlist x 64 x 8 B = 51 MB of children
 (PySpark ships any closure over 1 MB as a torrent broadcast, not
 inside every task).  Assignment and probing stay mapInPandas over the
-vector partitions (no shuffle); the level-2 update is one groupBy(sup,
-cell, pos); the final exact scan (similarity.cell_topk) shuffles on
-cell buckets — ~125-member cells by construction, so no skew.
+vector partitions (no shuffle), and both select cells with the one
+integer kernel ``ann_adaptive._topk_cells`` (rows x _CELL_BLOCK x 8 B
+of transient distances per batch); the level-2 update is one
+groupBy(grp, cell, pos) where grp is the supercluster; the final
+exact scan (similarity.cell_topk) shuffles on cell buckets —
+~125-member cells by construction, so no skew.
 """
 
 from __future__ import annotations
@@ -89,9 +94,11 @@ from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.materialize import materialize
 from etl_data_pipeline_spark.operators.ann_adaptive import (
     TARGET_CELL,
+    _topk_cells,
     adaptive_nlist,
     grid_vectors,
     kmeans_cell_ranks,
+    lloyd_cells,
     require_pinnable,
 )
 from etl_data_pipeline_spark.operators.similarity import (
@@ -131,91 +138,39 @@ def hier_ncell(nlist: int, nsup: int) -> int:
     return max(2, 3 * (nlist // nsup))
 
 
-def _pin_children(cent: DataFrame) -> dict[int, tuple[list, list]]:
-    """Driver-pin a (sup, cell, carr) child-centroid frame as
-    {sup: (cells cell-ascending, centroid rows)} — ~nlist children,
-    bounded by the PIN_MAX_CELLS contract."""
-    by_sup: dict[int, tuple[list, list]] = {}
-    for r in sorted(cent.collect(), key=lambda r: (r["sup"], r["cell"])):
-        cs, asr = by_sup.setdefault(int(r["sup"]), ([], []))
-        cs.append(r["cell"])
-        asr.append(list(r["carr"]))
-    return by_sup
-
-
-def _prep_children(by_sup: dict):
-    """{sup: (cells int64-array cell-ascending, centroids float64)}."""
-    import numpy as np
-
-    return {
-        s: (np.asarray(c, "int64"), np.asarray(a, "float64"))
-        for s, (c, a) in by_sup.items()
-    }
-
-
-def _own_sup_kern(by_sup: dict):
-    """Own-sup assignment kernel: each vector vs the children of ITS
-    OWN supercluster only.  Same float64-exact integer expansion as
-    ann_adaptive._rank_kern (every term < 2^53, so the BLAS matmul
-    yields the exact int64 distance); cells are cell-ascending per sup,
-    so a stable argsort realizes the (d, cell) tie order."""
-    import numpy as np
-    import pandas as pd
-
-    pre = _prep_children(by_sup)
-
-    def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for s, sub in pdf.groupby("sup", sort=False):
-                cells, C = pre[int(s)]
-                c2 = (C * C).sum(axis=1)
-                G = np.stack(sub["g"].to_numpy()).astype("float64")
-                d = (G * G).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (G @ C.T)
-                best = np.argsort(d, axis=1, kind="stable")[:, 0]
-                yield pd.DataFrame(
-                    {"vec_id": sub["vec_id"].to_numpy(), "cell": cells[best]}
-                )
-
-    return kern
-
-
-def _probe_kern(by_sup: dict, ncell: int):
+def _probe_kern(pins: dict, ncell: int):
     """Probe-cell selection kernel: a query's candidate cells are the
     children of its probed superclusters (its ``sups`` array), ranked
-    by exact integer distance, top ``ncell`` kept under the (d, cell)
-    order.  Queries sharing a probe set vectorize together (level-1
-    neighbors share top-psup sets, so batches collapse to a few
-    distinct keys).  Superclusters absent from the child table —
-    emptied by the update — are skipped (the oracle's inner join drops
-    them identically)."""
+    by ``ann_adaptive._topk_cells`` over the merged cell-ascending
+    table, top ``ncell`` kept under the (d, cell) order.  Queries
+    sharing a probe set vectorize together (level-1 neighbors share
+    top-psup sets, so batches collapse to a few distinct keys); the
+    transient distance matrix is rows x _CELL_BLOCK x 8 B per probe
+    set.  Superclusters absent from the child table — emptied by the
+    update — are skipped (the oracle's inner join drops them
+    identically)."""
     import numpy as np
     import pandas as pd
 
-    pre = _prep_children(by_sup)
-
     def kern(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
             for ks, sub in pdf.groupby(pdf["sups"].map(tuple), sort=False):
-                have = [s for s in ks if s in pre]
+                have = [s for s in ks if s in pins]
                 if not have:
                     continue
-                cells = np.concatenate([pre[s][0] for s in have])
-                C = np.vstack([pre[s][1] for s in have])
+                cells, C, c2 = (
+                    np.concatenate([pins[s][i] for s in have]) for i in range(3)
+                )
                 order = np.argsort(cells, kind="stable")
-                cells, C = cells[order], C[order]
-                c2 = (C * C).sum(axis=1)
-                kk = min(ncell, len(cells))
                 G = np.stack(sub["g"].to_numpy()).astype("float64")
-                d = (G * G).sum(axis=1)[:, None] + c2[None, :] - 2.0 * (G @ C.T)
-                top = np.argsort(d, axis=1, kind="stable")[:, :kk]
+                kk = min(ncell, len(cells))
+                _, top = _topk_cells(
+                    G, (G * G).sum(axis=1)[:, None], C[order], c2[order], cells[order], kk
+                )
                 yield pd.DataFrame(
                     {
                         "q": np.repeat(sub["vec_id"].to_numpy(), kk),
-                        "cell": cells[top].reshape(-1),
+                        "cell": top.reshape(-1),
                     }
                 )
 
@@ -223,10 +178,14 @@ def _probe_kern(by_sup: dict, ncell: int):
 
 
 def ivf2_topk(embeddings: DataFrame, k: int = 3) -> DataFrame:
-    """Two-level IVF top-k.  Level 1 reuses the flat path's seeded
-    integer k-means (kmeans_cell_ranks) verbatim with nlist=nsup and
-    iters=2; level 2 runs the same iteration shape per supercluster
-    with per-sup seeds and own-sup-restricted assignment; the final
+    """Two-level IVF top-k.  Level 1 is the flat path's seeded integer
+    k-means (kmeans_cell_ranks) with nlist=nsup and iters=2.  Level 2
+    is one call of the same grouped Lloyd loop
+    (ann_adaptive.lloyd_cells, iters=2, top=1) with grp = the vector's
+    supercluster, per-sup seeds, and so own-sup-restricted assignment;
+    it returns the members and the pinned children that ``_probe_kern``
+    ranks.  Every distance pass is ann_adaptive._topk_cells (rows x
+    _CELL_BLOCK x 8 B of transient distances per batch).  The final
     exact scan is the shared retrieval core (similarity.cell_topk,
     fanout ncell).
 
@@ -245,17 +204,18 @@ def ivf2_topk(embeddings: DataFrame, k: int = 3) -> DataFrame:
     ncell = hier_ncell(nlist, nsup)
 
     l1 = kmeans_cell_ranks(embeddings, n, nsup, iters=2, top=psup)
+    # grp = the vector's supercluster (crn 1 of level 1)
     sup = l1.filter(F.col("crn") == 1).select(
-        "vec_id", F.col("cell").alias("sup")
+        "vec_id", F.col("cell").alias("grp")
     )
     gs = materialize(grid_vectors(embeddings).join(sup, "vec_id"))
 
-    # per-sup child seeds: every stride2-th member in vec_id rank order
-    wsup = Window.partitionBy("sup").orderBy("vec_id")
-    rk = gs.withColumn("rs", F.row_number().over(wsup) - 1)
-    sizes = (
-        gs.groupBy("sup")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    # per-sup child seeds: every stride2-th member in vec_id rank order;
+    # rank and size share one window partitioning, so one shuffle
+    w = Window.partitionBy("grp")
+    seeds = (
+        gs.withColumn("rs", F.row_number().over(w.orderBy("vec_id")) - 1)
+        .withColumn("cnt", F.count(F.lit(1)).over(w))
         .withColumn(
             "nchild",
             F.greatest(
@@ -263,67 +223,31 @@ def ivf2_topk(embeddings: DataFrame, k: int = 3) -> DataFrame:
             ),
         )
         .withColumn("stride2", F.expr("cnt div nchild"))
-    )
-    seeds = (
-        rk.join(sizes, "sup")
         .filter(
             (F.col("rs") % F.col("stride2") == 0)
             & (F.col("rs") < F.col("stride2") * F.col("nchild"))
         )
         .select(
-            "sup", F.col("vec_id").alias("cell"), F.col("g").alias("carr")
+            "grp", F.col("vec_id").alias("cell"), F.col("g").alias("carr")
         )
     )
+    ranked, children = lloyd_cells(gs, seeds, iters=2, top=1)
 
-    # iteration 1: assign against seeds, pmod-floor-division update
-    assign1 = gs.mapInPandas(
-        _own_sup_kern(_pin_children(seeds)),
-        schema="vec_id long, cell long",
-    )
-    upd = (
-        assign1.join(gs, "vec_id")
-        .select("sup", "cell", F.posexplode("g").alias("pos", "gv"))
-        .groupBy("sup", "cell", "pos")
-        .agg(F.sum("gv").alias("s"), F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "sup",
-            "cell",
-            "pos",
-            # exact floor division: pmod makes the numerator exactly
-            # divisible (ann_adaptive's update contract)
-            ((F.col("s") - F.pmod("s", "cnt")) / F.col("cnt"))
-            .cast("long")
-            .alias("c"),
-        )
-        .groupBy("sup", "cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s["c"],
-            ).alias("carr")
-        )
-    )
     # query probing input: rank the probed sups' children, scan top-ncell
     probes = (
         l1.filter(F.col("crn") <= psup)
         .groupBy("vec_id")
         .agg(F.array_sort(F.collect_list("cell")).alias("sups"))
     )
-    pq = gs.select("vec_id", "g").join(probes, "vec_id")
-
-    # iteration 2 (final): members assigned against updated children
-    children = _pin_children(upd)
-    members = gs.mapInPandas(
-        _own_sup_kern(children), schema="vec_id long, cell long"
-    ).select(F.col("vec_id").alias("member"), "cell")
-    pc = pq.mapInPandas(_probe_kern(children, ncell), schema="q long, cell long")
-
+    pc = (
+        gs.select("vec_id", "g")
+        .join(probes, "vec_id")
+        .mapInPandas(_probe_kern(children, ncell), schema="q long, cell long")
+    )
     pairs = pc.select(
         F.col("q").alias("vid"), "cell", F.lit(0).alias("side")
     ).unionByName(
-        members.select(
-            F.col("member").alias("vid"), "cell", F.lit(1).alias("side")
-        )
+        ranked.select(F.col("vec_id").alias("vid"), "cell", F.lit(1).alias("side"))
     )
     return cell_topk(pairs, embeddings, k, n, fanout=ncell)
 

@@ -9,6 +9,7 @@ the oracle parity proves.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,13 +25,17 @@ _SCRATCH = os.path.join(
 )
 
 
-def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    load_table(spark, sf_dir, name).createOrReplaceTempView(f"{name}_{tag}")
-
-
 def _tag(sf_dir: str) -> str:
-    return os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    """Suffix of this corpus's views and write-once scratch tables: the
+    sf dir's leaf plus a digest of its real path, so two corpora whose
+    dirs share a leaf name never read each other's written copies."""
+    leaf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    digest = hashlib.sha1(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
+    return f"{leaf}_{digest}"
+
+
+def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
+    load_table(spark, sf_dir, name).createOrReplaceTempView(f"{name}_{_tag(sf_dir)}")
 
 
 @query(

@@ -247,3 +247,51 @@ def test_topk_cells_blocked_matches_bruteforce(monkeypatch):
         )[:, :keep]
         assert np.array_equal(D, want_d), trial
         assert np.array_equal(CE, want_c), trial
+
+
+class _Frame:
+    """Stand-in for a collected (grp, cell, carr) centroid frame."""
+
+    def __init__(self, rows):
+        self._rows = rows
+
+    def collect(self):
+        return list(self._rows)
+
+
+def test_grouped_rank_kern_keeps_rows_in_their_group():
+    """The grouped assignment kernel ranks each row only against its own
+    group's pinned cells: equal to a per-group brute-force (d, cell)
+    selection, with two groups whose centroid tables differ in size and
+    cell ids."""
+    import numpy as np
+    import pandas as pd
+
+    from etl_data_pipeline_spark.operators import ann_adaptive as aa
+
+    rng = np.random.RandomState(11)
+    tables = {
+        3: (np.array([5, 9, 40], dtype="int64"), rng.randint(-2, 3, size=(3, 4))),
+        8: (np.array([1, 2, 7, 30, 31], dtype="int64"), rng.randint(-2, 3, size=(5, 4))),
+    }
+    cent = [
+        {"grp": grp, "cell": int(c), "carr": [int(x) for x in row]}
+        for grp, (ids, C) in tables.items()
+        for c, row in zip(ids, C)
+    ]
+    rng.shuffle(cent)  # the pin sorts; collect order is arbitrary
+    pins = aa._pin_cells(_Frame(cent))
+    n = 40
+    grps = rng.choice([3, 8], size=n)
+    G = rng.randint(-2, 3, size=(n, 4))
+    pdf = pd.DataFrame({"vec_id": np.arange(100, 100 + n), "g": list(G), "grp": grps})
+    for top in (1, 2, None):
+        got = pd.concat(list(aa._rank_kern(pins, top)([pdf.iloc[:25], pdf.iloc[25:]])))
+        for i in range(n):
+            ids, C = tables[grps[i]]
+            d = ((G[i][None, :] - C) ** 2).sum(axis=1)
+            order = np.lexsort((ids, d))[: len(ids) if top is None else top]
+            rows = got[got["vec_id"] == 100 + i]
+            assert rows["cell"].tolist() == ids[order].tolist(), (top, i)
+            assert rows["d"].tolist() == d[order].tolist(), (top, i)
+            assert rows["crn"].tolist() == list(range(1, len(order) + 1))

@@ -1116,3 +1116,40 @@ def test_cell_topk_kern_bucket_invariance(spark):
             .applyInPandas(_cell_topk_kern(3), schema)
         )
         assert bucketed == per_cell, nb
+
+
+def test_query_topk_matches_sorted_reference():
+    """The shared per-query cosine top-k equals, row by row, a
+    sorted(key=(-cosine, id)) reference: forced equal cosines, query ids
+    among the candidates (self-pairs never emitted), NaN entries (never
+    emitted) and k above the candidate count."""
+    import math
+
+    import numpy as np
+
+    from etl_data_pipeline_spark.operators.similarity import _query_topk
+
+    rng = np.random.default_rng(5)
+    for trial in range(300):
+        nq, nc = int(rng.integers(1, 6)), int(rng.integers(1, 8))
+        pool = rng.choice(20, size=nq + nc, replace=False)
+        q_ids = pool[:nq].astype("int64")
+        c_ids = pool[nq:].astype("int64")
+        m = int(rng.integers(0, min(nq, nc) + 1))
+        c_ids[:m] = q_ids[:m]  # these queries meet themselves
+        # few distinct values so equal cosines are common
+        M = rng.choice([-0.5, -0.0, 0.0, 0.25, 0.5, 1.0], size=(nq, nc))
+        if trial % 3 == 0:
+            M[rng.integers(nq), rng.integers(nc)] = np.nan
+        k = int(rng.integers(1, nc + 3))
+        q, nb, cos = _query_topk(q_ids, c_ids, M, k)
+        want = []
+        for i, qid in enumerate(q_ids):
+            cands = sorted(
+                (-M[i, j], int(c_ids[j]))
+                for j in range(nc)
+                if c_ids[j] != qid and not math.isnan(M[i, j])
+            )[:k]
+            want += [(int(qid), cid, -negc) for negc, cid in cands]
+        got = list(zip(q.tolist(), nb.tolist(), cos.tolist()))
+        assert got == want, (trial, got, want)
