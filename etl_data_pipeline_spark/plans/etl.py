@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_data_pipeline_spark.catalog import load_table
-from etl_data_pipeline_spark.functions.canonical import dec_sum
+from etl_data_pipeline_spark.functions.canonical import cents_grid, dec_sum
 from etl_data_pipeline_spark.plans.registry import query
 from etl_data_pipeline_spark.materialize import materialize
 from etl_data_pipeline_spark.operators.sessionize import asof_join
@@ -1031,8 +1031,8 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     'rfm' segment code.  The canonical warehouse-ETL scoring mart.
 
     Exactness: recency diffs whole DATEs (both engines truncate the
-    timestamp identically), monetary is BIGINT cents via one decimal
-    cast, and every NTILE orders by an exact integer with a custkey
+    timestamp identically), monetary is a BIGINT cent sum
+    (``cents_grid``), and every NTILE orders by an exact integer with a custkey
     tiebreak — no float anywhere.
 
     Scale: one shuffle to the per-customer grain, then three quintile
@@ -1053,9 +1053,9 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("recency_days"),
             F.count(F.lit(1)).alias("frequency"),
-            (F.sum(F.col("o_totalprice").cast("decimal(38,2)")) * 100)
-            .cast("bigint")
-            .alias("monetary_cents"),
+            F.sum(cents_grid(F.col("o_totalprice"), 2)).alias(
+                "monetary_cents"
+            ),
         )
     )
     r = F.ntile(5).over(

@@ -22,10 +22,8 @@ from pyspark.sql.window import Window
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.functions.canonical import (
     cents_grid,
-    cents_recombine,
-    cents_sum,
-    cents_sum_wide,
     dec_sum,
+    dec_sum_grid,
 )
 from etl_data_pipeline_spark.plans.registry import query
 
@@ -245,35 +243,21 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     key space — the canonical scalable agg; AQE coalesces post-shuffle
     partitions.
 
-    Money sums are exact and stay in primitive-long codegen, and since
-    round 11 the derived money grids are PURE INTEGER ARITHMETIC: the
-    row's three 2dp columns are recovered once each as integer cents
-    (cents_grid FLOOR(+0.5) — Spark's ROUND(double) allocates a
-    BigDecimal per row), then
-        disc_price_grid(1e4)  v4 = ep_c * (100 - d_c)
-        charge_grid(1e6)      v6 = v4 * (100 + t_c)
-    — exactly the integers DECIMAL(38,4)/(38,6) sums would carry,
-    because ep, d, t are exact 2dp-grid values so the products have
-    exactly 4/6 decimal places (value-identity vs the previous
-    per-expression FLOOR formulation asserted field-by-field at sf0.1
-    before the switch).  This replaces two
-    double multiply-chains + two FLOOR recoveries with two long
-    multiplies, and drops F.avg(l_quantity)'s redundant sum+count
-    buffers (avg_qty = sum_qty/count post-agg: integer-valued doubles
-    sum exactly in any order, so the division is engine-identical).
-    Interleaved same-session A/B at sf0.1 (2026-08-15, contended host,
-    ratios in-session valid): old/plain 2.09 vs new/plain 1.38, new
-    beat old in every settled round (1.04 s vs 1.58 s final round) —
-    the VERDICT r10 item-3 response to the drifting q1 paired ratio
-    (1.30->1.51 across rounds/regimes).  bench.py re-measures the
-    pairing every run into load_context.q1_paired_ratio.
+    Money sums: the row's three 2dp columns are recovered once each as
+    integer cents (``cents_grid``), and the derived grids are pure
+    integer arithmetic —
+        disc_price grid (1e4)  v4 = ep_c * (100 - d_c)
+        charge grid (1e6)      v6 = v4 * (100 + t_c)
+    — exactly the integers DECIMAL(38,4)/(38,6) sums would carry, since
+    ep, d, t are exact 2dp-grid values. ``dec_sum_grid`` sums them (its
+    envelope is stated once in functions/canonical.py). Base price and
+    discount sum as single BIGINTs: at most 1e7 and 10 cents per row.
+    The averages divide those sums post-agg (integer-valued doubles sum
+    exactly in any order), so Catalyst keeps 8 aggregate functions.
     Rejected alternatives (kept so they aren't retried): per-row
     DECIMAL(38,s) conversion 2.3x slower; pre-projection grid hoist
     0.430 vs 0.437 s — codegen CSE already dedups the shared ep_c/d_c.
-    The 4dp/6dp sums keep the hi/lo long split (cents_sum_wide
-    envelope: component sums hold to ~9e12 rows per group; v6 <= 1.1e11
-    per row would otherwise cap a single long sum at ~9e7 rows/group —
-    far below the 100 TB design point).
+    bench.py re-measures the q1 paired ratio every run.
     """
     li = load_table(spark, sf_dir, "lineitem")
     ep_c = cents_grid(F.col("l_extendedprice"), 2)
@@ -281,40 +265,21 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     t_c = cents_grid(F.col("l_tax"), 2)
     v4 = ep_c * (F.lit(100) - d_c)
     v6 = v4 * (F.lit(100) + t_c)
-    hilo = 1_000_000
+    sum_qty = F.sum("l_quantity")
+    sum_base = F.sum(ep_c) / 100.0
+    n = F.count(F.lit(1))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            # integer-valued doubles sum exactly in any order
-            F.sum("l_quantity").alias("sum_qty"),
-            (F.sum(ep_c) / 100.0).alias("sum_base_price"),
-            F.sum((v4 / hilo).cast("long")).alias("_dp_hi"),
-            F.sum(v4 % hilo).alias("_dp_lo"),
-            F.sum((v6 / hilo).cast("long")).alias("_ch_hi"),
-            F.sum(v6 % hilo).alias("_ch_lo"),
-            # discount grid value <= 10 per row: single long sum is safe
-            # at any conceivable row count
-            F.sum(d_c).alias("_sum_disc_c"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            "sum_qty",
-            "sum_base_price",
-            cents_recombine(F.col("_dp_hi"), F.col("_dp_lo"), 4).alias(
-                "sum_disc_price"
-            ),
-            cents_recombine(F.col("_ch_hi"), F.col("_ch_lo"), 6).alias(
-                "sum_charge"
-            ),
-            (F.col("sum_qty") / F.col("count_order")).alias("avg_qty"),
-            (F.col("sum_base_price") / F.col("count_order")).alias("avg_price"),
-            (F.col("_sum_disc_c") / 100.0 / F.col("count_order")).alias(
-                "avg_disc"
-            ),
-            "count_order",
+            sum_qty.alias("sum_qty"),
+            sum_base.alias("sum_base_price"),
+            dec_sum_grid(v4, 4).alias("sum_disc_price"),
+            dec_sum_grid(v6, 6).alias("sum_charge"),
+            (sum_qty / n).alias("avg_qty"),
+            (sum_base / n).alias("avg_price"),
+            (F.sum(d_c) / 100.0 / n).alias("avg_disc"),
+            n.alias("count_order"),
         )
     )
 
@@ -862,14 +827,8 @@ def q3_topk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1+F2: 3-way join, group, deterministic top-10 (TPC-H Q3 shape).
 
     The ORDER BY ... LIMIT lowers to TakeOrderedAndProject (no global
-    sort); revenue is rounded BEFORE ordering so both engines rank the
+    sort); revenue is an exact ``dec_sum`` so both engines rank the
     same values, with l_orderkey as total-order tiebreak.
-
-    Money sum: cents_sum (single-BIGINT grid sum, primitive-long
-    codegen) — the group key is one order, so rows/group is bounded by
-    lineitems-per-order (~7) at ANY data scale and the 2^63 envelope
-    never tightens. A/B vs dec_sum at sf0.1 warm: 0.88 vs 0.94 s,
-    identical top-10.
     """
     c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
@@ -887,7 +846,7 @@ def q3_topk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_orderkey", F.col("o_orderdate").cast("string").alias("orderdate_str")
         )
         .agg(
-            cents_sum(
+            dec_sum(
                 F.col("l_extendedprice") * (1 - F.col("l_discount")), 4
             ).alias("revenue")
         )
@@ -921,13 +880,6 @@ def q5_multi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders and orders joins lineitem on their natural keys — Catalyst/AQE
     picks SMJ or shuffled hash and handles skew. Filters sit on base
     tables so they push into the parquet scans.
-
-    Money sum: cents_sum_wide (hi/lo BIGINT split, primitive-long
-    codegen) because the group key is n_name — 5 groups, so rows/group
-    grows with the data and the single-long cents_sum envelope (~9e9
-    rows/group at 4dp) would tighten at 100 TB; the wide split holds to
-    ~9e12. A/B vs dec_sum at sf0.1 warm: 0.85 vs 0.91 s, identical
-    totals.
     """
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n = load_table(spark, sf_dir, "nation")
@@ -937,9 +889,6 @@ def q5_multi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
     li = load_table(spark, sf_dir, "lineitem")
-    rev_hi, rev_lo = cents_sum_wide(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")), 4
-    )
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -947,16 +896,10 @@ def q5_multi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
-            rev_hi.alias("_rev_hi"),
-            rev_lo.alias("_rev_lo"),
+            dec_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")), 4
+            ).alias("revenue"),
             F.count(F.lit(1)).alias("n_lineitems"),
-        )
-        .select(
-            "n_name",
-            cents_recombine(F.col("_rev_hi"), F.col("_rev_lo"), 4).alias(
-                "revenue"
-            ),
-            "n_lineitems",
         )
     )
 
@@ -2078,7 +2021,7 @@ def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: ``bal > avg`` is cleared of its division — compare
     ``bal_cents * cnt > tot_cents`` in exact BIGINTs on both engines
-    (cents via one decimal cast, so no binary-double *100 artifact).
+    (cents via ``cents_grid``, so no binary-double *100 artifact).
     At 1e8 customers the product is ~1e14 — well inside int64.
 
     Scale: the scalar aggregate is one row broadcast to every task; the
@@ -2087,10 +2030,9 @@ def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     here grows superlinearly with customers.
     """
     c = load_table(spark, sf_dir, "customer")
+    bal_cents = cents_grid(F.col("c_acctbal"), 2)
     pos = c.filter(F.col("c_acctbal") > 0.0).agg(
-        F.sum(
-            (F.col("c_acctbal").cast("decimal(38,2)") * 100).cast("bigint")
-        ).cast("bigint").alias("tot_cents"),
+        F.sum(bal_cents).alias("tot_cents"),
         F.count(F.lit(1)).alias("cnt"),
     )
     urgent = load_table(spark, sf_dir, "orders").filter(
@@ -2101,11 +2043,7 @@ def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.filter(digit.isin("1", "3", "5", "7", "9"))
         .join(urgent, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .crossJoin(F.broadcast(pos))
-        .filter(
-            (F.col("c_acctbal").cast("decimal(38,2)") * 100).cast("bigint")
-            * F.col("cnt")
-            > F.col("tot_cents")
-        )
+        .filter(bal_cents * F.col("cnt") > F.col("tot_cents"))
     )
     return eligible.groupBy(digit.alias("cust_digit")).agg(
         F.count(F.lit(1)).alias("n_customers"),
@@ -2236,8 +2174,8 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-invariant equivalent and keeps the result non-degenerate at
     every sf in this corpus (9 / 107 / 1063 rows at sf0.001/0.01/0.1).
 
-    Exactness: per-part values are exact DECIMAL(38,2) sums
-    materialized as BIGINT cents; the 1.5x-mean test is the cleared
+    Exactness: per-part values are exact BIGINT cent sums
+    (``cents_grid``); the 1.5x-mean test is the cleared
     integer compare ``2 * pval * n_parts > 3 * tot`` — no division, no
     float boundary. The *n_parts product can approach int64 at extreme
     scale; swap to DECIMAL(38,2) arithmetic then, same plan shape.
@@ -2255,15 +2193,12 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scoped = li.join(
         F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey")
-    ).select(
-        "l_partkey",
-        F.col("l_extendedprice").cast("decimal(38,2)").alias("v"),
     )
     pv = scoped.groupBy("l_partkey").agg(
-        (F.sum("v") * 100).cast("bigint").alias("pval_cents")
+        F.sum(cents_grid(F.col("l_extendedprice"), 2)).alias("pval_cents")
     )
     tot = pv.agg(
-        F.sum("pval_cents").cast("bigint").alias("tot_cents"),
+        F.sum("pval_cents").alias("tot_cents"),
         F.count(F.lit(1)).alias("n_parts"),
     )
     return (

@@ -46,6 +46,23 @@ def test_q1_column_pruning(spark):
     assert "l_quantity" in read_schema
 
 
+@pytest.mark.parametrize("name", ["d2_global_agg", "a4_partitioned_write"])
+def test_money_sum_partials_stay_primitive(spark, name):
+    """dec_sum's map-side partial aggregate sums BIGINT grid halves: no
+    per-row DECIMAL(38,2) cast (a BigDecimal per value) may reach the
+    partial HashAggregate. The recombine runs on the final one only."""
+    df = QUERIES[name](spark, SF_DIR)
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    partials = [
+        line
+        for line in executed.splitlines()
+        if "HashAggregate" in line and "partial_sum" in line
+    ]
+    assert partials, executed
+    for line in partials:
+        assert "decimal(38,2)" not in line, line
+
+
 def test_q5_broadcasts_dims(spark):
     plan = plan_of(spark, "q5_multi_join")
     assert "BroadcastHashJoin" in plan

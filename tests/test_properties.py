@@ -348,7 +348,7 @@ def test_ewma_fir_matches_direct_convolution(spark, series):
 @SLOW
 @given(
     cents=st.lists(
-        st.integers(min_value=0, max_value=10_000_000_000),
+        st.integers(min_value=-10_000_000_000, max_value=10_000_000_000),
         min_size=1,
         max_size=50,
     ),
@@ -357,10 +357,10 @@ def test_ewma_fir_matches_direct_convolution(spark, series):
 def test_cents_grid_recovers_exact_grid_integers(spark, cents, scale):
     """cents_grid (FLOOR(x*10^s + 0.5), the primitive-codegen
     replacement for Spark's BigDecimal-backed ROUND) must recover the
-    EXACT grid integer for every non-negative decimal(scale)-grid
-    double — the invariant every exact money aggregate rests on.
-    Inputs sweep 0..1e10 grid units (1e8 currency units at 2dp), well
-    past q1's domain."""
+    EXACT grid integer for every signed decimal(scale)-grid double —
+    the invariant every exact money aggregate rests on (negative
+    c_acctbal goes through it). Inputs sweep -1e10..1e10 grid units
+    (1e8 currency units at 2dp), well past q1's domain."""
     from etl_data_pipeline_spark.functions.canonical import cents_grid
 
     df = spark.createDataFrame([(c,) for c in cents], "c long").select(
@@ -375,7 +375,7 @@ def test_cents_grid_recovers_exact_grid_integers(spark, cents, scale):
 @SLOW
 @given(
     cents=st.lists(
-        st.integers(min_value=0, max_value=10_000_000_000),
+        st.integers(min_value=-10_000_000_000, max_value=10_000_000_000),
         min_size=1,
         max_size=50,
     ),
@@ -697,42 +697,47 @@ def test_simhash_neardup_matches_brute_force(spark, corpus, max_hamming):
 @SLOW
 @given(
     cents=st.lists(
-        st.integers(min_value=0, max_value=10**15),
+        st.one_of(
+            st.none(), st.integers(min_value=-(10**15), max_value=10**15)
+        ),
         min_size=1,
         max_size=40,
     ),
     scale=st.sampled_from([2, 4, 6]),
 )
-def test_cents_sum_wide_recombine_exact(spark, cents, scale):
-    """cents_sum_wide + cents_recombine must equal the exact integer
-    total (computed in Python bignum) cast to double the same way —
-    including totals past 2^53 where the DECIMAL(38,0) recombine is
-    the only exact path; and on the same data the single-long
-    cents_sum must agree wherever its envelope holds."""
-    from etl_data_pipeline_spark.functions.canonical import (
-        cents_recombine,
-        cents_sum,
-        cents_sum_wide,
-    )
+def test_dec_sum_exact(spark, cents, scale):
+    """dec_sum (hi/lo BIGINT split recombined in DECIMAL(38,0)) must
+    equal the exact integer total (Python bignum) cast to double and
+    divided once — including totals past 2^53; under 2^53 it must equal
+    Spark's own DECIMAL(38,s) sum, the oracle's formulation. A group of
+    only NULLs sums to NULL."""
+    from etl_data_pipeline_spark.functions.canonical import dec_sum
 
-    df = spark.createDataFrame([(c,) for c in cents], "c long").select(
-        (F.col("c") / (10**scale)).alias("x")
+    rows = [(0, c) for c in cents] + [(1, None), (1, None)]
+    df = spark.createDataFrame(rows, "g int, c long").select(
+        "g", (F.col("c") / (10**scale)).alias("x")
     )
-    hi, lo = cents_sum_wide(F.col("x"), scale)
-    row = (
-        df.agg(
-            hi.alias("h"), lo.alias("l"), cents_sum(F.col("x"), scale).alias("s")
+    got = {
+        r["g"]: (r["s"], r["d"])
+        for r in df.groupBy("g")
+        .agg(
+            dec_sum(F.col("x"), scale).alias("s"),
+            F.sum(F.col("x").cast(f"decimal(38,{scale})"))
+            .cast("double")
+            .alias("d"),
         )
-        .select(
-            cents_recombine(F.col("h"), F.col("l"), scale).alias("wide"),
-            "s",
-        )
-        .collect()[0]
-    )
-    total = sum(cents)  # exact bignum
-    assert row["wide"] == float(total) / float(10**scale)
-    # single-long path agrees (total is far below 2^63 here)
-    assert row["s"] == float(total) / float(10**scale)
+        .collect()
+    }
+    assert got[1] == (None, None)
+    present = [c for c in cents if c is not None]
+    s, d = got[0]
+    if not present:
+        assert s is None
+        return
+    total = sum(present)  # exact bignum
+    assert s == float(total) / float(10**scale)
+    if abs(total) < 2**53:
+        assert s == d
 
 
 @JACCARD_DIFF
