@@ -7,34 +7,53 @@ reshape), RIFF WAV PCM16 (chunk walk + frombuffer), and Y4M video
 (stream header + FRAME markers). Formats that genuinely require
 PIL/soundfile/pyav (JPEG/PNG/MP3/MP4 — absent in this container) raise
 ``NotImplementedError`` via magic-byte dispatch instead of mis-parsing.
-The Spark-side plumbing is shared and tested: binary payload columns, a
-typed metadata struct, Arrow-batched ``mapInPandas`` with declared
-output schemas, partition-preserving (or declared one-to-many) batch
-shapes.
 
-At 100 TB: payloads live in parquet binary columns (or object-store URIs
-for >2 GB blobs); decode/feature-extract runs as mapInPandas so each
-Arrow batch stays columnar across the JVM->Python boundary; partitioning
-follows the upstream table (no shuffle introduced by the extract stage).
+Every Spark-side operator makes one Python hop, ``_map_rows``: an
+Arrow-batched ``mapInPandas`` with a declared DDL output schema that
+calls a per-row function on each input row.  That function returns any
+number of output rows, so the same hop serves row-preserving stages and
+one-to-many ones (``sample_frames``, ``image_histogram_features``).
+Partitioning follows the upstream table: the extract stage adds no
+shuffle.
+
+The payload shapes (image and video sizes, sample cap, frame size,
+sampling stride, histogram bins) are module constants, not parameters:
+each query runs exactly one shape, and its DuckDB oracle in
+plans/multimodal.py repeats the numbers, so changing a shape means
+changing the oracle with it.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: declared schema of the feature-extract stage
-FEATURE_SCHEMA = (
-    "doc_id long, modality string, payload_bytes long, "
-    "first_byte long, checksum long, feature double"
-)
+#: the ``meta.modality`` tag of ``attach_binary_payload``
+MODALITY = "text"
+#: decoded PPM size of ``decode_image_stats`` / ``image_histogram_features``
+IMAGE_W, IMAGE_H = 16, 4
+#: intensity buckets of ``image_histogram_features``
+HIST_BINS = 16
+#: samples per synthetic WAV: min(n_chars, AUDIO_CAP), at least 1
+AUDIO_CAP = 128
+#: Y4M plane size, frame count cap and sampling stride of
+#: ``decode_video_stats``
+VIDEO_W, VIDEO_H = 8, 8
+VIDEO_MAX_FRAMES = 5
+VIDEO_EVERY_N = 2
+#: output buffer size of ``resize_payloads``
+RESIZE_W, RESIZE_H = 8, 8
+#: byte-frame size and sampling stride of ``sample_frames``
+FRAME_SIZE = 32
+FRAME_EVERY_N = 4
 
 
-def attach_binary_payload(docs: DataFrame, modality: str = "text") -> DataFrame:
+def attach_binary_payload(docs: DataFrame) -> DataFrame:
     """Model a multimodal table: opaque binary payload + typed metadata.
 
     (Here the payload is the utf-8 text itself; for real image/audio the
@@ -44,7 +63,7 @@ def attach_binary_payload(docs: DataFrame, modality: str = "text") -> DataFrame:
         "doc_id",
         F.encode(F.col("text"), "utf-8").alias("payload"),
         F.struct(
-            F.lit(modality).alias("modality"),
+            F.lit(MODALITY).alias("modality"),
             F.col("n_chars").cast("long").alias("size_bytes"),
             F.col("source").alias("origin"),
         ).alias("meta"),
@@ -233,135 +252,57 @@ def encode_y4m(
     return out
 
 
+
 # ---------------------------------------------------------------------------
-# Decode roundtrip stages: synthesize a deterministic payload per document
-# (the corpus carries no real media), push it through the REAL format
-# decoder, and emit SQL-checkable stats. Arrow-batched mapInPandas keeps
-# the encode+decode in one Python hop with no shuffle.
+# Spark-side operators. The corpus carries no real media, so most stages
+# synthesize a deterministic payload per document, push it through the
+# REAL format decoder above, and emit SQL-checkable stats.
 # ---------------------------------------------------------------------------
 
-IMAGE_STATS_SCHEMA = (
-    "doc_id long, width long, height long, n_pixels long, first_r long"
-)
-AUDIO_STATS_SCHEMA = (
-    "doc_id long, sample_rate long, channels long, n_samples long, "
-    "first_sample long, last_sample long"
-)
-VIDEO_STATS_SCHEMA = (
-    "doc_id long, width long, height long, n_frames long, n_sampled long, "
-    "first_y long"
-)
 
-
-def decode_image_stats(docs: DataFrame, width: int = 16, height: int = 4) -> DataFrame:
-    """PPM roundtrip: text bytes (cycled) -> encode_ppm -> decode_image
-    (real P6 parse) -> pixel-array stats."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                img = decode_image(
-                    encode_ppm(text.encode("utf-8"), width, height)
-                )
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "width": img.shape[1],
-                        "height": img.shape[0],
-                        "n_pixels": img.shape[0] * img.shape[1],
-                        "first_r": int(img[0, 0, 0]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "n_pixels", "first_r"]
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(gen, IMAGE_STATS_SCHEMA)
-
-
-def decode_audio_stats(docs: DataFrame, cap: int = 128) -> DataFrame:
-    """WAV roundtrip: deterministic int16 signal from (doc_id, i) ->
-    encode_wav -> decode_audio (real RIFF/PCM16 parse) -> sample stats."""
-    import numpy as np
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                n = max(1, min(int(n_chars), cap))
-                i = np.arange(n, dtype=np.int64)
-                sig = ((int(doc_id) * 7919 + i * 31) % 20001 - 10000).astype(
-                    np.int16
-                )
-                rate, channels, samples = decode_audio(encode_wav(sig, 8000))
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "sample_rate": rate,
-                        "channels": channels,
-                        "n_samples": len(samples),
-                        "first_sample": int(samples[0]),
-                        "last_sample": int(samples[-1]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "channels", "n_samples",
-                    "first_sample", "last_sample",
-                ],
-            )
-
-    return docs.select("doc_id", "n_chars").mapInPandas(gen, AUDIO_STATS_SCHEMA)
-
-
-def decode_video_stats(
-    docs: DataFrame, width: int = 8, height: int = 8, every_n: int = 2,
-    max_frames: int = 5,
+def _map_rows(
+    df: DataFrame,
+    cols: Sequence[str],
+    schema: str,
+    fn: Callable[..., Iterable[tuple]],
 ) -> DataFrame:
-    """Y4M roundtrip: text bytes -> per-frame Y planes -> encode_y4m ->
-    sample_video_frames (real YUV4MPEG2 parse, every Nth frame)."""
-    import numpy as np
+    """The module's one Python hop: ``fn`` maps the ``cols`` values of
+    one input row to zero or more output tuples in ``schema`` order.
+    ``schema`` is a flat DDL string ("name type, ..."); the output column
+    names are read from it."""
+    names = [field.split()[0] for field in schema.split(",")]
 
-    fb = width * height
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                b = text.encode("utf-8")
-                n_frames = max(1, min(len(b) // fb, max_frames))
-                planes = []
-                for f in range(n_frames):
-                    if b:
-                        idx = (np.arange(f * fb, (f + 1) * fb)) % len(b)
-                        y = np.frombuffer(b, dtype=np.uint8)[idx]
-                    else:
-                        y = np.zeros(fb, dtype=np.uint8)
-                    planes.append(y.reshape((height, width)))
-                sampled = sample_video_frames(
-                    encode_y4m(planes, width, height), every_n=every_n
-                )
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "width": sampled[0].shape[1],
-                        "height": sampled[0].shape[0],
-                        "n_frames": n_frames,
-                        "n_sampled": len(sampled),
-                        "first_y": int(sampled[0][0, 0]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_frames", "n_sampled",
-                    "first_y",
-                ],
-            )
+            rows = [
+                out for vals in zip(*(pdf[c] for c in cols)) for out in fn(*vals)
+            ]
+            yield pd.DataFrame(rows, columns=names)
 
-    return docs.select("doc_id", "text").mapInPandas(gen, VIDEO_STATS_SCHEMA)
+    return df.select(*cols).mapInPandas(gen, schema)
+
+
+def _checksum(b: bytes) -> int:
+    """Rolling polynomial hash of a byte string (base 31, mod 1e9+7)."""
+    checksum = 0
+    for byte in b:
+        checksum = (checksum * 31 + byte) % 1_000_000_007
+    return checksum
+
+
+def _decoded_image(text: str) -> np.ndarray:
+    """The document's utf-8 bytes, cycled into an IMAGE_W x IMAGE_H PPM
+    P6 and parsed back by ``decode_image``: a (h, w, 3) uint8 array."""
+    return decode_image(encode_ppm(text.encode("utf-8"), IMAGE_W, IMAGE_H))
+
+
+def _decoded_samples(doc_id: int, n_chars: int) -> tuple:
+    """A deterministic int16 signal of min(n_chars, AUDIO_CAP) >= 1
+    samples, s[i] = (doc_id*7919 + i*31) % 20001 - 10000, written as a
+    WAV and parsed back by ``decode_audio``: (rate, channels, samples)."""
+    i = np.arange(max(1, min(int(n_chars), AUDIO_CAP)), dtype=np.int64)
+    sig = ((int(doc_id) * 7919 + i * 31) % 20001 - 10000).astype(np.int16)
+    return decode_audio(encode_wav(sig, 8000))
 
 
 def extract_features(mm: DataFrame) -> DataFrame:
@@ -372,113 +313,124 @@ def extract_features(mm: DataFrame) -> DataFrame:
     body for a real decoder without touching the Spark plumbing.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["meta"]
-            ):
-                b = bytes(payload)
-                checksum = 0
-                for byte in b:
-                    checksum = (checksum * 31 + byte) % 1_000_000_007
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "modality": meta["modality"],
-                        "payload_bytes": len(b),
-                        "first_byte": b[0] if b else -1,
-                        "checksum": checksum,
-                        "feature": len(b) % 251 / 251.0,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "modality", "payload_bytes", "first_byte",
-                "checksum", "feature",
-            ])
+    def row(doc_id, payload, meta):
+        b = bytes(payload)
+        yield (
+            doc_id, meta["modality"], len(b), b[0] if b else -1,
+            _checksum(b), len(b) % 251 / 251.0,
+        )
 
-    return mm.mapInPandas(gen, schema=FEATURE_SCHEMA)
+    return _map_rows(
+        mm, ("doc_id", "payload", "meta"),
+        "doc_id long, modality string, payload_bytes long, "
+        "first_byte long, checksum long, feature double",
+        row,
+    )
 
 
-#: declared schema of the resize stage (payload stays binary)
-RESIZE_SCHEMA = "doc_id long, width int, height int, resized binary"
-
-#: declared schema of the frame-sample stage — NOTE one-to-many: a single
-#: video row fans out to one row per sampled frame
-FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes long, frame_checksum long"
-
-
-def resize_payloads(mm: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
-    """Arrow-batched 'resize': maps each payload to a fixed w*h byte
-    buffer (truncate/zero-pad — the deterministic stand-in for a real
-    PIL/opencv resample, which would slot into the same batch loop).
+def resize_payloads(mm: DataFrame) -> DataFrame:
+    """Arrow-batched 'resize': maps each payload to a fixed
+    RESIZE_W*RESIZE_H byte buffer (truncate/zero-pad — the deterministic
+    stand-in for a real PIL/opencv resample, which would slot into the
+    same per-row function).
 
     Plumbing that IS real: binary-in/binary-out columns across Arrow,
     declared output schema, row-count-preserving batch shape, no shuffle.
     """
-    n = width * height
+    n = RESIZE_W * RESIZE_H
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)[:n]
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "width": width,
-                        "height": height,
-                        "resized": b + b"\x00" * (n - len(b)),
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "width", "height", "resized"])
+    def row(doc_id, payload):
+        b = bytes(payload)[:n]
+        yield doc_id, RESIZE_W, RESIZE_H, b + b"\x00" * (n - len(b))
 
-    return mm.mapInPandas(gen, schema=RESIZE_SCHEMA)
+    return _map_rows(
+        mm, ("doc_id", "payload"),
+        "doc_id long, width int, height int, resized binary", row,
+    )
 
 
-def sample_frames(mm: DataFrame, frame_size: int = 32, every_n: int = 4) -> DataFrame:
+def sample_frames(mm: DataFrame) -> DataFrame:
     """Arrow-batched frame sampling: each payload is treated as a
-    sequence of fixed-size 'frames'; every Nth frame is emitted as its
-    own output row (one-to-many batch shape — the part a naive UDF can't
-    do; mapInPandas output length is free).
+    sequence of FRAME_SIZE-byte 'frames'; every FRAME_EVERY_N-th frame
+    is emitted as its own output row (one-to-many batch shape — the part
+    a naive UDF can't do).
 
     A real decoder (pyav/opencv) replaces the byte-slicing only.
     """
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                n_frames = max(1, len(b) // frame_size)
-                for idx in range(0, n_frames, every_n):
-                    fb = b[idx * frame_size : (idx + 1) * frame_size]
-                    checksum = 0
-                    for byte in fb:
-                        checksum = (checksum * 31 + byte) % 1_000_000_007
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "frame_idx": idx,
-                            "frame_bytes": len(fb),
-                            "frame_checksum": checksum,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "frame_bytes", "frame_checksum"],
-            )
+    def row(doc_id, payload):
+        b = bytes(payload)
+        for idx in range(0, max(1, len(b) // FRAME_SIZE), FRAME_EVERY_N):
+            frame = b[idx * FRAME_SIZE : (idx + 1) * FRAME_SIZE]
+            yield doc_id, idx, len(frame), _checksum(frame)
 
-    return mm.mapInPandas(gen, schema=FRAME_SCHEMA)
+    return _map_rows(
+        mm, ("doc_id", "payload"),
+        "doc_id long, frame_idx int, frame_bytes long, frame_checksum long",
+        row,
+    )
 
 
-AUDIO_ENERGY_SCHEMA = (
-    "doc_id long, n_samples long, sum_abs long, energy long, "
-    "peak long, zero_cross long"
-)
+def decode_image_stats(docs: DataFrame) -> DataFrame:
+    """PPM roundtrip: text bytes (cycled) -> encode_ppm -> decode_image
+    (real P6 parse) -> pixel-array stats."""
+
+    def row(doc_id, text):
+        img = _decoded_image(text)
+        h, w = img.shape[:2]
+        yield doc_id, w, h, w * h, int(img[0, 0, 0])
+
+    return _map_rows(
+        docs, ("doc_id", "text"),
+        "doc_id long, width long, height long, n_pixels long, first_r long",
+        row,
+    )
 
 
-def audio_energy_features(docs: DataFrame, cap: int = 128) -> DataFrame:
+def decode_audio_stats(docs: DataFrame) -> DataFrame:
+    """WAV roundtrip: deterministic int16 signal from (doc_id, i) ->
+    encode_wav -> decode_audio (real RIFF/PCM16 parse) -> sample stats."""
+
+    def row(doc_id, n_chars):
+        rate, channels, s = _decoded_samples(doc_id, n_chars)
+        yield doc_id, rate, channels, len(s), int(s[0]), int(s[-1])
+
+    return _map_rows(
+        docs, ("doc_id", "n_chars"),
+        "doc_id long, sample_rate long, channels long, n_samples long, "
+        "first_sample long, last_sample long",
+        row,
+    )
+
+
+def decode_video_stats(docs: DataFrame) -> DataFrame:
+    """Y4M roundtrip: text bytes (cycled) -> VIDEO_W x VIDEO_H Y planes,
+    at most VIDEO_MAX_FRAMES -> encode_y4m -> sample_video_frames (real
+    YUV4MPEG2 parse, every VIDEO_EVERY_N-th frame)."""
+    fb = VIDEO_W * VIDEO_H
+
+    def row(doc_id, text):
+        b = text.encode("utf-8")
+        n_frames = max(1, min(len(b) // fb, VIDEO_MAX_FRAMES))
+        planes = np.resize(  # cycles the bytes; an empty text gives zeros
+            np.frombuffer(b or b"\x00", dtype=np.uint8),
+            (n_frames, VIDEO_H, VIDEO_W),
+        )
+        sampled = sample_video_frames(
+            encode_y4m(planes, VIDEO_W, VIDEO_H), every_n=VIDEO_EVERY_N
+        )
+        h, w = sampled[0].shape
+        yield doc_id, w, h, n_frames, len(sampled), int(sampled[0][0, 0])
+
+    return _map_rows(
+        docs, ("doc_id", "text"),
+        "doc_id long, width long, height long, n_frames long, "
+        "n_sampled long, first_y long",
+        row,
+    )
+
+
+def audio_energy_features(docs: DataFrame) -> DataFrame:
     """Feature extraction over DECODED audio: synthesize the per-doc WAV,
     run the real RIFF/PCM16 parse, then compute signal features from the
     sample array — total magnitude, energy (sum of squares), peak, and
@@ -486,78 +438,42 @@ def audio_energy_features(docs: DataFrame, cap: int = 128) -> DataFrame:
     int64 (samples widen from int16 BEFORE squaring).
 
     This is the plumbing a real audio-curation pass needs (silence /
-    clipping / noisiness screens); per-row work is bounded by the sample
-    cap, Arrow-batched via mapInPandas.
+    clipping / noisiness screens); per-row work is bounded by AUDIO_CAP.
     """
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                n = max(1, min(int(n_chars), cap))
-                i = np.arange(n, dtype=np.int64)
-                sig = ((int(doc_id) * 7919 + i * 31) % 20001 - 10000).astype(
-                    np.int16
-                )
-                _, _, samples = decode_audio(encode_wav(sig, 8000))
-                s = samples.astype(np.int64)
-                neg = s < 0
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_samples": len(s),
-                        "sum_abs": int(np.abs(s).sum()),
-                        "energy": int((s * s).sum()),
-                        "peak": int(np.abs(s).max()),
-                        "zero_cross": int((neg[1:] != neg[:-1]).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples", "sum_abs", "energy", "peak",
-                    "zero_cross",
-                ],
-            )
+    def row(doc_id, n_chars):
+        s = _decoded_samples(doc_id, n_chars)[2].astype(np.int64)
+        neg = s < 0
+        yield (
+            doc_id, len(s), int(np.abs(s).sum()), int((s * s).sum()),
+            int(np.abs(s).max()), int((neg[1:] != neg[:-1]).sum()),
+        )
 
-    return docs.select("doc_id", "n_chars").mapInPandas(
-        gen, AUDIO_ENERGY_SCHEMA
+    return _map_rows(
+        docs, ("doc_id", "n_chars"),
+        "doc_id long, n_samples long, sum_abs long, energy long, "
+        "peak long, zero_cross long",
+        row,
     )
 
 
-IMAGE_HIST_SCHEMA = "doc_id long, bin long, n long"
-
-
-def image_histogram_features(
-    docs: DataFrame, width: int = 16, height: int = 4, n_bins: int = 16
-) -> DataFrame:
+def image_histogram_features(docs: DataFrame) -> DataFrame:
     """Feature extraction over DECODED images: encode each document's
     bytes as a real PPM, run the actual P6 parse, then bin every RGB
-    byte of the decoded pixel array into a 16-bucket intensity
+    byte of the decoded pixel array into a HIST_BINS-bucket intensity
     histogram — the exposure/contrast screen an image-curation pass
     runs (all-dark / all-bright / low-dynamic-range filters). One
     (doc_id, bin, count) row per non-empty bucket, exact integers.
     """
-    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_bin, out_n = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                img = decode_image(
-                    encode_ppm(text.encode("utf-8"), width, height)
-                )
-                hist = np.bincount(
-                    img.reshape(-1) // (256 // n_bins), minlength=n_bins
-                )
-                for b in np.nonzero(hist)[0]:
-                    out_doc.append(int(doc_id))
-                    out_bin.append(int(b))
-                    out_n.append(int(hist[b]))
-            yield pd.DataFrame(
-                {"doc_id": out_doc, "bin": out_bin, "n": out_n},
-                columns=["doc_id", "bin", "n"],
-            ).astype({"doc_id": "int64", "bin": "int64", "n": "int64"})
+    def row(doc_id, text):
+        hist = np.bincount(
+            _decoded_image(text).reshape(-1) // (256 // HIST_BINS),
+            minlength=HIST_BINS,
+        )
+        for b in np.nonzero(hist)[0]:
+            yield doc_id, int(b), int(hist[b])
 
-    return docs.select("doc_id", "text").mapInPandas(gen, IMAGE_HIST_SCHEMA)
+    return _map_rows(
+        docs, ("doc_id", "text"), "doc_id long, bin long, n long", row
+    )

@@ -413,6 +413,21 @@ def minhash_lsh_pairs(
     return jac.filter(F.col("jaccard") >= threshold).select("a", "b", "jaccard")
 
 
+def cap_buckets(bands: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """Drop every (band, band_key) bucket holding more than
+    ``max_bucket_size`` rows (see ``LSH_MAX_BUCKET_SIZE``); ``None``
+    keeps all.  The count is a window on the band-join key, so it rides
+    the hash partitioning the join that follows needs anyway."""
+    if max_bucket_size is None:
+        return bands
+    wb = Window.partitionBy("band", "band_key")
+    return (
+        bands.withColumn("bucket_n", F.count(F.lit(1)).over(wb))
+        .filter(F.col("bucket_n") <= max_bucket_size)
+        .drop("bucket_n")
+    )
+
+
 def lsh_candidate_pairs(
     docs: DataFrame,
     num_hashes: int = 16,
@@ -424,29 +439,18 @@ def lsh_candidate_pairs(
     audits (plans/text.py::minhash_est_quality) can inspect the
     UNVERIFIED candidate set.
 
-    The returned pair set is a materialize() point (r15 optimization
-    round, guide §5): every consumer uses it at least twice
-    (exact_jaccard_on_pairs feeds it into both the inverted-index
-    inter join and the final left join; minhash_est_quality adds a
-    third, the signature-compare leg), and each re-execution repeats
-    the (band, band_key) SHUFFLE self-join + distinct — unlike the
-    token stream, whose recompute is a row-local scan (the r14 sf100
-    no-persist rule does NOT apply here).  The cached rows are skinny
-    (two longs per candidate, output-scale not corpus-scale), so the
-    persist is bounded at any corpus size.  Interleaved A/B at sf0.1:
-    identical 58,418 / 13 rows;
-    i4b 4.95/3.77/3.37 -> 3.96/3.36/2.97 s, est_quality
-    4.72/4.31/3.86 -> 3.85/3.86/3.81 s."""
-    bands = materialize(minhash_bands(docs, num_hashes, band_size))
-    if max_bucket_size is not None:
-        # Count per (band, band_key) via window — same key as the join
-        # below, so the extra pass rides the same hash partitioning.
-        wb = Window.partitionBy("band", "band_key")
-        bands = (
-            bands.withColumn("bucket_n", F.count(F.lit(1)).over(wb))
-            .filter(F.col("bucket_n") <= max_bucket_size)
-            .drop("bucket_n")
-        )
+    The returned pair set is materialized: every consumer reads it at
+    least twice (exact_jaccard_on_pairs feeds both its inter join and
+    its final left join; minhash_est_quality adds the signature-compare
+    leg), and each re-read would repeat the (band, band_key) shuffle
+    self-join + distinct.  The cached rows are two longs per candidate,
+    so the persist is output-scale, not corpus-scale.  Interleaved A/B
+    at sf0.1, identical 58,418 / 13 rows: i4b 4.95/3.77/3.37 ->
+    3.96/3.36/2.97 s, est_quality 4.72/4.31/3.86 -> 3.85/3.86/3.81 s."""
+    bands = cap_buckets(
+        materialize(minhash_bands(docs, num_hashes, band_size)),
+        max_bucket_size,
+    )
     left = bands.select(
         F.col("band").alias("band_l"),
         F.col("band_key").alias("key_l"),

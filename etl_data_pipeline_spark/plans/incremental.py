@@ -1,29 +1,23 @@
-"""Incremental near-dup detection against a persisted LSH index
-(round 15, VERDICT r14 item 5 — the operation a daily 100 TB ingest
-actually runs).
+"""Incremental near-dup detection against a persisted LSH index: the
+operation a daily ingest runs.
 
 ``incremental_dedup`` (plans/curation.py) handles EXACT content hashes
-for batch ingest; this module adds the missing MinHash leg: probe a NEW
-batch of documents against the standing corpus's persisted signature
-index WITHOUT recomputing any corpus signatures.  Composition of the
-existing audited pieces (operators/text.py):
-
-  1. ``build_neardup_index``  — the corpus's (doc_id, band, band_key)
-     LSH band table, computed ONCE and persisted (parquet in
-     production; ``materialize`` here).  This is ``minhash_bands``
-     output verbatim, so the index a full-corpus run builds and the
-     index this module stores are the same rows.
-  2. ``probe_neardup_index`` — band the new batch only (row-local
-     minhash, no corpus scan), union with the index, apply the
-     full-corpus bucket cap, band-join restricted to pairs with a
-     new-batch member, exact-Jaccard-verify the survivors.
+for batch ingest; this module adds the MinHash leg: probe a NEW batch
+of documents against the standing corpus's persisted signature index
+WITHOUT recomputing any corpus signatures.  The index is the corpus's
+``minhash_bands`` output (operators/text.py): ``(doc_id, band,
+band_key)`` rows, built once, persisted (parquet in production) and
+only appended to as batches are accepted.  ``probe_neardup_index``
+bands the new batch only (row-local minhash, no corpus scan), unions
+it with the index, applies the full-corpus bucket cap, band-joins pairs
+with a new-batch member and exact-Jaccard-verifies the survivors.
 
 EQUIVALENCE CONTRACT (what the oracle pins): the probe's output is
 bit-identical to running the FULL-corpus ``minhash_lsh_pairs`` and
 keeping only pairs touching the new batch.  The pieces:
   - minhash/banding are row-local per doc (array_distinct before
-    explode, round 14), so banding old and new separately yields the
-    same rows as banding the union;
+    explode), so banding old and new separately yields the same rows
+    as banding the union;
   - the bucket cap is computed over the UNIONED band table, i.e. the
     same (band, band_key) populations the full run sees — a cap
     computed over the index alone would diverge the moment a new doc
@@ -49,30 +43,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.materialize import materialize
 from etl_data_pipeline_spark.operators.text import (
     LSH_MAX_BUCKET_SIZE,
+    cap_buckets,
     exact_jaccard_on_pairs,
     minhash_bands,
 )
 from etl_data_pipeline_spark.plans.registry import query
 from etl_data_pipeline_spark.plans.text import MINHASH_LSH_BODY
-
-
-def build_neardup_index(
-    docs: DataFrame, num_hashes: int = 16, band_size: int = 4
-) -> DataFrame:
-    """The persisted LSH signature index for a standing corpus:
-    ``(doc_id, band, band_key)`` — ``minhash_bands`` verbatim, named
-    separately because its LIFECYCLE differs: built once per corpus,
-    persisted (parquet, bucketed by (band, band_key) at scale), and
-    only APPENDED to as batches are accepted — never recomputed.
-    tests/test_incremental.py pins the parquet write→read roundtrip
-    probing path against the in-memory one."""
-    return minhash_bands(docs, num_hashes=num_hashes, band_size=band_size)
 
 
 def probe_neardup_index(
@@ -94,20 +75,14 @@ def probe_neardup_index(
     pushdown.  The bucket cap is applied over index ∪ new bands — see
     the module docstring's equivalence contract."""
     nb = minhash_bands(new_docs, num_hashes=num_hashes, band_size=band_size)
-    allb = materialize(
-        index.withColumn("is_new", F.lit(False)).unionByName(
-            nb.withColumn("is_new", F.lit(True))
-        )
+    allb = cap_buckets(
+        materialize(
+            index.withColumn("is_new", F.lit(False)).unionByName(
+                nb.withColumn("is_new", F.lit(True))
+            )
+        ),
+        max_bucket_size,
     )
-    if max_bucket_size is not None:
-        # Same key as the join below, so the count pass rides the same
-        # hash partitioning (the minhash_lsh_pairs cap, verbatim).
-        wb = Window.partitionBy("band", "band_key")
-        allb = (
-            allb.withColumn("bucket_n", F.count(F.lit(1)).over(wb))
-            .filter(F.col("bucket_n") <= max_bucket_size)
-            .drop("bucket_n")
-        )
     left = allb.filter(F.col("is_new")).select(
         F.col("band").alias("band_l"),
         F.col("band_key").alias("key_l"),
@@ -118,16 +93,14 @@ def probe_neardup_index(
         F.col("band_key").alias("key_r"),
         F.col("doc_id").alias("b"),
     )
-    # The candidate pair set is a MULTI-CONSUMER reuse point (guide §5 /
-    # r15 optimization round): it feeds the touched-doc semi-join (via
-    # both union legs), the inverted-index inter join, and the final
-    # left join — four consumers, each of which would otherwise re-run
-    # the band self-join + distinct (a shuffle) per consumer.  Measured
-    # at sf0.1 (interleaved A/B):
-    # 4.1-4.9 s -> 3.4-3.7 s warm, identical 11,409 rows.  ``touched``
-    # is materialized for the same reason: it is the semi-join build
-    # side behind all three token-stream recomputes inside
-    # exact_jaccard_on_pairs.
+    # The candidate pair set is materialized because four consumers read
+    # it (the touched-doc semi-join via both union legs, and
+    # exact_jaccard_on_pairs' inter join and final left join); each would
+    # otherwise re-run the band self-join + distinct, a shuffle.  Measured
+    # at sf0.1 (interleaved A/B): 4.1-4.9 s -> 3.4-3.7 s warm, identical
+    # 11,409 rows.  ``touched`` is materialized for the same reason: it
+    # is the semi-join build side behind all three token-stream
+    # recomputes inside exact_jaccard_on_pairs.
     cand = materialize(
         left.join(
             right,
@@ -173,5 +146,4 @@ def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     new = d.filter(F.col("doc_id") % 10 == 0)
     corpus = d.filter(F.col("doc_id") % 10 != 0)
-    idx = build_neardup_index(corpus)
-    return probe_neardup_index(idx, new, d, threshold=0.5)
+    return probe_neardup_index(minhash_bands(corpus), new, d, threshold=0.5)

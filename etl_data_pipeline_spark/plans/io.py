@@ -5,6 +5,12 @@ partitioned parquet layout) into a scratch dir under the repo, reads it
 back with an explicit schema, and returns a result the DuckDB oracle can
 reproduce from the original table — proving the extract/load legs are
 lossless (types, timestamps, doubles).
+
+Every non-parquet read passes an explicit schema (SURVEY §1.3): schema
+inference costs an extra full pass over the data and can silently drift
+types between runs.  Partitioned parquet is the canonical load leg:
+partition columns become directory keys, so downstream reads of the
+common low-cardinality filter columns prune directories (SURVEY §4).
 """
 
 from __future__ import annotations
@@ -18,12 +24,6 @@ from etl_data_pipeline_spark.catalog import SCHEMAS, load_table
 from etl_data_pipeline_spark.functions.canonical import dec_sum
 from etl_data_pipeline_spark.materialize import materialize
 from etl_data_pipeline_spark.plans.registry import query
-from etl_data_pipeline_spark.sources.readers import read_csv, read_jsonl
-from etl_data_pipeline_spark.sources.writers import (
-    write_csv,
-    write_jsonl,
-    write_parquet_partitioned,
-)
 
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch", "io")
 
@@ -49,9 +49,12 @@ def a2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = load_table(spark, sf_dir, "customer")
     path = _scratch(sf_dir, "customer_csv")
-    write_csv(c, path)
-    return read_csv(spark, path, SCHEMAS["customer"]).select(
-        "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
+    c.write.mode("overwrite").option("header", "true").csv(path)
+    return (
+        spark.read.schema(SCHEMAS["customer"])
+        .option("header", "true")
+        .csv(path)
+        .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
     )
 
 
@@ -67,8 +70,8 @@ def a3_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: JSON-lines write + schema-on-read (timestamps included)."""
     o = load_table(spark, sf_dir, "orders")
     path = _scratch(sf_dir, "orders_jsonl")
-    write_jsonl(o, path)
-    back = read_jsonl(spark, path, SCHEMAS["orders"])
+    o.write.mode("overwrite").json(path)
+    back = spark.read.schema(SCHEMAS["orders"]).json(path)
     return back.select(
         "o_orderkey",
         "o_custkey",
@@ -101,7 +104,7 @@ def a4_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_extendedprice", "l_returnflag", "l_linestatus"
     )
     path = _scratch(sf_dir, "lineitem_part")
-    write_parquet_partitioned(li, path, ["l_returnflag"])
+    li.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -161,7 +164,7 @@ def a7_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = load_table(spark, sf_dir, "nation")
     path = _scratch(sf_dir, "nation_csv_bad")
-    write_csv(n, path)
+    n.write.mode("overwrite").option("header", "true").csv(path)
     # drop two malformed lines in as their own file (appending to a
     # Spark-written part file would invalidate its Hadoop .crc checksum)
     with open(os.path.join(path, "z-dead-letter.csv"), "w") as fh:

@@ -78,7 +78,7 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_operators.py::test_mm_resize_matches_python.
     """
     d = load_table(spark, sf_dir, "documents")
-    resized = resize_payloads(attach_binary_payload(d), width=8, height=8)
+    resized = resize_payloads(attach_binary_payload(d))
     # content_bytes: strip the zero-pad from the resized binary and
     # measure what's left (document text contains no NUL bytes, so the
     # trailing zero run is exactly the padding).
@@ -124,7 +124,7 @@ def mm_decode_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     raise NotImplementedError (PIL absent in this container) — the
     dispatch is by magic bytes, so those fail loudly."""
     d = load_table(spark, sf_dir, "documents")
-    return decode_image_stats(d, width=16, height=4)
+    return decode_image_stats(d)
 
 
 @query(
@@ -153,7 +153,7 @@ def mm_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample values in SQL from (doc_id, n_chars), so the decode is
     content-verified cross-engine. MP3/OGG raise NotImplementedError."""
     d = load_table(spark, sf_dir, "documents")
-    return decode_audio_stats(d, cap=128)
+    return decode_audio_stats(d)
 
 
 @query(
@@ -184,7 +184,7 @@ def mm_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded dims, frame arity, sampled arity, and the first luma byte.
     MP4/MKV raise NotImplementedError (pyav/opencv absent)."""
     d = load_table(spark, sf_dir, "documents")
-    return decode_video_stats(d, width=8, height=8, every_n=2, max_frames=5)
+    return decode_video_stats(d)
 
 
 @query(
@@ -205,7 +205,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks the fan-out arity per document (frame count from the
     payload size), proving the batch-shape contract."""
     d = load_table(spark, sf_dir, "documents")
-    frames = sample_frames(attach_binary_payload(d), frame_size=32, every_n=4)
+    frames = sample_frames(attach_binary_payload(d))
     return frames.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sampled"))
 
 
@@ -243,7 +243,7 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT SQL — so the parity check certifies the decode AND the signal
     math, not just row shapes."""
     d = load_table(spark, sf_dir, "documents")
-    return audio_energy_features(d, cap=128)
+    return audio_energy_features(d)
 
 
 @query(
@@ -274,4 +274,4 @@ def mm_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's utf-8 encoding in SQL (byte i = raw[i mod len]), so the
     decode AND the binning arithmetic are hash-certified."""
     d = load_table(spark, sf_dir, "documents")
-    return image_histogram_features(d, width=16, height=4, n_bins=16)
+    return image_histogram_features(d)

@@ -14,11 +14,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_data_pipeline_spark.catalog import load_table
-from etl_data_pipeline_spark.operators.text import minhash_lsh_pairs
-from etl_data_pipeline_spark.plans.incremental import (
-    build_neardup_index,
-    probe_neardup_index,
+from etl_data_pipeline_spark.operators.text import (
+    minhash_bands,
+    minhash_lsh_pairs,
 )
+from etl_data_pipeline_spark.plans.incremental import probe_neardup_index
 from tests.conftest import SF_DIR
 
 
@@ -51,7 +51,7 @@ def test_incremental_equals_full_restricted(spark):
     new = d.filter(F.col("doc_id") % 10 == 0)
     corpus = d.filter(F.col("doc_id") % 10 != 0)
     inc = probe_neardup_index(
-        build_neardup_index(corpus), new, d, threshold=0.5
+        minhash_bands(corpus), new, d, threshold=0.5
     )
     assert _pairs(inc) == _pairs(_full_restricted(d))
 
@@ -63,11 +63,11 @@ def test_probe_from_parquet_index_identical(spark, tmp_path):
     new = d.filter(F.col("doc_id") % 10 == 0)
     corpus = d.filter(F.col("doc_id") % 10 != 0)
     idx_path = str(tmp_path / "neardup_index.parquet")
-    build_neardup_index(corpus).write.parquet(idx_path)
+    minhash_bands(corpus).write.parquet(idx_path)
     idx = spark.read.parquet(idx_path)
     got = probe_neardup_index(idx, new, d, threshold=0.5)
     want = probe_neardup_index(
-        build_neardup_index(corpus), new, d, threshold=0.5
+        minhash_bands(corpus), new, d, threshold=0.5
     )
     assert _pairs(got) == _pairs(want)
 
@@ -85,7 +85,7 @@ def test_cap_computed_over_union(spark):
     new = d.filter(F.col("doc_id") % 10 == 0)
     corpus = d.filter(F.col("doc_id") % 10 != 0)
     inc = probe_neardup_index(
-        build_neardup_index(corpus), new, d, threshold=0.5,
+        minhash_bands(corpus), new, d, threshold=0.5,
         max_bucket_size=3,
     )
     full = minhash_lsh_pairs(d, threshold=0.5, max_bucket_size=3).filter(
@@ -95,7 +95,7 @@ def test_cap_computed_over_union(spark):
     # control: with the cap lifted the same fixture yields the three
     # (dup, new-doc) pairs, proving the empty result above is the cap
     inc2 = probe_neardup_index(
-        build_neardup_index(corpus), new, d, threshold=0.5,
+        minhash_bands(corpus), new, d, threshold=0.5,
         max_bucket_size=None,
     )
     full2 = minhash_lsh_pairs(d, threshold=0.5, max_bucket_size=None).filter(

@@ -201,27 +201,59 @@ def test_mm_resize_matches_python(spark):
     QUERY projects the binary down to its driver-checkable size contract,
     so the payload equality is asserted here against the operator):
     each resized payload equals the Python truncate/zero-pad of the
-    document's utf-8 bytes at 8x8."""
+    document's utf-8 bytes at RESIZE_W x RESIZE_H."""
     from etl_data_pipeline_spark.operators.multimodal import (
+        RESIZE_H,
+        RESIZE_W,
         attach_binary_payload,
         resize_payloads,
     )
 
+    n = RESIZE_W * RESIZE_H
     docs_df = load_table(spark, SF_DIR, "documents")
-    out = resize_payloads(attach_binary_payload(docs_df), 8, 8).toPandas()
+    out = resize_payloads(attach_binary_payload(docs_df)).toPandas()
     docs = docs_df.select("doc_id", "text").toPandas()
     by_id = dict(zip(out["doc_id"], out["resized"]))
     assert len(out) == len(docs)
-    assert (out["width"] == 8).all() and (out["height"] == 8).all()
+    assert (out["width"] == RESIZE_W).all() and (out["height"] == RESIZE_H).all()
     for _, row in docs.iterrows():
-        b = row["text"].encode("utf-8")[:64]
-        assert bytes(by_id[row["doc_id"]]) == b + b"\x00" * (64 - len(b))
+        b = row["text"].encode("utf-8")[:n]
+        assert bytes(by_id[row["doc_id"]]) == b + b"\x00" * (n - len(b))
     # and the query-level projection honors the same contract
     q = QUERIES["mm_resize"](spark, SF_DIR).toPandas()
-    assert (q["resized_bytes"] == 64).all()
-    exp = docs["text"].str.encode("utf-8").str.len().clip(upper=64)
+    assert (q["resized_bytes"] == n).all()
+    exp = docs["text"].str.encode("utf-8").str.len().clip(upper=n)
     got = q.set_index("doc_id")["content_bytes"]
     assert (got.loc[docs["doc_id"]].to_numpy() == exp.to_numpy()).all()
+
+
+def test_sample_frames_matches_python(spark):
+    """Row-for-row authority for the one-to-many frame sampler (the
+    mm_frame_sample oracle only counts rows per document): every
+    (doc_id, frame_idx, frame_bytes, frame_checksum) row equals a plain
+    Python walk over the document's utf-8 bytes in 32-byte frames,
+    keeping every 4th."""
+    from etl_data_pipeline_spark.operators.multimodal import (
+        attach_binary_payload,
+        sample_frames,
+    )
+
+    docs_df = load_table(spark, SF_DIR, "documents")
+    got = sorted(
+        tuple(r) for r in sample_frames(attach_binary_payload(docs_df))
+        .select("doc_id", "frame_idx", "frame_bytes", "frame_checksum")
+        .collect()
+    )
+    want = []
+    for doc_id, text in docs_df.select("doc_id", "text").collect():
+        b = text.encode("utf-8")
+        for idx in range(0, max(1, len(b) // 32), 4):
+            frame = b[idx * 32 : (idx + 1) * 32]
+            checksum = 0
+            for byte in frame:
+                checksum = (checksum * 31 + byte) % 1_000_000_007
+            want.append((doc_id, idx, len(frame), checksum))
+    assert got == sorted(want)
 
 
 def test_kmeans_inertia_monotone(spark):
