@@ -138,6 +138,15 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def scratch_path(sf_dir: str, area: str, *leaf: str) -> str:
+    """Where queries write beside this corpus:
+    ``<repo>/.scratch/<area>/<sf leaf>/<leaf...>``, the sf leaf being the
+    sf dir's last component with ``.`` -> ``_`` (sf0.01 -> sf0_01)."""
+    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    root = os.path.dirname(os.path.dirname(__file__))
+    return os.path.join(root, ".scratch", area, tag, *leaf)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one corpus table with the engine's ingest rules.
 

@@ -450,7 +450,6 @@ def ivf_topk_adaptive(
 
 
 def pq_rerank_adaptive(
-    spark,
     embeddings: DataFrame,
     k: int = 3,
     n_cand: int = 50,
@@ -539,5 +538,5 @@ def pq_rerank_adaptive(
     # would otherwise count the decoded frame: one more decode pass)
     if n_blocks is None:
         n_blocks = blocks_for(n)
-    cand = knn(spark, decoded, k=n_cand, n_blocks=n_blocks)
+    cand = knn(decoded, k=n_cand, n_blocks=n_blocks)
     return exact_cosine_rerank_topk(cand, embeddings, k)

@@ -293,7 +293,7 @@ def _blocked_pairs(
 
 
 def cosine_topk_pairs(
-    spark: SparkSession, embeddings: DataFrame, k: int, n_blocks: int | None = None
+    embeddings: DataFrame, k: int, n_blocks: int | None = None
 ) -> DataFrame:
     """I6: global top-k most-similar pairs (a < b), blocked numpy kernel.
 
@@ -304,9 +304,7 @@ def cosine_topk_pairs(
     return per_group.orderBy(F.desc("cosine"), F.asc("a"), F.asc("b")).limit(k)
 
 
-def knn(
-    spark: SparkSession, embeddings: DataFrame, k: int, n_blocks: int | None = None
-) -> DataFrame:
+def knn(embeddings: DataFrame, k: int, n_blocks: int | None = None) -> DataFrame:
     """I7: k nearest neighbors per vector (neighbor != self).
 
     Every query meets every other block once (as side L or side R of
@@ -344,14 +342,14 @@ def knn(
 
 
 def recall_vs_exact(
-    spark: SparkSession, embeddings: DataFrame, approx: DataFrame, floor: float
+    embeddings: DataFrame, approx: DataFrame, floor: float
 ) -> DataFrame:
     """Recall@3 gate of an approximate top-3 retrieval ``approx``
     (vec_id, neighbor, ...) against the exact blocked ``knn``: one row
     (n_exact, n_hit, recall, recall_ok) with recall_ok = recall >=
     ``floor``.  Both legs are the registered operators themselves, so
     the row certifies retrieval quality end to end."""
-    exact = knn(spark, embeddings, k=3).select("vec_id", "neighbor")
+    exact = knn(embeddings, k=3).select("vec_id", "neighbor")
     hits = approx.select("vec_id", "neighbor").withColumn("hit", F.lit(1))
     recall = F.col("n_hit") / F.col("n_exact")
     return (
@@ -367,7 +365,7 @@ def recall_vs_exact(
 
 
 def embedding_neardup(
-    spark: SparkSession, embeddings: DataFrame, min_cos: float, n_blocks: int | None = None
+    embeddings: DataFrame, min_cos: float, n_blocks: int | None = None
 ) -> DataFrame:
     """Dedup family: embedding-cosine near-duplicate pairs (>= min_cos).
 
@@ -723,7 +721,6 @@ def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
 
 
 def quantized_rerank(
-    spark: SparkSession,
     embeddings: DataFrame,
     k: int = 3,
     n_cand: int = 20,
@@ -749,7 +746,7 @@ def quantized_rerank(
     inherits the sf10 OOM fix like every other blocked-kernel consumer
     (ADVICE r12) — every sf <= 1 still resolves to the measured 8.
     """
-    cand = knn(spark, quantize_embeddings(embeddings), k=n_cand, n_blocks=n_blocks)
+    cand = knn(quantize_embeddings(embeddings), k=n_cand, n_blocks=n_blocks)
     return exact_cosine_rerank_topk(cand, embeddings, k)
 
 

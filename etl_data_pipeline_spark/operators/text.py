@@ -11,6 +11,17 @@ identically in Spark (``conv(substring(md5(x),1,8),16,10)``) and DuckDB
 (``('0x'||substr(md5(x),1,8))::BIGINT``) — the foundation for
 MinHash/SimHash parity with the oracle, and (unlike a dense_rank vocab id)
 it needs no global sort, so it is also the 100 TB path.
+
+Input contract: ``doc_id`` is UNIQUE per input row.  The near-dup
+operators dedup each document's tokens row-locally (``array_distinct``
+before the explode in ``_minhash_wide`` and ``exact_jaccard_on_pairs``),
+which equals a global (doc_id, token) distinct only then; duplicate
+doc_id rows would double-count tokens in set sizes, minhashes and
+Jaccard instead of being deduped.  Every caller feeds the ``documents``
+table, whose doc_id is a primary key
+(tests/test_incremental.py::test_documents_doc_id_unique pins the
+fixture); ``exact_dedup`` is the operator for collapsing duplicate
+CONTENT — duplicate ids are a malformed input, not a near-dup.
 """
 
 from __future__ import annotations
@@ -19,7 +30,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from etl_data_pipeline_spark.materialize import materialize
-from etl_data_pipeline_spark.operators.graph import connected_components_star
 
 #: modulus for affine MinHash permutations; prime, small enough that
 #: a_i * h stays far below int64 overflow.
@@ -36,51 +46,39 @@ MINHASH_P = 1_000_003
 #: report: per-size bucket counts with the oversized flag.
 LSH_MAX_BUCKET_SIZE = 100
 
+#: MinHash signature shape: 16 affine permutations, banded 4 rows per
+#: LSH band (4 bands; the S-curve crosses ~0.7 similarity).  The band
+#: rows must divide the hashes.  The DuckDB oracles
+#: (plans/text.py::MINHASH_BANDS_BODY, minhash_est_quality) and the
+#: Python mirrors are rendered from these, so they cannot drift apart.
+MINHASH_HASHES = 16
+MINHASH_BAND_ROWS = 4
+
+#: SimHash near-dup shape: 32-bit fingerprints cut into 4 equal
+#: bit-slices — pigeonhole-exact for any max_hamming below 4.
+SIMHASH_BITS = 32
+SIMHASH_BANDS = 4
+
 
 def md5_hash32(col: Column) -> Column:
     """Stable 32-bit string hash reproducible in ANSI SQL (see module doc)."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def tokens(docs: DataFrame) -> DataFrame:
     """Explode documents into (doc row..., pos, token). One narrow stage."""
     return docs.select(
-        "*", F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "token")
+        "*", F.posexplode(F.split("text", " ")).alias("pos", "token")
     )
 
 
-def distinct_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, token) distinct pairs + per-doc distinct count ``n_tok``.
-
-    Row-local dedup (array_distinct before explode) — same row set as
-    the former global ``.distinct()``, no shuffle (round 14).
-
-    CONTRACT (ADVICE r14): ``doc_id`` must be UNIQUE per input row —
-    the row-local rewrite (here, ``_minhash_wide``,
-    ``exact_jaccard_on_pairs``) is equivalent to the global distinct
-    only then; duplicate doc_id rows would double-count tokens in
-    n_tok/minhash/jaccard instead of being deduped.  Every caller
-    feeds the ``documents`` table, whose doc_id is a primary key
-    (tests/test_incremental.py::test_documents_doc_id_unique pins the
-    fixture; exact_dedup is the operator for collapsing duplicate
-    CONTENT — duplicate ids are a malformed input, not a near-dup)."""
-    t = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias(
-            "token"
-        ),
-    )
-    counts = t.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
-    return t.join(counts, "doc_id")
-
-
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """I3: exact dedup by content hash, deterministic keep-min-doc_id.
 
     Scale: one shuffle on the 256-bit hash; survivors carry the group
     size. This is the always-first dedup pass in a training-data pipeline.
     """
-    hashed = docs.withColumn("content_hash", F.sha2(F.col(text_col), 256))
+    hashed = docs.withColumn("content_hash", F.sha2("text", 256))
     w = Window.partitionBy("content_hash").orderBy("doc_id")
     return (
         hashed.select(
@@ -97,15 +95,13 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def df_capped_shingle_stream(
-    docs: DataFrame,
-    block_col: str = "lang",
-    max_df_frac: float | None = None,
-    shingle_n: int = 1,
+    docs: DataFrame, max_df_frac: float | None = None, shingle_n: int = 1
 ) -> DataFrame:
     """Shared front-end of every exact set-overlap verifier
     (jaccard_pairs / containment_pairs): the distinct
     ``(doc_id, block, token, n_tok)`` shingle stream with the integer
-    df-cap applied and the per-doc set size attached.
+    df-cap applied and the per-doc set size attached.  The block is the
+    document's ``lang``.
 
     ``shingle_n`` picks the set elements: 1 = word tokens, 2 = word
     bigrams (more selective — fewer candidate pairs downstream).
@@ -141,7 +137,7 @@ def df_capped_shingle_stream(
         raise ValueError(f"shingle_n must be 1 or 2, got {shingle_n}")
     t = docs.select(
         "doc_id",
-        F.col(block_col).alias("block"),
+        F.col("lang").alias("block"),
         sh.alias("token"),
     ).distinct()
     t = materialize(t)
@@ -194,11 +190,10 @@ def _pair_intersections(t: DataFrame) -> DataFrame:
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float,
-    block_col: str = "lang",
     max_df_frac: float | None = None,
     shingle_n: int = 1,
 ) -> DataFrame:
-    """I4: all-pairs shingle-set Jaccard within a blocking key.
+    """I4: all-pairs shingle-set Jaccard within a ``lang`` block.
 
     Blocked self-join on (block, shingle): candidate pairs only
     materialize for docs sharing a shingle and block — the classic
@@ -234,10 +229,7 @@ def jaccard_pairs(
     marked expected-superlinear in tools/slope_audit.py with this
     rationale.
     """
-    t = df_capped_shingle_stream(
-        docs, block_col=block_col, max_df_frac=max_df_frac,
-        shingle_n=shingle_n,
-    )
+    t = df_capped_shingle_stream(docs, max_df_frac, shingle_n)
     inter = _pair_intersections(t)
     jac = inter.withColumn(
         "jaccard",
@@ -252,11 +244,9 @@ def containment_pairs_op(
     docs: DataFrame,
     threshold_num: int = 8,
     threshold_den: int = 10,
-    block_col: str = "lang",
     max_df_frac: float | None = 0.2,
-    shingle_n: int = 1,
 ) -> DataFrame:
-    """Asymmetric near-dup detection: shingle-set CONTAINMENT
+    """Asymmetric near-dup detection: token-set CONTAINMENT
     |A n B| / min(|A|, |B|) >= num/den — the measure that catches a
     short document embedded inside a long one, which symmetric Jaccard
     structurally under-scores.  Same front-end as jaccard_pairs
@@ -264,11 +254,7 @@ def containment_pairs_op(
     integer comparison ``inter*den >= num*min(na,nb)`` and the score an
     exact 1e-6 integer grid, so no doubles exist anywhere.
     """
-    t = df_capped_shingle_stream(
-        docs, block_col=block_col, max_df_frac=max_df_frac,
-        shingle_n=shingle_n,
-    )
-    inter = _pair_intersections(t)
+    inter = _pair_intersections(df_capped_shingle_stream(docs, max_df_frac))
     small = F.least(F.col("na"), F.col("nb"))
     return (
         inter.filter(
@@ -287,27 +273,22 @@ def containment_pairs_op(
     )
 
 
-def _minhash_wide(docs: DataFrame, num_hashes: int) -> DataFrame:
-    """One row per doc with all ``num_hashes`` minhashes as columns
-    m0..m{n-1} — ONE groupBy over the distinct (doc_id, token) stream
-    with num_hashes min-aggregates, instead of exploding every token row
-    num_hashes times before aggregating (a 16x row amplification on the
-    hot shared path of the whole LSH family; the per-permutation affine
-    constants fold into each aggregate's expression).  Values are
-    identical to the long-format pipeline: same h, same
-    (a_i*h + b_i) mod P, same min.
+def _minhash_wide(docs: DataFrame) -> DataFrame:
+    """One row per doc with all ``MINHASH_HASHES`` minhashes as columns
+    m0..m15 — ONE groupBy over the distinct (doc_id, token) stream with
+    one min-aggregate per permutation, instead of exploding every token
+    row 16 times before aggregating (a 16x row amplification on the hot
+    shared path of the whole LSH family; the per-permutation affine
+    constants fold into each aggregate's expression).
 
-    The (doc_id, token) distinct is computed ROW-LOCALLY with
-    array_distinct BEFORE the explode (round 14, VERDICT r13 item 1;
-    requires the unique-doc_id input contract — see distinct_tokens):
-    per-doc token dedup needs no cross-row information, so the global
-    ``.distinct()`` it replaces — a full shuffle of the ~55x-exploded
-    token stream, 4,294 executor-seconds (48% of the query, 681 s of
-    JVM GC, zero spill) in the sf100 stage profile — was pure waste.
-    The identical row set remains (dedup within doc == dedup over
-    (doc_id, token)), and the groupBy below now map-side-combines
-    doc-adjacent exploded rows down to one row per doc before its
-    shuffle."""
+    The (doc_id, token) distinct is row-local — array_distinct BEFORE
+    the explode, under the module's unique-doc_id contract: per-doc
+    token dedup needs no cross-row information, so a global
+    ``.distinct()`` — a full shuffle of the ~55x-exploded token stream,
+    4,294 executor-seconds (48% of the query, 681 s of JVM GC, zero
+    spill) in the sf100 stage profile — is pure waste.  The groupBy
+    below map-side-combines doc-adjacent exploded rows down to one row
+    per doc before its shuffle."""
     t = (
         docs.select(
             "doc_id",
@@ -324,15 +305,13 @@ def _minhash_wide(docs: DataFrame, num_hashes: int) -> DataFrame:
                 )
                 % MINHASH_P
             ).alias(f"m{i}")
-            for i in range(num_hashes)
+            for i in range(MINHASH_HASHES)
         ]
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 16
-) -> DataFrame:
-    """MinHash signatures: (doc_id, i, minhash) for i in [0, num_hashes).
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """MinHash signatures: (doc_id, i, minhash) for i in [0, 16).
 
     Affine permutations h_i(x) = (a_i * x + b_i) mod P over the md5-based
     token hash. Pure groupBy(min) — no global state, linear scale-out;
@@ -340,46 +319,33 @@ def minhash_signatures(
     the shuffle, so the amplification happens on |docs| rows, not
     |tokens|.
     """
-    wide = _minhash_wide(docs, num_hashes)
-    return wide.select(
+    return _minhash_wide(docs).select(
         "doc_id",
         F.posexplode(
-            F.array(*[F.col(f"m{i}") for i in range(num_hashes)])
+            F.array(*[F.col(f"m{i}") for i in range(MINHASH_HASHES)])
         ).alias("i", "minhash"),
     )
 
 
-def minhash_bands(
-    docs: DataFrame, num_hashes: int = 16, band_size: int = 4
-) -> DataFrame:
-    """LSH banding stage: (doc_id, band, band_key) — ``band_size``
+def minhash_bands(docs: DataFrame) -> DataFrame:
+    """LSH banding stage: (doc_id, band, band_key) — ``MINHASH_BAND_ROWS``
     consecutive signature rows concatenated into the bucket key. Shared
-    by ``minhash_lsh_pairs`` (candidate join) and the bucket-size divert
-    report (plans/text.py::lsh_bucket_stats).  Band keys come straight
-    off the wide per-doc aggregate (concat of the band's minhash
-    columns, ascending i — the same order the former
-    array_sort(collect_list) produced), skipping the second
-    groupBy(doc_id, band) entirely."""
-    if num_hashes % band_size != 0:
-        raise ValueError(
-            f"band_size {band_size} must divide num_hashes {num_hashes}: "
-            "a trailing partial band would silently change bucket keys"
-        )
-    wide = _minhash_wide(docs, num_hashes)
-    n_bands = num_hashes // band_size
-    return wide.select(
+    by ``lsh_candidate_pairs`` (candidate join), the incremental index
+    (``probe_neardup_index``) and the bucket-size divert report
+    (plans/text.py::lsh_bucket_stats).  Band keys come straight off the
+    wide per-doc aggregate (concat of the band's minhash columns,
+    ascending i), with no second groupBy(doc_id, band)."""
+    r = MINHASH_BAND_ROWS
+    return _minhash_wide(docs).select(
         "doc_id",
         F.posexplode(
             F.array(
                 *[
                     F.concat_ws(
                         "-",
-                        *[
-                            F.col(f"m{b * band_size + j}").cast("string")
-                            for j in range(band_size)
-                        ],
+                        *[F.col(f"m{b * r + j}").cast("string") for j in range(r)],
                     )
-                    for b in range(n_bands)
+                    for b in range(MINHASH_HASHES // r)
                 ]
             )
         ).alias("band", "band_key"),
@@ -389,16 +355,13 @@ def minhash_bands(
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float,
-    num_hashes: int = 16,
-    band_size: int = 4,
     max_bucket_size: int | None = LSH_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """I4 scale path: MinHash + LSH banding near-dup detection.
 
-    Bands of ``band_size`` signature rows hash candidate pairs into
-    buckets (join on the band key — never all-pairs); candidates are then
-    verified with exact token-set Jaccard. With 16 hashes in 4 bands the
-    S-curve crosses ~0.7 similarity.
+    Bands of ``MINHASH_BAND_ROWS`` signature rows hash candidate pairs
+    into buckets (join on the band key — never all-pairs); candidates
+    are then verified with exact token-set Jaccard.
 
     ``max_bucket_size`` is the quadratic-fan-out guard (the LSH sibling
     of ``jaccard_pairs``' max_df_frac): buckets larger than the cap are
@@ -408,9 +371,8 @@ def minhash_lsh_pairs(
     rows ``lsh_bucket_stats`` flags oversized; route them to exact-dedup
     / cluster-by-bucket handling.  ``None`` disables the cap.
     """
-    cand = lsh_candidate_pairs(docs, num_hashes, band_size, max_bucket_size)
-    jac = exact_jaccard_on_pairs(docs, cand)
-    return jac.filter(F.col("jaccard") >= threshold).select("a", "b", "jaccard")
+    cand = lsh_candidate_pairs(docs, max_bucket_size)
+    return verified_pairs(docs, cand, threshold)
 
 
 def cap_buckets(bands: DataFrame, max_bucket_size: int | None) -> DataFrame:
@@ -428,11 +390,29 @@ def cap_buckets(bands: DataFrame, max_bucket_size: int | None) -> DataFrame:
     )
 
 
+def band_join(left: DataFrame, right: DataFrame, keep: Column) -> DataFrame:
+    """The LSH candidate join: every (a, b) with ``a`` from ``left`` and
+    ``b`` from ``right`` (both capped (doc_id, band, band_key) frames)
+    sharing a band bucket, kept where ``keep`` (a predicate over the
+    columns ``a`` and ``b``) holds.  One row per shared bucket; callers
+    project and dedup."""
+    lhs = left.select(
+        F.col("band").alias("band_l"),
+        F.col("band_key").alias("key_l"),
+        F.col("doc_id").alias("a"),
+    )
+    rhs = right.select(
+        F.col("band").alias("band_r"),
+        F.col("band_key").alias("key_r"),
+        F.col("doc_id").alias("b"),
+    )
+    return lhs.join(
+        rhs, (lhs.band_l == rhs.band_r) & (lhs.key_l == rhs.key_r) & keep
+    )
+
+
 def lsh_candidate_pairs(
-    docs: DataFrame,
-    num_hashes: int = 16,
-    band_size: int = 4,
-    max_bucket_size: int | None = LSH_MAX_BUCKET_SIZE,
+    docs: DataFrame, max_bucket_size: int | None = LSH_MAX_BUCKET_SIZE
 ) -> DataFrame:
     """Candidate (a, b) pairs from the capped band self-join — the
     generation stage of ``minhash_lsh_pairs``, exposed so quality
@@ -447,70 +427,110 @@ def lsh_candidate_pairs(
     so the persist is output-scale, not corpus-scale.  Interleaved A/B
     at sf0.1, identical 58,418 / 13 rows: i4b 4.95/3.77/3.37 ->
     3.96/3.36/2.97 s, est_quality 4.72/4.31/3.86 -> 3.85/3.86/3.81 s."""
-    bands = cap_buckets(
-        materialize(minhash_bands(docs, num_hashes, band_size)),
-        max_bucket_size,
-    )
-    left = bands.select(
-        F.col("band").alias("band_l"),
-        F.col("band_key").alias("key_l"),
-        F.col("doc_id").alias("a"),
-    )
-    right = bands.select(
-        F.col("band").alias("band_r"),
-        F.col("band_key").alias("key_r"),
-        F.col("doc_id").alias("b"),
-    )
+    bands = cap_buckets(materialize(minhash_bands(docs)), max_bucket_size)
     return materialize(
-        left.join(
-            right,
-            (left.band_l == right.band_r)
-            & (left.key_l == right.key_r)
-            & (left.a < right.b),
-        )
+        band_join(bands, bands, F.col("a") < F.col("b"))
         .select("a", "b")
         .distinct()
     )
+
+
+def probe_neardup_index(
+    index: DataFrame,
+    new_docs: DataFrame,
+    all_docs: DataFrame,
+    threshold: float,
+    max_bucket_size: int | None = LSH_MAX_BUCKET_SIZE,
+) -> DataFrame:
+    """Incremental near-dup, the operation a daily ingest runs: verified
+    pairs ``(a, b, jaccard)`` touching ``new_docs``, found against a
+    standing corpus's persisted LSH ``index`` (its ``minhash_bands``
+    rows, built once and only appended to) WITHOUT recomputing any
+    corpus signature.  ``all_docs`` supplies the text of candidate
+    members for the exact verify.
+
+    Equivalence contract: the output is bit-identical to the
+    full-corpus ``minhash_lsh_pairs`` restricted to pairs touching the
+    new batch, because
+      - banding is row-local per doc, so banding old and new separately
+        yields the same rows as banding the union;
+      - the bucket cap is computed over index ∪ new bands — the same
+        bucket populations the full run sees (a cap over the index
+        alone diverges once a new doc tips a bucket over the cap);
+      - the band join keeps (new x old) and (new x new) pairs,
+        normalized to a < b;
+      - the verify reads documents semi-joined to candidate members,
+        which cannot change any per-doc token set.
+
+    Scale: per batch of b docs the probe reads b documents + the skinny
+    index (no text), and exact-verifies only candidate members —
+    O(b + candidates) besides the index scan, vs the full run's O(n)
+    re-signature + re-join.
+
+    The candidate pair set is materialized because four consumers read
+    it (the touched-doc semi-join via both union legs, and
+    exact_jaccard_on_pairs' inter join and final left join); each would
+    otherwise re-run the band self-join + distinct, a shuffle.  Measured
+    at sf0.1 (interleaved A/B): 4.1-4.9 s -> 3.4-3.7 s warm, identical
+    11,409 rows.  ``touched`` is materialized for the same reason: it is
+    the semi-join build side behind all three token-stream recomputes
+    inside exact_jaccard_on_pairs."""
+    allb = cap_buckets(
+        materialize(
+            index.withColumn("is_new", F.lit(False)).unionByName(
+                minhash_bands(new_docs).withColumn("is_new", F.lit(True))
+            )
+        ),
+        max_bucket_size,
+    )
+    cand = materialize(
+        band_join(allb.filter(F.col("is_new")), allb, F.col("a") != F.col("b"))
+        # (new, old) and (old, new) collapse; new x new pairs appear
+        # from both sides and collapse the same way
+        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        .distinct()
+    )
+    touched = materialize(
+        cand.select(F.col("a").alias("doc_id"))
+        .unionByName(cand.select(F.col("b").alias("doc_id")))
+        .distinct()
+    )
+    docs_t = all_docs.join(touched, "doc_id", "left_semi")
+    return verified_pairs(docs_t, cand, threshold)
+
+
+def verified_pairs(docs: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
+    """The LSH verify tail: candidate pairs whose exact token-set Jaccard
+    is at least ``threshold``, as (a, b, jaccard)."""
+    jac = exact_jaccard_on_pairs(docs, cand)
+    return jac.filter(F.col("jaccard") >= threshold).select("a", "b", "jaccard")
 
 
 def exact_jaccard_on_pairs(docs: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact token-set Jaccard restricted to a candidate pair set:
     (a, b, inter, na, nb, jaccard) — never all-pairs; pairs sharing
     zero tokens are kept with inter = 0 so callers see the full
-    candidate set.
+    candidate set.  Extra columns on ``cand`` are dropped.
 
-    Contract (ADVICE r15): ``documents.text`` is non-NULL — the
-    generator never emits NULL text, and a NULL would now survive as a
-    NULL-array pair (the pre-r15 inverted-index form silently dropped
-    it); empty text behaves identically both ways (split('') = ['']).
-    Output is exactly the six columns above: any extra columns carried
-    on ``cand`` are dropped (the pre-r15 form passed them through; all
-    callers pass bare (a, b) frames).
+    Contract: ``documents.text`` is non-NULL — the generator never
+    emits NULL text, and a NULL would survive as a NULL-array pair;
+    empty text is one token (split('') = ['']); doc_id is unique (the
+    module docstring's input contract).
 
-    r15 optimization round (guide §2.3 "shuffle fewer rows"): the
-    intersection is computed per pair with ``array_intersect`` over
-    each doc's row-local distinct-token ARRAY, replacing the former
-    inverted-index form (explode both sides, equi-join on (token, b),
-    count matches).  Same integers — ``size(array_intersect(ta, tb))``
-    over distinct arrays IS |A ∩ B|, and ``size(toks)`` IS the n_tok
-    the counts aggregate produced — so the jaccard division sees
-    bit-identical operands.  What changes is the shuffle shape: the
-    token columns ship as ONE array row per doc instead of ~40
-    exploded rows per doc, and the (pairs x tokens-of-a) intermediate
-    (candidate fan-out x 40 rows, re-shuffled by (token, b)) is gone
-    entirely — per pair the intersection is a task-local hash probe.
-    Three-decade interleaved A/B with byte-identical pair sets
-    (pair counts 58,418 / 150,003 /
-    512,708 matching the recorded i4b values): sf0.1 1.90 -> 1.77 s,
-    sf1 4.00 -> 3.45 s, sf10 27.7 -> 24.3 s min-of-4 through the full
-    i4b, every interleaved pair in B's favor, and the gap widens under
-    host pressure (the degraded 4th sf10 pass read 79.5 vs 42.1 s).
+    The intersection is computed per pair with ``array_intersect`` over
+    each doc's row-local distinct-token ARRAY: ``size(array_intersect(ta,
+    tb))`` over distinct arrays IS |A ∩ B|, and ``size(toks)`` IS the
+    set size.  Against an inverted-index form (explode both sides,
+    equi-join on (token, b), count matches) the token columns ship as
+    ONE array row per doc instead of ~40 exploded rows per doc, and the
+    (candidate fan-out x 40 rows) intermediate is gone — per pair the
+    intersection is a task-local hash probe.  Interleaved A/B through
+    the full i4b with byte-identical pair sets (58,418 / 150,003 /
+    512,708 pairs): sf0.1 1.90 -> 1.77 s, sf1 4.00 -> 3.45 s, sf10
+    27.7 -> 24.3 s min-of-4.
 
-    The round-14 no-persist rule stands: the token-array frame is
-    derived row-locally per consumer (one parquet scan + split +
-    array_distinct), never cached.  Empty text behaves as before
-    (split('') = [''] — one token both ways); the unique-doc_id input
-    contract (see distinct_tokens) is unchanged."""
+    The token-array frame is derived row-locally per consumer (one
+    parquet scan + split + array_distinct), never cached."""
     tok = docs.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
     )
@@ -580,30 +600,26 @@ def simhash_fingerprints(docs: DataFrame, bits: int = 16) -> DataFrame:
     return bitvals.groupBy("doc_id").agg(F.sum("bitval").alias("simhash"))
 
 
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    bits: int = 32,
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup pairs via Hamming-band LSH: split the ``bits``-bit
-    fingerprint into ``bands`` equal bit-slices and equi-join docs that
-    share any slice, then keep candidates within ``max_hamming``.
+def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """SimHash near-dup pairs via Hamming-band LSH: split the
+    ``SIMHASH_BITS``-bit fingerprint into ``SIMHASH_BANDS`` equal
+    bit-slices and equi-join docs that share any slice, then keep
+    candidates within ``max_hamming``.
 
     By pigeonhole the banding is EXACT (not approximate) whenever
-    ``max_hamming < bands``: a pair differing in <= max_hamming bits
+    ``max_hamming < SIMHASH_BANDS``: a pair differing in <= max_hamming bits
     cannot touch every band, so at least one band matches and the pair
     is generated. Candidate generation is therefore an equi-join on
     (band index, band value) — one shuffle, never all-pairs — and the
     result is identical to the O(n^2) scan an oracle runs at test scale.
     Returns (a, b, hamming) with a < b.
     """
-    width = bits // bands
-    sh = simhash_fingerprints(docs, bits=bits)
+    width = SIMHASH_BITS // SIMHASH_BANDS
+    sh = simhash_fingerprints(docs, bits=SIMHASH_BITS)
     slices = sh.select(
         "doc_id",
         "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("k"),
+        F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BANDS - 1))).alias("k"),
     ).select(
         "doc_id",
         "simhash",
@@ -640,56 +656,16 @@ def simhash_neardup_pairs(
     )
 
 
-def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Token n-gram shingles via ordered window leads: (doc_id, shingle)."""
+def shingles(docs: DataFrame) -> DataFrame:
+    """Token 3-gram shingles via ordered window leads: (doc_id, shingle)."""
     t = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
-    cols = [F.col("token")] + [F.lead("token", k).over(w) for k in range(1, n)]
-    sh = t.select("doc_id", F.concat_ws(" ", *cols).alias("shingle"), *[
-        F.lead("token", n - 1).over(w).alias("_tail")
-    ])
-    return sh.filter(F.col("_tail").isNotNull()).drop("_tail")
-
-
-def neardup_components(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 16,
-    band_size: int = 4,
-    max_iters: int = 25,
-    max_bucket_size: int | None = LSH_MAX_BUCKET_SIZE,
-) -> DataFrame:
-    """Dedup family: near-duplicate CLUSTERS, not just pairs.
-
-    ``minhash_lsh_pairs`` emits verified near-dup edges; this closes
-    them into connected components with the alternating large-star /
-    small-star rounds of Kiveris et al., "Connected Components in
-    MapReduce and Beyond" (SOCC'14) — see
-    operators/graph.py::connected_components_star.  Unlike the min-label
-    propagation this replaced (which needs diameter(component) rounds
-    and silently truncated adversarial chains longer than ``max_iters``),
-    the star alternation contracts path lengths geometrically: O(log
-    diameter) rounds of the same join/groupBy primitives, each round two
-    scalars to the driver and a flat, lineage-cut iteration loop.
-
-    Returns one row per document: (doc_id, component, is_canonical) where
-    ``component`` is the min doc_id of the near-dup cluster (singletons
-    are their own component) and the canonical doc is the cluster min —
-    filtering ``is_canonical`` IS the dedup.
-    """
-    pairs = minhash_lsh_pairs(
-        docs, threshold, num_hashes, band_size, max_bucket_size
-    ).select("a", "b")
-    edges = pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    assignments, _ = connected_components_star(edges, max_iters=max_iters)
-    labels = docs.select("doc_id").join(
-        assignments.select(F.col("u").alias("doc_id"), "component"),
+    lead1, lead2 = F.lead("token", 1).over(w), F.lead("token", 2).over(w)
+    sh = t.select(
         "doc_id",
-        "left",
+        F.concat_ws(" ", "token", lead1, lead2).alias("shingle"),
+        lead2.alias("_tail"),
     )
-    return labels.select(
-        "doc_id",
-        F.coalesce("component", F.col("doc_id")).alias("component"),
-    ).withColumn("is_canonical", F.col("component") == F.col("doc_id"))
+    return sh.filter(F.col("_tail").isNotNull()).drop("_tail")

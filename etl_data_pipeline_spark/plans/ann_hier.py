@@ -448,4 +448,4 @@ def ivf2_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     calibrated probe budget (hier_psup) the measured recall@3 is 0.949
     at sf0.1 and 0.688 at sf1 (full table in BASELINE.md)."""
     e = load_table(spark, sf_dir, "embeddings")
-    return recall_vs_exact(spark, e, ivf2_topk(e, k=3), 0.5)
+    return recall_vs_exact(e, ivf2_topk(e, k=3), 0.5)

@@ -19,11 +19,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_data_pipeline_spark.catalog import load_table
+from etl_data_pipeline_spark.operators.graph import connected_components_star
 from etl_data_pipeline_spark.operators.similarity import quantized_rerank
 from etl_data_pipeline_spark.operators.text import (
+    SIMHASH_BITS,
     md5_hash32,
     minhash_lsh_pairs,
-    neardup_components,
     simhash_neardup_pairs,
 )
 from etl_data_pipeline_spark.plans.registry import query
@@ -54,17 +55,34 @@ from etl_data_pipeline_spark.materialize import materialize, cut_lineage
     """,
 )
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup completion: LSH near-dup pairs closed into connected
-    components by alternating large-star/small-star rounds (Kiveris
-    SOCC'14, O(log diameter) convergence — see
-    operators/graph.py::connected_components_star via
-    operators/text.py::neardup_components).  ``is_canonical`` marks the
-    cluster-min doc: filtering it IS the near-dup dedup.  The oracle
-    computes the same components via a recursive CTE over the identical
-    verified pair set (shared CTE body with i4b_minhash_lsh, including
-    the band-bucket cap that diverts boilerplate buckets)."""
+    """Dedup completion: near-duplicate CLUSTERS, not just pairs.  The
+    verified LSH pairs are closed into connected components by the
+    alternating large-star / small-star rounds of Kiveris et al.,
+    "Connected Components in MapReduce and Beyond" (SOCC'14) — see
+    operators/graph.py::connected_components_star: O(log diameter)
+    rounds of the same join/groupBy primitives, where min-label
+    propagation needs diameter(component) rounds.
+
+    One row per document: (doc_id, component, is_canonical), where
+    ``component`` is the cluster's min doc_id (singletons are their own
+    component) and ``is_canonical`` marks that min doc: filtering it IS
+    the near-dup dedup.  The oracle computes the same components via a
+    recursive CTE over the identical verified pair set (shared CTE body
+    with i4b_minhash_lsh, including the band-bucket cap that diverts
+    boilerplate buckets)."""
     d = load_table(spark, sf_dir, "documents")
-    return neardup_components(d, threshold=0.5, num_hashes=16, band_size=4)
+    pairs = minhash_lsh_pairs(d, threshold=0.5)
+    edges = pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
+    assignments, _ = connected_components_star(edges, max_iters=25)
+    labels = d.select("doc_id").join(
+        assignments.select(F.col("u").alias("doc_id"), "component"),
+        "doc_id",
+        "left",
+    )
+    return labels.select(
+        "doc_id",
+        F.coalesce("component", F.col("doc_id")).alias("component"),
+    ).withColumn("is_canonical", F.col("component") == F.col("doc_id"))
 
 
 @query(
@@ -269,7 +287,7 @@ def i6c_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank to top-3.  The production two-stage retrieval shape; see
     operators/similarity.py::quantized_rerank for the scale story."""
     e = load_table(spark, sf_dir, "embeddings")
-    return quantized_rerank(spark, e, k=3, n_cand=20)
+    return quantized_rerank(e, k=3, n_cand=20)
 
 
 @query(
@@ -374,7 +392,7 @@ def pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "simhash_neardup",
-    oracle="""
+    oracle=f"""
     WITH tf AS (
       SELECT doc_id, token, COUNT(*) AS tf FROM (
         SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token FROM documents
@@ -386,7 +404,7 @@ def pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, j.range AS j,
              SUM(tf * ((CAST(FLOOR(h / POW(2, j.range)) AS BIGINT) % 2) * 2
                        - 1)) AS v
-      FROM th, RANGE(32) j
+      FROM th, RANGE({SIMHASH_BITS}) j
       GROUP BY doc_id, j.range
     ), sh AS (
       SELECT doc_id,
@@ -412,7 +430,7 @@ def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree pair-for-pair with the banded plan that runs at 100 TB.
     """
     d = load_table(spark, sf_dir, "documents")
-    return simhash_neardup_pairs(d, bits=32, bands=4, max_hamming=3)
+    return simhash_neardup_pairs(d, max_hamming=3)
 
 
 @query(
@@ -948,7 +966,7 @@ def pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     before pair expansion, mirrored in the oracle's bands_ok CTE.
     """
     d = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
+    pairs = minhash_lsh_pairs(d, threshold=0.5)
     edges = pairs.select(
         F.col("a").alias("u"), F.col("b").alias("v")
     ).unionAll(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
@@ -1051,7 +1069,7 @@ def neardup_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped edge list.
     """
     d = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
+    pairs = minhash_lsh_pairs(d, threshold=0.5)
     nodes = pairs.select(F.col("a").alias("u")).unionAll(
         pairs.select(F.col("b").alias("u"))
     )
@@ -1103,7 +1121,7 @@ def neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     pairs = (
-        minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
+        minhash_lsh_pairs(d, threshold=0.5)
         .select("a", "b")
         .transform(materialize)  # reused by three join legs + degree agg
     )
@@ -1173,7 +1191,7 @@ def kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     a non-fixpoint result is visible, not silent.
     """
     d = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
+    pairs = minhash_lsh_pairs(d, threshold=0.5)
     e = cut_lineage(
         pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionAll(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
@@ -1385,7 +1403,7 @@ def neardup_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     pairs = (
-        minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
+        minhash_lsh_pairs(d, threshold=0.5)
         .select("a", "b")
         .transform(materialize)  # reused by adjacency, anti-join and degrees
     )

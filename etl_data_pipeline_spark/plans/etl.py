@@ -534,9 +534,7 @@ def i4c_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle grains.
     """
     d = load_table(spark, sf_dir, "documents")
-    return jaccard_pairs(
-        d, threshold=0.5, block_col="lang", max_df_frac=0.2, shingle_n=2
-    ).select("a", "b", "jaccard")
+    return jaccard_pairs(d, threshold=0.5, max_df_frac=0.2, shingle_n=2).select("a", "b", "jaccard")
 
 
 # --------------------------------------------------------------------------

@@ -20,18 +20,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_data_pipeline_spark.catalog import SCHEMAS, load_table
+from etl_data_pipeline_spark.catalog import SCHEMAS, load_table, scratch_path
 from etl_data_pipeline_spark.functions.canonical import dec_sum
 from etl_data_pipeline_spark.materialize import materialize
 from etl_data_pipeline_spark.plans.registry import query
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch", "io")
-
-
-def _scratch(sf_dir: str, leaf: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    return os.path.join(_SCRATCH, tag, leaf)
-
 
 @query(
     "a2_csv_roundtrip",
@@ -48,7 +40,7 @@ def a2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg is lossless.
     """
     c = load_table(spark, sf_dir, "customer")
-    path = _scratch(sf_dir, "customer_csv")
+    path = scratch_path(sf_dir, "io", "customer_csv")
     c.write.mode("overwrite").option("header", "true").csv(path)
     return (
         spark.read.schema(SCHEMAS["customer"])
@@ -69,7 +61,7 @@ def a2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a3_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: JSON-lines write + schema-on-read (timestamps included)."""
     o = load_table(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "orders_jsonl")
+    path = scratch_path(sf_dir, "io", "orders_jsonl")
     o.write.mode("overwrite").json(path)
     back = spark.read.schema(SCHEMAS["orders"]).json(path)
     return back.select(
@@ -103,7 +95,7 @@ def a4_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_returnflag", "l_linestatus"
     )
-    path = _scratch(sf_dir, "lineitem_part")
+    path = scratch_path(sf_dir, "io", "lineitem_part")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -132,7 +124,7 @@ def a6_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a metastore instead and pass it explicitly.
     """
     p = load_table(spark, sf_dir, "part")
-    path = _scratch(sf_dir, "part_evolving")
+    path = scratch_path(sf_dir, "io", "part_evolving")
     old = p.filter(F.col("p_partkey") % 2 == 0).select("p_partkey", "p_size")
     new = p.filter(F.col("p_partkey") % 2 == 1).select("p_partkey", "p_retailprice")
     old.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "v=1"))
@@ -163,7 +155,7 @@ def a7_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     n = load_table(spark, sf_dir, "nation")
-    path = _scratch(sf_dir, "nation_csv_bad")
+    path = scratch_path(sf_dir, "io", "nation_csv_bad")
     n.write.mode("overwrite").option("header", "true").csv(path)
     # drop two malformed lines in as their own file (appending to a
     # Spark-written part file would invalidate its Hadoop .crc checksum)
@@ -215,7 +207,7 @@ def a8_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
     )
-    path = _scratch(sf_dir, "lineitem_dyn_overwrite")
+    path = scratch_path(sf_dir, "io", "lineitem_dyn_overwrite")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
     old = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     try:

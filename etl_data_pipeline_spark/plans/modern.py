@@ -14,13 +14,16 @@ its oracle is a ``RANGE`` expression.
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_data_pipeline_spark.catalog import load_table
+from etl_data_pipeline_spark.catalog import load_table, scratch_path
 from etl_data_pipeline_spark.functions.canonical import dec_sum, grid_sum
 from etl_data_pipeline_spark.plans.registry import query
 from etl_data_pipeline_spark.session import group_buckets
@@ -212,19 +215,6 @@ def a9_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- additional format legs ---
 
-import os
-
-_SCRATCH2 = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-    ".scratch",
-    "io2",
-)
-
-
-def _scratch2(sf_dir: str, leaf: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    return os.path.join(_SCRATCH2, tag, leaf)
-
 
 @query(
     "sql_lateral_topk",
@@ -322,11 +312,9 @@ def a13_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     here the fragment/target counts are pinned (64 -> 4) so the file
     arithmetic itself is oracle-checkable, and the row count + exact
     money total prove the rewrite is lossless."""
-    import glob
-
     o = load_table(spark, sf_dir, "orders")
-    frag = _scratch2(sf_dir, "orders_fragmented")
-    compact = _scratch2(sf_dir, "orders_compacted")
+    frag = scratch_path(sf_dir, "io2", "orders_fragmented")
+    compact = scratch_path(sf_dir, "io2", "orders_compacted")
     o.repartition(64).write.mode("overwrite").parquet(frag)
     n_before = len(glob.glob(os.path.join(frag, "part-*")))
     spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(
@@ -359,7 +347,7 @@ def a10_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash match proves the ORC leg preserves every row, timestamp and
     double exactly."""
     o = load_table(spark, sf_dir, "orders")
-    path = _scratch2(sf_dir, "orders_orc")
+    path = scratch_path(sf_dir, "io2", "orders_orc")
     o.write.mode("overwrite").option("compression", "zlib").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("o_orderstatus").agg(
@@ -385,7 +373,7 @@ def a11_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     table's: the text leg drops nothing (documents contain no
     newlines; a real pipeline would escape or length-prefix)."""
     d = load_table(spark, sf_dir, "documents")
-    path = _scratch2(sf_dir, "documents_txt")
+    path = scratch_path(sf_dir, "io2", "documents_txt")
     d.select("text").write.mode("overwrite").text(path)
     back = spark.read.text(path)
     toks = back.select(F.explode(F.split("value", " ")).alias("token"))
@@ -410,7 +398,7 @@ def a12_zstd_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     with compression=zstd, read back, prove losslessness against the
     original table."""
     li = load_table(spark, sf_dir, "lineitem")
-    path = _scratch2(sf_dir, "lineitem_zstd")
+    path = scratch_path(sf_dir, "io2", "lineitem_zstd")
     li.write.mode("overwrite").option("compression", "zstd").parquet(path)
     back = spark.read.parquet(path)
     return back.agg(
@@ -443,7 +431,7 @@ def a14_clustered_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     the clustered rewrite is lossless; the pushed filter is asserted in
     tests/test_plans.py."""
     ev = load_table(spark, sf_dir, "events")
-    path = _scratch2(sf_dir, "events_clustered")
+    path = scratch_path(sf_dir, "io2", "events_clustered")
     (
         ev.repartitionByRange(8, "user_id")
         .sortWithinPartitions("user_id", "ts")
@@ -625,7 +613,7 @@ def a15_file_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     column first — the standard one-file-per-partition discipline that
     avoids small-file explosions at 100 TB)."""
     o = load_table(spark, sf_dir, "orders")
-    path = _scratch2(sf_dir, "orders_lineage")
+    path = scratch_path(sf_dir, "io2", "orders_lineage")
     (
         o.repartition("o_orderstatus")
         .write.mode("overwrite")
@@ -711,7 +699,7 @@ def a16_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free — ingest throughput is scan-bound, same as CSV.
     """
     n = load_table(spark, sf_dir, "nation")
-    path = _scratch2(sf_dir, "nation_fixed")
+    path = scratch_path(sf_dir, "io2", "nation_fixed")
     lines = n.select(
         F.concat(
             F.rpad(F.col("n_nationkey").cast("string"), 4, " "),

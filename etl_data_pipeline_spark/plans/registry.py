@@ -41,7 +41,6 @@ _PLAN_MODULES = [
     "etl_data_pipeline_spark.plans.sketches",
     "etl_data_pipeline_spark.plans.scale_patterns",
     "etl_data_pipeline_spark.plans.ann_hier",
-    "etl_data_pipeline_spark.plans.incremental",
 ]
 
 _loaded = False

@@ -15,10 +15,9 @@ RocksDB state store provider enabled."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_data_pipeline_spark.catalog import scratch_path
 from etl_data_pipeline_spark.plans.registry import query
 from etl_data_pipeline_spark.streaming.jobs import (
     foreach_batch_sink,
@@ -31,17 +30,6 @@ from etl_data_pipeline_spark.streaming.jobs import (
     stream_update_mode_counts,
     windowed_counts_with_watermark,
 )
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch", "stream"
-)
-
-
-def _tag(sf_dir: str) -> str:
-    return os.path.join(
-        _SCRATCH, os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    )
-
 
 @query(
     "j5_stream_watermark",
@@ -75,7 +63,7 @@ def j5_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     j10) flips red — loud, not silent; re-verify the batch-1 staging on
     any version bump before trusting the parity check.
     """
-    return windowed_counts_with_watermark(spark, sf_dir, _tag(sf_dir))
+    return windowed_counts_with_watermark(spark, sf_dir, scratch_path(sf_dir, "stream"))
 
 
 @query(
@@ -95,7 +83,7 @@ def j6_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Also asserted by tests/test_operators.py::
     test_j6_stream_dedup_matches_batch_distinct.
     """
-    return stream_dedup_within_watermark(spark, sf_dir, _tag(sf_dir))
+    return stream_dedup_within_watermark(spark, sf_dir, scratch_path(sf_dir, "stream"))
 
 @query(
     "j7_stateful_totals",
@@ -110,7 +98,7 @@ def j7_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer 1e-6 micro-units (grid_sum discipline), so the final state
     snapshot equals the batch grid-sum aggregate EXACTLY — independent
     of micro-batch boundaries and accumulation order."""
-    return stateful_running_totals(spark, sf_dir, _tag(sf_dir))
+    return stateful_running_totals(spark, sf_dir, scratch_path(sf_dir, "stream"))
 
 
 @query(
@@ -125,7 +113,7 @@ def j8_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J8: foreachBatch idempotent parquet sink (per-batch overwrite
     directories); the two staged micro-batches land losslessly, so the
     sink's contents equal the source table."""
-    return foreach_batch_sink(spark, sf_dir, _tag(sf_dir))
+    return foreach_batch_sink(spark, sf_dir, scratch_path(sf_dir, "stream"))
 
 
 @query(
@@ -149,7 +137,7 @@ def j9_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch join (see streaming/jobs.py::stream_stream_join), so the
     oracle is exact batch SQL — the CAST(ts AS TIMESTAMP) mirrors
     Spark's ns->us truncation on ingest."""
-    return stream_stream_join(spark, sf_dir, _tag(sf_dir))
+    return stream_stream_join(spark, sf_dir, scratch_path(sf_dir, "stream"))
 
 
 @query(
@@ -197,7 +185,7 @@ def j10_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition) the watermark passed. See
     streaming/jobs.py::stream_session_windows.
     """
-    return stream_session_windows(spark, sf_dir, _tag(sf_dir))
+    return stream_session_windows(spark, sf_dir, scratch_path(sf_dir, "stream"))
 
 
 @query(
@@ -214,7 +202,7 @@ def j11_stream_update_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch aggregate exactly. See
     streaming/jobs.py::stream_update_mode_counts.
     """
-    return stream_update_mode_counts(spark, sf_dir, _tag(sf_dir))
+    return stream_update_mode_counts(spark, sf_dir, scratch_path(sf_dir, "stream"))
 
 
 @query(
@@ -239,7 +227,7 @@ def j12_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     trunc(ts)-1h); append emits exactly the windows whose END the final
     watermark passed, each once with its full two-batch count. Same
     version coupling as j5 (documented there)."""
-    return sliding_counts_with_watermark(spark, sf_dir, _tag(sf_dir))
+    return sliding_counts_with_watermark(spark, sf_dir, scratch_path(sf_dir, "stream"))
 
 
 @query(
@@ -256,4 +244,4 @@ def j13_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     completes the join surface: stream-stream (j9) + stream-static.
     EXACT batch oracle: the join is stateless and the complete-mode agg
     over all micro-batches equals the batch join's group counts."""
-    return stream_static_enrich(spark, sf_dir, _tag(sf_dir))
+    return stream_static_enrich(spark, sf_dir, scratch_path(sf_dir, "stream"))

@@ -16,6 +16,8 @@ from pyspark.sql.window import Window
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.operators.text import (
     LSH_MAX_BUCKET_SIZE,
+    MINHASH_BAND_ROWS,
+    MINHASH_HASHES,
     MINHASH_P,
     containment_pairs_op,
     exact_dedup,
@@ -26,6 +28,7 @@ from etl_data_pipeline_spark.operators.text import (
     minhash_bands,
     minhash_lsh_pairs,
     minhash_signatures,
+    probe_neardup_index,
     shingles,
     simhash_fingerprints,
     tokens,
@@ -154,13 +157,14 @@ def i4_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     below is what runs first at 100 TB.
     """
     d = load_table(spark, sf_dir, "documents")
-    return jaccard_pairs(d, threshold=0.8, block_col="lang", max_df_frac=0.2)
+    return jaccard_pairs(d, threshold=0.8, max_df_frac=0.2)
 
 
-#: DuckDB CTE body for the MinHash banding stage (16 hashes, 4-row
-#: bands): ends in ``bands(doc_id, band, band_key)`` + the per-bucket
-#: sizes ``bsz(band, band_key, bucket_n)``.  Shared by the LSH pair body
-#: below and the bucket-size divert report.  No ``WITH`` prefix.
+#: DuckDB CTE body for the MinHash banding stage (``MINHASH_HASHES``
+#: hashes in ``MINHASH_BAND_ROWS``-row bands): ends in
+#: ``bands(doc_id, band, band_key)`` + the per-bucket sizes
+#: ``bsz(band, band_key, bucket_n)``.  Shared by the LSH pair body below
+#: and the bucket-size divert report.  No ``WITH`` prefix.
 MINHASH_BANDS_BODY = f"""
     t AS MATERIALIZED (
       SELECT DISTINCT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS token
@@ -173,19 +177,19 @@ MINHASH_BANDS_BODY = f"""
       SELECT doc_id, i.range AS i,
              MIN(((i.range * 37 + 11) * h + (i.range * 104729 + 17)) % {MINHASH_P})
                AS minhash
-      FROM th, RANGE(16) i
+      FROM th, RANGE({MINHASH_HASHES}) i
       GROUP BY doc_id, i.range
     ), bands AS MATERIALIZED (
-      SELECT doc_id, i // 4 AS band,
+      SELECT doc_id, i // {MINHASH_BAND_ROWS} AS band,
              STRING_AGG(CAST(minhash AS VARCHAR), '-' ORDER BY i) AS band_key
-      FROM sig GROUP BY doc_id, i // 4
+      FROM sig GROUP BY doc_id, i // {MINHASH_BAND_ROWS}
     ), bsz AS (
       SELECT band, band_key, COUNT(*) AS bucket_n
       FROM bands GROUP BY band, band_key
     )"""
 
 #: DuckDB CTE body reproducing ``minhash_lsh_pairs`` (threshold 0.5,
-#: 16 hashes, 4-row bands, bucket cap {LSH_MAX_BUCKET_SIZE}); ends in a
+#: the banding above, bucket cap ``LSH_MAX_BUCKET_SIZE``); ends in a
 #: ``lsh_pairs(a, b, jaccard)`` CTE so downstream oracles (i4b here;
 #: neardup components / pagerank in plans/curation.py) can build on the
 #: verified pair set.  NOTE: no ``WITH`` prefix — callers prepend
@@ -237,7 +241,30 @@ def i4b_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket contributes more than cap^2/2 candidates; the oracle applies
     the identical cap in its ``bands_ok`` CTE."""
     d = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(d, threshold=0.5, num_hashes=16, band_size=4)
+    return minhash_lsh_pairs(d, threshold=0.5)
+
+
+@query(
+    "incremental_neardup",
+    oracle="WITH "
+    + MINHASH_LSH_BODY
+    + """
+    SELECT a, b, jaccard FROM lsh_pairs
+    WHERE a % 10 = 0 OR b % 10 = 0
+    """,
+)
+def incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily-ingest near-dup: docs with ``doc_id % 10 = 0`` are the
+    incoming batch (10%), the rest are the standing corpus whose LSH
+    index is built once and probed — no corpus re-signature
+    (operators/text.py::probe_neardup_index).  The oracle is the
+    FULL-corpus LSH pair set (the i4b_minhash_lsh oracle verbatim)
+    restricted to pairs touching the batch, which is exactly the
+    probe's equivalence contract."""
+    d = load_table(spark, sf_dir, "documents")
+    new = d.filter(F.col("doc_id") % 10 == 0)
+    corpus = d.filter(F.col("doc_id") % 10 != 0)
+    return probe_neardup_index(minhash_bands(corpus), new, d, threshold=0.5)
 
 
 @query(
@@ -266,7 +293,7 @@ def lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: signatures + one groupBy on (band, band_key) + a tiny
     histogram agg — no self-join anywhere."""
     d = load_table(spark, sf_dir, "documents")
-    bands = minhash_bands(d, num_hashes=16, band_size=4)
+    bands = minhash_bands(d)
     bsz = bands.groupBy("band", "band_key").agg(
         F.count(F.lit(1)).alias("bucket_n")
     )
@@ -550,7 +577,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: document fingerprint = min-wise hash over token
     3-gram shingles (one-permutation MinHash / winnowing-style)."""
     d = load_table(spark, sf_dir, "documents")
-    sh = shingles(d, n=3)
+    sh = shingles(d)
     return sh.groupBy("doc_id").agg(
         F.min(md5_hash32(F.col("shingle"))).alias("fingerprint"),
         F.count_distinct("shingle").alias("n_shingles"),
@@ -816,7 +843,7 @@ def source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     "minhash_est_quality",
     oracle="WITH "
     + MINHASH_LSH_BODY
-    + """, sigj AS (
+    + f""", sigj AS (
       SELECT c.a, c.b,
              CAST(SUM(CASE WHEN s1.minhash = s2.minhash
                            THEN 1 ELSE 0 END) AS BIGINT) AS est_matches
@@ -837,7 +864,7 @@ def source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_pairs,
            CAST(SUM(CAST(FLOOR(inter / CAST(u AS DOUBLE) * 1000000)
                          AS BIGINT)) AS BIGINT) AS jaccard_grid_sum,
-           CAST(SUM(CASE WHEN 5 * ABS(est_matches * u - 16 * inter)
+           CAST(SUM(CASE WHEN 5 * ABS(est_matches * u - {MINHASH_HASHES} * inter)
                               <= 28 * u
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_within
     FROM qq GROUP BY est_matches
@@ -864,9 +891,9 @@ def minhash_est_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same pair-restricted inverted-index join i4b already runs.
     """
     d = load_table(spark, sf_dir, "documents")
-    cand = lsh_candidate_pairs(d, num_hashes=16, band_size=4)
+    cand = lsh_candidate_pairs(d)
     jac = exact_jaccard_on_pairs(d, cand)
-    sig = minhash_signatures(d, num_hashes=16)
+    sig = minhash_signatures(d)
     sa = sig.select(
         F.col("doc_id").alias("sa_id"),
         F.col("i").alias("i_a"),
@@ -904,7 +931,11 @@ def minhash_est_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("jaccard_grid_sum"),
         F.sum(
             F.when(
-                5 * F.abs(F.col("est_matches") * F.col("u") - 16 * F.col("inter"))
+                5
+                * F.abs(
+                    F.col("est_matches") * F.col("u")
+                    - MINHASH_HASHES * F.col("inter")
+                )
                 <= 28 * F.col("u"),
                 1,
             ).otherwise(0)
@@ -1046,8 +1077,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     return containment_pairs_op(
-        d, threshold_num=8, threshold_den=10, block_col="lang",
-        max_df_frac=0.2, shingle_n=1,
+        d, threshold_num=8, threshold_den=10, max_df_frac=0.2
     )
 
 

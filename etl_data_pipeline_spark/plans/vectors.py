@@ -18,7 +18,6 @@ from etl_data_pipeline_spark.operators.similarity import (
     ann_lsh_multiprobe_topk,
     ann_lsh_topk,
     centroid_classify,
-    cosine_col,
     cosine_pairs_hof,
     cosine_topk_pairs,
     dot_col,
@@ -59,7 +58,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect; the 100x-faster replacement for the naive per-pair BNLJ,
     see BASELINE.md cosine_topk note)."""
     e = load_table(spark, sf_dir, "embeddings")
-    return cosine_topk_pairs(spark, e, k=10)
+    return cosine_topk_pairs(e, k=10)
 
 
 @query(
@@ -105,7 +104,7 @@ def i7_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel: per-group local top-3, then one window over <= 3 * n_blocks
     candidates per query. Distributed end to end."""
     e = load_table(spark, sf_dir, "embeddings")
-    return knn(spark, e, k=3)
+    return knn(e, k=3)
 
 
 @query(
@@ -123,7 +122,7 @@ def embedding_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-random, max pairwise cosine ~0.51). The threshold is applied
     inside the blocked kernel, so only surviving pairs ever leave a task."""
     e = load_table(spark, sf_dir, "embeddings")
-    return embedding_neardup(spark, e, min_cos=0.42)
+    return embedding_neardup(e, min_cos=0.42)
 
 
 @query(
@@ -305,7 +304,7 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documented reason ann_multiprobe exists; this gate tracks that
     the cliff stays put while bucket population stays ~constant."""
     e = load_table(spark, sf_dir, "embeddings")
-    return recall_vs_exact(spark, e, ann_lsh_topk(e, k=3), 0.1)
+    return recall_vs_exact(e, ann_lsh_topk(e, k=3), 0.1)
 
 
 @query(
@@ -737,7 +736,7 @@ def ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer measures 0.713 at sf0.001, 0.721 at sf0.01 and 0.485 at
     sf0.1 (~19% scan) vs the fixed label-cell quantizer's 0.41."""
     e = load_table(spark, sf_dir, "embeddings")
-    return recall_vs_exact(spark, e, ivf_topk_adaptive(e, k=3, iters=3), 0.45)
+    return recall_vs_exact(e, ivf_topk_adaptive(e, k=3, iters=3), 0.45)
 
 
 #: Shared PQ oracle body: int8 quantize (verbatim i6c expression) ->
@@ -843,7 +842,7 @@ def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     one compression level up.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    return pq_rerank_adaptive(spark, e, k=3, n_cand=50)
+    return pq_rerank_adaptive(e, k=3, n_cand=50)
 
 
 @query(
@@ -894,8 +893,8 @@ def pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     by a recall sweep because it clears this bar at the same 8-byte
     budget)."""
     e = load_table(spark, sf_dir, "embeddings")
-    approx = pq_rerank_adaptive(spark, e, k=3, n_cand=50)
-    return recall_vs_exact(spark, e, approx, 0.4)
+    approx = pq_rerank_adaptive(e, k=3, n_cand=50)
+    return recall_vs_exact(e, approx, 0.4)
 
 
 #: Shared LSH CTE (4 md5-derived hyperplanes -> signed-projection bit
@@ -1022,7 +1021,7 @@ def ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 3.6x lift over single-probe LSH (~0.14) for 5x probe fan-out.
     Gate pinned >= 0.3."""
     e = load_table(spark, sf_dir, "embeddings")
-    return recall_vs_exact(spark, e, ann_lsh_multiprobe_topk(e, k=3), 0.3)
+    return recall_vs_exact(e, ann_lsh_multiprobe_topk(e, k=3), 0.3)
 
 
 @query(

@@ -125,7 +125,7 @@ def test_hier_recall_not_worse_than_floor(spark, hier_frames):
     from etl_data_pipeline_spark.operators.similarity import knn
 
     e, res = hier_frames
-    exact = knn(spark, e, k=3).select("vec_id", "neighbor")
+    exact = knn(e, k=3).select("vec_id", "neighbor")
     hit = exact.join(
         res.select("vec_id", "neighbor"), ["vec_id", "neighbor"], "inner"
     ).count()

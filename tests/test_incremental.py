@@ -1,5 +1,6 @@
-"""Incremental near-dup (plans/incremental.py) — the equivalence
-contract, the persisted-index roundtrip, and the cap-on-union edge.
+"""Incremental near-dup (operators/text.py::probe_neardup_index) — the
+equivalence contract, the persisted-index roundtrip, and the
+cap-on-union edge.
 
 The registered query's oracle parity runs in test_correctness.py like
 every other query; these tests pin the properties the oracle can't
@@ -17,8 +18,8 @@ from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.operators.text import (
     minhash_bands,
     minhash_lsh_pairs,
+    probe_neardup_index,
 )
-from etl_data_pipeline_spark.plans.incremental import probe_neardup_index
 from tests.conftest import SF_DIR
 
 
@@ -37,10 +38,10 @@ def _full_restricted(docs, threshold=0.5, **kw):
 
 
 def test_documents_doc_id_unique(spark):
-    """The unique-doc_id input contract (ADVICE r14) behind the
-    row-local array_distinct rewrite in distinct_tokens /
-    _minhash_wide / exact_jaccard_on_pairs: the documents fixture's
-    doc_id is a primary key at every test scale."""
+    """The unique-doc_id input contract (operators/text.py module
+    docstring) behind the row-local array_distinct in _minhash_wide /
+    exact_jaccard_on_pairs: the documents fixture's doc_id is a primary
+    key at every test scale."""
     d = load_table(spark, SF_DIR, "documents")
     n, nd = d.count(), d.select("doc_id").distinct().count()
     assert n == nd and n > 0

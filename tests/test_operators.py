@@ -294,7 +294,7 @@ def test_neardup_clusters_match_union_find(spark):
     from etl_data_pipeline_spark.operators.text import minhash_lsh_pairs
 
     docs = load_table(spark, SF_DIR, "documents")
-    pairs = minhash_lsh_pairs(docs, 0.5, 16, 4).select("a", "b").collect()
+    pairs = minhash_lsh_pairs(docs, 0.5).select("a", "b").collect()
     ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
     parent = {i: i for i in ids}
 
@@ -447,10 +447,8 @@ def test_lsh_bucket_cap_diverts_oversized_buckets(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    uncapped = minhash_lsh_pairs(
-        docs, 0.5, 16, 4, max_bucket_size=None
-    ).toPandas()
-    capped = minhash_lsh_pairs(docs, 0.5, 16, 4, max_bucket_size=10).toPandas()
+    uncapped = minhash_lsh_pairs(docs, 0.5, max_bucket_size=None).toPandas()
+    capped = minhash_lsh_pairs(docs, 0.5, max_bucket_size=10).toPandas()
 
     # uncapped: the 20 identical docs yield all 190 template pairs
     template_pairs = {
@@ -465,7 +463,7 @@ def test_lsh_bucket_cap_diverts_oversized_buckets(spark):
     assert all(a >= 100 and b >= 100 for a, b in got_capped)
 
     # property: each emitted pair shares >= 1 band whose bucket is small
-    bands = minhash_bands(docs, 16, 4).toPandas()
+    bands = minhash_bands(docs).toPandas()
     sizes = bands.groupby(["band", "band_key"]).size()
     by_doc = bands.groupby("doc_id")[["band", "band_key"]].apply(
         lambda g: set(map(tuple, g.values))
@@ -823,8 +821,8 @@ def test_pq_recall_vs_exact(spark):
     from etl_data_pipeline_spark.operators.similarity import knn
 
     e = load_table(spark, SF_DIR, "embeddings")
-    exact = knn(spark, e, k=3).select("vec_id", "neighbor")
-    approx = pq_rerank_adaptive(spark, e, k=3, n_cand=50).select(
+    exact = knn(e, k=3).select("vec_id", "neighbor")
+    approx = pq_rerank_adaptive(e, k=3, n_cand=50).select(
         "vec_id", F.col("neighbor").alias("n2")
     )
     hits = exact.join(
@@ -1097,10 +1095,10 @@ def test_blocked_kernels_blocking_invariant(spark):
         (embedding_neardup, {"min_cos": 0.2}),
         (quantized_rerank, {"k": 3, "n_cand": 10}),
     ):
-        base = rows(fn(spark, e, n_blocks=2, **kwargs))
+        base = rows(fn(e, n_blocks=2, **kwargs))
         assert len(base) > 0, fn.__name__
         for nb in (8, None):
-            got = rows(fn(spark, e, n_blocks=nb, **kwargs))
+            got = rows(fn(e, n_blocks=nb, **kwargs))
             assert got == base, (fn.__name__, nb)
 
 

@@ -546,8 +546,8 @@ def test_zorder_physical_layout_prunes_day_probe(spark):
     so nothing prunes)."""
     import pyspark.sql.functions as F
 
-    from etl_data_pipeline_spark.catalog import load_table
-    from etl_data_pipeline_spark.plans.modern import _Z_EXPR, _scratch2
+    from etl_data_pipeline_spark.catalog import load_table, scratch_path
+    from etl_data_pipeline_spark.plans.modern import _Z_EXPR
 
     ev = load_table(spark, SF_DIR, "events")
     mx = ev.agg(F.max("user_id").alias("max_u"))
@@ -561,8 +561,8 @@ def test_zorder_physical_layout_prunes_day_probe(spark):
         .withColumn("zval", F.expr(_Z_EXPR))
         .drop("max_u", "ub")
     )
-    zpath = _scratch2(SF_DIR, "events_zorder")
-    lpath = _scratch2(SF_DIR, "events_linear")
+    zpath = scratch_path(SF_DIR, "io2", "events_zorder")
+    lpath = scratch_path(SF_DIR, "io2", "events_linear")
     z.repartitionByRange(8, "zval").sortWithinPartitions("zval").write.mode(
         "overwrite"
     ).parquet(zpath)

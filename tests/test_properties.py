@@ -588,6 +588,8 @@ def test_minhash_lsh_pairs_matches_brute_force(spark, corpus, threshold, cap):
     import hashlib
 
     from etl_data_pipeline_spark.operators.text import (
+        MINHASH_BAND_ROWS,
+        MINHASH_HASHES,
         MINHASH_P,
         minhash_lsh_pairs,
     )
@@ -612,14 +614,15 @@ def test_minhash_lsh_pairs_matches_brute_force(spark, corpus, threshold, cap):
         i: [
             min(((j * 37 + 11) * h32(t) + (j * 104729 + 17)) % MINHASH_P
                 for t in toks)
-            for j in range(16)
+            for j in range(MINHASH_HASHES)
         ]
         for i, toks in sets.items()
     }
+    r = MINHASH_BAND_ROWS
     bands = {}  # (band, key) -> [doc_id]
     for i, m in sig.items():
-        for b in range(4):
-            key = "-".join(str(m[b * 4 + j]) for j in range(4))
+        for b in range(MINHASH_HASHES // r):
+            key = "-".join(str(m[b * r + j]) for j in range(r))
             bands.setdefault((b, key), []).append(i)
     cand = set()
     for members in bands.values():
@@ -659,9 +662,7 @@ def test_simhash_neardup_matches_brute_force(spark, corpus, max_hamming):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = sorted(
         (r["a"], r["b"], r["hamming"])
-        for r in simhash_neardup_pairs(
-            docs, bits=32, bands=4, max_hamming=max_hamming
-        ).collect()
+        for r in simhash_neardup_pairs(docs, max_hamming=max_hamming).collect()
     )
     spark.catalog.clearCache()
 

@@ -1,9 +1,11 @@
 """Session-level helpers: launch-directory independence of the
-engine's Python workers, and the grouped-kernel bucket rule."""
+engine's Python workers, where queries write beside a corpus, and the
+grouped-kernel bucket rule."""
 
 from __future__ import annotations
 
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
@@ -47,6 +49,24 @@ def test_kernel_query_runs_from_any_directory(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     rows = [ln for ln in out.stdout.splitlines() if ln.startswith("ROWS ")]
     assert rows and int(rows[0].split()[1]) > 0, out.stdout
+
+
+def test_io_roundtrip_writes_under_scratch_io(spark):
+    """a2_csv_roundtrip writes its CSV to
+    ``<repo>/.scratch/io/<sf leaf>/customer_csv`` (sf0.001 -> sf0_001),
+    the directory perfbench/run.py measures between passes: a moved
+    path would leave that check reading an empty directory."""
+    from etl_data_pipeline_spark.catalog import scratch_path
+    from etl_data_pipeline_spark.plans import QUERIES, load_all_plans
+
+    want = _REPO / ".scratch" / "io" / "sf0_001" / "customer_csv"
+    got = scratch_path("/data/sf0.001", "io", "customer_csv")
+    assert Path(os.path.realpath(got)) == want
+    out = Path(scratch_path(SF_DIR, "io", "customer_csv"))
+    shutil.rmtree(out, ignore_errors=True)
+    load_all_plans()
+    assert QUERIES["a2_csv_roundtrip"](spark, SF_DIR).count() > 0
+    assert list(out.glob("part-*.csv"))
 
 
 def _session(parallelism: int):

@@ -166,13 +166,15 @@ def _mirror_vectors(sf_dir: str):
 
 
 def _mirror_minhash(sf_dir: str):
-    """Pure-Python mirror of minhash_lsh_pairs(threshold=0.5, 16 hashes,
-    4x4 bands, bucket cap 100) — the test_properties mirror applied to
-    the full sf1 corpus (the one case whose DuckDB oracle spills)."""
+    """Pure-Python mirror of minhash_lsh_pairs(threshold=0.5) — the
+    test_properties mirror applied to the full sf1 corpus (the one case
+    whose DuckDB oracle spills)."""
     import hashlib
 
     from etl_data_pipeline_spark.operators.text import (
         LSH_MAX_BUCKET_SIZE,
+        MINHASH_BAND_ROWS,
+        MINHASH_HASHES,
         MINHASH_P,
     )
 
@@ -196,10 +198,11 @@ def _mirror_minhash(sf_dir: str):
         sig = [
             min(((j * 37 + 11) * h + (j * 104729 + 17)) % MINHASH_P
                 for h in hs)
-            for j in range(16)
+            for j in range(MINHASH_HASHES)
         ]
-        for b in range(4):
-            key = "-".join(str(sig[b * 4 + j]) for j in range(4))
+        r = MINHASH_BAND_ROWS
+        for b in range(MINHASH_HASHES // r):
+            key = "-".join(str(sig[b * r + j]) for j in range(r))
             bands.setdefault((b, key), []).append(i)
     cand = set()
     for members in bands.values():
@@ -933,7 +936,7 @@ def run_mirrors(spark, qs, sf_dir: str, results: dict,
         record("i4b_minhash_lsh", match, len(got_pairs),
                time.monotonic() - t0, detail)
     if want("incremental_neardup"):
-        # Round 15: the incremental probe's equivalence contract IS
+        # The incremental probe's equivalence contract IS
         # "full-corpus LSH restricted to batch-touching pairs", so the
         # mirror is _mirror_minhash filtered to the registered batch
         # split (doc_id % 10 == 0) — same exact-Jaccard float.
