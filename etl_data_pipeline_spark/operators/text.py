@@ -6,6 +6,11 @@ Everything here is pure DataFrame composition — token explode, hash,
 self-join, window — so Catalyst owns the physical plan and each operator
 scales by partitioning on doc/token keys.
 
+Each curation stage has one definition here, which every query calls:
+``exact_dedup`` (keep-min content dedup), ``quality_cols`` (quality
+score), ``mixture_keep`` (mixture sampler), ``word_ngrams`` (word
+n-grams) and ``EVAL_MOD`` (the held-out eval slice).
+
 Cross-engine hash: ``md5_hash32`` maps any string to a stable 32-bit int
 identically in Spark (``conv(substring(md5(x),1,8),16,10)``) and DuckDB
 (``('0x'||substr(md5(x),1,8))::BIGINT``) — the foundation for
@@ -59,6 +64,10 @@ MINHASH_BAND_ROWS = 4
 SIMHASH_BITS = 32
 SIMHASH_BANDS = 4
 
+#: Held-out eval slice of the corpus: documents with ``doc_id % EVAL_MOD
+#: == 0`` stand in for a benchmark (decontamination, pretrain_corpus).
+EVAL_MOD = 97
+
 
 def md5_hash32(col: Column) -> Column:
     """Stable 32-bit string hash reproducible in ANSI SQL (see module doc)."""
@@ -74,23 +83,81 @@ def tokens(docs: DataFrame) -> DataFrame:
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
     """I3: exact dedup by content hash, deterministic keep-min-doc_id.
+    Every input column of the kept row, plus ``content_hash`` and
+    ``n_copies`` (the group size).
 
-    Scale: one shuffle on the 256-bit hash; survivors carry the group
-    size. This is the always-first dedup pass in a training-data pipeline.
+    Scale: one shuffle on the 256-bit hash. This is the always-first
+    dedup pass in a training-data pipeline.  A caller that never reads
+    ``n_copies`` gets its window pruned, and the ``rn = 1`` filter then
+    becomes a WindowGroupLimit (tests/test_plans.py pins it).
     """
     hashed = docs.withColumn("content_hash", F.sha2("text", 256))
-    w = Window.partitionBy("content_hash").orderBy("doc_id")
+    w = Window.partitionBy("content_hash")
     return (
         hashed.select(
-            "doc_id",
-            "content_hash",
-            F.row_number().over(w).cast("long").alias("rn"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("content_hash"))
-            .alias("n_copies"),
+            "*",
+            F.row_number().over(w.orderBy("doc_id")).alias("rn"),
+            F.count(F.lit(1)).over(w).alias("n_copies"),
         )
         .filter(F.col("rn") == 1)
         .drop("rn")
+    )
+
+
+def quality_cols() -> tuple[Column, Column, Column]:
+    """The document quality heuristic over ``text``'s space tokens:
+    ``(type_token_ratio, stopword_ratio, quality)`` with quality =
+    0.5 * type/token + 0.3 * (1 - stopword share) + 0.2 * length factor
+    (tokens / 30, capped at 1).  Row-local, all integer ratios."""
+    toks = F.split("text", " ")
+    n_tokens = F.size(toks).cast("double")
+    ttr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
+    stop_ratio = (
+        F.size(F.filter(toks, lambda x: x.isin("the", "a"))).cast("double")
+        / n_tokens
+    )
+    length_factor = F.when(F.size(toks) >= 30, F.lit(1.0)).otherwise(
+        n_tokens / F.lit(30.0)
+    )
+    quality = 0.5 * ttr + 0.3 * (F.lit(1.0) - stop_ratio) + 0.2 * length_factor
+    return ttr, stop_ratio, quality
+
+
+def mixture_keep() -> Column:
+    """Training-mixture acceptance: per-``lang`` rate against a
+    deterministic Knuth multiplicative hash of ``doc_id`` in [0, 1) —
+    pure integer arithmetic, so the sample is the same across engines,
+    runs and repartitions."""
+    u = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(4294967296)) / F.lit(
+        4294967296.0
+    )
+    rate = (
+        F.when(F.col("lang") == "en", 0.9)
+        .when(F.col("lang") == "de", 0.5)
+        .when(F.col("lang") == "fr", 0.5)
+        .when(F.col("lang") == "es", 0.25)
+        .when(F.col("lang") == "zh", 0.1)
+        .otherwise(0.05)
+    )
+    return u < rate
+
+
+def word_ngrams(n: int) -> Column:
+    """The array of ``text``'s word n-grams (space-joined, in order).  A
+    document with fewer than ``n`` tokens has none: the slice length is
+    ``greatest(size(s) - (n - 1), 0)``, where a negative length would
+    raise.  The DuckDB oracles' ``GENERATE_SERIES(1, LEN(s) - (n - 1))``
+    is empty there too.
+
+    The outer one-element ``transform`` binds the token array to ``s``,
+    so the text is split once per row.  Explode this expression itself,
+    not a column holding it: Catalyst infers ``size(col) > 0`` for an
+    exploded column and pushes it below the projection, which builds
+    every n-gram array twice."""
+    return F.expr(
+        f"transform(array(split(text, ' ')), s -> transform("
+        f"slice(s, 1, greatest(size(s) - {n - 1}, 0)),"
+        f" (x, i) -> concat_ws(' ', slice(s, i + 1, {n}))))[0]"
     )
 
 
@@ -126,13 +193,7 @@ def df_capped_shingle_stream(
     if shingle_n == 1:
         sh = F.explode(F.split("text", " "))
     elif shingle_n == 2:
-        docs = docs.withColumn("_s", F.split("text", " "))
-        sh = F.explode(
-            F.expr(
-                "transform(slice(_s, 1, size(_s) - 1),"
-                " (x, i) -> concat(x, ' ', _s[i + 1]))"
-            )
-        )
+        sh = F.explode(word_ngrams(2))
     else:
         raise ValueError(f"shingle_n must be 1 or 2, got {shingle_n}")
     t = docs.select(
@@ -655,17 +716,3 @@ def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
         .select("a", "b", F.col("hamming").cast("long").alias("hamming"))
     )
 
-
-def shingles(docs: DataFrame) -> DataFrame:
-    """Token 3-gram shingles via ordered window leads: (doc_id, shingle)."""
-    t = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    lead1, lead2 = F.lead("token", 1).over(w), F.lead("token", 2).over(w)
-    sh = t.select(
-        "doc_id",
-        F.concat_ws(" ", "token", lead1, lead2).alias("shingle"),
-        lead2.alias("_tail"),
-    )
-    return sh.filter(F.col("_tail").isNotNull()).drop("_tail")

@@ -22,13 +22,16 @@ from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.operators.graph import connected_components_star
 from etl_data_pipeline_spark.operators.similarity import quantized_rerank
 from etl_data_pipeline_spark.operators.text import (
+    EVAL_MOD,
     SIMHASH_BITS,
     md5_hash32,
     minhash_lsh_pairs,
+    mixture_keep,
     simhash_neardup_pairs,
+    word_ngrams,
 )
 from etl_data_pipeline_spark.plans.registry import query
-from etl_data_pipeline_spark.plans.scale_patterns import load_documents_shingles
+from etl_data_pipeline_spark.plans.scale_patterns import DECONTAMINATE_ORACLE
 from etl_data_pipeline_spark.plans.text import MINHASH_LSH_BODY
 from etl_data_pipeline_spark.materialize import materialize, cut_lineage
 
@@ -107,18 +110,7 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2^31 ids should swap the LCG for xxhash64(doc_id) & mask (same
     shape; kept SQL-reproducible here)."""
     d = load_table(spark, sf_dir, "documents")
-    u = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(4294967296)) / F.lit(
-        4294967296.0
-    )
-    w = (
-        F.when(F.col("lang") == "en", 0.9)
-        .when(F.col("lang") == "de", 0.5)
-        .when(F.col("lang") == "fr", 0.5)
-        .when(F.col("lang") == "es", 0.25)
-        .when(F.col("lang") == "zh", 0.1)
-        .otherwise(0.05)
-    )
-    return d.filter(u < w).select("doc_id", "lang", "source")
+    return d.filter(mixture_keep()).select("doc_id", "lang", "source")
 
 
 @query(
@@ -433,23 +425,7 @@ def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_neardup_pairs(d, max_hamming=3)
 
 
-@query(
-    "decontaminate",
-    oracle="""
-    WITH d AS (SELECT doc_id, STRING_SPLIT(text, ' ') AS s FROM documents),
-    idx AS (
-      SELECT doc_id, s, UNNEST(GENERATE_SERIES(1, LEN(s) - 2)) AS i FROM d
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, ARRAY_TO_STRING(s[i:i+2], ' ') AS sh FROM idx
-    ),
-    ev AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 97 = 0)
-    SELECT s.doc_id, COUNT(DISTINCT s.sh) AS n_shared
-    FROM sh s JOIN ev ON s.sh = ev.sh
-    WHERE s.doc_id % 97 != 0
-    GROUP BY s.doc_id
-    """,
-)
+@query("decontaminate", oracle=DECONTAMINATE_ORACLE)
 def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination — the LLM-pipeline gate that flags
     training documents sharing verbatim n-grams with a held-out eval
@@ -463,19 +439,15 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded training shingles — no full shuffle of the corpus; output
     is per-doc shared-shingle counts for threshold/audit downstream.
 
-    The shingle derivation is the ONE shared definition in
-    plans/scale_patterns.py::load_documents_shingles
-    (``decontaminate_bloom`` must provably check the same semantics, so
-    the expression lives in exactly one place).
+    The trigrams are ``word_ngrams``' (shared with
+    ``decontaminate_bloom`` and ``pretrain_corpus``).
     """
-    sh = load_documents_shingles(spark, sf_dir)
-    ev = (
-        sh.filter(F.col("doc_id") % 97 == 0)
-        .select("sh")
-        .distinct()
-    )
+    d = load_table(spark, sf_dir, "documents")
+    sh = d.select("doc_id", F.explode(word_ngrams(3)).alias("sh")).distinct()
+    is_eval = F.col("doc_id") % EVAL_MOD == 0
+    ev = sh.filter(is_eval).select("sh").distinct()
     return (
-        sh.filter(F.col("doc_id") % 97 != 0)
+        sh.filter(~is_eval)
         .join(F.broadcast(ev), "sh")
         .groupBy("doc_id")
         .agg(F.count_distinct("sh").alias("n_shared"))
@@ -503,17 +475,8 @@ def frequent_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine absorbs the duplicate mass, and only per-partition
     top candidates reach the driver. The exact-top-k baseline that a
     count-min/Misra-Gries sketch would approximate on a stream."""
-    d = load_table(spark, sf_dir, "documents").withColumn(
-        "s", F.split("text", " ")
-    )
-    bg = d.select(
-        F.explode(
-            F.expr(
-                "transform(slice(s, 1, size(s) - 1),"
-                " (x, i) -> concat_ws(' ', slice(s, i + 1, 2)))"
-            )
-        ).alias("sh")
-    )
+    d = load_table(spark, sf_dir, "documents")
+    bg = d.select(F.explode(word_ngrams(2)).alias("sh"))
     return (
         bg.groupBy("sh")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -556,22 +519,12 @@ def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     above either threshold are repetition spam and flagged drop. Both
     stats are exact integer ratios (one IEEE division each), so the
     doubles are bit-identical cross-engine. Bigrams are built JVM-side
-    with transform/slice (no per-doc window sort, no Python); the only
+    with ``word_ngrams`` (no per-doc window sort, no Python); the only
     shuffles are groupBy (doc_id, bigram) then doc_id — both scale-free
     of corpus width. Thresholds sit at this corpus's median so the flag
     genuinely partitions the data."""
-    d = load_table(spark, sf_dir, "documents").withColumn(
-        "s", F.split("text", " ")
-    )
-    bg = d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(s, 1, size(s) - 1),"
-                " (x, i) -> concat_ws(' ', slice(s, i + 1, 2)))"
-            )
-        ).alias("bg"),
-    )
+    d = load_table(spark, sf_dir, "documents")
+    bg = d.select("doc_id", F.explode(word_ngrams(2)).alias("bg"))
     bgc = bg.groupBy("doc_id", "bg").agg(F.count(F.lit(1)).alias("c"))
     per = bgc.groupBy("doc_id").agg(
         (

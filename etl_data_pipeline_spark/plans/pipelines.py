@@ -1,19 +1,26 @@
 """End-to-end training-data pipeline compositions (the north-star use
-case): deterministic dataset splitting and a full corpus-curation pass
-(exact dedup -> quality filter -> per-slice stats) built ONLY from the
-engine's own operators — proving the pieces compose into the pipeline a
-100 TB pre-training corpus actually runs through.
+case): deterministic dataset splitting and full corpus-curation passes
+built ONLY from the engine's own operators — each stage is the one
+definition in operators/text.py (``exact_dedup``, ``quality_cols``,
+``word_ngrams``, ``mixture_keep``, ``EVAL_MOD``) — proving the pieces
+compose into the pipeline a 100 TB pre-training corpus runs through.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.functions.canonical import grid_avg
-from etl_data_pipeline_spark.operators.text import md5_hash32
+from etl_data_pipeline_spark.operators.text import (
+    EVAL_MOD,
+    exact_dedup,
+    md5_hash32,
+    mixture_keep,
+    quality_cols,
+    word_ngrams,
+)
 from etl_data_pipeline_spark.plans.registry import query
 
 
@@ -94,42 +101,28 @@ def hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-curation pipeline: exact dedup (content hash, keep-min) ->
-    quality scoring (type/token + stopword + length heuristics, same
-    formula as quality_score) -> threshold filter -> per-(lang, source)
-    corpus stats. One DAG, three shuffles (hash dedup, none for scoring
-    — it is row-local — and the final slice agg); at 100 TB the dedup
-    shuffle dominates and shards by content hash.
+    """Corpus-curation pipeline: ``exact_dedup`` (content hash,
+    keep-min) -> ``quality_cols`` (type/token + stopword + length
+    heuristics) -> threshold filter -> per-(lang, source) corpus stats.
+    One DAG, three shuffles (hash dedup, none for scoring — it is
+    row-local — and the final slice agg); at 100 TB the dedup shuffle
+    dominates and shards by content hash.
     """
     d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy(F.sha2("text", 256)).orderBy("doc_id")
-    dedup = (
-        d.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
-    )
-    toks = F.split("text", " ")
-    n_tokens = F.size(toks).cast("double")
-    n_distinct = F.size(F.array_distinct(toks)).cast("double")
-    n_stop = F.size(F.filter(toks, lambda x: x.isin("the", "a"))).cast("double")
-    quality = (
-        0.5 * (n_distinct / n_tokens)
-        + 0.3 * (F.lit(1.0) - n_stop / n_tokens)
-        + 0.2
-        * F.when(F.size(toks) >= 30, F.lit(1.0)).otherwise(n_tokens / F.lit(30.0))
-    )
-    scored = dedup.select(
+    _, _, quality = quality_cols()
+    scored = exact_dedup(d).select(
         "lang",
         "source",
-        F.size(toks).alias("n_tokens_i"),
-        n_tokens.alias("n_tokens"),
+        F.size(F.split("text", " ")).alias("n_tokens"),
         quality.alias("quality"),
     )
     return (
-        scored.filter((F.col("quality") >= 0.7) & (F.col("n_tokens_i") >= 20))
+        scored.filter((F.col("quality") >= 0.7) & (F.col("n_tokens") >= 20))
         .groupBy("lang", "source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             grid_avg(F.col("quality")).alias("avg_quality"),
-            F.sum("n_tokens_i").cast("long").alias("total_tokens"),
+            F.sum("n_tokens").cast("long").alias("total_tokens"),
         )
     )
 
@@ -175,12 +168,13 @@ def pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END pretraining-corpus builder — the four curation stages
     a real LLM data pipeline chains, as ONE exact-oracle DAG:
 
-    1. exact dedup: content-hash keep-min (one shuffle on sha2(text));
-    2. decontamination: drop eval docs (doc_id % 97 == 0) and every
-       training doc sharing a word trigram with them (broadcast
-       semi-join against the tiny eval shingle set — cf. decontaminate);
-    3. mixture sampling: per-language acceptance via the deterministic
-       Knuth multiplicative hash (stateless map, cf. mixture_sample);
+    1. exact dedup: ``exact_dedup``'s content-hash keep-min (one shuffle
+       on sha2(text));
+    2. decontamination: drop eval docs (doc_id % ``EVAL_MOD`` == 0) and
+       every training doc sharing a ``word_ngrams`` trigram with them
+       (broadcast semi-join against the tiny eval shingle set);
+    3. mixture sampling: ``mixture_keep``'s per-language acceptance
+       (stateless map);
     4. corpus fingerprint: per-(lang, source) doc + token totals.
 
     Scale: the dedup shuffle dominates and shards by content hash; the
@@ -190,47 +184,21 @@ def pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     where Spark hashes it first — same keep-min survivor either way),
     so the driver hash pins the WHOLE pipeline, not one operator."""
     d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy(F.sha2("text", 256)).orderBy("doc_id")
-    dedup = (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-        .withColumn("s", F.split("text", " "))
-    )
-    sh = dedup.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(s, 1, size(s) - 2),"
-                " (x, i) -> concat_ws(' ', slice(s, i + 1, 3)))"
-            )
-        ).alias("sh"),
-    ).distinct()
-    ev = sh.filter(F.col("doc_id") % 97 == 0).select("sh").distinct()
+    dedup = exact_dedup(d).withColumn("s", F.split("text", " "))
+    sh = dedup.select("doc_id", F.explode(word_ngrams(3)).alias("sh")).distinct()
+    is_eval = F.col("doc_id") % EVAL_MOD == 0
+    ev = sh.filter(is_eval).select("sh").distinct()
     contaminated = (
-        sh.filter(F.col("doc_id") % 97 != 0)
-        .join(F.broadcast(ev), "sh")
-        .select("doc_id")
-        .distinct()
+        sh.filter(~is_eval).join(F.broadcast(ev), "sh").select("doc_id").distinct()
     )
-    clean = dedup.filter(F.col("doc_id") % 97 != 0).join(
-        contaminated, "doc_id", "left_anti"
-    )
-    u = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(4294967296)) / F.lit(
-        4294967296.0
-    )
-    rate = (
-        F.when(F.col("lang") == "en", 0.9)
-        .when(F.col("lang") == "de", 0.5)
-        .when(F.col("lang") == "fr", 0.5)
-        .when(F.col("lang") == "es", 0.25)
-        .when(F.col("lang") == "zh", 0.1)
-        .otherwise(0.05)
-    )
-    sampled = clean.filter(u < rate)
-    return sampled.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size("s")).cast("long").alias("total_tokens"),
+    clean = dedup.filter(~is_eval).join(contaminated, "doc_id", "left_anti")
+    return (
+        clean.filter(mixture_keep())
+        .groupBy("lang", "source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.size("s")).cast("long").alias("total_tokens"),
+        )
     )
 
 

@@ -1,8 +1,5 @@
-"""Scale-pattern operators (round 11, added under the SURVEY §2.2
-growth rules: new capability only, landed early in the round so the
-driver checks them the same round).
-
-Two operators whose POINT is a 100 TB execution pattern:
+"""Scale-pattern operators: two queries whose POINT is a 100 TB
+execution pattern:
 
 - ``a18_parquet_stats`` — distributed metadata-only introspection:
   answer per-file questions (row counts, column counts) from parquet
@@ -17,8 +14,8 @@ Two operators whose POINT is a 100 TB execution pattern:
   instead, discard the overwhelming non-matching majority at scan
   speed, and run the exact confirm join only over the surviving
   candidates.  False positives cost a little confirm work; false
-  negatives are impossible, so the result is EXACT — same oracle as
-  the plain ``decontaminate``.
+  negatives are impossible, so the result is EXACT — same oracle,
+  ``DECONTAMINATE_ORACLE``, as the plain ``decontaminate``.
 """
 
 from __future__ import annotations
@@ -30,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_data_pipeline_spark.catalog import TABLES, load_table, table_path
+from etl_data_pipeline_spark.operators.text import EVAL_MOD, word_ngrams
 from etl_data_pipeline_spark.plans.registry import query
 
 _STATS_ORACLE = "\nUNION ALL\n".join(
@@ -108,9 +106,10 @@ def _b20_word_bit(hex_col, i: int) -> tuple:
     )
 
 
-@query(
-    "decontaminate_bloom",
-    oracle="""
+#: Oracle of ``decontaminate`` (plans/curation.py) and
+#: ``decontaminate_bloom``: per training doc, the number of distinct word
+#: trigrams it shares with the eval slice (doc_id % 97 == 0).
+DECONTAMINATE_ORACLE = """
     WITH d AS (SELECT doc_id, STRING_SPLIT(text, ' ') AS s FROM documents),
     idx AS (
       SELECT doc_id, s, UNNEST(GENERATE_SERIES(1, LEN(s) - 2)) AS i FROM d
@@ -123,8 +122,10 @@ def _b20_word_bit(hex_col, i: int) -> tuple:
     FROM sh s JOIN ev ON s.sh = ev.sh
     WHERE s.doc_id % 97 != 0
     GROUP BY s.doc_id
-    """,
-)
+    """
+
+
+@query("decontaminate_bloom", oracle=DECONTAMINATE_ORACLE)
 def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-pruned decontamination: EXACTLY ``decontaminate``'s answer
     (same oracle SQL) through the two-phase plan that survives an
@@ -149,8 +150,13 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, so a null probe is a definite miss (coalesce to 0), not an
     error.
     """
-    d = load_documents_shingles(spark, sf_dir)
-    ev = d.filter(F.col("doc_id") % 97 == 0).select("sh").distinct()
+    d = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", F.explode(word_ngrams(3)).alias("sh"))
+        .distinct()
+    )
+    is_eval = F.col("doc_id") % EVAL_MOD == 0
+    ev = d.filter(is_eval).select("sh").distinct()
 
     evh = ev.select(F.md5("sh").alias("h"))
     parts = []
@@ -170,11 +176,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    train = (
-        d.filter(F.col("doc_id") % 97 != 0)
-        .withColumn("h", F.md5("sh"))
-    )
-    probe = train
+    probe = d.filter(~is_eval).withColumn("h", F.md5("sh"))
     for i in range(_B20_PROBES):
         w, b = _b20_word_bit(F.col("h"), i)
         side = bloom.select(
@@ -207,30 +209,3 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count_distinct("sh").alias("n_shared"))
     )
 
-
-def load_documents_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc_id, word-trigram) pairs — THE shared shingle
-    derivation: ``decontaminate`` (plans/curation.py) imports and calls
-    this same function (ADVICE r11: the expression used to be
-    duplicated there, so "provably same semantics" rested on two copies
-    not diverging; now it is one definition by construction).
-
-    The trigram count is ``greatest(size(s) - 2, 0)``: a document with
-    fewer than 3 tokens has NO trigrams, and an unguarded
-    ``slice(s, 1, size(s) - 2)`` raises at runtime on a negative
-    length (ADVICE r11 latent bug — unreachable on the current corpus,
-    reachable on any real one).  The DuckDB oracles' GENERATE_SERIES(1,
-    LEN(s) - 2) already yields empty for short docs, so the guard makes
-    the engines agree instead of changing either's answer."""
-    d = load_table(spark, sf_dir, "documents").withColumn(
-        "s", F.split("text", " ")
-    )
-    return d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(s, 1, greatest(size(s) - 2, 0)),"
-                " (x, i) -> concat_ws(' ', slice(s, i + 1, 3)))"
-            )
-        ).alias("sh"),
-    ).distinct()

@@ -29,9 +29,10 @@ from etl_data_pipeline_spark.operators.text import (
     minhash_lsh_pairs,
     minhash_signatures,
     probe_neardup_index,
-    shingles,
+    quality_cols,
     simhash_fingerprints,
     tokens,
+    word_ngrams,
 )
 from etl_data_pipeline_spark.plans.registry import query
 from etl_data_pipeline_spark.materialize import materialize
@@ -506,24 +507,15 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type/token ratio, stopword ratio, length factor) — the standard
     pre-training heuristic filter, all integer ratios (deterministic)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    n_tokens = F.size(toks).cast("double")
-    n_distinct = F.size(F.array_distinct(toks)).cast("double")
-    n_stop = F.size(F.filter(toks, lambda x: x.isin("the", "a"))).cast("double")
-    ttr = n_distinct / n_tokens
-    stop_ratio = n_stop / n_tokens
-    length_factor = F.when(F.size(toks) >= 30, F.lit(1.0)).otherwise(
-        n_tokens / F.lit(30.0)
-    )
+    ttr, stop_ratio, quality = quality_cols()
+    n_tokens = F.size(F.split("text", " "))
     return d.select(
         "doc_id",
-        F.size(toks).cast("long").alias("n_tokens"),
+        n_tokens.cast("long").alias("n_tokens"),
         ttr.alias("type_token_ratio"),
         stop_ratio.alias("stopword_ratio"),
-        (F.col("n_chars") / n_tokens).alias("avg_token_span"),
-        (0.5 * ttr + 0.3 * (F.lit(1.0) - stop_ratio) + 0.2 * length_factor).alias(
-            "quality"
-        ),
+        (F.col("n_chars") / n_tokens.cast("double")).alias("avg_token_span"),
+        quality.alias("quality"),
     )
 
 
@@ -575,13 +567,22 @@ def token_count_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: document fingerprint = min-wise hash over token
-    3-gram shingles (one-permutation MinHash / winnowing-style)."""
+    3-gram shingles (one-permutation MinHash / winnowing-style).
+
+    A pure map: each document's trigram array is reduced in its own row,
+    so no shuffle.  Documents without a trigram are dropped by a filter
+    on the token count; a filter on ``size(ngrams)`` would be pushed
+    below the projection and build every trigram array twice."""
     d = load_table(spark, sf_dir, "documents")
-    sh = shingles(d)
-    return sh.groupBy("doc_id").agg(
-        F.min(md5_hash32(F.col("shingle"))).alias("fingerprint"),
-        F.count_distinct("shingle").alias("n_shingles"),
-        F.min("shingle").alias("min_shingle"),
+    return (
+        d.withColumn("ngrams", word_ngrams(3))
+        .filter(F.size(F.split("text", " ")) >= 3)
+        .select(
+            "doc_id",
+            F.array_min(F.transform("ngrams", md5_hash32)).alias("fingerprint"),
+            F.size(F.array_distinct("ngrams")).cast("long").alias("n_shingles"),
+            F.array_min("ngrams").alias("min_shingle"),
+        )
     )
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from etl_data_pipeline_spark.catalog import table_path
 from etl_data_pipeline_spark.plans import QUERIES, ORACLES, load_all_plans
 from tests.conftest import SF_DIR, assert_frames_match
 
@@ -78,3 +79,86 @@ def test_write_once_tables_follow_their_corpus(spark, tmp_path):
                 spark.sql(f"DROP TABLE IF EXISTS {table}")
             shutil.rmtree(os.path.join(sql_api._SCRATCH, f"orders_bymonth_{t}"), ignore_errors=True)
             shutil.rmtree(os.path.join(sql_api._SCRATCH, t), ignore_errors=True)
+
+
+#: The queries built on the shared curation stages of operators/text.py
+#: (exact_dedup, quality_cols, mixture_keep, word_ngrams, EVAL_MOD).
+#: Their oracles read only ``documents``.
+CURATION_STAGE_QUERIES = [
+    "i3_exact_dedup",
+    "corpus_curation",
+    "pretrain_corpus",
+    "quality_score",
+    "mixture_sample",
+    "decontaminate",
+    "decontaminate_bloom",
+    "doc_fingerprint",
+    "frequent_ngrams",
+    "gopher_repetition",
+]
+
+_LONG = " ".join(f"w{i}" for i in range(30))
+
+
+@pytest.fixture(scope="module")
+def edge_corpus(tmp_path_factory):
+    """A ``documents`` table with the edge cases the generated corpus
+    lacks: documents of zero, one and two tokens (no trigram; the empty
+    text is one empty token), duplicate texts (one of them shared by an
+    eval doc and a training doc) and the eval ids 97 and 194."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from etl_data_pipeline_spark.catalog import SCHEMAS
+
+    texts = {
+        1: ("", "en"),
+        2: ("one", "en"),
+        3: ("two words", "de"),
+        4: (_LONG, "en"),
+        5: (_LONG, "en"),
+        6: ("x alpha beta gamma y", "en"),
+        7: ("a b a b a b a b", "en"),
+        8: ("the a the cat sat on the mat", "zh"),
+        9: ("one", "en"),
+        11: (_LONG + " tail", "fr"),
+        12: ("alpha beta", "es"),
+        97: ("alpha beta gamma delta", "en"),
+        194: ("two words", "de"),
+    }
+    rows = [
+        {"doc_id": i, "text": t, "lang": lang, "source": f"s{i % 2}",
+         "n_chars": len(t)}
+        for i, (t, lang) in texts.items()
+    ]
+    sf = tmp_path_factory.mktemp("edge_corpus")
+    schema = to_arrow_schema(SCHEMAS["documents"])
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=schema),
+        table_path(str(sf), "documents"),
+    )
+    return str(sf)
+
+
+@pytest.mark.parametrize("name", CURATION_STAGE_QUERIES)
+def test_curation_stages_on_edge_corpus(name, spark, edge_corpus):
+    """Every query built on the shared curation stages matches its
+    oracle on short, empty and duplicate documents: a document with
+    fewer tokens than the n-gram width has no n-grams (an unguarded
+    slice length raises INVALID_PARAMETER_VALUE.LENGTH)."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{table_path(edge_corpus, 'documents')}')"
+        )
+        assert_frames_match(
+            QUERIES[name](spark, edge_corpus).toPandas(),
+            con.execute(ORACLES[name]).fetchdf(),
+            name,
+        )
+    finally:
+        con.close()

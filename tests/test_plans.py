@@ -216,12 +216,35 @@ def test_lateral_topk_decorrelates_to_ranked_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_decontaminate_broadcasts_eval_set(spark):
+@pytest.mark.parametrize("name", ["decontaminate", "pretrain_corpus"])
+def test_decontaminate_broadcasts_eval_set(spark, name):
     # the benchmark shingle set is small by nature — it must broadcast
     # so the corpus side never shuffles for the probe
-    plan = plan_of(spark, "decontaminate")
+    plan = plan_of(spark, name)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize("name", ["corpus_curation", "pretrain_corpus"])
+def test_dedup_window_keeps_group_limit(spark, name):
+    """exact_dedup's keep-min filter runs as a WindowGroupLimit on both
+    sides of the content-hash shuffle.  It holds only while the caller
+    never reads ``n_copies``: that count window is then pruned, and a
+    referenced one would silently drop the group limit."""
+    plan = plan_of(spark, name)
+    limits = [
+        line for line in plan.splitlines()
+        if line.startswith("Arguments:") and "row_number(), 1," in line
+    ]
+    assert any(line.endswith("Partial") for line in limits), plan
+    assert any(line.endswith("Final") for line in limits), plan
+
+
+def test_doc_fingerprint_is_a_pure_map(spark):
+    # each document's trigram array is reduced in its own row
+    plan = plan_of(spark, "doc_fingerprint")
+    assert "Exchange" not in plan, plan
+    assert "Window" not in plan, plan
 
 
 def test_simhash_neardup_band_join_is_equijoin(spark):

@@ -1076,24 +1076,17 @@ def run_mirrors(spark, qs, sf_dir: str, results: dict,
             # docs), so the DAG's output is LEGITIMATELY empty — back
             # the match with engine-vs-mirror STAGE counts instead
             from pyspark.sql import functions as F
-            from pyspark.sql.window import Window
 
             from etl_data_pipeline_spark.catalog import load_table
+            from etl_data_pipeline_spark.operators.text import (
+                EVAL_MOD,
+                exact_dedup,
+                word_ngrams,
+            )
 
-            d = load_table(spark, sf_dir, "documents")
-            w = Window.partitionBy(F.sha2("text", 256)).orderBy("doc_id")
-            dd = (d.withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") == 1).drop("rn")
-                  .withColumn("s", F.split("text", " ")))
-            sh = dd.select(
-                "doc_id",
-                F.explode(F.expr(
-                    "transform(slice(s, 1, size(s) - 2),"
-                    " (x, i) -> concat_ws(' ', slice(s, i + 1, 3)))"
-                )).alias("sh"),
-            ).distinct()
-            evf = sh.filter(F.col("doc_id") % 97 == 0).select(
-                "sh").distinct()
+            dd = exact_dedup(load_table(spark, sf_dir, "documents"))
+            evf = (dd.filter(F.col("doc_id") % EVAL_MOD == 0)
+                   .select(F.explode(word_ngrams(3)).alias("sh")).distinct())
             match = (dd.count() == stages["dedup"]
                      and evf.count() == stages["eval_trigrams"])
             detail += " (empty output: stage-verified vs engine)"
