@@ -3,9 +3,11 @@
 ``SCHEMAS`` declares each table's expected layout (SURVEY.md §1.3), but
 nothing validates against it yet: ``load_table`` infers the schema from
 the parquet footer, so a drifted layout is read as it is, not rejected
-(checking the footer against ``SCHEMAS`` is ROADMAP direction 1). Only
-``plans/io.py`` reads ``SCHEMAS``, as the read schema of its CSV and
-JSONL round trips. The ``events`` table needs the
+(checking the footer against ``SCHEMAS`` is ROADMAP direction 1).
+``SCHEMAS`` is read only where a schema must be declared up front: by
+``plans/io.py``, as the read schema of its CSV and JSONL round trips,
+and by ``plans/streaming.py``, as the ``events`` readStream schema of
+its staged micro-batches. The ``events`` table needs the
 nanos-timestamp ingest path (SURVEY.md §1.4): parquet stores
 ``ts`` as INT64 TIMESTAMP(NANOS); with
 ``spark.sql.legacy.parquet.nanosAsLong=true`` it arrives as bigint
@@ -38,6 +40,8 @@ TABLES = [
 
 #: Expected Spark schemas (SURVEY.md §1.2). Not checked at load time:
 #: ``load_table`` infers from the footer (see the module docstring).
+#: Read by plans/io.py (CSV/JSONL round trips) and plans/streaming.py
+#: (the staged ``events`` stream).
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [

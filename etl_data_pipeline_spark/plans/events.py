@@ -2,7 +2,7 @@
 J1–J4 batch formulations + C8 as-of join + H6 JSON lives in scalar.py).
 
 These are batch queries shaped like Structured Streaming operations (the
-real readStream variants live in etl_data_pipeline_spark/streaming/);
+real readStream variants live in plans/streaming.py);
 the DuckDB oracle is batch SQL, so parity is checked on the batch forms.
 
 ``value`` is a generic double (not decimal-grid money), so its totals

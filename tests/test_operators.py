@@ -6,11 +6,14 @@ oracles (streaming watermark/dedup, multimodal codecs, ANN recall).
 
 from __future__ import annotations
 
+import inspect
+
 import pyspark.sql.functions as F
 import pytest
 
 from etl_data_pipeline_spark.catalog import load_table
 from etl_data_pipeline_spark.plans import QUERIES, load_all_plans
+from etl_data_pipeline_spark.plans.streaming import _staged_stream
 from tests.conftest import SF_DIR
 
 load_all_plans()
@@ -20,7 +23,7 @@ def test_j5_watermark_gates_append_emission(spark):
     """Append mode emits exactly the windows finalized by the final
     watermark (max on-time ts - 1h); windows past it are held in state.
     (Below-watermark input dropping is best-effort in Spark and does not
-    fire in this path — see jobs.windowed_counts_with_watermark.)"""
+    fire in this path — see plans/streaming.py::j5_stream_watermark.)"""
     out = QUERIES["j5_stream_watermark"](spark, SF_DIR).toPandas()
     ev = load_table(spark, SF_DIR, "events")
     max_ts = (
@@ -62,6 +65,52 @@ def test_j6_stream_dedup_matches_batch_distinct(spark):
     b = expected.sort_values("event_type").reset_index(drop=True)
     assert (a["event_type"] == b["event_type"]).all()
     assert (a["n_events"] == b["n_events"]).all()
+
+
+@pytest.mark.parametrize(
+    "split",
+    [
+        (),  # the default on-time/late split, used by all but j6 and j10
+        ("event_id % 5 < 3", "event_id % 5 >= 2"),  # j6's 20% overlap
+    ],
+    ids=["default", "j6_overlap"],
+)
+def test_staged_stream_gives_two_micro_batches(spark, tmp_path, split):
+    """The staged stream is processed as exactly two micro-batches with
+    input, ``first`` then ``second``: an oracle like j5's would still
+    match a single-batch stream, so only this pins the staging."""
+    stream = _staged_stream(spark, SF_DIR, "test_two_batches", *split)
+    q = (
+        stream.writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert not q.isActive
+    fed = [p.numInputRows for p in q.recentProgress if p.numInputRows > 0]
+    first, second = split or (
+        inspect.signature(_staged_stream).parameters[k].default
+        for k in ("first", "second")
+    )
+    ev = load_table(spark, SF_DIR, "events")
+    assert fed == [ev.filter(first).count(), ev.filter(second).count()]
+
+
+def test_stream_memory_sinks_are_released(spark):
+    """A memory-sink query run repeatedly in one session leaves no temp
+    view behind (each view holds every row the stream emitted, on the
+    driver) and returns the same rows every time."""
+
+    def temp_views():
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    before = temp_views()
+    runs = []
+    for _ in range(3):
+        runs.append(sorted(QUERIES["j11_stream_update_counts"](spark, SF_DIR).collect()))
+        assert temp_views() == before
+    assert runs[0] and runs[0] == runs[1] == runs[2]
 
 
 def test_d4_approx_within_tolerance(spark):
